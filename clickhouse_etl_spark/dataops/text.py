@@ -106,34 +106,10 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
 GOPHER_REQUIRED_STOPS = ["the", "be", "to", "of", "and", "that", "have", "with"]
 
 
-def _gopher_counters_py(text: "str | None", req: "frozenset[str]"):
-    """Pure-Python mirror of the Catalyst counter battery in
-    :func:`gopher_rules` — same tokenizer (:func:`fold_space_tokens`),
-    same character-count arithmetic (code points on both engines; the
-    declared oracle-agreement subset is ASCII, see dataops/fold.py).
-    Returns the 8 counters in declaration order."""
-    import re
-
-    t = text if text is not None else ""
-    toks = fold_space_tokens(t)
-    lines = [li for li in t.split("\n") if li]
-    n_words = len(toks)
-    sum_word_len = sum(len(w) for w in toks)
-    n_symbol = sum(1 for w in toks if "#" in w or "..." in w)
-    n_alpha = sum(1 for w in toks if re.search(r"[a-z]", w))
-    n_lines = len(lines)
-    n_bullet = sum(1 for li in lines if li[:2] in ("- ", "* "))
-    n_ellipsis = sum(1 for li in lines if len(li) >= 3 and li[-3:] == "...")
-    n_req = len(req.intersection(toks))
-    return (n_words, sum_word_len, n_symbol, n_alpha, n_lines,
-            n_bullet, n_ellipsis, n_req)
-
-
 def gopher_rules(
     df: DataFrame,
     text_col: str = "text",
     required_stops: "list[str] | None" = None,
-    engine: str = "catalyst",
 ) -> DataFrame:
     """The full published Gopher quality-rule battery (Rae et al. 2021
     — public paper; complements :func:`quality_score`'s weighted score
@@ -163,97 +139,51 @@ def gopher_rules(
     rides whatever scan partitioning the input already has. Counters
     are BIGINT, flags INTEGER 0/1 — every comparison is integer
     arithmetic, so the DuckDB oracle reproduces the battery exactly.
-
-    ``engine``: ``"catalyst"`` (default) is the pure-expression
-    battery; ``"pandas"`` computes the 8 counters in ONE Arrow
-    ``mapInPandas`` pass (the normalize / repetition_signals swap
-    pattern), counters equality-pinned across engines. MEASURED
-    NEGATIVE at the default (optimization r12): on ~54-token docs the
-    decade A/B at 1M docs is a wash (pandas ~5.2 s vs catalyst ~5.1 s
-    median over six interleaved pairs) — the keep-input Arrow boundary
-    cancels the interpreted-HOF saving, unlike normalize's regex-heavy
-    battery. The kernel stays as the measured knob for long-document
-    corpora. The flag stage below is shared, so the thresholds have
-    one definition.
     """
-    counter_cols = [
-        "n_words", "sum_word_len", "n_symbol_words", "n_alpha_words",
-        "n_lines", "n_bullet_lines", "n_ellipsis_lines", "n_req_stops",
-    ]
-    if engine == "pandas":
-        import pandas as pd
+    # null-text docs gate like empty docs (the digest-lifecycle
+    # rule), not as all-NULL counters
+    text = F.coalesce(F.col(text_col), F.lit(""))
+    toks = F.filter(_tokens(text), lambda t: F.length(t) > 0)
+    lines = F.filter(F.split(text, "\n"), lambda li: F.length(li) > 0)
 
-        from pyspark.sql import types as T
-
-        req_set = frozenset(required_stops or GOPHER_REQUIRED_STOPS)
-        schema = T.StructType(
-            list(df.schema.fields)
-            + [T.StructField(c, T.LongType(), False) for c in counter_cols]
+    n_words = F.size(toks).cast("bigint")
+    sum_word_len = F.aggregate(
+        toks, F.lit(0).cast("bigint"), lambda acc, t: acc + F.length(t)
+    )
+    n_symbol_words = F.size(
+        F.filter(toks, lambda t: t.contains("#") | t.contains("..."))
+    ).cast("bigint")
+    n_alpha_words = F.size(
+        F.filter(toks, lambda t: t.rlike("[a-z]"))
+    ).cast("bigint")
+    n_lines = F.size(lines).cast("bigint")
+    n_bullet_lines = F.size(
+        F.filter(lines, lambda li: F.substring(li, 1, 2).isin("- ", "* "))
+    ).cast("bigint")
+    n_ellipsis_lines = F.size(
+        F.filter(
+            lines,
+            lambda li: (F.length(li) >= 3)
+            & (li.substr(F.length(li) - 2, F.lit(3)) == "..."),
         )
+    ).cast("bigint")
+    req = F.array(
+        *[F.lit(w) for w in (required_stops or GOPHER_REQUIRED_STOPS)]
+    )
+    n_req_stops = F.size(
+        F.array_intersect(F.array_distinct(toks), req)
+    ).cast("bigint")
 
-        def battery(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                counters = [_gopher_counters_py(x, req_set) for x in pdf[text_col]]
-                out_pdf = pdf.copy()
-                for i, c in enumerate(counter_cols):
-                    out_pdf[c] = pd.Series(
-                        [row[i] for row in counters], index=pdf.index,
-                        dtype="int64",
-                    )
-                yield out_pdf
-
-        from .util import scale_out
-
-        out = scale_out(df).mapInPandas(battery, schema)
-    elif engine == "catalyst":
-        # null-text docs gate like empty docs (the digest-lifecycle
-        # rule), not as all-NULL counters that diverge between engines
-        text = F.coalesce(F.col(text_col), F.lit(""))
-        toks = F.filter(_tokens(text), lambda t: F.length(t) > 0)
-        lines = F.filter(F.split(text, "\n"), lambda li: F.length(li) > 0)
-
-        n_words = F.size(toks).cast("bigint")
-        sum_word_len = F.aggregate(
-            toks, F.lit(0).cast("bigint"), lambda acc, t: acc + F.length(t)
-        )
-        n_symbol_words = F.size(
-            F.filter(toks, lambda t: t.contains("#") | t.contains("..."))
-        ).cast("bigint")
-        n_alpha_words = F.size(
-            F.filter(toks, lambda t: t.rlike("[a-z]"))
-        ).cast("bigint")
-        n_lines = F.size(lines).cast("bigint")
-        n_bullet_lines = F.size(
-            F.filter(lines, lambda li: F.substring(li, 1, 2).isin("- ", "* "))
-        ).cast("bigint")
-        n_ellipsis_lines = F.size(
-            F.filter(
-                lines,
-                lambda li: (F.length(li) >= 3)
-                & (li.substr(F.length(li) - 2, F.lit(3)) == "..."),
-            )
-        ).cast("bigint")
-        req = F.array(
-            *[F.lit(w) for w in (required_stops or GOPHER_REQUIRED_STOPS)]
-        )
-        n_req_stops = F.size(
-            F.array_intersect(F.array_distinct(toks), req)
-        ).cast("bigint")
-
-        out = df.withColumns({
-            "n_words": n_words,
-            "sum_word_len": sum_word_len,
-            "n_symbol_words": n_symbol_words,
-            "n_alpha_words": n_alpha_words,
-            "n_lines": n_lines,
-            "n_bullet_lines": n_bullet_lines,
-            "n_ellipsis_lines": n_ellipsis_lines,
-            "n_req_stops": n_req_stops,
-        })
-    else:
-        raise ValueError(f"unknown engine {engine!r}")
+    out = df.withColumns({
+        "n_words": n_words,
+        "sum_word_len": sum_word_len,
+        "n_symbol_words": n_symbol_words,
+        "n_alpha_words": n_alpha_words,
+        "n_lines": n_lines,
+        "n_bullet_lines": n_bullet_lines,
+        "n_ellipsis_lines": n_ellipsis_lines,
+        "n_req_stops": n_req_stops,
+    })
 
     def flag(cond: Column) -> Column:
         return F.when(cond, F.lit(1)).otherwise(F.lit(0)).cast("int")

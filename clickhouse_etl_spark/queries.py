@@ -19,7 +19,9 @@ cross-engine determinism:
 
 from __future__ import annotations
 
+import json
 from dataclasses import dataclass, field
+from pathlib import Path
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -7053,9 +7055,9 @@ def otlp_rollup_all_families(spark, sf_dir):
 #      invariant breaks),
 #   4+. stale-but-freshly-signed, then by age of newest signature.
 # All entries stay covered by the local tests/test_oracle.py replay
-# regardless.  _R0N_CHECKED are the exact key sets of the corresponding
-# CORRECTNESS_r0N.json files (historical records — they keep the names of
-# entries later consolidated out of the registry).
+# regardless.  Each round's signed set is loaded from the committed
+# CORRECTNESS_rNN.json artifact (historical records — they keep the names
+# of entries later consolidated out of the registry).
 # Registry consolidation (r7, VERDICT r6 #1): nine redundant entries were
 # demoted so that priorities 0-3 keep fitting the ~50-row budget —
 # anti_join_inactive_users (NOT-EXISTS surface lives in q21/q22),
@@ -7086,213 +7088,31 @@ def otlp_rollup_all_families(spark, sf_dir):
 # is the new emb_cluster_sample; dataops/similarity.balanced_sample
 # stays unit-tested).
 # ---------------------------------------------------------------------------
-_R03_CHECKED = frozenset({
-    "asof_join_clicks", "dedup_first_wins", "dedup_windowed",
-    "docs_boilerplate_ngrams", "docs_chunking", "docs_corpus_report",
-    "docs_decontamination", "docs_domain_cap", "docs_dup_clusters",
-    "docs_exact_dedup", "docs_fingerprint", "docs_langid",
-    "docs_minhash_lsh_pairs", "docs_mixture_report", "docs_ngram_jaccard_pairs",
-    "docs_pii_scrub", "docs_pipeline_e2e", "docs_quality_score",
-    "docs_quality_topk", "docs_repetition_signals", "docs_sequence_packing",
-    "docs_simhash", "docs_split_report", "docs_token_stats",
-    "docs_top_terms", "docs_vocab_stats", "emb_cosine_topk",
-    "emb_ivf_ann_topk", "emb_lsh_ann_topk", "emb_near_dup_pairs",
-    "emb_normalize", "emb_quantize_int8", "emb_semantic_dedup",
-    "filter_project", "json_props_extract", "multimodal_decode_stub",
-    "multimodal_pipeline", "otlp_flatten_logs", "otlp_flatten_metrics",
-    "otlp_flatten_traces", "pipeline_canonical", "session_window_agg",
-    "sessionize_events", "sink_mapping_casts", "temporal_join_enrich",
-    "topk_orders_per_priority", "transform_query_params", "transform_scalars",
-    "tumbling_window_agg", "validate_dlq_counts",
-})
+_ARTIFACT_DIR = Path(__file__).resolve().parents[1]
 
 
-_R04_CHECKED = frozenset({
-    "anti_join_inactive_users", "approx_distinct_sketch",
-    "approx_percentiles_by_type", "cube_order_stats", "distinct_counts",
-    "docs_bm25", "docs_curation_v2", "docs_dedup_agreement",
-    "docs_epoch_shuffle", "docs_incremental_dedup", "docs_quality_deciles",
-    "docs_rare_token_ratio", "docs_simhash_pairs", "docs_span_dedup",
-    "docs_upsample_mixture", "emb_balanced_sample", "emb_pq_ann_topk",
-    "events_moving_sum_1h", "events_winsorize", "events_zscore_anomalies",
-    "funnel_conversion", "ntile_price_quartiles", "percentiles_by_type",
-    "pivot_user_event_counts", "q10_returned_revenue", "q12_priority_buckets",
-    "q13_customer_distribution", "q14_conditional_agg", "q15_top_supplier",
-    "q16_supplier_cardinality", "q17_small_quantity_revenue",
-    "q18_large_orders", "q19_disjunctive_predicates", "q1_pricing_summary",
-    "q21_waiting_suppliers", "q22_global_sales_opportunity",
-    "q2_min_cost_supplier", "q3_top_revenue", "q4_order_priority",
-    "q5_region_revenue", "q6_forecast_revenue", "q7_volume_shipping",
-    "q8_market_share", "q9_product_profit", "range_join_attribution",
-    "retention_cohorts", "rollup_revenue", "running_totals_window",
-    "sliding_window_agg", "value_histogram",
-})
+def signed_entries(artifact: Path) -> frozenset[str]:
+    """Entries a CORRECTNESS artifact signed: every key whose row
+    is not a failure.  Rows-only entries (``err == "no_oracle"`` with a
+    ``spark_rows`` count) count as signed; real errors and mismatches do
+    not.  A missing artifact raises instead of reading as an empty set."""
+    art = json.loads(Path(artifact).read_text())
+    return frozenset(
+        name
+        for name, row in art.items()
+        if (row.get("err") == "no_oracle" and row.get("spark_rows") is not None)
+        or (row.get("rows_match") and row.get("schema_match") and row.get("hash_match"))
+    )
 
-_R05_CHECKED = frozenset({
-    "asof_join_clicks", "dedup_first_wins", "dedup_windowed",
-    "docs_bigram_pmi", "docs_bpe_tokens", "docs_bpe_vocab",
-    "docs_corpus_report", "docs_curation_v3", "docs_dup_clusters",
-    "docs_exact_dedup", "docs_fingerprint", "docs_kgram_novelty",
-    "docs_langid", "docs_lm_familiarity", "docs_minhash_lsh_pairs",
-    "docs_ngram_jaccard_pairs", "docs_quality_score",
-    "docs_sequence_packing", "docs_simhash", "docs_snapshot_diff",
-    "docs_split_report", "docs_token_stats", "emb_cosine_topk",
-    "emb_ivf_ann_topk", "emb_ivf_pq_ann_topk", "emb_lsh_ann_topk",
-    "emb_matryoshka_ann_topk", "emb_mean_center", "emb_near_dup_pairs",
-    "emb_pq_ann_topk", "emb_pq_index_ann_topk", "emb_semantic_dedup",
-    "emb_semantic_dedup_lsh", "emb_truncate_renorm", "filter_project",
-    "json_props_extract", "multimodal_pipeline",
-    "multimodal_video_embedding", "otlp_flatten_metrics",
-    "otlp_flatten_traces", "pipeline_canonical", "session_window_agg",
-    "sessionize_events", "sink_mapping_casts", "temporal_join_enrich",
-    "topk_orders_per_priority", "transform_query_params",
-    "transform_scalars", "tumbling_window_agg", "validate_dlq_counts",
-})
 
-_R06_CHECKED = frozenset({
-    "asof_join_clicks", "dedup_first_wins", "dedup_windowed",
-    "docs_boilerplate_ngrams", "docs_bpe_apply_fixed",
-    "docs_bpe_word_table", "docs_chunking", "docs_curation_v2",
-    "docs_curation_v4", "docs_decontamination", "docs_dedup_agreement",
-    "docs_domain_cap", "docs_dup_clusters", "docs_hash_embed_topk",
-    "docs_hash_embedding", "docs_incremental_dedup",
-    "docs_mixture_report", "docs_ngram_containment_pairs",
-    "docs_ngram_jaccard_pairs", "docs_normalize_text", "docs_pii_scrub",
-    "docs_pipeline_e2e", "docs_quality_topk", "docs_repetition_signals",
-    "docs_top_terms", "docs_vocab_stats", "emb_ivf_ann_topk",
-    "emb_ivf_pq_ann_topk", "emb_lsh_ann_topk", "emb_normalize",
-    "emb_pq_ann_topk", "emb_pq_index_ann_topk", "emb_quantize_int8",
-    "emb_semantic_dedup", "emb_semantic_dedup_lsh",
-    "events_cms_calibration", "events_kmv_distinct",
-    "events_mad_anomalies", "filter_project", "multimodal_decode_stub",
-    "multimodal_pipeline", "multimodal_video_embedding",
-    "otlp_flatten_logs", "otlp_flatten_metrics", "otlp_metric_rollup_5m",
-    "pipeline_canonical", "sink_mapping_casts", "temporal_join_enrich",
-    "transform_scalars", "validate_dlq_counts",
-})
-
-_R07_CHECKED = frozenset({
-    "asof_join_clicks", "cube_order_stats", "dedup_first_wins",
-    "dedup_windowed", "docs_bm25", "docs_bpe_tokens", "docs_bpe_vocab",
-    "docs_curation_v3", "docs_dup_keep_best", "docs_epoch_shuffle",
-    "docs_ngram_jaccard_pairs", "docs_quality_deciles",
-    "docs_rare_token_ratio", "docs_span_dedup", "docs_trained_classifier",
-    "docs_upsample_mixture", "emb_cluster_sample", "events_moving_sum_1h",
-    "events_winsorize", "filter_project", "funnel_conversion",
-    "otlp_flatten_metrics", "pipeline_canonical",
-    "pivot_user_event_counts", "q10_returned_revenue",
-    "q12_priority_buckets", "q13_customer_distribution",
-    "q14_conditional_agg", "q15_top_supplier", "q16_supplier_cardinality",
-    "q17_small_quantity_revenue", "q18_large_orders",
-    "q19_disjunctive_predicates", "q1_pricing_summary",
-    "q21_waiting_suppliers", "q22_global_sales_opportunity",
-    "q2_min_cost_supplier", "q3_top_revenue", "q4_order_priority",
-    "q5_region_revenue", "q6_forecast_revenue", "q7_volume_shipping",
-    "q8_market_share", "q9_product_profit", "range_join_attribution",
-    "retention_cohorts", "sink_mapping_casts", "temporal_join_enrich",
-    "transform_scalars", "validate_dlq_counts",
-})
-
-_R08_CHECKED = frozenset({
-    "asof_join_clicks", "dedup_first_wins", "dedup_windowed",
-    "docs_bigram_pmi", "docs_corpus_report", "docs_curation_e2e",
-    "docs_curation_v3", "docs_curation_v4", "docs_decontamination",
-    "docs_dedup_agreement", "docs_dup_clusters", "docs_dup_keep_best",
-    "docs_exact_dedup", "docs_fingerprint", "docs_kgram_novelty",
-    "docs_langid", "docs_lm_familiarity", "docs_minhash_lsh_pairs",
-    "docs_ngram_containment_pairs", "docs_ngram_jaccard_pairs",
-    "docs_normalize_text", "docs_pipeline_e2e", "docs_quality_score",
-    "docs_repetition_signals", "docs_sequence_packing", "docs_simhash",
-    "docs_snapshot_diff", "docs_split_report", "docs_token_stats",
-    "docs_trained_classifier", "emb_cosine_topk",
-    "emb_matryoshka_ann_topk", "emb_mean_center", "emb_near_dup_pairs",
-    "emb_pq_index_ann_topk", "emb_truncate_renorm", "filter_project",
-    "json_props_extract", "otlp_flatten_metrics", "otlp_flatten_traces",
-    "pipeline_canonical", "session_window_agg", "sessionize_events",
-    "sink_mapping_casts", "temporal_join_enrich",
-    "topk_orders_per_priority", "transform_query_params",
-    "transform_scalars", "tumbling_window_agg", "validate_dlq_counts",
-})
-
-_R09_CHECKED = frozenset({
-    "asof_join_clicks", "dedup_first_wins", "dedup_windowed",
-    "docs_boilerplate_ngrams", "docs_bpe_apply_fixed",
-    "docs_bpe_word_table", "docs_c4_filters", "docs_chunking",
-    "docs_curation_v2", "docs_domain_cap", "docs_dup_clusters",
-    "docs_dup_keep_best", "docs_gopher_rules", "docs_hash_embed_topk",
-    "docs_hash_embedding", "docs_importance_weights",
-    "docs_incremental_dedup", "docs_line_dedup", "docs_mixture_report",
-    "docs_ngram_containment_pairs", "docs_ngram_jaccard_pairs",
-    "docs_pii_scrub", "docs_quality_topk", "docs_temperature_mixture",
-    "docs_top_terms", "docs_vocab_stats", "emb_ivf_ann_topk",
-    "emb_ivf_pq_ann_topk", "emb_lsh_ann_topk", "emb_normalize",
-    "emb_pq_ann_topk", "emb_quantize_int8", "emb_semantic_dedup",
-    "emb_semantic_dedup_lsh", "events_cms_calibration",
-    "events_kmv_distinct", "events_mad_anomalies", "filter_project",
-    "multimodal_decode_stub", "multimodal_pipeline",
-    "multimodal_video_embedding", "otlp_flatten_logs",
-    "otlp_flatten_metrics", "otlp_metric_rollup_5m",
-    "otlp_rollup_all_families", "pipeline_canonical",
-    "sink_mapping_casts", "temporal_join_enrich", "transform_scalars",
-    "validate_dlq_counts",
-})
-
-_R10_CHECKED = frozenset({
-    "asof_join_clicks", "cube_order_stats", "dedup_first_wins",
-    "dedup_windowed", "docs_bm25", "docs_bpe_tokens", "docs_bpe_vocab",
-    "docs_curation_e2e", "docs_curation_v5", "docs_decontaminate_against",
-    "docs_epoch_shuffle", "docs_quality_deciles", "docs_rare_token_ratio",
-    "docs_sentence_span_dedup", "docs_span_dedup",
-    "docs_upsample_mixture", "emb_cluster_sample", "events_moving_sum_1h",
-    "events_winsorize", "filter_project", "funnel_conversion",
-    "otlp_flatten_metrics", "pipeline_canonical",
-    "pivot_user_event_counts", "q10_returned_revenue",
-    "q12_priority_buckets", "q13_customer_distribution",
-    "q14_conditional_agg", "q15_top_supplier", "q16_supplier_cardinality",
-    "q17_small_quantity_revenue", "q18_large_orders",
-    "q19_disjunctive_predicates", "q1_pricing_summary",
-    "q21_waiting_suppliers", "q22_global_sales_opportunity",
-    "q2_min_cost_supplier", "q3_top_revenue", "q4_order_priority",
-    "q5_region_revenue", "q6_forecast_revenue", "q7_volume_shipping",
-    "q8_market_share", "q9_product_profit", "range_join_attribution",
-    "retention_cohorts", "sink_mapping_casts", "temporal_join_enrich",
-    "transform_scalars", "validate_dlq_counts",
-})
-
-_R11_CHECKED = frozenset({
-    "asof_join_clicks", "dedup_first_wins", "dedup_windowed",
-    "docs_bigram_pmi", "docs_bpe_apply_fixed", "docs_c4_filters",
-    "docs_corpus_report", "docs_curation_v3", "docs_curation_v4",
-    "docs_decontamination", "docs_dedup_agreement", "docs_exact_dedup",
-    "docs_fingerprint", "docs_hash_embed_topk", "docs_importance_weights",
-    "docs_kgram_novelty", "docs_langid", "docs_lm_familiarity",
-    "docs_minhash_lsh_pairs", "docs_normalize_text", "docs_pipeline_e2e",
-    "docs_quality_score", "docs_repetition_signals",
-    "docs_sequence_packing", "docs_simhash", "docs_snapshot_diff",
-    "docs_split_report", "docs_token_stats", "docs_top_terms",
-    "docs_trained_classifier", "emb_cosine_topk",
-    "emb_matryoshka_ann_topk", "emb_mean_center", "emb_near_dup_pairs",
-    "emb_pq_index_ann_topk", "emb_truncate_renorm", "filter_project",
-    "json_props_extract", "otlp_flatten_metrics", "otlp_flatten_traces",
-    "pipeline_canonical", "session_window_agg", "sessionize_events",
-    "sink_mapping_casts", "temporal_join_enrich",
-    "topk_orders_per_priority", "transform_query_params",
-    "transform_scalars", "tumbling_window_agg", "validate_dlq_counts",
-})
-
-# Newest-signature round per entry, derived from the artifact key sets.
-# Newer rounds shadow older ones; entries in no set have never been
-# driver-checked (priority 0).
-_CHECKED_ROUNDS = (
-    (11, _R11_CHECKED),
-    (10, _R10_CHECKED),
-    (9, _R09_CHECKED),
-    (8, _R08_CHECKED),
-    (7, _R07_CHECKED),
-    (6, _R06_CHECKED),
-    (5, _R05_CHECKED),
-    (4, _R04_CHECKED),
-    (3, _R03_CHECKED),
+# Newest-signature round per entry, newest round first: newer rounds
+# shadow older ones; entries in no set have never been driver-checked
+# (priority 0).  The rounds are fixed, not globbed: a new artifact moves
+# _LATEST_ROUND and reorders the registry, so it joins at round start
+# together with the re-snapshot of the impl hashes.
+_CHECKED_ROUNDS = tuple(
+    (rnd, signed_entries(_ARTIFACT_DIR / f"CORRECTNESS_r{rnd:02d}.json"))
+    for rnd in range(11, 2, -1)
 )
 _LATEST_ROUND = _CHECKED_ROUNDS[0][0]
 
@@ -7351,8 +7171,9 @@ _STALE_SIGNED = frozenset({
     # plan); flags identical, oracle exact both SFs:
     "docs_dedup_agreement",
     # OPTIMIZATION r12 (documented negative): gopher_rules gained an
-    # Arrow counter kernel, measured a WASH at 1M docs — default stays
-    # catalyst, behavior unchanged; counters equality-pinned:
+    # Arrow counter kernel, measured a WASH at 1M docs, since deleted
+    # with its engine= option — the catalyst battery is unchanged and
+    # its edge-shape counters are pinned in test_gopher_rules_battery:
     "docs_gopher_rules",
     # OPTIMIZATION r12: minhash_lsh_pairs band join ships band keys
     # only; gram arrays join back per surviving candidate (the LSH

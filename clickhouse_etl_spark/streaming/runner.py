@@ -1,7 +1,8 @@
 """Streaming runner: the same operator chain under Structured Streaming.
 
-One ``StreamingQuery`` per pipeline (the reference's per-stage pods +
-NATS hops collapse into a single Spark DAG — SURVEY.md §3.2). Delivery
+One main ``StreamingQuery`` per pipeline (the reference's per-stage
+pods + NATS hops collapse into a single Spark DAG — SURVEY.md §3.2),
+plus one DLQ query per JSON source when a DLQ writer is wired. Delivery
 semantics: checkpointing + the sink's idempotency column give
 at-least-once with harmless replays, replacing the reference's
 ack/commit choreography (kafka/consumer.go:253-362).
@@ -70,7 +71,6 @@ def kafka_source_stream(
 def streaming_source_chain(
     src: SourceConfig,
     ts_col: str,
-    value_is_json: bool = True,
     dlq_sink: Optional[Callable[[DataFrame], None]] = None,
 ) -> Callable[[DataFrame], DataFrame]:
     """Per-source streaming chain: validate -> filter -> dedup-within-
@@ -78,11 +78,21 @@ def streaming_source_chain(
     (cmd/glassflow/dedup_component.go:210-225); spec-declared dataops
     apply the STREAM_SAFE_DATAOPS subset only — batch-only ops
     (exact_dedup's corpus window, simhash's per-doc aggregation) raise
-    SpecError at assembly time instead of silently skipping."""
+    SpecError at assembly time instead of silently skipping.
+
+    Validation runs when the source carries a raw ``value`` column and
+    declares schema fields; ``dlq_sink`` receives its failure frame. A
+    frame-level ``ts_col`` (e.g. the Kafka ``_kafka_ts``) that is not a
+    payload field rides through validation, so the dedup watermark can
+    still resolve it."""
 
     def chain(df: DataFrame) -> DataFrame:
-        if value_is_json and src.schema_fields and "value" in df.columns:
-            ok, dlq = validate_json(df, src.schema_fields, component=f"ingestor:{src.source_id}")
+        if src.schema_fields and "value" in df.columns:
+            declared = {f.name for f in src.schema_fields}
+            keep = [ts_col] if ts_col in df.columns and ts_col not in declared else None
+            ok, dlq = validate_json(
+                df, src.schema_fields, component=f"ingestor:{src.source_id}", keep_cols=keep
+            )
             if dlq_sink is not None:
                 dlq_sink(dlq)
             df = ok
@@ -182,25 +192,26 @@ class StreamingPipeline:
         staged: dict[str, DataFrame] = {}
         for src in pipe_sources:
             source_df = sources[src.source_id]
-            # schema validation with a DLQ branch: the failure frame runs
-            # as its OWN StreamingQuery over the same source (each query
-            # keeps independent offsets — the reference's per-operator
-            # DLQ middleware, processor/dlq_processor.go:13-60)
-            if dlq_writer is not None and src.schema_fields and "value" in source_df.columns:
-                _, dlq_frame = validate_json(
-                    source_df, src.schema_fields, component=f"ingestor:{src.source_id}"
-                )
-                dq = (
-                    dlq_frame.writeStream.foreachBatch(
-                        lambda df, _bid: dlq_writer.write(df) if not df.isEmpty() else None
+            # schema validation with a DLQ branch: the chain's failure
+            # frame runs as its OWN StreamingQuery over the same source
+            # (each query keeps independent offsets — the reference's
+            # per-operator DLQ middleware, processor/dlq_processor.go:13-60)
+            dlq_sink = None
+            if dlq_writer is not None:
+
+                def dlq_sink(dlq_frame: DataFrame) -> None:
+                    dq = (
+                        dlq_frame.writeStream.foreachBatch(
+                            lambda df, _bid: dlq_writer.write(df) if not df.isEmpty() else None
+                        )
+                        .option("checkpointLocation", f"{self.checkpoint_dir}/dlq_{src.source_id}")
+                        .outputMode("append")
+                        .trigger(**trigger)
+                        .start()
                     )
-                    .option("checkpointLocation", f"{self.checkpoint_dir}/dlq_{src.source_id}")
-                    .outputMode("append")
-                    .trigger(**trigger)
-                    .start()
-                )
-                self.dlq_queries.append(dq)
-            chain = streaming_source_chain(src, ts_cols[src.source_id])
+                    self.dlq_queries.append(dq)
+
+            chain = streaming_source_chain(src, ts_cols[src.source_id], dlq_sink=dlq_sink)
             staged[src.source_id] = chain(source_df)
 
         if self.spec.join is not None:

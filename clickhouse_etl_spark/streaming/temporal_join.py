@@ -142,10 +142,9 @@ def _make_step(
     r_coerce: list,     # per-right-field state coercers
     out_names: list[str],  # full output column order
 ):
-    """The engine-agnostic per-key micro-batch step: vectorized
-    searchsorted join over one key's sorted rows + the columnar state
-    tuple.  Both stateful-API adapters (applyInPandasWithState and
-    transformWithStateInPandas) call this — one algorithm, two wirings.
+    """The per-key micro-batch step: vectorized searchsorted join over
+    one key's sorted rows + the columnar state tuple, kept free of the
+    applyInPandasWithState wiring so it is testable without a session.
 
     Signature: step(rows_pdf, state_tuple_or_None) ->
     (out_pdf_or_None, new_state_tuple_or_None) where the state tuple is

@@ -1,23 +1,24 @@
-"""Generate the mechanical round-start rotation edits for queries.py.
+"""Print the mechanical round-start rotation checks for queries.py.
 
-Run ONCE at the start of round N+1, from (a worktree of) the commit the
+Run ONCE at the start of round N+1, from (a checkout of) the commit the
 round-N driver CORRECTNESS artifact certified:
 
     python scripts/round_start.py CORRECTNESS_r06.json
 
-It prints, ready to paste into clickhouse_etl_spark/queries.py:
+It prints:
 
-  1. the ``_R0N_CHECKED`` frozenset literal (the artifact's key set,
-     with any error rows called out separately — a row whose newest
-     driver check FAILED must not count as signed),
+  1. how many of the artifact's entries count as signed, and any error
+     rows — a row whose newest driver check FAILED does not count as
+     signed (``queries.signed_entries`` applies the same rule when it
+     loads the artifact),
   2. the entries whose implementing-source hash already differs from
      ``impl_hashes_signed.json`` (the seed for the fresh
      ``_STALE_SIGNED`` — normally empty when run at the signed commit),
-  3. the ``_priority`` ladder adjustments (which existing sets age into
-     the tail).
+  3. the remaining hand steps: extend the round range of
+     ``queries._CHECKED_ROUNDS`` and the ``_priority`` ladder.
 
 It does NOT edit queries.py itself: the ladder extension changes
-control flow and deserves eyes.  After pasting, run
+control flow and deserves eyes.  Afterwards run
 ``python scripts/snapshot_impl_hashes.py`` at the SAME signed commit,
 then ``pytest tests/test_rotation.py``.
 """
@@ -30,6 +31,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from clickhouse_etl_spark import impl_hash  # noqa: E402
+from clickhouse_etl_spark.queries import signed_entries  # noqa: E402
 
 
 def _literal(name: str, keys) -> str:
@@ -45,24 +47,13 @@ def main(argv):
         print(__doc__)
         return 2
     art_path = Path(argv[1])
-    art = json.loads(art_path.read_text())
 
-    # 1. signed set: every key whose newest driver row is not a failure.
-    #    rows-only entries (err == "no_oracle" with a spark_rows count)
-    #    count as signed; real errors / hash mismatches do not.
-    ok, bad = [], []
-    for name, row in art.items():
-        rows_only = row.get("err") == "no_oracle" and row.get("spark_rows") is not None
-        oracle_ok = (
-            row.get("rows_match") and row.get("schema_match") and row.get("hash_match")
-        )
-        (ok if (rows_only or oracle_ok) else bad).append(name)
-
-    round_tag = "".join(c for c in art_path.stem if c.isdigit()) or "NN"
-    print(f"# --- paste into queries.py ({len(ok)} signed entries) ---")
-    print(_literal(f"_R{round_tag.zfill(2)}_CHECKED", ok))
+    # 1. signed set, by the same rule the registry loads it with.
+    ok = signed_entries(art_path)
+    bad = sorted(set(json.loads(art_path.read_text())) - ok)
+    print(f"# {art_path.name}: {len(ok)} signed entries")
     if bad:
-        print(f"\n# NOT signed (driver row failed — keep these at priority 1): {sorted(bad)}")
+        print(f"# NOT signed (driver row failed — keep these at priority 1): {bad}")
 
     # 2. mechanical stale seed vs the current snapshot.
     changed = sorted(impl_hash.changed_entries())
@@ -74,9 +65,9 @@ def main(argv):
 
     # 3. ladder reminder.
     print(
-        "\n# --- ladder: extend _priority so the oldest-signature tier is the\n"
-        "# oldest REMAINING round; drop any _R0N_CHECKED set no entry's\n"
-        "# newest signature lives in; keep priorities 0-3 within the ~50\n"
+        "\n# --- extend the round range of queries._CHECKED_ROUNDS to load\n"
+        "# this artifact; extend _priority so the oldest-signature tier is\n"
+        "# the oldest REMAINING round; keep priorities 0-3 within the ~50\n"
         "# driver budget (tests/test_rotation.py enforces). Then run\n"
         "# scripts/snapshot_impl_hashes.py and the rotation tests."
     )

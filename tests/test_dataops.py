@@ -2609,35 +2609,6 @@ def test_pq_index_cell_skew_report_and_rebalance(spark, sf_dir, tmp_path):
     sim.release_index_cache()
 
 
-def test_gopher_rules_engines_identical(spark):
-    """The Arrow counter kernel (default, r12) is row-identical to the
-    Catalyst expression battery — real corpus + the edge shapes (null,
-    empty, all-punct, bullet/ellipsis lines, substring-short lines)."""
-    from clickhouse_etl_spark.dataops.text import gopher_rules
-    from clickhouse_etl_spark.sources import load_table
-
-    edge = spark.createDataFrame(
-        [
-            (100, None), (101, ""), (102, " "), (103, "..."),
-            (104, "-"), (105, "- "), (106, "* x\n...\nab..."),
-            (107, "ONE Two #three ... mixed...case\nplain"),
-        ],
-        "doc_id long, text string",
-    )
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents").select(
-        "doc_id", "text"
-    ).unionByName(edge)
-    a = sorted(
-        map(tuple, gopher_rules(docs, engine="pandas").collect()),
-        key=repr,
-    )
-    b = sorted(
-        map(tuple, gopher_rules(docs, engine="catalyst").collect()),
-        key=repr,
-    )
-    assert a == b and len(a) > 8
-
-
 def test_gopher_rules_battery(spark):
     """Each Gopher rule trips on a purpose-built doc and the clean doc
     passes the whole battery (r9: dataops/text.gopher_rules)."""
@@ -2684,6 +2655,37 @@ def test_gopher_rules_battery(spark):
     assert out[8]["n_words"] == 0 and out[8]["pass_gopher"] == 0
     for i in range(1, 9):
         assert out[i]["pass_gopher"] == 0, i
+
+    # edge shapes: null, empty, whitespace-only, all-punct, lone/short
+    # bullets, bullet + ellipsis lines, mixed case. Counters and flags
+    # pinned from the Catalyst battery.
+    counters = ["n_words", "sum_word_len", "n_symbol_words", "n_alpha_words",
+                "n_lines", "n_bullet_lines", "n_ellipsis_lines", "n_req_stops"]
+    flags = ["r_word_count", "r_mean_word_len", "r_symbol_ratio", "r_bullet",
+             "r_ellipsis", "r_alpha", "r_stopwords", "pass_gopher"]
+    edge = {
+        100: (None, (0, 0, 0, 0, 0, 0, 0, 0), (0, 0, 1, 1, 1, 1, 0, 0)),
+        101: ("", (0, 0, 0, 0, 0, 0, 0, 0), (0, 0, 1, 1, 1, 1, 0, 0)),
+        102: (" ", (0, 0, 0, 0, 1, 0, 0, 0), (0, 0, 1, 1, 1, 1, 0, 0)),
+        103: ("...", (1, 3, 1, 0, 1, 0, 1, 0), (0, 1, 0, 1, 0, 0, 0, 0)),
+        104: ("-", (1, 1, 0, 0, 1, 0, 0, 0), (0, 0, 1, 1, 1, 0, 0, 0)),
+        105: ("- ", (1, 1, 0, 0, 1, 1, 0, 0), (0, 0, 1, 0, 1, 0, 0, 0)),
+        106: ("* x\n...\nab...", (2, 12, 1, 1, 3, 1, 2, 0), (0, 1, 0, 1, 0, 0, 0, 0)),
+        107: ("ONE Two #three ... mixed...case\nplain",
+              (5, 33, 3, 4, 2, 0, 0, 0), (0, 1, 0, 1, 1, 1, 0, 0)),
+    }
+    got = {
+        r["doc_id"]: r
+        for r in gopher_rules(
+            spark.createDataFrame(
+                [(i, text) for i, (text, _, _) in edge.items()],
+                "doc_id long, text string",
+            )
+        ).collect()
+    }
+    for i, (_, want_counters, want_flags) in edge.items():
+        assert tuple(got[i][c] for c in counters) == want_counters, i
+        assert tuple(got[i][f] for f in flags) == want_flags, i
 
 
 def test_temperature_mixture_rates_and_gate(spark):
@@ -4249,7 +4251,7 @@ def test_vec_dedup_against_guards(spark, tmp_path):
             op="semantic_dedup_against", params={"seen_path": ok}
         ),),
     )
-    out_stream = streaming_source_chain(cfg, "ts", value_is_json=False)(stream)
+    out_stream = streaming_source_chain(cfg, "ts")(stream)
     assert out_stream.isStreaming
     assert set(out_stream.columns) == {"vec_id", "embedding", "ts"}
 
@@ -4473,7 +4475,7 @@ def test_scrub_pii_battery_streams(spark, tmp_path):
         source_id="documents",
         dataops=(DataopConfig(op="scrub_pii_battery", params={}),),
     )
-    out = streaming_source_chain(cfg, "ts", value_is_json=False)(stream)
+    out = streaming_source_chain(cfg, "ts")(stream)
     assert out.isStreaming
     assert "text_scrubbed" in out.columns and "pii_ip" in out.columns
     # and the one micro-batch actually scrubs

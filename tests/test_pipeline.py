@@ -201,7 +201,7 @@ def test_streaming_chain_applies_stream_safe_dataops(spark, tmp_path):
         source_id="documents",
         dataops=(DataopConfig(op="token_stats"), DataopConfig(op="quality_score")),
     )
-    out = streaming_source_chain(safe, "ts", value_is_json=False)(stream)
+    out = streaming_source_chain(safe, "ts")(stream)
     assert out.isStreaming
     assert "n_tokens" in out.columns and "quality" in out.columns
 
@@ -210,14 +210,14 @@ def test_streaming_chain_applies_stream_safe_dataops(spark, tmp_path):
         source_id="documents", dataops=(DataopConfig(op="upsample_mixture",
                                                      params={"source_col": "text"}),)
     )
-    out2 = streaming_source_chain(ups, "ts", value_is_json=False)(stream)
+    out2 = streaming_source_chain(ups, "ts")(stream)
     assert out2.isStreaming and "copy_idx" in out2.columns
 
     unsafe = SourceConfig(
         source_id="documents", dataops=(DataopConfig(op="exact_dedup"),)
     )
     with _pytest.raises(SpecError, match="batch-only"):
-        streaming_source_chain(unsafe, "ts", value_is_json=False)(stream)
+        streaming_source_chain(unsafe, "ts")(stream)
 
 
 def test_r4_dataops_on_spec_surface(spark, tmp_path):
@@ -253,7 +253,7 @@ def test_r4_dataops_on_spec_surface(spark, tmp_path):
     for op in sorted(new_ops):
         cfg = SourceConfig(source_id="documents", dataops=(DataopConfig(op=op),))
         with pytest.raises(SpecError, match="batch-only"):
-            streaming_source_chain(cfg, "ts", value_is_json=False)(stream)
+            streaming_source_chain(cfg, "ts")(stream)
 
 
 def test_dedup_against_streaming_parity_with_batch(spark, tmp_path):
@@ -301,7 +301,7 @@ def test_dedup_against_streaming_parity_with_batch(spark, tmp_path):
         source_id="documents",
         dataops=(DataopConfig(op="dedup_against", params={"seen_path": seen_dir}),),
     )
-    out = streaming_source_chain(src, "ts", value_is_json=False)(stream)
+    out = streaming_source_chain(src, "ts")(stream)
     assert out.isStreaming
     q = (
         out.writeStream.format("memory")
@@ -402,13 +402,13 @@ def test_r6_dataops_on_spec_surface(spark, tmp_path):
     safe = SourceConfig(
         source_id="documents", dataops=(DataopConfig(op="normalize_text"),)
     )
-    out = streaming_source_chain(safe, "ts", value_is_json=False)(stream)
+    out = streaming_source_chain(safe, "ts")(stream)
     assert out.isStreaming and "text_norm" in out.columns
     unsafe = SourceConfig(
         source_id="documents", dataops=(DataopConfig(op="hash_embedding"),)
     )
     with _pytest.raises(SpecError, match="batch-only"):
-        streaming_source_chain(unsafe, "ts", value_is_json=False)(stream)
+        streaming_source_chain(unsafe, "ts")(stream)
 
 
 def test_r7_dataops_on_spec_surface(spark, tmp_path):
@@ -464,7 +464,7 @@ def test_r7_dataops_on_spec_surface(spark, tmp_path):
     for op in ("trained_classifier", "cluster_sample"):
         cfg = SourceConfig(source_id="documents", dataops=(DataopConfig(op=op),))
         with _pytest.raises(SpecError, match="batch-only"):
-            streaming_source_chain(cfg, "ts", value_is_json=False)(stream)
+            streaming_source_chain(cfg, "ts")(stream)
 
 
 def test_classify_against_streaming_parity_with_batch(spark, tmp_path):
@@ -525,7 +525,7 @@ def test_classify_against_streaming_parity_with_batch(spark, tmp_path):
             DataopConfig(op="classify_against", params={"weights_path": weights_dir}),
         ),
     )
-    out = streaming_source_chain(src, "ts", value_is_json=False)(stream)
+    out = streaming_source_chain(src, "ts")(stream)
     assert out.isStreaming
     q = (
         out.writeStream.format("memory")
@@ -622,7 +622,7 @@ def test_dedup_against_bloom_on_streaming_chain(spark, tmp_path):
             ),
         ),
     )
-    out = streaming_source_chain(src, "ts", value_is_json=False)(stream)
+    out = streaming_source_chain(src, "ts")(stream)
     assert out.isStreaming
     q = (
         out.writeStream.format("memory")
@@ -668,7 +668,7 @@ def test_repetition_signals_streaming_chain_runs(spark, tmp_path):
         source_id="documents",
         dataops=(DataopConfig(op="repetition_signals"),),
     )
-    out = streaming_source_chain(src, "ts", value_is_json=False)(stream)
+    out = streaming_source_chain(src, "ts")(stream)
     assert out.isStreaming
     q = (
         out.writeStream.format("memory")
@@ -757,7 +757,7 @@ def test_streaming_curation_dataops_spec_chain(spark, tmp_path):
             }),
         ),
     )
-    out = streaming_source_chain(src, "ts", value_is_json=False)(stream)
+    out = streaming_source_chain(src, "ts")(stream)
     assert out.isStreaming
     q = (
         out.writeStream.format("memory")
@@ -908,7 +908,7 @@ def test_six_stage_curation_chain_from_one_pipeline_json(spark, tmp_path):
     ])
     stream = spark.readStream.schema(schema).parquet(wave_dir)
     out = streaming_source_chain(
-        spec.source("documents"), "ts", value_is_json=False
+        spec.source("documents"), "ts"
     )(stream)
     assert out.isStreaming
     q = (
@@ -1145,7 +1145,7 @@ def test_ann_serve_on_spec_surface(spark, sf_dir, tmp_path):
         ),
     )
     with _pytest.raises(SpecError, match="SINK-SIDE"):
-        streaming_source_chain(cfg, "query_id", value_is_json=False)(stream)
+        streaming_source_chain(cfg, "query_id")(stream)
     release_index_cache()
 
 
@@ -1198,13 +1198,13 @@ def test_r9_dataops_on_spec_surface(spark, tmp_path):
     safe = SourceConfig(
         source_id="documents", dataops=(DataopConfig(op="gopher_rules"),)
     )
-    out = streaming_source_chain(safe, "ts", value_is_json=False)(stream)
+    out = streaming_source_chain(safe, "ts")(stream)
     assert out.isStreaming and "pass_gopher" in out.columns
     unsafe = SourceConfig(
         source_id="documents", dataops=(DataopConfig(op="temperature_mixture"),)
     )
     with _pytest.raises(SpecError, match="batch-only"):
-        streaming_source_chain(unsafe, "ts", value_is_json=False)(stream)
+        streaming_source_chain(unsafe, "ts")(stream)
 
 
 def test_c4_and_line_dedup_on_spec_surface(spark, tmp_path):
@@ -1254,13 +1254,13 @@ def test_c4_and_line_dedup_on_spec_surface(spark, tmp_path):
     safe = SourceConfig(
         source_id="documents", dataops=(DataopConfig(op="c4_filters"),)
     )
-    out = streaming_source_chain(safe, "ts", value_is_json=False)(stream)
+    out = streaming_source_chain(safe, "ts")(stream)
     assert out.isStreaming and "pass_c4" in out.columns
     unsafe = SourceConfig(
         source_id="documents", dataops=(DataopConfig(op="line_dedup"),)
     )
     with _pytest.raises(SpecError, match="batch-only"):
-        streaming_source_chain(unsafe, "ts", value_is_json=False)(stream)
+        streaming_source_chain(unsafe, "ts")(stream)
 
 
 def test_line_dedup_against_on_spec_surface(spark, tmp_path):
@@ -1343,7 +1343,7 @@ def test_line_dedup_against_on_spec_surface(spark, tmp_path):
         source_id="documents",
         dataops=(DataopConfig(op="line_dedup_against", params={"seen_path": seen}),),
     )
-    out_stream = streaming_source_chain(safe, "ts", value_is_json=False)(stream)
+    out_stream = streaming_source_chain(safe, "ts")(stream)
     assert out_stream.isStreaming and "n_lines_kept" in out_stream.columns
 
     # the span-grain sibling shares the surface contract: stream-safe,
@@ -1369,7 +1369,7 @@ def test_line_dedup_against_on_spec_surface(spark, tmp_path):
         ),
     )
     stream2 = spark.readStream.schema(schema).parquet(src_dir)
-    out2 = streaming_source_chain(safe_span, "ts", value_is_json=False)(stream2)
+    out2 = streaming_source_chain(safe_span, "ts")(stream2)
     assert out2.isStreaming and "n_sentences_kept" in out2.columns
 
 
@@ -1491,7 +1491,7 @@ def test_importance_against_on_spec_surface(spark, tmp_path):
         dataops=(DataopConfig(op="importance_against",
                               params={"weights_path": path}),),
     )
-    s_out = streaming_source_chain(safe, "ts", value_is_json=False)(stream)
+    s_out = streaming_source_chain(safe, "ts")(stream)
     assert s_out.isStreaming and "score" in s_out.columns
 
 
@@ -1582,7 +1582,7 @@ def test_decontaminate_against_on_spec_surface(spark, tmp_path):
             op="decontaminate_against", params={"seen_path": seen, "n": 3}
         ),),
     )
-    out_stream = streaming_source_chain(safe, "ts", value_is_json=False)(stream)
+    out_stream = streaming_source_chain(safe, "ts")(stream)
     assert out_stream.isStreaming
     assert set(out_stream.columns) == {"doc_id", "text", "ts"}
 
@@ -1675,6 +1675,6 @@ def test_neardup_against_on_spec_surface(spark, tmp_path):
             op="neardup_against", params={"seen_path": seen}
         ),),
     )
-    out_stream = streaming_source_chain(safe, "ts", value_is_json=False)(stream)
+    out_stream = streaming_source_chain(safe, "ts")(stream)
     assert out_stream.isStreaming
     assert set(out_stream.columns) == {"doc_id", "text", "ts"}

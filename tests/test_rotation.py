@@ -7,12 +7,15 @@ These tests make the bookkeeping mechanical instead of hand-maintained:
 
 - any registry entry whose transitive implementing source differs from
   the signed snapshot MUST be in ``_STALE_SIGNED`` (or never checked);
-- the ``_R0N_CHECKED`` sets must exactly match the driver artifacts;
+- the signed sets are loaded from the committed driver artifacts, and
+  loading them leaves the registry rotation exactly as it was pinned;
 - the rotation front of the registry must contain the oldest-signature
   tail, so no entry's newest signature falls more than two rounds back.
 """
 
+import hashlib
 import json
+from collections import Counter
 from pathlib import Path
 
 import pytest
@@ -56,17 +59,56 @@ def test_stale_set_entries_exist():
     assert not unknown, f"_STALE_SIGNED names unknown entries: {sorted(unknown)}"
 
 
-@pytest.mark.parametrize("round_no", [3, 4, 5, 6, 7, 8, 9, 10])
+@pytest.mark.parametrize("round_no", [3, 4, 5, 6, 7, 8, 9, 10, 11])
 def test_checked_sets_match_driver_artifacts(round_no):
+    """Every row of the r3..r11 artifacts passed, so each loaded signed
+    set is the artifact's full key set."""
     artifact = REPO / f"CORRECTNESS_r{round_no:02d}.json"
-    if not artifact.exists():
-        pytest.skip(f"no {artifact.name} in repo")
     driver_keys = set(json.loads(artifact.read_text()))
-    declared = getattr(queries, f"_R{round_no:02d}_CHECKED")
-    assert set(declared) == driver_keys, (
-        f"_R{round_no:02d}_CHECKED drifted from {artifact.name}: "
-        f"missing={sorted(driver_keys - set(declared))} "
-        f"extra={sorted(set(declared) - driver_keys)}"
+    loaded = dict(queries._CHECKED_ROUNDS)[round_no]
+    assert set(loaded) == driver_keys, (
+        f"round {round_no} signed set drifted from {artifact.name}: "
+        f"missing={sorted(driver_keys - set(loaded))} "
+        f"extra={sorted(set(loaded) - driver_keys)}"
+    )
+
+
+def test_signed_entries_rule(tmp_path):
+    """A missing artifact raises instead of reading as an empty set; a
+    failed row is not signed; a rows-only row is."""
+    with pytest.raises(FileNotFoundError):
+        queries.signed_entries(tmp_path / "CORRECTNESS_r99.json")
+
+    ok = {"rows_match": True, "schema_match": True, "hash_match": True,
+          "spark_rows": 5, "oracle_rows": 5, "err": None}
+    art = tmp_path / "CORRECTNESS_r98.json"
+    art.write_text(json.dumps({
+        "passed": ok,
+        "hash_mismatch": {**ok, "hash_match": False},
+        "crashed": {"rows_match": None, "schema_match": None,
+                    "hash_match": None, "spark_rows": None,
+                    "oracle_rows": None, "err": "Py4JJavaError"},
+        "rows_only": {"rows_match": None, "schema_match": None,
+                      "hash_match": None, "spark_rows": 50,
+                      "oracle_rows": None, "err": "no_oracle"},
+        "rows_only_crashed": {"rows_match": None, "schema_match": None,
+                              "hash_match": None, "spark_rows": None,
+                              "oracle_rows": None, "err": "no_oracle"},
+    }))
+    assert queries.signed_entries(art) == {"passed", "rows_only"}
+
+
+def test_loaded_rotation_is_pinned():
+    """Registry order and every entry's newest signature, pinned so that
+    a change in how the signed sets load cannot silently reorder the
+    rotation. Re-pin only when a round start deliberately changes it."""
+    assert queries._LATEST_ROUND == 11
+    rows = [[n, queries._newest_signature(n)] for n in queries.QUERIES]
+    assert len(rows) == 125
+    assert Counter(rnd for _, rnd in rows) == {9: 35, 10: 40, 11: 50}
+    digest = hashlib.sha256(json.dumps(rows).encode()).hexdigest()
+    assert digest == (
+        "6b99473923ed5ebdf4a1c787c5298994fdf8b658c88385127e0e1e6515210eb1"
     )
 
 

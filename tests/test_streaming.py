@@ -326,6 +326,68 @@ def test_streaming_dlq_branch(spark, tmp_path):
     assert all(r["component"] == "ingestor:s" for r in failures)
 
 
+def test_streaming_json_source_with_dedup(spark, tmp_path):
+    """A JSON source whose event time is a frame column (the Kafka
+    ``_kafka_ts``), not a payload field, keeps that column through
+    validation, so the dedup watermark resolves it: duplicates collapse
+    in the sink and the malformed payload lands in the DLQ."""
+    doc = {
+        "version": "v3",
+        "pipeline_id": "jdd",
+        "name": "json-dedup",
+        "sources": [
+            {"type": "kafka", "source_id": "s", "topic": "s",
+             "schema_fields": [{"name": "id", "type": "string"}, {"name": "n", "type": "int"}]},
+        ],
+        "transforms": [
+            {"type": "dedup", "source_id": "s",
+             "config": {"key": "id", "time_window": "1h"}},
+        ],
+        "sink": {
+            "type": "clickhouse", "table": "out", "max_batch_size": 100,
+            "max_delay_time": "1s",
+            "mapping": [
+                {"name": "id", "column_name": "id", "column_type": "String"},
+                {"name": "n", "column_name": "n", "column_type": "Int64"},
+            ],
+        },
+    }
+    spec = parse_pipeline_json(json.dumps(doc))
+
+    base = ts("2024-01-01T10:00:00")
+    raw_schema = T.StructType([
+        T.StructField("value", T.StringType()),
+        T.StructField("_kafka_ts", T.TimestampType()),
+    ])
+    inp = _write_stream_input(spark, str(tmp_path), "in", [
+        ('{"id":"a","n":1}', base),
+        ('{"id":"a","n":1}', base + dt.timedelta(seconds=1)),  # duplicate key
+        ('{"id":"b","n":2}', base + dt.timedelta(seconds=2)),
+        ('{broken', base + dt.timedelta(seconds=3)),            # malformed -> DLQ
+    ], raw_schema)
+
+    sink = ClickHouseSink(table="out", parquet_fallback_path=str(tmp_path / "sinkout"))
+    dlq = DLQWriter(str(tmp_path / "dlq"))
+    pipe = StreamingPipeline(spec=spec, checkpoint_dir=str(tmp_path / "ckpt"))
+    q = pipe.start(
+        spark,
+        sources={"s": spark.readStream.schema(raw_schema).parquet(inp)},
+        ts_cols={"s": "_kafka_ts"},
+        sink_fn=sink.foreach_batch(),
+        trigger={"availableNow": True},
+        dlq_writer=dlq,
+    )
+    q.awaitTermination(120)
+    assert len(pipe.dlq_queries) == 1
+    for dq in pipe.dlq_queries:
+        dq.awaitTermination(120)
+
+    out = spark.read.parquet(str(tmp_path / "sinkout"))
+    assert sorted((r["id"], r["n"]) for r in out.collect()) == [("a", 1), ("b", 2)]
+    failures = dlq.read(spark).collect()
+    assert len(failures) == 1 and "malformed" in failures[0]["error"]
+
+
 def test_sink_replay_idempotency(spark, tmp_path):
     """At-least-once + idempotent write: replaying the same epoch (same
     batch_id, same rows) leaves exactly one logical copy after the
@@ -372,91 +434,6 @@ def test_metrics_listener_captures_progress(spark, tmp_path):
         assert snap["batches"] >= 1
     finally:
         spark.streams.removeListener(listener)
-
-
-def test_temporal_join_tws_semantics(spark, tmp_path):
-    """Same golden scenario as the applyInPandasWithState variant, on the
-    Spark 4 transformWithStateInPandas API."""
-    from clickhouse_etl_spark.streaming.temporal_join_tws import HAS_TWS, temporal_join_tws
-
-    if not HAS_TWS:
-        pytest.skip("transformWithStateInPandas unavailable")
-
-    base = ts("2024-01-01T10:00:00")
-    left_rows = [
-        ("u1", "Alice", base),
-        ("u2", "Bob", base + dt.timedelta(seconds=1)),
-        ("u3", "Carol", base),
-    ]
-    right_rows = [
-        ("u1", "old@x.com", base + dt.timedelta(milliseconds=200)),
-        ("u1", "new@x.com", base + dt.timedelta(milliseconds=500)),
-        ("u2", "bob@x.com", base + dt.timedelta(milliseconds=300)),
-    ]
-    lpath = _write_stream_input(spark, str(tmp_path), "left", left_rows, LEFT_SCHEMA)
-    rpath = _write_stream_input(spark, str(tmp_path), "right", right_rows, RIGHT_SCHEMA)
-    left = spark.readStream.schema(LEFT_SCHEMA).parquet(lpath)
-    right = spark.readStream.schema(RIGHT_SCHEMA).parquet(rpath)
-    out_schema = T.StructType(
-        [
-            T.StructField("id", T.StringType()),
-            T.StructField("name", T.StringType()),
-            T.StructField("email", T.StringType()),
-        ]
-    )
-    joined = temporal_join_tws(
-        left, right, _join_cfg(), left_ts="lts", right_ts="rts", output_schema=out_schema
-    )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("tws_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_tws"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    rows = {(r["id"], r["name"], r["email"]) for r in spark.sql("SELECT * FROM tws_out").collect()}
-    assert ("u1", "Alice", "old@x.com") in rows
-    assert ("u2", "Bob", "bob@x.com") in rows
-    assert not any(r[0] == "u3" for r in rows)
-    assert len(rows) == 2
-
-
-def test_stream_stream_join_all_matches(spark, tmp_path):
-    """Built-in watermarked stream-stream join: emits ALL in-window right
-    matches (vs the stateful temporal join's latest-wins)."""
-    from clickhouse_etl_spark.streaming.stream_join import stream_stream_join
-
-    base = ts("2024-01-01T10:00:00")
-    lpath = _write_stream_input(
-        spark, str(tmp_path), "l",
-        [("u1", "Alice", base + dt.timedelta(seconds=1))], LEFT_SCHEMA,
-    )
-    rpath = _write_stream_input(
-        spark, str(tmp_path), "r",
-        [("u1", "old@x.com", base), ("u1", "new@x.com", base + dt.timedelta(milliseconds=500))],
-        RIGHT_SCHEMA,
-    )
-    joined = stream_stream_join(
-        spark.readStream.schema(LEFT_SCHEMA).parquet(lpath),
-        spark.readStream.schema(RIGHT_SCHEMA).parquet(rpath),
-        _join_cfg(),
-        left_ts="lts",
-        right_ts="rts",
-    )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("ssj_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_ssj"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = {(r["id"], r["email"]) for r in spark.sql("SELECT * FROM ssj_out").collect()}
-    # BOTH right rows match (multi-match semantics — documented contrast)
-    assert rows == {("u1", "old@x.com"), ("u1", "new@x.com")}
 
 
 def test_streaming_otlp_metric_rollup(spark, tmp_path):
@@ -1078,7 +1055,7 @@ def test_line_dedup_against_stream_parity_and_wave_lifecycle(spark, tmp_path):
         .parquet(src)
     )
     q = (
-        streaming_source_chain(cfg, "ts", value_is_json=False)(stream)
+        streaming_source_chain(cfg, "ts")(stream)
         .writeStream.format("memory")
         .queryName("line_dedup_stream_out")
         .outputMode("append")
@@ -1184,7 +1161,7 @@ def test_decontaminate_against_stream_parity(spark, tmp_path):
         .parquet(src)
     )
     q = (
-        streaming_source_chain(cfg, "ts", value_is_json=False)(stream)
+        streaming_source_chain(cfg, "ts")(stream)
         .writeStream.format("memory")
         .queryName("decontam_stream_out")
         .outputMode("append")
@@ -1272,7 +1249,7 @@ def test_neardup_against_stream_parity(spark, tmp_path):
         .parquet(src)
     )
     q = (
-        streaming_source_chain(cfg, "ts", value_is_json=False)(stream)
+        streaming_source_chain(cfg, "ts")(stream)
         .writeStream.format("memory")
         .queryName("neardup_stream_out")
         .outputMode("append")

@@ -1,16 +1,12 @@
-"""Fast, Spark-free tests of the shared temporal-join micro-batch step
-(`temporal_join._make_step`) — the single vectorized algorithm both
-stateful-API adapters (applyInPandasWithState and
-transformWithStateInPandas) wire up — plus the TWS adapter's typed-state
-round-trip. These run without a SparkSession (pure pandas/numpy), so the
-gated TWS path stays covered even in environments where HAS_TWS is
-False."""
+"""Fast, Spark-free tests of the temporal-join micro-batch step
+(`temporal_join._make_step`) that `temporal_join_streaming` wires into
+applyInPandasWithState. These run without a SparkSession (pure
+pandas/numpy)."""
 
 import pandas as pd
 
 from clickhouse_etl_spark.spec.model import JoinConfig, JoinOutputField, JoinSourceConfig
 from clickhouse_etl_spark.streaming.temporal_join import _coercer, _make_step
-from clickhouse_etl_spark.streaming.temporal_join_tws import _TemporalJoinProcessor
 from pyspark.sql import types as T
 
 
@@ -113,53 +109,3 @@ def test_step_empty_state_removed():
     assert out is None
     assert st is not None and st[3] == [10_000_000]  # only the fresh left survives
 
-
-class _FakeValueState:
-    def __init__(self):
-        self.v = None
-
-    def exists(self):
-        return self.v is not None
-
-    def get(self):
-        return self.v
-
-    def update(self, v):
-        self.v = v
-
-    def clear(self):
-        self.v = None
-
-
-class _FakeListState(_FakeValueState):
-    def get(self):
-        return iter(self.v or [])
-
-    def put(self, rows):
-        self.v = list(rows)
-
-
-def test_tws_adapter_state_roundtrip():
-    """The TWS adapter's typed-state layout converts losslessly to and
-    from the shared columnar state tuple."""
-    p = _TemporalJoinProcessor.__new__(_TemporalJoinProcessor)
-    p.n_l, p.n_r = 2, 1
-    p.right = _FakeValueState()
-    p.pending = _FakeListState()
-
-    assert p._load_state() is None
-
-    st = (True, 500_000, "new@x", [0, 7], ["u1", "u2"], ["Alice", "Bob"])
-    p._store_state(st)
-    assert p.right.v == (True, 500_000, "new@x")
-    assert p.pending.v == [(0, "u1", "Alice"), (7, "u2", "Bob")]
-    assert p._load_state() == st
-
-    # no right, pending only
-    p._store_state((False, None, None, [3], ["u9"], ["Zoe"]))
-    assert p.right.v is None
-    assert p._load_state() == (False, None, None, [3], ["u9"], ["Zoe"])
-
-    # empty -> cleared
-    p._store_state(None)
-    assert p._load_state() is None
