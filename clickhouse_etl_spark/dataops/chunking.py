@@ -63,92 +63,66 @@ def top_terms(
     id_col: str = "doc_id",
     k: int = 5,
     min_len: int = 2,
-    engine: str = "pandas",
 ) -> DataFrame:
     """Top-k terms per document by term frequency (ties: term asc).
 
     Integer counts only (no idf/log — engine libm rounding differs).
     The ranking is ROW-LOCAL (each document's terms compete only with
-    each other), so ``engine="pandas"`` (default) computes it in one
-    Arrow pass with a per-doc Counter — no explode, no (doc, term)
-    shuffle, no rank window — value-identical to the expression form
-    (equality-pinned; Python sort on (-tf, term) matches the window's
-    tf desc/term asc because UTF-8 byte order preserves code-point
-    order). Engines agree when ``id_col`` is unique (the
-    documents-table contract): on duplicate ids the expression form
-    pools term frequencies across rows while the row-local pass ranks
-    each row independently. ``engine="catalyst"`` keeps the reference
-    form: explode + (doc, term) agg (high-cardinality, skew-free key)
-    + constant-K WindowGroupLimit rank.
+    each other), so it runs as one Arrow pass with a per-doc Counter —
+    no explode, no (doc, term) shuffle, no rank window. Value-identical
+    to the explode + (doc, term) agg + WindowGroupLimit rank form
+    (equality-pinned in tests; Python sort on (-tf, term) matches the
+    window's tf desc/term asc because UTF-8 byte order preserves
+    code-point order) when ``id_col`` is unique (the documents-table
+    contract): on duplicate ids each row is ranked independently.
     """
-    if engine == "pandas":
-        from collections import Counter
+    from collections import Counter
 
-        import pandas as pd
+    import pandas as pd
 
-        from pyspark.sql import types as T
+    from pyspark.sql import types as T
 
-        schema = T.StructType([
-            [f for f in df.schema.fields if f.name == id_col][0],
-            T.StructField("term", T.StringType(), True),
-            T.StructField("tf", T.LongType(), True),
-            T.StructField("rank", T.IntegerType(), True),
-        ])
-        src = scale_out(df.select(id_col, text_col))
-        tcol = text_col
+    schema = T.StructType([
+        [f for f in df.schema.fields if f.name == id_col][0],
+        T.StructField("term", T.StringType(), True),
+        T.StructField("tf", T.LongType(), True),
+        T.StructField("rank", T.IntegerType(), True),
+    ])
+    src = scale_out(df.select(id_col, text_col))
+    tcol = text_col
 
-        def topk(batches):
-            for pdf in batches:
-                if not len(pdf):
+    def topk(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            ids, terms, tfs, ranks = [], [], [], []
+            for did, x in zip(pdf[id_col], pdf[tcol]):
+                if x is None:
                     continue
-                ids, terms, tfs, ranks = [], [], [], []
-                for did, x in zip(pdf[id_col], pdf[tcol]):
-                    if x is None:
-                        continue
-                    cnt = Counter(
-                        t for t in fold_lower(x).split(" ")
-                        if len(t) >= min_len
-                    )
-                    if not cnt:
-                        continue
-                    best = sorted(
-                        cnt.items(), key=lambda it: (-it[1], it[0])
-                    )[:k]
-                    for r, (term, tf) in enumerate(best, start=1):
-                        ids.append(did)
-                        terms.append(term)
-                        tfs.append(tf)
-                        ranks.append(r)
-                if not ids:
+                cnt = Counter(
+                    t for t in fold_lower(x).split(" ")
+                    if len(t) >= min_len
+                )
+                if not cnt:
                     continue
-                yield pd.DataFrame({
-                    id_col: pd.Series(ids, dtype=pdf[id_col].dtype),
-                    "term": terms,
-                    "tf": pd.Series(tfs, dtype="int64"),
-                    "rank": pd.Series(ranks, dtype="int32"),
-                })
+                best = sorted(
+                    cnt.items(), key=lambda it: (-it[1], it[0])
+                )[:k]
+                for r, (term, tf) in enumerate(best, start=1):
+                    ids.append(did)
+                    terms.append(term)
+                    tfs.append(tf)
+                    ranks.append(r)
+            if not ids:
+                continue
+            yield pd.DataFrame({
+                id_col: pd.Series(ids, dtype=pdf[id_col].dtype),
+                "term": terms,
+                "tf": pd.Series(tfs, dtype="int64"),
+                "rank": pd.Series(ranks, dtype="int32"),
+            })
 
-        return src.mapInPandas(topk, schema)
-
-    df = scale_out(df)
-    words = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(
-            F.filter(F.split(F.lower(F.col(text_col)), " "), lambda t: F.length(t) >= min_len)
-        ).alias("term"),
-    )
-    tf = words.groupBy("id", "term").agg(F.count("*").alias("tf"))
-    w = Window.partitionBy("id").orderBy(F.col("tf").desc(), F.col("term"))
-    return (
-        tf.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select(
-            F.col("id").alias(id_col),
-            "term",
-            F.col("tf").cast("bigint").alias("tf"),
-            F.col("_rn").cast("int").alias("rank"),
-        )
-    )
+    return src.mapInPandas(topk, schema)
 
 
 def scrub_pii(

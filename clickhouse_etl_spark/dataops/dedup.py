@@ -72,38 +72,26 @@ def _shingle_stream(
     text_col: str,
     id_col: str,
     n: int,
-    engine: str = "pandas",
 ) -> DataFrame:
     """The distinct-shingle stream (id, sz, g) — one row per distinct
     n-gram per document, with sz = the document's distinct-shingle
-    count. Row-local (no shuffle) in both engines.
+    count. Row-local (no shuffle).
 
-    ``engine="pandas"`` (default) generates shingles in ONE Arrow
-    ``mapInPandas`` pass: the Catalyst form's nested higher-order
-    functions (transform/slice/array_join over the token array) are
-    CodegenFallback — interpreted per element — and profiling at sf0.1
-    put that projection at ~80% of the whole pair-engine runtime
+    Shingles come from ONE Arrow ``mapInPandas`` pass: the expression
+    form (an explode of :func:`_word_ngrams`) nests higher-order
+    functions (transform/slice/array_join over the token array) that
+    are CodegenFallback — interpreted per element — and profiling at
+    sf0.1 put that projection at ~80% of the whole pair-engine runtime
     (2.6 s of 3.2 s for 5k docs). The Python generator replays the
     exact same semantics (split on single space keeping empties,
-    space-joined n-word windows, first-occurrence-distinct) so the
-    stream is row-identical; ``engine="catalyst"`` keeps the
-    expression form as the equality-pinned reference
-    (tests/test_dataops.py)."""
-    if engine == "catalyst":
-        return df.select(
-            F.col(id_col).alias("id"),
-            _word_ngrams(F.col(text_col), n).alias("_grams"),
-        ).select(
-            "id",
-            F.size("_grams").cast("bigint").alias("sz"),
-            F.explode("_grams").alias("g"),
-        )
-
+    space-joined n-word windows, first-occurrence-distinct), so the
+    stream is row-identical to the expression form (equality-pinned in
+    tests)."""
     import pandas as pd
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     # preserve the input id column's actual type (ADVICE r7: hardcoding
-    # 'id long' made the engines diverge for int32/string doc ids)
+    # 'id long' diverged from the expression form for int32/string ids)
     id_field = df.schema[id_col]
     out_schema = StructType(
         [
@@ -114,7 +102,7 @@ def _shingle_stream(
     )
     # nullable int ids must use pandas NULLABLE dtypes on the OUTPUT
     # (ADVICE r8: a numpy int64 Series raises on a NULL id where the
-    # catalyst engine flows it through) — AND a non-null carrier on the
+    # expression form flows it through) — AND a non-null carrier on the
     # INPUT: Arrow→pandas converts an int column containing any NULL to
     # float64, silently rounding ids past 2^53 (review r9), so nullable
     # int ids travel as coalesce(id, 0) + an isNull flag and the kernel
@@ -186,7 +174,6 @@ def _shared_shingle_pairs(
     id_col: str,
     n: int,
     max_doc_freq: int,
-    engine: str = "pandas",
 ) -> DataFrame:
     """Inverted-index candidate pairs with shingle-overlap counts —
     the shared engine of :func:`ngram_jaccard_pairs` (symmetric
@@ -196,7 +183,7 @@ def _shared_shingle_pairs(
     doc-frequency-cap rationale.
     """
     # single-pass inverted index: build the gram stream ONCE (Arrow
-    # mapInPandas by default — see _shingle_stream), group the
+    # mapInPandas — see _shingle_stream), group the
     # postings per shingle, emit pair combinations array-side (a
     # self-join would re-derive the shingling for both branches). The
     # doc-frequency cap runs as a window count BEFORE collect_list: the
@@ -207,7 +194,7 @@ def _shared_shingle_pairs(
     from pyspark.sql import Window
 
     df = scale_out(df)
-    grams = _shingle_stream(df, text_col, id_col, n, engine=engine)
+    grams = _shingle_stream(df, text_col, id_col, n)
     capped = grams.withColumn("_df", F.count("*").over(Window.partitionBy("g"))).filter(
         (F.col("_df") > 1) & (F.col("_df") <= max_doc_freq)
     )
@@ -245,7 +232,6 @@ def ngram_jaccard_pairs(
     n: int = 5,
     threshold: float = 0.4,
     max_doc_freq: int = 100,
-    engine: str = "pandas",
 ) -> DataFrame:
     """Near-duplicate pairs by exact n-gram-set Jaccard, with an
     inverted-index candidate join (pairs must share >= 1 shingle).
@@ -266,7 +252,7 @@ def ngram_jaccard_pairs(
     ``exact_dedup``; texts dominated by boilerplate are what the cap is
     *supposed* to ignore).
     """
-    shared = _shared_shingle_pairs(df, text_col, id_col, n, max_doc_freq, engine=engine)
+    shared = _shared_shingle_pairs(df, text_col, id_col, n, max_doc_freq)
     return (
         shared.withColumn(
             "jaccard",
@@ -284,7 +270,6 @@ def ngram_containment_pairs(
     n: int = 5,
     threshold: float = 0.6,
     max_doc_freq: int = 100,
-    engine: str = "pandas",
 ) -> DataFrame:
     """ASYMMETRIC near-duplicate pairs by n-gram-set containment:
     ``containment = shared / min(size_a, size_b)`` — the smaller
@@ -301,7 +286,7 @@ def ngram_containment_pairs(
     division — oracle-exact. Output: (id_a, id_b, shared, size_a,
     size_b, containment), id_a < id_b.
     """
-    shared = _shared_shingle_pairs(df, text_col, id_col, n, max_doc_freq, engine=engine)
+    shared = _shared_shingle_pairs(df, text_col, id_col, n, max_doc_freq)
     return (
         shared.withColumn(
             "containment",
@@ -2398,7 +2383,6 @@ def simhash_near_dup_pairs(
     bits: int = 32,
     bands: int = 4,
     max_hamming: int = 3,
-    engine: str = "pandas",
 ) -> DataFrame:
     """Near-dup pairs by banded SimHash — the third pair generator next
     to MinHash-LSH and the n-gram inverted index.
@@ -2424,10 +2408,7 @@ def simhash_near_dup_pairs(
         raise ValueError("pigeonhole recall needs max_hamming < bands")
     band_bits = bits // bands
     mask = (1 << band_bits) - 1
-    if engine == "catalyst":
-        sigs = simhash(df, text_col=text_col, id_col=id_col, bits=bits)
-    else:
-        sigs = _simhash_sigs_arrow(scale_out(df), text_col, id_col, bits)
+    sigs = _simhash_sigs_arrow(scale_out(df), text_col, id_col, bits)
     g = sigs.select(F.col("simhash").alias("_s"), F.col(id_col).alias("_i"))
     within = (
         g.alias("x")
@@ -2553,51 +2534,39 @@ def _distinct_band_keys(
     n: int,
     k: int,
     rows_per_band: int,
-    engine: str = "pandas",
 ) -> DataFrame:
     """The DISTINCT LSH band-key strings of a document frame (one
     ``band`` column) — the near-dup seen-set both artifact writers
     share (:func:`_distinct_lines` at band grain).
 
-    ``engine="pandas"`` (default) derives keys in ONE Arrow
-    ``mapInPandas`` pass via :func:`_band_keys_py` — the SAME kernel
-    the probe runs, so registered and probed keys agree by
-    construction. The Catalyst reference form (``engine="catalyst"``,
-    :func:`_band_keys_expr`) is equality-pinned by test but its nested
-    higher-order functions are CodegenFallback — interpreted per
-    shingle — which made the one-time artifact build ~25x slower than
-    the probe at decade scale (the `_shingle_stream` lesson)."""
-    if engine == "catalyst":
-        keyed = df.select(
-            F.explode(
-                _band_keys_expr(F.col(text_col), n, k, rows_per_band)
-            ).alias("band")
-        )
-    elif engine == "pandas":
-        from pyspark.sql.types import StringType, StructField, StructType
+    Keys derive in ONE Arrow ``mapInPandas`` pass via
+    :func:`_band_keys_py` — the SAME kernel the probe runs, so
+    registered and probed keys agree by construction. It equals an
+    explode of :func:`_band_keys_expr` (equality-pinned by test), whose
+    nested higher-order functions are CodegenFallback — interpreted
+    per shingle — which made the one-time artifact build ~25x slower
+    than the probe at decade scale (the `_shingle_stream` lesson)."""
+    from pyspark.sql.types import StringType, StructField, StructType
 
-        band_keys = _band_keys_py(n, k, rows_per_band)
-        schema = StructType([StructField("band", StringType())])
-        tcol = text_col
+    band_keys = _band_keys_py(n, k, rows_per_band)
+    schema = StructType([StructField("band", StringType())])
+    tcol = text_col
 
-        def gen(batches):
-            import pandas as pd
+    def gen(batches):
+        import pandas as pd
 
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                out = set()
-                for t in pdf[tcol]:
-                    out.update(band_keys(t))
-                if out:
-                    yield pd.DataFrame({"band": sorted(out)})
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            out = set()
+            for t in pdf[tcol]:
+                out.update(band_keys(t))
+            if out:
+                yield pd.DataFrame({"band": sorted(out)})
 
-        # prune to the text column BEFORE the repartition + Arrow
-        # boundary — the writers receive arbitrarily wide wave frames
-        keyed = scale_out(df.select(text_col)).mapInPandas(gen, schema)
-    else:
-        raise ValueError(f"unknown engine {engine!r}: pandas|catalyst")
-    return keyed.distinct()
+    # prune to the text column BEFORE the repartition + Arrow
+    # boundary — the writers receive arbitrarily wide wave frames
+    return scale_out(df.select(text_col)).mapInPandas(gen, schema).distinct()
 
 
 def _write_band_geometry(
@@ -2643,7 +2612,6 @@ def write_band_digest_table(
     rows_per_band: int = 2,
     text_col: str = "text",
     mode: str = "append",
-    engine: str = "pandas",
 ) -> None:
     """Persist the DISTINCT LSH band-key digests of an ingest wave —
     the near-dup mirror of :func:`write_digest_table`, and the
@@ -2683,7 +2651,7 @@ def write_band_digest_table(
                 " — nothing was written; rebuild or match the geometry"
             )
     (
-        _distinct_band_keys(df, text_col, n, k, rows_per_band, engine=engine)
+        _distinct_band_keys(df, text_col, n, k, rows_per_band)
         .select(F.md5("band").alias("digest"))
         .write.mode(mode)
         .parquet(f"{path.rstrip('/')}/bands")
@@ -2703,7 +2671,6 @@ def write_band_bloom_table(
     text_col: str = "text",
     mode: str = "overwrite",
     n_shards: int = 1,
-    engine: str = "pandas",
 ) -> None:
     """Band-grain Bloom seen-set: :func:`write_bloom_table` over the
     wave's distinct band keys — the 100-TB tier of the near-dup
@@ -2727,7 +2694,7 @@ def write_band_bloom_table(
         )
     _band_geometry_check(n, k, rows_per_band)
     write_bloom_table(
-        _distinct_band_keys(df, text_col, n, k, rows_per_band, engine=engine),
+        _distinct_band_keys(df, text_col, n, k, rows_per_band),
         f"{path.rstrip('/')}/bands",
         capacity,
         bits_per_key=bits_per_key,

@@ -888,101 +888,65 @@ def sample_centroids(
     return [[float(v) for v in r[vec_col]] for r in rows]
 
 
-def _sub_l2(vec_slice: Column, cent: Column) -> Column:
-    """Sequential-fold squared L2 between two small arrays (portable
-    double order, same as _dot)."""
-    diffs = F.zip_with(
-        vec_slice, cent, lambda a, b: (a.cast("double") - b) * (a.cast("double") - b)
-    )
-    return F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x)
-
-
 def pq_encode(
     corpus: DataFrame,
     codebooks: list[list[list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    engine: str = "pandas",
 ) -> DataFrame:
     """Product-quantize every vector to ``m`` small codes — 8 bytes of
     code replaces 256 bytes of float32s at m=8, the compression that
     lets an ANN scan read 30x less data per candidate.
 
-    Two engines, bit-identical codes:
-
-    - ``engine="pandas"`` (default): Arrow-batched ``mapInPandas`` with
-      a numpy codebook — higher-order functions are CodegenFallback in
-      Spark (interpreted, ~140µs/vector measured), while the batched
-      matrix form runs the same arithmetic vectorized. The per-subspace
-      distance accumulates dimension-by-dimension (``d += diff*diff``),
-      the exact sequential fold order of the Catalyst form, and
-      ``argmin`` takes the first (lowest) code on ties like the
-      ``array_sort`` rule — so both engines emit identical codes.
-    - ``engine="catalyst"``: pure-expression form (argmin via
-      array_sort on (dist, code) structs). No Python anywhere; the
-      cross-engine reference implementation.
-
-    No shuffle in either form.
+    Arrow-batched ``mapInPandas`` with a numpy codebook: higher-order
+    functions are CodegenFallback in Spark (interpreted, ~140µs/vector
+    measured for the pure-expression form), while the batched matrix
+    form runs the same arithmetic vectorized. The per-subspace distance
+    accumulates dimension-by-dimension (``d += diff*diff``), the
+    sequential fold order of the expression form, and ``argmin`` takes
+    the first (lowest) code on ties, like an ``array_sort`` over
+    (dist, code) structs — so the codes are bit-identical to that form
+    (equality-pinned in tests). No shuffle.
     """
+    import numpy as np
+
+    from pyspark.sql import types as T
+
     m = len(codebooks)
     sub = len(codebooks[0][0])
+    vec_field = corpus.schema[vec_col]
+    schema = T.StructType([
+        corpus.schema[id_col],
+        vec_field,
+        T.StructField("pq_codes", T.ArrayType(T.IntegerType()), False),
+    ])
+    books_np = [np.asarray(b, dtype="float64") for b in codebooks]
 
-    if engine == "pandas":
-        import numpy as np
+    def encode_batches(batches):
+        for pdf in batches:
+            X = np.asarray(
+                [np.asarray(v, dtype="float64") for v in pdf[vec_col]]
+            )
+            if len(pdf) == 0:
+                yield pdf.assign(pq_codes=[])
+                continue
+            codes = np.empty((len(pdf), m), dtype="int32")
+            for s in range(m):
+                Xs = X[:, s * sub : (s + 1) * sub]
+                C = books_np[s]
+                d = np.zeros((Xs.shape[0], C.shape[0]))
+                # dimension-by-dimension accumulation = the exact
+                # sequential fold order of the expression form
+                for j in range(sub):
+                    diff = Xs[:, j, None] - C[None, :, j]
+                    d += diff * diff
+                codes[:, s] = np.argmin(d, axis=1)
+            yield pdf[[id_col, vec_col]].assign(
+                pq_codes=[list(map(int, row)) for row in codes]
+            )
 
-        from pyspark.sql import types as T
-
-        vec_field = corpus.schema[vec_col]
-        schema = T.StructType([
-            corpus.schema[id_col],
-            vec_field,
-            T.StructField("pq_codes", T.ArrayType(T.IntegerType()), False),
-        ])
-        books_np = [np.asarray(b, dtype="float64") for b in codebooks]
-
-        def encode_batches(batches):
-            for pdf in batches:
-                X = np.asarray(
-                    [np.asarray(v, dtype="float64") for v in pdf[vec_col]]
-                )
-                if len(pdf) == 0:
-                    yield pdf.assign(pq_codes=[])
-                    continue
-                codes = np.empty((len(pdf), m), dtype="int32")
-                for s in range(m):
-                    Xs = X[:, s * sub : (s + 1) * sub]
-                    C = books_np[s]
-                    d = np.zeros((Xs.shape[0], C.shape[0]))
-                    # dimension-by-dimension accumulation = the exact
-                    # sequential fold order of the Catalyst form
-                    for j in range(sub):
-                        diff = Xs[:, j, None] - C[None, :, j]
-                        d += diff * diff
-                    codes[:, s] = np.argmin(d, axis=1)
-                yield pdf[[id_col, vec_col]].assign(
-                    pq_codes=[list(map(int, row)) for row in codes]
-                )
-
-        return scale_out(corpus).select(id_col, vec_col).mapInPandas(
-            encode_batches, schema
-        )
-
-    def codes(vec: Column) -> Column:
-        per_sub = []
-        for s, book in enumerate(codebooks):
-            vslice = F.slice(vec, s * sub + 1, sub)
-            cands = F.array(*[
-                F.struct(
-                    _sub_l2(vslice, F.array(*[F.lit(v) for v in cent])).alias("d"),
-                    F.lit(ci).alias("c"),
-                )
-                for ci, cent in enumerate(book)
-            ])
-            per_sub.append(F.array_sort(cands)[0]["c"])
-        return F.array(*per_sub)
-
-    return scale_out(corpus).select(
-        F.col(id_col), F.col(vec_col), codes(F.col(vec_col)).alias("pq_codes")
+    return scale_out(corpus).select(id_col, vec_col).mapInPandas(
+        encode_batches, schema
     )
 
 

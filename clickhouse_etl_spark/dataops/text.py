@@ -425,7 +425,6 @@ def decontaminate(
 
 def repetition_signals(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    engine: str = "pandas",
 ) -> DataFrame:
     """Gopher-style repetition quality signals per document: duplicate
     token fraction and the character fraction covered by the most
@@ -436,146 +435,85 @@ def repetition_signals(
     top_bigram, top_bigram_count, top_bigram_char_frac.
 
     The signal is entirely ROW-LOCAL — the bigram argmax only ever
-    compares grams of one document — so ``engine="pandas"`` (default)
-    computes it in one Arrow pass with a per-doc Counter: no explode,
-    ZERO shuffles, value-identical to the expression form
-    (equality-pinned; Python tuple-min over (-count, gram) matches the
-    struct min because UTF-8 byte order preserves code-point order,
-    and each ratio is the same single int/int IEEE division). The
-    row-local pass is also what makes the op genuinely STREAM-SAFE
-    (the expression form's (doc, gram) aggregation would be rejected
-    in append mode). Engines agree when ``id_col`` is unique (the
-    documents-table contract): on duplicate ids the expression form
-    pools grams across rows while the row-local pass scores each row
-    independently — the per-row semantic is the only one a stream can
-    have.
-
-    ``engine="catalyst"`` keeps the expression reference form: one
-    explode, one partial-agg shuffle on (doc, gram), then a
-    min(struct) argmax per doc — no window sort. Determinism: argmax
-    resolves ties by smallest gram (min over struct(-count, gram)).
+    compares grams of one document — so it runs as one Arrow pass with
+    a per-doc Counter: no explode, ZERO shuffles, value-identical to
+    the explode/(doc, gram)-agg/min-struct form (equality-pinned in
+    tests; Python tuple-min over (-count, gram) matches the struct min
+    because UTF-8 byte order preserves code-point order, and each
+    ratio is the same single int/int IEEE division). Argmax ties
+    resolve to the smallest gram. The row-local pass is also what makes
+    the op genuinely STREAM-SAFE (a (doc, gram) aggregation would be
+    rejected in append mode). Each row is scored independently, so on
+    duplicate ids the rows are not pooled — the per-row semantic is the
+    only one a stream can have; ``id_col`` is unique under the
+    documents-table contract.
     """
-    if engine == "pandas":
-        from collections import Counter
+    from collections import Counter
 
-        import pandas as pd
+    import pandas as pd
 
-        from pyspark.sql import types as T
+    from pyspark.sql import types as T
 
-        schema = T.StructType([
-            [f for f in df.schema.fields if f.name == id_col][0],
-            T.StructField("n_tokens", T.LongType(), True),
-            T.StructField("n_distinct_tokens", T.LongType(), True),
-            T.StructField("dup_token_ratio", T.DoubleType(), True),
-            T.StructField("top_bigram", T.StringType(), True),
-            T.StructField("top_bigram_count", T.LongType(), True),
-            T.StructField("top_bigram_char_frac", T.DoubleType(), True),
-        ])
-        src = scale_out(df.select(id_col, text_col))
-        tcol = text_col
+    schema = T.StructType([
+        [f for f in df.schema.fields if f.name == id_col][0],
+        T.StructField("n_tokens", T.LongType(), True),
+        T.StructField("n_distinct_tokens", T.LongType(), True),
+        T.StructField("dup_token_ratio", T.DoubleType(), True),
+        T.StructField("top_bigram", T.StringType(), True),
+        T.StructField("top_bigram_count", T.LongType(), True),
+        T.StructField("top_bigram_char_frac", T.DoubleType(), True),
+    ])
+    src = scale_out(df.select(id_col, text_col))
+    tcol = text_col
 
-        def signals(batches):
-            for pdf in batches:
-                if not len(pdf):
+    def signals(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            n_t, n_d, ratio, grams, cnts, fracs = [], [], [], [], [], []
+            for x in pdf[tcol]:
+                if x is None:
+                    # size(NULL) = -1 legacy contract with the
+                    # coalesced no-bigram defaults
+                    n_t.append(-1)
+                    n_d.append(-1)
+                    ratio.append(0.0)
+                    grams.append("")
+                    cnts.append(0)
+                    fracs.append(0.0)
                     continue
-                n_t, n_d, ratio, grams, cnts, fracs = [], [], [], [], [], []
-                for x in pdf[tcol]:
-                    if x is None:
-                        # size(NULL) = -1 legacy contract; the left
-                        # join yields the coalesced defaults
-                        n_t.append(-1)
-                        n_d.append(-1)
-                        ratio.append(0.0)
-                        grams.append("")
-                        cnts.append(0)
-                        fracs.append(0.0)
-                        continue
-                    toks = [t for t in x.split(" ") if t]
-                    n = len(toks)
-                    d = len(set(toks))
-                    n_t.append(n)
-                    n_d.append(d)
-                    ratio.append((n - d) / n if n > 0 else 0.0)
-                    if n >= 2:
-                        cnt = Counter(
-                            toks[i] + " " + toks[i + 1] for i in range(n - 1)
-                        )
-                        neg_c, g = min((-c, g) for g, c in cnt.items())
-                        c = -neg_c
-                        grams.append(g)
-                        cnts.append(c)
-                        fracs.append(
-                            (c * len(g)) / len(x) if len(x) > 0 else 0.0
-                        )
-                    else:
-                        grams.append("")
-                        cnts.append(0)
-                        fracs.append(0.0)
-                yield pd.DataFrame({
-                    id_col: pdf[id_col].values,
-                    "n_tokens": pd.Series(n_t, dtype="int64"),
-                    "n_distinct_tokens": pd.Series(n_d, dtype="int64"),
-                    "dup_token_ratio": pd.Series(ratio, dtype="float64"),
-                    "top_bigram": grams,
-                    "top_bigram_count": pd.Series(cnts, dtype="int64"),
-                    "top_bigram_char_frac": pd.Series(fracs, dtype="float64"),
-                })
+                toks = [t for t in x.split(" ") if t]
+                n = len(toks)
+                d = len(set(toks))
+                n_t.append(n)
+                n_d.append(d)
+                ratio.append((n - d) / n if n > 0 else 0.0)
+                if n >= 2:
+                    cnt = Counter(
+                        toks[i] + " " + toks[i + 1] for i in range(n - 1)
+                    )
+                    neg_c, g = min((-c, g) for g, c in cnt.items())
+                    c = -neg_c
+                    grams.append(g)
+                    cnts.append(c)
+                    fracs.append(
+                        (c * len(g)) / len(x) if len(x) > 0 else 0.0
+                    )
+                else:
+                    grams.append("")
+                    cnts.append(0)
+                    fracs.append(0.0)
+            yield pd.DataFrame({
+                id_col: pdf[id_col].values,
+                "n_tokens": pd.Series(n_t, dtype="int64"),
+                "n_distinct_tokens": pd.Series(n_d, dtype="int64"),
+                "dup_token_ratio": pd.Series(ratio, dtype="float64"),
+                "top_bigram": grams,
+                "top_bigram_count": pd.Series(cnts, dtype="int64"),
+                "top_bigram_char_frac": pd.Series(fracs, dtype="float64"),
+            })
 
-        return src.mapInPandas(signals, schema)
-
-    text = F.col(text_col)
-    toks = F.filter(F.split(text, " "), lambda t: F.length(t) > 0)
-    base = (
-        scale_out(df)
-        .select(
-            F.col(id_col),
-            F.length(text).cast("bigint").alias("_n_chars"),
-            toks.alias("_w"),
-        )
-        .withColumn("n_tokens", F.size("_w").cast("bigint"))
-        .withColumn("n_distinct_tokens", F.size(F.array_distinct("_w")).cast("bigint"))
-    )
-    idx = F.when(
-        F.size("_w") >= 2, F.sequence(F.lit(1), F.size("_w") - 1)
-    ).otherwise(F.expr("array()").cast("array<int>"))
-    bigrams = base.select(
-        id_col,
-        F.explode(
-            F.transform(idx, lambda i: F.array_join(F.slice("_w", i, 2), " "))
-        ).alias("_g"),
-    )
-    counts = bigrams.groupBy(id_col, "_g").agg(F.count("*").alias("_cnt"))
-    top = (
-        counts.groupBy(id_col)
-        .agg(
-            F.min(
-                F.struct((-F.col("_cnt")).alias("nc"), F.col("_g").alias("g"))
-            ).alias("_top")
-        )
-        .select(
-            id_col,
-            F.col("_top.g").alias("_top_bigram"),
-            (-F.col("_top.nc")).cast("bigint").alias("_top_cnt"),
-        )
-    )
-    joined = base.drop("_w").join(top, id_col, "left")
-    n_tok = F.col("n_tokens")
-    return joined.select(
-        id_col,
-        "n_tokens",
-        "n_distinct_tokens",
-        F.when(n_tok > 0, (n_tok - F.col("n_distinct_tokens")) / n_tok)
-        .otherwise(F.lit(0.0))
-        .alias("dup_token_ratio"),
-        F.coalesce("_top_bigram", F.lit("")).alias("top_bigram"),
-        F.coalesce("_top_cnt", F.lit(0)).cast("bigint").alias("top_bigram_count"),
-        F.when(
-            F.col("_top_cnt").isNotNull() & (F.col("_n_chars") > 0),
-            (F.col("_top_cnt") * F.length("_top_bigram")) / F.col("_n_chars"),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("top_bigram_char_frac"),
-    )
+    return src.mapInPandas(signals, schema)
 
 
 def boilerplate_ngrams(
@@ -1085,33 +1023,6 @@ def normalize_text(
     ).withColumn("n_tokens_norm", n_norm.cast("bigint"))
 
 
-def hash_bucket_counts(
-    df: DataFrame,
-    dim: int = 64,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Sparse (id, _b, _c) bucket-count rows of the feature-hashing
-    featurizer — the shared corpus-scale stage of
-    :func:`hash_embedding` (dense form) and the long-form registry
-    entry. The char-fold hash (interpreted HOF) runs once per DISTINCT
-    token via a vocabulary dictionary broadcast back onto the token
-    stream; for corpora whose vocabulary exceeds the broadcast budget,
-    hash per occurrence instead (results identical)."""
-    from .hashing import char_fold_hash
-
-    toks = F.filter(_tokens(F.col(text_col)), lambda t: F.length(t) > 0)
-    exploded = scale_out(df).select(
-        F.col(id_col), F.explode(toks).alias("_tok")
-    )
-    vocab = exploded.select("_tok").distinct()
-    tok_dict = vocab.select(
-        "_tok", (char_fold_hash(F.col("_tok")) % dim).alias("_b")
-    )
-    buckets = exploded.join(F.broadcast(tok_dict), "_tok").select(id_col, "_b")
-    return buckets.groupBy(id_col, "_b").agg(F.count("*").alias("_c"))
-
-
 def importance_weights(
     df: DataFrame,
     target_sources: "list[str]",
@@ -1119,7 +1030,6 @@ def importance_weights(
     text_col: str = "text",
     id_col: str = "doc_id",
     source_col: str = "source",
-    engine: str = "pandas",
 ) -> DataFrame:
     """DSIR-style data selection via importance weighting (Xie et al.
     2023, "Data Selection for Language Models via Importance
@@ -1128,7 +1038,7 @@ def importance_weights(
     TARGET domain rather than the raw corpus?
 
     - featurize every doc with the hashing trick
-      (:func:`hash_bucket_counts` — portable char-fold hash % dim);
+      (portable char-fold hash % dim);
     - per-bucket counts ``n_t`` over the target docs (``source_col``
       ∈ ``target_sources``) and ``n_r`` over the whole corpus;
     - bucket weight ``wt = floor((n_t+1)·2^20 / (n_r+1))`` — add-one
@@ -1146,16 +1056,15 @@ def importance_weights(
     Scale shape: the weight build aggregates straight to BUCKET grain
     (map-side partial combine → a dim-bounded shuffle; the target pass
     re-featurizes only the small target slice), and the scoring pass
-    — ``engine="pandas"``, the default — is ONE row-local Arrow
-    ``mapInPandas`` with the collected weight dict in the task closure
-    (the classify_against pattern): no corpus-side (doc, bucket)
-    shuffle, no join, memory independent of corpus size. The frame is
+    is ONE row-local Arrow ``mapInPandas`` with the collected weight
+    dict in the task closure (the classify_against pattern): no
+    corpus-side (doc, bucket) shuffle, no join, memory independent of
+    corpus size — value-identical to the explode → weight-table
+    broadcast-join → groupBy form (equality-pinned by test). The frame is
     deliberately never localCheckpointed: an in-heap checkpoint of a
     corpus-scale frame evicts under pressure and dies at 10M docs (the
     write_classifier_table lesson — measured OOM in scale_test
-    section_r9b before this shape). ``engine="catalyst"`` keeps the
-    explode → broadcast-join → groupBy reference form, equality-pinned
-    by test. Corpus-global (the weight table is a corpus aggregate) —
+    section_r9b before this shape). Corpus-global (the weight table is a corpus aggregate) —
     batch-only on the spec surface; the train-offline/score-online
     split is :func:`write_importance_table` /
     :func:`importance_against_path` (score parity equality-pinned).
@@ -1163,19 +1072,6 @@ def importance_weights(
     if not target_sources:
         raise ValueError("importance_weights needs >=1 target source")
     w = _importance_table(df, target_sources, dim, text_col, source_col)
-
-    if engine == "catalyst":
-        db = hash_bucket_counts(df, dim=dim, text_col=text_col, id_col=id_col)
-        return (
-            db.join(F.broadcast(w), "_b")
-            .groupBy(id_col)
-            .agg(
-                F.sum("_c").cast("bigint").alias("n_tokens"),
-                F.sum(F.col("_c") * F.col("_wt")).cast("bigint").alias("score"),
-            )
-        )
-    if engine != "pandas":
-        raise ValueError(f"unknown engine {engine!r}; use 'pandas' or 'catalyst'")
     wt_map = {r["_b"]: r["_wt"] for r in w.collect()}  # <= dim rows
     # batch-only op -> safe to scale_out before the Python-side kernel
     # (a single-file corpus would otherwise score on ONE core — the
@@ -1468,7 +1364,6 @@ def hash_embedding(
     dim: int = 64,
     text_col: str = "text",
     id_col: str = "doc_id",
-    engine: str = "pandas",
 ) -> DataFrame:
     """Hashing-trick document featurization: token → portable
     ``char_fold_hash % dim`` bucket → per-doc bucket-count histogram →
@@ -1478,136 +1373,89 @@ def hash_embedding(
     similarity/dedup op (cosine_topk, LSH, semantic_dedup) composes on
     raw text with no model artifact to ship.
 
-    Scale shape: one explode + (doc, bucket) hash aggregation, then a
-    per-doc map rebuild — shuffles carry (id, bucket, count) ints only.
-    The char-fold hash (an interpreted HOF) runs once per DISTINCT
-    token, not per occurrence: the vocabulary dictionary (token →
-    bucket) is built from the distinct-token table (map-side partial
-    distinct makes this cheap under Zipf) and broadcast back onto the
-    token stream — at sf0.1 this cut the hash stage ~9000× (31 distinct
-    vs 270k occurrences). The dictionary is vocab-bounded; for corpora
-    whose vocabulary exceeds the broadcast budget, hash per occurrence
-    instead (drop the dict join — results identical). The dense array
-    materializes via ``map_from_entries`` + a dim-bounded transform
-    (64 lookups/row, Catalyst-side). Determinism: counts are integers,
-    the norm is a sqrt of an integer sum, and each weight is ONE
-    division of exact values — the oracle reproduces every float.
-
     Output: (id, n_tokens, embedding array<double>, l2_norm).
 
-    ``engine``: ``"pandas"`` (default) runs the WHOLE featurization as
-    one Arrow-batched ``mapInPandas`` pass — the documented
-    ``pq_encode`` fix pattern (VERDICT r6 #3) taken to its conclusion:
-    tokenize, char-fold hash (memoized per distinct token, the same
-    Zipf-head trick as ``apply_bpe``), bincount, and norm all row-local
-    in numpy/Python integers, eliminating the explode, the vocabulary
-    broadcast join, and BOTH shuffles of the reference form. The
-    arithmetic replays Catalyst exactly: the char fold is plain int
-    math (no overflow below 2^53·31), counts are exact small integers,
-    ``np.sum`` over a ≤128-element vector is a strict sequential left
-    fold including the zero squares, and each weight is the same single
-    division — bit-identical, pinned by
-    ``test_hash_embedding_engines_identical``. ``"catalyst"`` keeps
-    the pure-expression two-shuffle form as the oracle-reference path.
+    Scale shape: the WHOLE featurization is one Arrow-batched
+    ``mapInPandas`` pass — the documented ``pq_encode`` fix pattern
+    (VERDICT r6 #3) taken to its conclusion: tokenize, char-fold hash
+    (memoized per distinct token, the same Zipf-head trick as
+    ``apply_bpe``), bincount, and norm all row-local in numpy/Python
+    integers — no explode, no vocabulary broadcast join, and none of
+    the two shuffles of the expression form (explode + (doc, bucket)
+    count, then a map_from_entries dense rebuild and an aggregate norm
+    fold per doc). Determinism: the char fold is
+    plain int math (no overflow below 2^53·31), counts are exact small
+    integers, ``np.sum`` over a ≤128-element vector is a strict
+    sequential left fold including the zero squares, and each weight
+    is ONE division of exact values — bit-identical to the expression
+    form (equality-pinned in tests), so the oracle reproduces every
+    float.
     """
-    if engine == "pandas":
-        import numpy as np
-        import pandas as pd
+    import numpy as np
+    import pandas as pd
 
-        from .hashing import HASH_BASE, HASH_MOD
-        from pyspark.sql import types as T
+    from .hashing import HASH_BASE, HASH_MOD
+    from pyspark.sql import types as T
 
-        src = scale_out(df.select(id_col, text_col))
-        id_field = [f for f in src.schema.fields if f.name == id_col][0]
-        schema = T.StructType([
-            id_field,
-            T.StructField("n_tokens", T.LongType(), True),
-            T.StructField("embedding", T.ArrayType(T.DoubleType()), True),
-            T.StructField("l2_norm", T.DoubleType(), True),
-        ])
+    src = scale_out(df.select(id_col, text_col))
+    id_field = [f for f in src.schema.fields if f.name == id_col][0]
+    schema = T.StructType([
+        id_field,
+        T.StructField("n_tokens", T.LongType(), True),
+        T.StructField("embedding", T.ArrayType(T.DoubleType()), True),
+        T.StructField("l2_norm", T.DoubleType(), True),
+    ])
 
-        def featurize(batches):
-            # per-distinct-token bucket memo across batches (Zipf head)
-            bucket: dict[str, int] = {}
+    def featurize(batches):
+        # per-distinct-token bucket memo across batches (Zipf head)
+        bucket: dict[str, int] = {}
 
-            def tok_bucket(w: str) -> int:
-                b = bucket.get(w)
-                if b is None:
-                    h = 0
-                    for ch in w:
-                        h = (h * HASH_BASE + ord(ch)) % HASH_MOD
-                    b = h % dim
-                    bucket[w] = b
-                return b
+        def tok_bucket(w: str) -> int:
+            b = bucket.get(w)
+            if b is None:
+                h = 0
+                for ch in w:
+                    h = (h * HASH_BASE + ord(ch)) % HASH_MOD
+                b = h % dim
+                bucket[w] = b
+            return b
 
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                tok_lists = [fold_space_tokens(x) for x in pdf[text_col]]
-                # the explode in the reference form drops token-less docs
-                keep = [i for i, tl in enumerate(tok_lists) if tl]
-                if not keep:
-                    continue
-                lens = np.fromiter(
-                    (len(tok_lists[i]) for i in keep), dtype=np.int64,
-                    count=len(keep),
-                )
-                total = int(lens.sum())
-                rows = np.repeat(np.arange(len(keep)), lens)
-                flat = np.fromiter(
-                    (tok_bucket(t) for i in keep for t in tok_lists[i]),
-                    dtype=np.int64, count=total,
-                )
-                mat = (
-                    np.bincount(rows * dim + flat, minlength=len(keep) * dim)
-                    .astype(np.float64)
-                    .reshape(len(keep), dim)
-                )
-                # sequential left fold (numpy pairwise kicks in only
-                # above 128 elements); summing the zero squares too
-                # replays the Catalyst aggregate bit for bit
-                norms = np.sqrt(np.sum(mat * mat, axis=1))
-                emb = (mat / norms[:, None]).tolist()
-                yield pd.DataFrame({
-                    id_col: pdf[id_col].iloc[keep].values,
-                    "n_tokens": pd.Series(lens, dtype="int64"),
-                    "embedding": emb,
-                    "l2_norm": pd.Series(norms, dtype="float64"),
-                })
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            tok_lists = [fold_space_tokens(x) for x in pdf[text_col]]
+            # token-less docs have no features and emit no row
+            keep = [i for i, tl in enumerate(tok_lists) if tl]
+            if not keep:
+                continue
+            lens = np.fromiter(
+                (len(tok_lists[i]) for i in keep), dtype=np.int64,
+                count=len(keep),
+            )
+            total = int(lens.sum())
+            rows = np.repeat(np.arange(len(keep)), lens)
+            flat = np.fromiter(
+                (tok_bucket(t) for i in keep for t in tok_lists[i]),
+                dtype=np.int64, count=total,
+            )
+            mat = (
+                np.bincount(rows * dim + flat, minlength=len(keep) * dim)
+                .astype(np.float64)
+                .reshape(len(keep), dim)
+            )
+            # sequential left fold (numpy pairwise kicks in only
+            # above 128 elements); summing the zero squares too
+            # replays the Catalyst aggregate bit for bit
+            norms = np.sqrt(np.sum(mat * mat, axis=1))
+            emb = (mat / norms[:, None]).tolist()
+            yield pd.DataFrame({
+                id_col: pdf[id_col].iloc[keep].values,
+                "n_tokens": pd.Series(lens, dtype="int64"),
+                "embedding": emb,
+                "l2_norm": pd.Series(norms, dtype="float64"),
+            })
 
-        return src.mapInPandas(featurize, schema)
-
-    counts = hash_bucket_counts(df, dim, text_col, id_col)
-    per_doc = counts.groupBy(id_col).agg(
-        F.map_from_entries(
-            F.sort_array(F.collect_list(F.struct("_b", "_c")))
-        ).alias("_m"),
-        F.sum("_c").alias("n_tokens"),
-    )
-    # the dense rebuild + norm fold below are interpreted HOFs (~4k ops
-    # per row); AQE coalesces the small per-doc aggregate to ONE
-    # partition, which would serialize them onto one core — scale_out
-    # restores explicit parallelism before the compute-heavy projection
-    per_doc = scale_out(per_doc)
-    dense = F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        lambda b: F.coalesce(
-            F.element_at(F.col("_m"), b.cast("bigint")), F.lit(0)
-        ).cast("double"),
-    )
-    withv = per_doc.withColumn("_v", dense)
-    norm = F.sqrt(
-        F.aggregate(F.col("_v"), F.lit(0.0), lambda a, x: a + x * x)
-    )
-    return withv.withColumn("l2_norm", norm).select(
-        F.col(id_col),
-        F.col("n_tokens").cast("bigint").alias("n_tokens"),
-        F.when(
-            F.col("l2_norm") > 0,
-            F.transform(F.col("_v"), lambda x: x / F.col("l2_norm")),
-        ).alias("embedding"),
-        "l2_norm",
-    )
+    return src.mapInPandas(featurize, schema)
 
 
 def hash_feature_classifier(
@@ -1617,7 +1465,6 @@ def hash_feature_classifier(
     id_col: str = "doc_id",
     label_col: str = "label",
     train_col: str = "is_train",
-    engine: str = "pandas",
 ) -> DataFrame:
     """Linear text classifier over hashed bag-of-words features — the
     fastText/CCNet corpus-curation pattern (Joulin et al. 2016;
@@ -1641,11 +1488,16 @@ def hash_feature_classifier(
       (an order-statistic threshold would need a full rank; the mean
       matches its apply accuracy on the test corpora within 1 doc).
 
-    Scale shape: one explode + (doc, bucket) count shuffle; the weight
-    table and both scalar aggregates are broadcast back, so the corpus
-    never re-shuffles after the feature stage. The fixed-point
-    divisions are exact across the full int64 range (decimal-exact
-    floor div Catalyst-side, numpy int64 `//` in the Arrow path), and
+    Scale shape: the sparse per-doc bucket counts come from ONE Arrow
+    ``mapInPandas`` pass (tokenize + memoized char-fold hash + bincount
+    scatter, the documented hash_embedding fix pattern) — row-local,
+    zero shuffles for the feature stage, and integer-identical to the
+    explode/dictionary-join expression form (equality-pinned in
+    tests); the weight table and both scalar aggregates are broadcast
+    back, so the corpus never re-shuffles after the feature stage. The
+    fixed-point divisions are exact across the full int64 range
+    (decimal-exact floor div Catalyst-side, numpy int64 `//` in the
+    feature pass), and
     the two threshold terms — ``Σ train scores`` and ``score·n_train``
     — are DECIMAL(38,0) (:func:`_classifier_threshold` /
     :func:`_calibrated_pred`), so no term anywhere saturates int64 at
@@ -1654,17 +1506,8 @@ def hash_feature_classifier(
     Input must carry ``label_col`` (0/1) and ``train_col`` (0/1).
     Output: one row per document with ≥1 token — (id, is_train,
     label, score, pred).
-
-    ``engine="pandas"`` (default) computes the sparse per-doc bucket
-    counts in ONE Arrow ``mapInPandas`` pass (tokenize + memoized
-    char-fold hash + bincount scatter, the documented hash_embedding
-    fix pattern) — row-local, zero shuffles for the feature stage, and
-    integer-identical to the ``"catalyst"`` explode/dictionary-join
-    reference form (equality-pinned in tests/test_dataops.py).
     """
-    feats = _classifier_feats(
-        df, dim, text_col, id_col, label_col, train_col, engine
-    )
+    feats = _classifier_feats(df, dim, text_col, id_col, label_col, train_col)
     w, scored, thr = _classifier_model(feats, id_col)
     return scored.crossJoin(F.broadcast(thr)).select(
         F.col(id_col),
@@ -1700,7 +1543,6 @@ def _classifier_feats(
     id_col: str,
     label_col: str,
     train_col: str,
-    engine: str,
     checkpoint: bool = True,
 ) -> DataFrame:
     """Sparse labeled fixed-point features (id, _tr, _y, _n, _b, _c,
@@ -1712,110 +1554,83 @@ def _classifier_feats(
     in executor storage, and a decade-scale feature frame evicts them
     — an unrecoverable 'Block rdd_N does not exist' failure, hit at
     10M docs in scale_test section_r9)."""
-    from .hashing import char_fold_hash
+    import numpy as np
+    import pandas as pd
 
-    fp = F.lit(_CLF_FP).cast("bigint")
-    idiv = _clf_idiv
+    from pyspark.sql import types as T
 
-    if engine == "pandas":
-        import numpy as np
-        import pandas as pd
+    from .hashing import char_fold_hash_py
 
-        from pyspark.sql import types as T
+    src = scale_out(df.select(id_col, train_col, label_col, text_col))
+    id_field = [f for f in src.schema.fields if f.name == id_col][0]
+    feat_schema = T.StructType([
+        id_field,
+        T.StructField("_tr", T.LongType(), True),
+        T.StructField("_y", T.LongType(), True),
+        T.StructField("_n", T.LongType(), True),
+        T.StructField("_b", T.LongType(), True),
+        T.StructField("_c", T.LongType(), True),
+        T.StructField("_f", T.LongType(), True),
+    ])
 
-        from .hashing import char_fold_hash_py
+    def featurize(batches):
+        bucket: dict[str, int] = {}
 
-        src = scale_out(df.select(id_col, train_col, label_col, text_col))
-        id_field = [f for f in src.schema.fields if f.name == id_col][0]
-        feat_schema = T.StructType([
-            id_field,
-            T.StructField("_tr", T.LongType(), True),
-            T.StructField("_y", T.LongType(), True),
-            T.StructField("_n", T.LongType(), True),
-            T.StructField("_b", T.LongType(), True),
-            T.StructField("_c", T.LongType(), True),
-            T.StructField("_f", T.LongType(), True),
-        ])
+        def tok_bucket(w: str) -> int:
+            b = bucket.get(w)
+            if b is None:
+                b = char_fold_hash_py(w) % dim
+                bucket[w] = b
+            return b
 
-        def featurize(batches):
-            bucket: dict[str, int] = {}
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            tok_lists = [fold_space_tokens(x) for x in pdf[text_col]]
+            keep = [i for i, tl in enumerate(tok_lists) if tl]
+            if not keep:
+                continue
+            lens = np.fromiter(
+                (len(tok_lists[i]) for i in keep), dtype=np.int64,
+                count=len(keep),
+            )
+            total = int(lens.sum())
+            rows = np.repeat(np.arange(len(keep)), lens)
+            flat = np.fromiter(
+                (tok_bucket(t) for i in keep for t in tok_lists[i]),
+                dtype=np.int64, count=total,
+            )
+            mat = np.bincount(
+                rows * dim + flat, minlength=len(keep) * dim
+            ).reshape(len(keep), dim)
+            di, bi = mat.nonzero()
+            n_di = lens.take(di)
+            c_di = mat[di, bi]
+            yield pd.DataFrame({
+                id_col: pdf[id_col].iloc[keep].values.take(di),
+                "_tr": pd.Series(
+                    pdf[train_col].iloc[keep].values.take(di),
+                    dtype="int64",
+                ),
+                "_y": pd.Series(
+                    pdf[label_col].iloc[keep].values.take(di),
+                    dtype="int64",
+                ),
+                "_n": pd.Series(n_di, dtype="int64"),
+                "_b": pd.Series(bi, dtype="int64"),
+                "_c": pd.Series(c_di, dtype="int64"),
+                # numpy int64 floor division — exact, and c*2^20
+                # stays far under 2^63 (c <= per-doc token count)
+                "_f": pd.Series(
+                    (c_di.astype(np.int64) * _CLF_FP) // n_di,
+                    dtype="int64",
+                ),
+            })
 
-            def tok_bucket(w: str) -> int:
-                b = bucket.get(w)
-                if b is None:
-                    b = char_fold_hash_py(w) % dim
-                    bucket[w] = b
-                return b
-
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                tok_lists = [fold_space_tokens(x) for x in pdf[text_col]]
-                keep = [i for i, tl in enumerate(tok_lists) if tl]
-                if not keep:
-                    continue
-                lens = np.fromiter(
-                    (len(tok_lists[i]) for i in keep), dtype=np.int64,
-                    count=len(keep),
-                )
-                total = int(lens.sum())
-                rows = np.repeat(np.arange(len(keep)), lens)
-                flat = np.fromiter(
-                    (tok_bucket(t) for i in keep for t in tok_lists[i]),
-                    dtype=np.int64, count=total,
-                )
-                mat = np.bincount(
-                    rows * dim + flat, minlength=len(keep) * dim
-                ).reshape(len(keep), dim)
-                di, bi = mat.nonzero()
-                n_di = lens.take(di)
-                c_di = mat[di, bi]
-                yield pd.DataFrame({
-                    id_col: pdf[id_col].iloc[keep].values.take(di),
-                    "_tr": pd.Series(
-                        pdf[train_col].iloc[keep].values.take(di),
-                        dtype="int64",
-                    ),
-                    "_y": pd.Series(
-                        pdf[label_col].iloc[keep].values.take(di),
-                        dtype="int64",
-                    ),
-                    "_n": pd.Series(n_di, dtype="int64"),
-                    "_b": pd.Series(bi, dtype="int64"),
-                    "_c": pd.Series(c_di, dtype="int64"),
-                    # numpy int64 floor division — exact, and c*2^20
-                    # stays far under 2^63 (c <= per-doc token count)
-                    "_f": pd.Series(
-                        (c_di.astype(np.int64) * _CLF_FP) // n_di,
-                        dtype="int64",
-                    ),
-                })
-
-        feats = src.mapInPandas(featurize, feat_schema)
-    else:
-        toks = F.filter(_tokens(F.col(text_col)), lambda t: F.length(t) > 0)
-        n_tok = F.regexp_count(F.col(text_col), F.lit("[^ ]+")).cast("bigint")
-        base = scale_out(df).select(
-            F.col(id_col),
-            F.col(train_col).cast("bigint").alias("_tr"),
-            F.col(label_col).cast("bigint").alias("_y"),
-            n_tok.alias("_n"),
-            F.explode(toks).alias("_tok"),
-        )
-        # char-fold hash once per DISTINCT token (the hash_bucket_counts
-        # vocabulary-dictionary trick — Zipf head makes this cheap)
-        tok_dict = base.select("_tok").distinct().select(
-            "_tok", (char_fold_hash(F.col("_tok")) % dim).alias("_b")
-        )
-        feats = (
-            base.join(F.broadcast(tok_dict), "_tok")
-            .groupBy(id_col, "_tr", "_y", "_n", "_b")
-            .agg(F.count("*").cast("bigint").alias("_c"))
-            .withColumn("_f", idiv(F.col("_c") * fp, F.col("_n")))
-        )
+    feats = src.mapInPandas(featurize, feat_schema)
     # feats feeds THREE consumers (weights, scoring, and the threshold
     # via scored) — without a checkpoint each one re-derives the whole
-    # explode/distinct/agg chain (the q15/curation two-consumer lesson)
+    # feature pass (the q15/curation two-consumer lesson)
     feats = scale_out(feats)
     return feats.localCheckpoint() if checkpoint else feats
 
@@ -1901,7 +1716,6 @@ def trained_quality_classifier(
     id_col: str = "doc_id",
     label_col: str = "label",
     train_col: str = "is_train",
-    engine: str = "pandas",
 ) -> DataFrame:
     """Spec-surface form of :func:`hash_feature_classifier`: when the
     input stream carries no label/split columns (the raw documents
@@ -1919,7 +1733,6 @@ def trained_quality_classifier(
         id_col=id_col,
         label_col=label_col,
         train_col=train_col,
-        engine=engine,
     )
 
 
@@ -1971,7 +1784,6 @@ def write_classifier_table(
     id_col: str = "doc_id",
     label_col: str = "label",
     train_col: str = "is_train",
-    engine: str = "pandas",
     mode: str = "overwrite",
 ) -> None:
     """Persist the trained classifier as a tiny parquet artifact — the
@@ -1998,8 +1810,7 @@ def write_classifier_table(
 
     df = _derive_stop_labels(df, text_col, id_col, label_col, train_col)
     lazy_feats = _classifier_feats(
-        df, dim, text_col, id_col, label_col, train_col, engine,
-        checkpoint=False,
+        df, dim, text_col, id_col, label_col, train_col, checkpoint=False
     )
     spark = df.sparkSession
     tmp = f"{path}_feats_tmp_{_os.getpid()}"

@@ -7179,10 +7179,35 @@ _STALE_SIGNED = frozenset({
     # only; gram arrays join back per surviving candidate (the LSH
     # keys-only pattern). Same candidates, same Jaccard; oracle exact:
     "docs_minhash_lsh_pairs",
+    # one implementation per dataop: the engine= option and its
+    # expression/staged branch left pq_encode, top_terms,
+    # repetition_signals, hash_embedding, importance_weights, the
+    # classifier feature stage, the shingle stream, the band-key
+    # writer and the curation body (the references moved to the test
+    # side, equality tests unchanged). The default path each entry ran
+    # is unchanged; oracle exact:
+    "docs_dup_clusters",
+    "docs_dup_keep_best",
+    "docs_ngram_containment_pairs",
+    "docs_ngram_jaccard_pairs",
+    "emb_ivf_ann_topk",
+    "emb_ivf_pq_ann_topk",
+    "emb_pq_ann_topk",
+    "docs_curation_e2e",
+    "emb_cluster_sample",
+    "docs_curation_v3",
+    "docs_curation_v4",
+    "docs_decontamination",
+    "docs_hash_embed_topk",
+    "docs_pipeline_e2e",
+    "docs_repetition_signals",
+    "docs_top_terms",
+    "docs_trained_classifier",
+    "emb_pq_index_ann_topk",
 })
 
 
-def _priority(name: str) -> int:
+def _priority(name: str, stale: frozenset[str] = _STALE_SIGNED) -> int:
     core = {
         "pipeline_canonical", "filter_project", "transform_scalars",
         "dedup_first_wins", "dedup_windowed", "temporal_join_enrich",
@@ -7193,7 +7218,7 @@ def _priority(name: str) -> int:
     if newest == 0:
         # never driver-checked — every new-this-round op
         return 0
-    if name in _STALE_SIGNED and newest < _LATEST_ROUND and name not in core:
+    if name in stale and newest < _LATEST_ROUND and name not in core:
         return 1  # stale AND its newest signature is already old — re-sign first
     if name in core:
         return 2  # keep the most-graded §2 rows driver-verified every round
@@ -7202,7 +7227,7 @@ def _priority(name: str) -> int:
         # must be re-signed now (tests/test_rotation.py enforces it fits
         # the ~50-row budget)
         return 3
-    if name in _STALE_SIGNED:
+    if name in stale:
         # stale but signed in the latest round: the artifact-code gap is
         # one round old and its outputs stay pinned by the local oracle
         # replay — when the ~50-entry budget binds, these yield to the
@@ -7213,7 +7238,14 @@ def _priority(name: str) -> int:
     return 6  # signed in the latest round itself — cheapest to defer
 
 
-QUERIES = {
-    k: QUERIES[k]
-    for k in sorted(QUERIES, key=lambda n: (_priority(n), list(QUERIES).index(n)))
-}
+_REGISTERED = tuple(QUERIES)
+
+
+def rotation_order(stale: frozenset[str] = _STALE_SIGNED) -> list[str]:
+    """Registry names in rotation order under a given stale set:
+    priority first, then registration order."""
+    pos = {n: i for i, n in enumerate(_REGISTERED)}
+    return sorted(_REGISTERED, key=lambda n: (_priority(n, stale), pos[n]))
+
+
+QUERIES = {k: QUERIES[k] for k in rotation_order()}

@@ -57,7 +57,6 @@ class ClickHouseSink:
     parquet_fallback_path: Optional[str] = None
     dlq: Optional[DLQWriter] = None
     write_parallelism: int = 4              # ≈ reference worker pool (GOMAXPROCS-2)
-    max_retries: int = 3
     reports: list = field(default_factory=list)
 
     def _write_once(self, df: DataFrame, batch_id: Optional[int] = None) -> None:
@@ -88,7 +87,9 @@ class ClickHouseSink:
         """foreachBatch body: stamp the idempotency key, write, classify
         failures. Retryable errors re-raise so the streaming engine
         replays the epoch (commit-after-write ordering, exactly the
-        reference's NACK path).
+        reference's NACK path). Permanent/unknown errors divert the
+        batch to the DLQ; with no DLQ wired they re-raise too, since
+        returning would commit an epoch whose rows went nowhere.
 
         The micro-batch is evaluated exactly once: the row count for the
         success report rides on the write job as an observed metric (no
@@ -111,15 +112,16 @@ class ClickHouseSink:
                 report = SinkWriteReport(batch_id, -1, "retry", str(err)[:500])
                 self.reports.append(report)
                 raise  # streaming engine retries the epoch from checkpoint
+            if self.dlq is None:
+                raise  # nowhere to divert the rows: fail the epoch
             # permanent/unknown -> DLQ the whole batch payload-wise
-            if self.dlq is not None:
-                failed = df.select(
-                    F.lit("sink").alias("component"),
-                    F.lit(f"{cls.value}: {str(err)[:200]}").alias("error"),
-                    F.to_json(F.struct(*[F.col(c) for c in df.columns])).alias("payload"),
-                    F.current_timestamp().alias("dlq_ts"),
-                )
-                self.dlq.write(failed)
+            failed = df.select(
+                F.lit("sink").alias("component"),
+                F.lit(f"{cls.value}: {str(err)[:200]}").alias("error"),
+                F.to_json(F.struct(*[F.col(c) for c in df.columns])).alias("payload"),
+                F.current_timestamp().alias("dlq_ts"),
+            )
+            self.dlq.write(failed)
             report = SinkWriteReport(batch_id, df.count(), "dlq", str(err)[:500])
         self.reports.append(report)
         return report

@@ -55,7 +55,6 @@ def curation_scored_stream(
     weights_path: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    engine: str = "fused",
     importance_path: "str | None" = None,
     decontam_path: "str | None" = None,
     decontam_n: "int | None" = None,
@@ -76,16 +75,16 @@ def curation_scored_stream(
     before the seen-set probe). Stream-safe under append mode; also
     valid on a batch frame (same plan).
 
-    ``engine="staged"`` composes the tested dataops — one Arrow
-    ``mapInPandas`` pass per stage, each paying a serialize/deserialize
-    boundary per micro-batch. ``engine="fused"`` replays the identical
-    per-row logic in ONE pass (bloom bitmap, classifier weights, and
-    importance dict all sit in the task closure anyway), so the corpus
-    crosses the Arrow boundary once — row-identical output
-    (equality-pinned in tests) at a fraction of the boundary cost.
-    Measured in-chain (streaming_bench, 100k docs): fused 22.1k vs
-    staged 17.0k docs/s end-to-end — fused is the default; staged is
-    the composition-of-tested-ops reference form.
+    The whole body runs as ONE fused Arrow pass: it replays the
+    per-row logic of the stage dataops (normalize_text,
+    dedup_against_bloom_path, neardup_against_path,
+    classify_against_path, importance_against_path) through their
+    shared row-local kernels — bloom bitmap, classifier weights and
+    importance dict all sit in the task closure anyway — so the corpus
+    crosses the Arrow boundary once instead of once per stage.
+    Row-identical to the staged composition of those ops
+    (equality-pinned in tests). Measured in-chain (streaming_bench,
+    100k docs): fused 22.1k vs staged 17.0k docs/s end-to-end.
 
     ``decontam_path`` (optional) adds benchmark DECONTAMINATION as the
     FIRST stage — drop every document sharing any ``decontam_n``-gram
@@ -110,9 +109,8 @@ def curation_scored_stream(
 
     if decontam_n is None:
         decontam_n = DECONTAM_NGRAM_N
-    # the clash guard applies to BOTH engines (ADVICE r8: staged's
-    # normalize_text would silently overwrite a pre-existing
-    # text_norm/n_tokens_* column, diverging from fused's rejection)
+    # the fused pass rebuilds its output frame, so a pre-existing
+    # output column would be duplicated — reject it up front
     guarded = {"text_norm", "n_tokens_raw", "n_tokens_norm", "score", "pred"}
     if importance_path is not None:
         guarded |= {"iw_tokens", "iw_score"}
@@ -122,49 +120,6 @@ def curation_scored_stream(
             f"input already carries {sorted(clash)} — rename those "
             "columns before the curation pass"
         )
-    if engine == "staged":
-        from ..dataops.dedup import (
-            dedup_against_bloom_path,
-            decontaminate_against_path,
-        )
-        from ..dataops.text import (
-            classify_against_path,
-            importance_against_path,
-            normalize_text,
-        )
-
-        if decontam_path is not None:
-            docs = decontaminate_against_path(
-                docs, decontam_path, n=decontam_n, text_col=text_col,
-                seen_format=decontam_format,
-            )
-        normed = normalize_text(docs, text_col=text_col, id_col=id_col)
-        # the PROBE half only (not dedup_against_path, whose batch form
-        # adds a within-batch first-wins window): batch and stream then
-        # execute the identical plan, and within-stream dups stay the
-        # dedup STAGE's job (dropDuplicatesWithinWatermark — the
-        # compiler's documented division of labor)
-        fresh = dedup_against_bloom_path(
-            normed, bloom_path, text_col="text_norm", id_col=id_col
-        )
-        if neardup_path is not None:
-            from ..dataops.dedup import neardup_against_path
-
-            fresh = neardup_against_path(
-                fresh, neardup_path, text_col="text_norm",
-                seen_format=neardup_format,
-            )
-        scored = classify_against_path(
-            fresh, weights_path, text_col="text_norm", id_col=id_col
-        )
-        if importance_path is not None:
-            scored = importance_against_path(
-                scored, importance_path, text_col="text_norm",
-                id_col=id_col, tokens_col="iw_tokens", score_col="iw_score",
-            )
-        return scored
-    if engine != "fused":
-        raise ValueError(f"unknown engine {engine!r}: staged|fused")
 
     import pandas as pd
     from pyspark.sql import types as T
@@ -232,8 +187,8 @@ def curation_scored_stream(
     tcol = text_col
 
     # the fused pass COMPOSES the ops' shared row-local kernels — the
-    # single definitions their staged forms run — so a semantic change
-    # to any stage reaches both engines by construction
+    # single definitions the standalone dataops run — so a semantic
+    # change to any stage reaches both by construction
     def fused(batches):
         norm = _normalize_kernel()
         seen = _bloom_probe_kernel(bc_words.value, m, k, n_shards)
@@ -291,7 +246,7 @@ def curation_scored_stream(
             if iw_score is not None:
                 # pass 3 (vectorized importance scorer) over the SAME
                 # token lists the classifier consumed — identical to
-                # the staged importance_against_path on text_norm
+                # importance_against_path on text_norm
                 iw_toks, iw_scores = iw_score([tok_lists[j] for j in sel])
                 out["iw_tokens"] = pd.Series(iw_toks, dtype="int64").values
                 out["iw_score"] = pd.Series(iw_scores, dtype="int64").values
@@ -309,7 +264,6 @@ def curation_rollup_stream(
     watermark: str = "10 minutes",
     text_col: str = "text",
     id_col: str = "doc_id",
-    engine: str = "fused",
     importance_path: "str | None" = None,
     decontam_path: "str | None" = None,
     decontam_n: "int | None" = None,
@@ -329,7 +283,7 @@ def curation_rollup_stream(
     """
     scored = curation_scored_stream(
         docs, bloom_path, weights_path, text_col=text_col, id_col=id_col,
-        engine=engine, importance_path=importance_path,
+        importance_path=importance_path,
         decontam_path=decontam_path, decontam_n=decontam_n,
         decontam_format=decontam_format, neardup_path=neardup_path,
         neardup_format=neardup_format,

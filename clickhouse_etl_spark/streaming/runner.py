@@ -215,18 +215,10 @@ class StreamingPipeline:
             staged[src.source_id] = chain(source_df)
 
         if self.spec.join is not None:
-            from pyspark.sql import types as T
-
             from .temporal_join import temporal_join_streaming
 
             left = staged[self.spec.join.left.source_id]
             right = staged[self.spec.join.right.source_id]
-            # output schema from the join rules against the staged frames
-            fields = []
-            for rule in self.spec.join.output_fields:
-                side = left if rule.source_id == self.spec.join.left.source_id else right
-                dt = side.schema[rule.name].dataType if rule.name in side.columns else T.StringType()
-                fields.append(T.StructField(rule.output_name, dt, True))
             # GC timers only for continuous deployments — a registered
             # timer keeps availableNow runs alive with empty epochs
             continuous = "availableNow" not in trigger
@@ -240,7 +232,6 @@ class StreamingPipeline:
                 self.spec.join,
                 left_ts=ts_cols[self.spec.join.left.source_id],
                 right_ts=ts_cols[self.spec.join.right.source_id],
-                output_schema=T.StructType(fields),
                 state_gc_timeout_ms=gc_ms,
             )
         else:

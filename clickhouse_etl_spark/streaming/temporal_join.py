@@ -58,8 +58,7 @@ from ..spec.model import JoinConfig
 
 def _side_fields(side_df: DataFrame, rules) -> list[tuple[str, str, T.DataType]]:
     """(source name, output name, type) for one side's output rules;
-    missing columns project as NULL string (same fallback the runner
-    uses when sizing the output schema)."""
+    missing columns project as NULL string."""
     out = []
     for r in rules:
         if r.name in side_df.columns:
@@ -337,11 +336,10 @@ def temporal_join_streaming(
     cfg: JoinConfig,
     left_ts: str,
     right_ts: str,
-    output_schema: T.StructType,
     state_gc_timeout_ms: int | None = None,
 ) -> DataFrame:
-    """Wire the tagged-union stateful processor; ``output_schema`` must
-    cover cfg.output_fields' names/types.
+    """Wire the tagged-union stateful processor. The output schema is
+    cfg.output_fields in order, each typed by its side's column.
 
     ``state_gc_timeout_ms``: optional processing-time GC for keys that
     stop receiving events (long-running continuous deployments). Leave
@@ -355,6 +353,10 @@ def temporal_join_streaming(
     l_fields = _side_fields(left, l_rules)
     r_fields = _side_fields(right, r_rules)
     out_names = [r.output_name for r in cfg.output_fields]
+    out_types = {o: t for _, o, t in l_fields + r_fields}
+    output_schema = T.StructType(
+        [T.StructField(o, out_types[o], True) for o in out_names]
+    )
 
     union = _tagged_union(left, right, cfg, left_ts, right_ts, l_fields, r_fields)
     return union.groupBy("_key").applyInPandasWithState(

@@ -623,12 +623,11 @@ def section_r7(spark) -> None:
 
 def section_r7b(spark) -> None:
     """Late-r7 ops at 100k docs: the trained hash-feature classifier
-    (Arrow featurizer vs the Catalyst explode/dictionary reference
-    form) and the cluster-then-cap sampler through the declarable
-    dataop surface (hash-embed → k-means assign → per-cell cap). The
-    classifier's localCheckpoints run at frame-construction time, so
-    each timed run REBUILDS the frame — construction and execution
-    both sit inside the clock."""
+    (Arrow featurizer) and the cluster-then-cap sampler through the
+    declarable dataop surface (hash-embed → k-means assign → per-cell
+    cap). The classifier's localCheckpoints run at frame-construction
+    time, so each timed run REBUILDS the frame — construction and
+    execution both sit inside the clock."""
     from clickhouse_etl_spark.dataops.text import trained_quality_classifier
     from clickhouse_etl_spark.plans.compiler import resolve_dataop
 
@@ -644,9 +643,8 @@ def section_r7b(spark) -> None:
             best = min(best, time.perf_counter() - t0)
         return best
 
-    for eng in ("pandas", "catalyst"):
-        dt = _best2_build(lambda: trained_quality_classifier(bd, engine=eng))
-        print(f"trained_classifier[{eng}]: {dt:.1f}s ({nd/dt/1000:.0f}k docs/s)")
+    dt = _best2_build(lambda: trained_quality_classifier(bd))
+    print(f"trained_classifier: {dt:.1f}s ({nd/dt/1000:.0f}k docs/s)")
 
     dt = _best2_build(
         lambda: resolve_dataop("cluster_sample")(bd, cap=2000, n_centroids=16)

@@ -267,18 +267,17 @@ def curation_chain_bench(spark) -> None:
         .add("source", "string")
         .add("ts", "timestamp")
     )
-    # the third variant carries the optional DSIR importance stage in
-    # the SAME fused pass (VERDICT r9 #8); the fourth adds the
+    # the second variant carries the optional DSIR importance stage in
+    # the SAME fused pass (VERDICT r9 #8); the third adds the
     # decontamination probe as the fused chain's FIRST stage (r10) —
     # the full five-stage deployment in ONE StreamingQuery
-    # the fifth variant adds the near-dup band probe after the exact
+    # the fourth variant adds the near-dup band probe after the exact
     # bloom dedup — the full SIX-stage deployment in ONE StreamingQuery
-    for engine, iw, dc, nd in (
-        ("staged", None, None, None),
-        ("fused", None, None, None),
-        ("fused", iw_path, None, None),
-        ("fused", iw_path, dc_path, None),
-        ("fused", iw_path, dc_path, nd_path),
+    for iw, dc, nd in (
+        (None, None, None),
+        (iw_path, None, None),
+        (iw_path, dc_path, None),
+        (iw_path, dc_path, nd_path),
     ):
         best = float("inf")
         for i in range(2):
@@ -286,7 +285,7 @@ def curation_chain_bench(spark) -> None:
             release_ngram_digest_cache()
             release_band_digest_cache()
             tag = f"{'iw' if iw else 'plain'}{'_dc' if dc else ''}{'_nd' if nd else ''}"
-            ckpt = f"{BASE}/curation_ckpt_{engine}_{tag}_{i}"
+            ckpt = f"{BASE}/curation_ckpt_{tag}_{i}"
             shutil.rmtree(ckpt, ignore_errors=True)
             stream = (
                 spark.readStream.schema(schema)
@@ -294,7 +293,7 @@ def curation_chain_bench(spark) -> None:
                 .parquet(docs_dir_ts)
             )
             rolled = curation_rollup_stream(
-                stream, bloom_path, model_path, engine=engine,
+                stream, bloom_path, model_path,
                 importance_path=iw, decontam_path=dc, neardup_path=nd,
             )
             t0 = time.perf_counter()
@@ -311,7 +310,7 @@ def curation_chain_bench(spark) -> None:
             json.dumps(
                 {
                     "metric": "curation_chain_throughput",
-                    "engine": engine
+                    "stages": "fused"
                     + ("+importance" if iw else "")
                     + ("+decontam" if dc else "")
                     + ("+neardup" if nd else ""),
@@ -730,8 +729,6 @@ def stateful_join_bench(spark, n_left: int = 2_000_000, n_keys: int = 9_000) -> 
     """Stateful temporal-join throughput: n_left left rows + one right
     row per key through applyInPandasWithState (the faithful
     latest-wins path)."""
-    from pyspark.sql import types as T
-
     from clickhouse_etl_spark.spec.model import (
         JoinConfig, JoinOutputField, JoinSourceConfig,
     )
@@ -775,16 +772,7 @@ def stateful_join_bench(spark, n_left: int = 2_000_000, n_keys: int = 9_000) -> 
             JoinOutputField("r", "r_score", "score"),
         ),
     )
-    out_schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
-    joined = temporal_join_streaming(
-        left, right, cfg, left_ts="ts", right_ts="rts", output_schema=out_schema
-    )
+    joined = temporal_join_streaming(left, right, cfg, left_ts="ts", right_ts="rts")
     # best-of-2 with a FRESH checkpoint each run: the first pass pays
     # Python-worker startup + RocksDB init + codegen (r7 measured 16.0s
     # cold vs 7.3s warm on identical code — the r5→r6 "regression" to

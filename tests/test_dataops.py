@@ -656,6 +656,7 @@ def test_pq_topk_recall_vs_brute_force(spark, sf_dir):
 
 def test_pq_encode_codes_in_range(spark, sf_dir):
     from clickhouse_etl_spark.dataops.similarity import _pq_codebooks, pq_encode
+    from reference_forms import pq_encode_expr
 
     emb = load_table(spark, sf_dir, "embeddings")
     books = _pq_codebooks(emb, m=8, n_codes=16, vec_col="embedding", id_col="vec_id")
@@ -665,10 +666,10 @@ def test_pq_encode_codes_in_range(spark, sf_dir):
     for r in out[:50]:
         assert len(r["pq_codes"]) == 8
         assert all(0 <= c < 16 for c in r["pq_codes"])
-    # the Arrow-batched encoder and the pure-Catalyst reference form
+    # the Arrow-batched encoder and the pure-expression reference form
     # must emit bit-identical codes (same fold order, same tie rule)
     cat = {r["vec_id"]: list(r["pq_codes"])
-           for r in pq_encode(emb, books, engine="catalyst").collect()}
+           for r in pq_encode_expr(emb, books).collect()}
     assert {r["vec_id"]: list(r["pq_codes"]) for r in out} == cat
 
 
@@ -1370,50 +1371,52 @@ def test_hash_embedding_contract(spark, sf_dir):
 
 
 def test_hash_embedding_engines_identical(spark, sf_dir):
-    """The Arrow-batched dense rebuild (default) and the pure-Catalyst
+    """The Arrow-batched featurization and the pure-expression
     reference form must emit BIT-identical embeddings and norms — the
     numpy path replays the same scatter, the same sequential square
     fold, and the same single division per weight (pq_encode fix
     pattern, VERDICT r6 #3)."""
     from clickhouse_etl_spark.dataops.text import hash_embedding
+    from reference_forms import hash_embedding_expr
 
     docs = load_table(spark, sf_dir, "documents")
     pan = {
         r["doc_id"]: (r["n_tokens"], r["embedding"], r["l2_norm"])
-        for r in hash_embedding(docs, dim=64, engine="pandas").collect()
+        for r in hash_embedding(docs, dim=64).collect()
     }
     cat = {
         r["doc_id"]: (r["n_tokens"], r["embedding"], r["l2_norm"])
-        for r in hash_embedding(docs, dim=64, engine="catalyst").collect()
+        for r in hash_embedding_expr(docs, dim=64).collect()
     }
     assert pan == cat
 
 
-def test_shingle_stream_engines_identical(spark, sf_dir):
-    """The Arrow-batched shingle generator (default) and the
-    Catalyst HOF reference form must emit ROW-identical (id, sz, g)
-    streams — the Python generator replays split-on-single-space
-    (empties kept), space-joined n-word windows, and
-    first-occurrence-distinct exactly (pq_encode fix pattern; the HOF
-    projection was ~80% of the pair-engine runtime at sf0.1)."""
+def test_shingle_stream_engines_identical(spark, sf_dir, monkeypatch):
+    """The Arrow-batched shingle generator and the Catalyst HOF
+    reference form must emit ROW-identical (id, sz, g) streams — the
+    Python generator replays split-on-single-space (empties kept),
+    space-joined n-word windows, and first-occurrence-distinct exactly
+    (pq_encode fix pattern; the HOF projection was ~80% of the
+    pair-engine runtime at sf0.1)."""
+    from clickhouse_etl_spark.dataops import dedup
     from clickhouse_etl_spark.dataops.dedup import (
         _shingle_stream,
         ngram_jaccard_pairs,
     )
+    from reference_forms import shingle_stream_expr
 
     docs = load_table(spark, sf_dir, "documents")
     pan = sorted(map(tuple, _shingle_stream(docs, "text", "doc_id", 5).collect()))
     cat = sorted(
-        map(
-            tuple,
-            _shingle_stream(docs, "text", "doc_id", 5, engine="catalyst").collect(),
-        )
+        map(tuple, shingle_stream_expr(docs, "text", "doc_id", 5).collect())
     )
     assert pan == cat
     assert pan, "empty shingle stream on the test corpus"
-    # and the composed pair output stays identical end to end
+    # and the composed pair output stays identical end to end when the
+    # pair miner runs over the reference stream
     pj = sorted(map(tuple, ngram_jaccard_pairs(docs).collect()))
-    cj = sorted(map(tuple, ngram_jaccard_pairs(docs, engine="catalyst").collect()))
+    monkeypatch.setattr(dedup, "_shingle_stream", shingle_stream_expr)
+    cj = sorted(map(tuple, ngram_jaccard_pairs(docs).collect()))
     assert pj == cj
 
 
@@ -1422,6 +1425,7 @@ def test_shingle_stream_null_and_short_docs(spark):
     doc shorter than n words emits no shingles — same as the guarded
     Catalyst form."""
     from clickhouse_etl_spark.dataops.dedup import _shingle_stream
+    from reference_forms import shingle_stream_expr
 
     df = spark.createDataFrame(
         [(1, None), (2, "too short"), (3, "one two three four five six")],
@@ -1429,15 +1433,16 @@ def test_shingle_stream_null_and_short_docs(spark):
     )
     rows = _shingle_stream(df, "text", "doc_id", 5).collect()
     assert {r["id"] for r in rows} == {3}
-    cat = _shingle_stream(df, "text", "doc_id", 5, engine="catalyst").collect()
+    cat = shingle_stream_expr(df, "text", "doc_id", 5).collect()
     assert sorted(map(tuple, rows)) == sorted(map(tuple, cat))
 
 
-def test_simhash_arrow_sigs_identical(spark, sf_dir):
-    """The Arrow SimHash signature stage (pair-generator default) must
+def test_simhash_arrow_sigs_identical(spark, sf_dir, monkeypatch):
+    """The Arrow SimHash signature stage of the pair generator must
     equal the expression-form simhash() bit for bit — same char-fold
     hash per word (memoized), same ±1 bit votes, same bit packing —
     and the banded pair output must be identical end to end."""
+    from clickhouse_etl_spark.dataops import dedup
     from clickhouse_etl_spark.dataops.dedup import (
         _simhash_sigs_arrow,
         simhash,
@@ -1449,7 +1454,15 @@ def test_simhash_arrow_sigs_identical(spark, sf_dir):
     expr = sorted(map(tuple, simhash(docs).collect()))
     assert arrow == expr
     pa = sorted(map(tuple, simhash_near_dup_pairs(docs).collect()))
-    pc = sorted(map(tuple, simhash_near_dup_pairs(docs, engine="catalyst").collect()))
+    # the pair generator over the expression-form signatures
+    monkeypatch.setattr(
+        dedup,
+        "_simhash_sigs_arrow",
+        lambda df, text_col, id_col, bits: simhash(
+            df, text_col=text_col, id_col=id_col, bits=bits
+        ),
+    )
+    pc = sorted(map(tuple, simhash_near_dup_pairs(docs).collect()))
     assert pa == pc
 
 
@@ -1746,8 +1759,8 @@ def test_hash_feature_classifier_engines_identical(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     rows_a = sorted(
         tuple(r) for r in trained_quality_classifier(docs).collect()
-    )  # engine defaults to pandas
-    # catalyst reference: the same label/split derivation, engine pinned
+    )
+    # expression-form reference over the same label/split derivation
     from pyspark.sql import functions as F
     from clickhouse_etl_spark.dataops.hashing import affine_hash
     from clickhouse_etl_spark.dataops.text import (
@@ -1756,8 +1769,8 @@ def test_hash_feature_classifier_engines_identical(spark, sf_dir):
         SPLIT_B,
         _stop_hits,
         _tokens,
-        hash_feature_classifier,
     )
+    from reference_forms import hash_feature_classifier_expr
 
     toks = _tokens(F.col("text"))
     n_tok = F.regexp_count(F.col("text"), F.lit("[^ ]+")).cast("bigint")
@@ -1770,7 +1783,7 @@ def test_hash_feature_classifier_engines_identical(spark, sf_dir):
         (16 * _stop_hits(toks, STOPWORDS["en"]).cast("bigint") >= n_tok)
         .cast("int").alias("label"),
     )
-    ref = hash_feature_classifier(labeled, engine="catalyst")
+    ref = hash_feature_classifier_expr(labeled)
     rows_b = sorted(tuple(r) for r in ref.collect())
     assert rows_a == rows_b
 
@@ -1928,6 +1941,7 @@ def test_repetition_signals_engines_identical(spark, sf_dir):
     IEEE ratio divisions."""
     from clickhouse_etl_spark.dataops.text import repetition_signals
     from clickhouse_etl_spark.sources.batch import load_table
+    from reference_forms import repetition_signals_expr
 
     docs = load_table(spark, sf_dir, "documents")
     edge = spark.createDataFrame(
@@ -1946,7 +1960,7 @@ def test_repetition_signals_engines_identical(spark, sf_dir):
     corpus = docs.unionByName(edge.select(*docs.columns))
     a = sorted(tuple(r) for r in repetition_signals(corpus).collect())
     b = sorted(
-        tuple(r) for r in repetition_signals(corpus, engine="catalyst").collect()
+        tuple(r) for r in repetition_signals_expr(corpus).collect()
     )
     assert a == b
 
@@ -1957,6 +1971,7 @@ def test_top_terms_engines_identical(spark, sf_dir):
     and NULL/empty docs dropping."""
     from clickhouse_etl_spark.dataops.chunking import top_terms
     from clickhouse_etl_spark.sources.batch import load_table
+    from reference_forms import top_terms_expr
 
     docs = load_table(spark, sf_dir, "documents")
     edge = spark.createDataFrame(
@@ -1974,7 +1989,7 @@ def test_top_terms_engines_identical(spark, sf_dir):
     corpus = docs.unionByName(edge.select(*docs.columns))
     a = sorted(tuple(r) for r in top_terms(corpus, k=3).collect())
     b = sorted(
-        tuple(r) for r in top_terms(corpus, k=3, engine="catalyst").collect()
+        tuple(r) for r in top_terms_expr(corpus, k=3).collect()
     )
     assert a == b
 
@@ -2094,10 +2109,12 @@ def test_release_bloom_cache_and_rewrite_invalidation(spark, tmp_path):
 
 
 def test_shingle_stream_preserves_id_type(spark):
-    """ADVICE r7: the Arrow shingle engine must carry the input id
+    """ADVICE r7: the Arrow shingle pass must carry the input id
     column's actual type (int32, string) instead of hardcoding long —
-    both engines agree on schema AND values for every id type."""
+    it agrees with the reference form on schema AND values for every
+    id type."""
     from clickhouse_etl_spark.dataops.dedup import _shingle_stream
+    from reference_forms import shingle_stream_expr
 
     text = "one two three four five six seven"
     for id_vals, id_type in [
@@ -2109,8 +2126,8 @@ def test_shingle_stream_preserves_id_type(spark):
             [(v, text) for v in id_vals],
             f"doc_id {id_type}, text string",
         )
-        a = _shingle_stream(df, "text", "doc_id", 5, engine="pandas")
-        b = _shingle_stream(df, "text", "doc_id", 5, engine="catalyst")
+        a = _shingle_stream(df, "text", "doc_id", 5)
+        b = shingle_stream_expr(df, "text", "doc_id", 5)
         assert a.schema["id"].dataType == b.schema["id"].dataType, id_type
         assert sorted(map(tuple, a.collect())) == sorted(
             map(tuple, b.collect())
@@ -2179,6 +2196,7 @@ def test_curation_fused_engine_identical(spark, sf_dir, tmp_path):
         write_classifier_table,
     )
     from clickhouse_etl_spark.streaming.curation import curation_scored_stream
+    from reference_forms import curation_scored_staged
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     edge = spark.createDataFrame(
@@ -2202,14 +2220,14 @@ def test_curation_fused_engine_identical(spark, sf_dir, tmp_path):
     )
     a = sorted(
         tuple(r)
-        for r in curation_scored_stream(
-            corpus, bloom, weights, engine="staged"
+        for r in curation_scored_staged(
+            corpus, bloom, weights,
         ).collect()
     )
     b = sorted(
         tuple(r)
         for r in curation_scored_stream(
-            corpus, bloom, weights, engine="fused"
+            corpus, bloom, weights,
         ).collect()
     )
     assert a == b
@@ -2232,14 +2250,14 @@ def test_curation_fused_engine_identical(spark, sf_dir, tmp_path):
     corpus2 = corpus.withColumn("source", F.lit("srcX"))
     a2 = sorted(
         tuple(r)
-        for r in curation_scored_stream(
-            corpus2, bloom, weights, engine="staged", importance_path=iw_path
+        for r in curation_scored_staged(
+            corpus2, bloom, weights, importance_path=iw_path
         ).collect()
     )
     b2 = sorted(
         tuple(r)
         for r in curation_scored_stream(
-            corpus2, bloom, weights, engine="fused", importance_path=iw_path
+            corpus2, bloom, weights, importance_path=iw_path
         ).collect()
     )
     assert a2 == b2
@@ -2273,15 +2291,15 @@ def test_curation_fused_engine_identical(spark, sf_dir, tmp_path):
     )
     a3 = sorted(
         tuple(r)
-        for r in curation_scored_stream(
-            corpus2, bloom, weights, engine="staged",
+        for r in curation_scored_staged(
+            corpus2, bloom, weights,
             importance_path=iw_path, decontam_path=dc_path, decontam_n=5,
         ).collect()
     )
     b3 = sorted(
         tuple(r)
         for r in curation_scored_stream(
-            corpus2, bloom, weights, engine="fused",
+            corpus2, bloom, weights,
             importance_path=iw_path, decontam_path=dc_path, decontam_n=5,
         ).collect()
     )
@@ -2327,14 +2345,14 @@ def test_curation_fused_engine_identical(spark, sf_dir, tmp_path):
     )
     a4 = sorted(
         tuple(r)
-        for r in curation_scored_stream(
-            corpus2, bloom, weights, engine="staged", **kw
+        for r in curation_scored_staged(
+            corpus2, bloom, weights, **kw
         ).collect()
     )
     b4 = sorted(
         tuple(r)
         for r in curation_scored_stream(
-            corpus2, bloom, weights, engine="fused", **kw
+            corpus2, bloom, weights, **kw
         ).collect()
     )
     assert a4 == b4
@@ -2353,10 +2371,11 @@ def test_curation_fused_engine_identical(spark, sf_dir, tmp_path):
 
 
 def test_shingle_stream_null_id_both_engines(spark):
-    """ADVICE r8: a NULL id must flow through the Arrow shingle engine
+    """ADVICE r8: a NULL id must flow through the Arrow shingle pass
     exactly like the catalyst form (the numpy int dtypes raised on
     construction; nullable ids now use pandas nullable dtypes)."""
     from clickhouse_etl_spark.dataops.dedup import _shingle_stream
+    from reference_forms import shingle_stream_expr
 
     text = "one two three four five six seven"
     for id_type in ["int", "long", "string"]:
@@ -2364,8 +2383,8 @@ def test_shingle_stream_null_id_both_engines(spark):
             [("1" if id_type == "string" else 1, text), (None, text)],
             f"doc_id {id_type}, text string",
         )
-        a = _shingle_stream(df, "text", "doc_id", 5, engine="pandas")
-        b = _shingle_stream(df, "text", "doc_id", 5, engine="catalyst")
+        a = _shingle_stream(df, "text", "doc_id", 5)
+        b = shingle_stream_expr(df, "text", "doc_id", 5)
         assert a.schema["id"].dataType == b.schema["id"].dataType, id_type
         from collections import Counter
 
@@ -2383,9 +2402,7 @@ def test_shingle_stream_null_id_both_engines(spark):
     )
     got = {
         r["id"]
-        for r in _shingle_stream(
-            df, "text", "doc_id", 5, engine="pandas"
-        ).collect()
+        for r in _shingle_stream(df, "text", "doc_id", 5).collect()
     }
     assert big in got and None in got, got
 
@@ -2431,9 +2448,9 @@ def test_calibrated_pred_product_exact_across_int64():
 
 
 def test_curation_clash_guard_both_engines(spark):
-    """ADVICE r8: the output-column clash guard applies to BOTH
-    engines — staged must reject the same inputs fused does instead of
-    silently overwriting text_norm."""
+    """ADVICE r8: the curation body rejects an input that already
+    carries one of its output columns instead of silently overwriting
+    text_norm."""
     import pytest as _pytest
 
     from clickhouse_etl_spark.streaming.curation import curation_scored_stream
@@ -2441,9 +2458,8 @@ def test_curation_clash_guard_both_engines(spark):
     df = spark.createDataFrame(
         [(1, "some text", "stale")], ["doc_id", "text", "text_norm"]
     )
-    for engine in ["staged", "fused"]:
-        with _pytest.raises(ValueError, match="already carries"):
-            curation_scored_stream(df, "/nonexistent", "/nonexistent", engine=engine)
+    with _pytest.raises(ValueError, match="already carries"):
+        curation_scored_stream(df, "/nonexistent", "/nonexistent")
 
 
 def test_score_kernel_chunking_identical(spark, monkeypatch):
@@ -3243,10 +3259,14 @@ def test_importance_weights_null_source(spark):
 
 
 def test_importance_weights_engine_equality(spark):
-    """The Arrow scoring pass (default) is value-identical to the
-    catalyst explode/join/groupBy reference form, including null/empty
-    text drops and repeated-token counting (r9 wave 2)."""
-    from clickhouse_etl_spark.dataops.text import importance_weights
+    """The Arrow scoring pass is value-identical to the catalyst
+    explode/join/groupBy reference form, including null/empty text
+    drops and repeated-token counting (r9 wave 2)."""
+    from clickhouse_etl_spark.dataops.text import (
+        _importance_table,
+        importance_weights,
+    )
+    from reference_forms import hash_bucket_counts
 
     rows = [
         (0, "aaa bbb aaa ccc aaa", "tgt"),
@@ -3258,12 +3278,18 @@ def test_importance_weights_engine_equality(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string, source string")
     kw = dict(target_sources=["tgt"], dim=32)
-    a = sorted(
-        map(tuple, importance_weights(df, engine="pandas", **kw).collect())
+    a = sorted(map(tuple, importance_weights(df, **kw).collect()))
+    w = _importance_table(df, ["tgt"], 32, "text", "source")
+    ref = (
+        hash_bucket_counts(df, dim=32)
+        .join(F.broadcast(w), "_b")
+        .groupBy("doc_id")
+        .agg(
+            F.sum("_c").cast("bigint").alias("n_tokens"),
+            F.sum(F.col("_c") * F.col("_wt")).cast("bigint").alias("score"),
+        )
     )
-    b = sorted(
-        map(tuple, importance_weights(df, engine="catalyst", **kw).collect())
-    )
+    b = sorted(map(tuple, ref.collect()))
     assert a == b and len(a) == 4  # null/empty text dropped by both
 
 
@@ -4000,11 +4026,12 @@ def test_lsh_geometry_tuning_helpers():
 
 
 def test_band_keys_engines_identical(spark):
-    """The Arrow write path (default, _band_keys_py — the probe's own
-    kernel) and the Catalyst reference form (_band_keys_expr) derive
-    the IDENTICAL distinct band-key set, on short/empty/null/
-    multi-space edges and real-looking text."""
+    """The Arrow write path (_band_keys_py — the probe's own kernel)
+    and the Catalyst reference form (_band_keys_expr) derive the
+    IDENTICAL distinct band-key set, on short/empty/null/multi-space
+    edges and real-looking text."""
     from clickhouse_etl_spark.dataops.dedup import _distinct_band_keys
+    from reference_forms import distinct_band_keys_expr
 
     texts = [
         "the quick brown fox jumps over the lazy dog",
@@ -4019,13 +4046,13 @@ def test_band_keys_engines_identical(spark):
     df = spark.createDataFrame([(t,) for t in texts], "text string")
     a = {
         r["band"]
-        for r in _distinct_band_keys(df, "text", 3, 8, 2, engine="pandas").collect()
+        for r in _distinct_band_keys(df, "text", 3, 8, 2).collect()
     }
     b = {
         r["band"]
-        for r in _distinct_band_keys(df, "text", 3, 8, 2, engine="catalyst").collect()
+        for r in distinct_band_keys_expr(df, "text", 3, 8, 2).collect()
     }
-    assert a == b and a, "engines diverged or produced nothing"
+    assert a == b and a, "library and reference diverged or produced nothing"
 
 
 @pytest.mark.heavy

@@ -783,8 +783,8 @@ def test_six_stage_curation_chain_from_one_pipeline_json(spark, tmp_path):
     thesis) — decontaminate → normalize → bloom dedup → near-dup probe
     → classifier → DSIR importance, each stage bound to its persisted
     artifact path — assembles into the one StreamingQuery and
-    equality-pins against curation_scored_stream(engine='staged') on
-    the same wave."""
+    equality-pins against the staged composition of the stage dataops
+    (reference_forms.curation_scored_staged) on the same wave."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -802,8 +802,8 @@ def test_six_stage_curation_chain_from_one_pipeline_json(spark, tmp_path):
         write_importance_table,
     )
     from clickhouse_etl_spark.sources import load_table
-    from clickhouse_etl_spark.streaming.curation import curation_scored_stream
     from clickhouse_etl_spark.streaming.runner import streaming_source_chain
+    from reference_forms import curation_scored_staged
 
     corpus = (
         load_table(spark, "/root/testdata/sf0.001", "documents")
@@ -846,9 +846,8 @@ def test_six_stage_curation_chain_from_one_pipeline_json(spark, tmp_path):
     )
     truth = sorted(
         tuple(r)
-        for r in curation_scored_stream(
-            spark.read.parquet(wave_dir), bloom, weights,
-            engine="staged", **stage_kw,
+        for r in curation_scored_staged(
+            spark.read.parquet(wave_dir), bloom, weights, **stage_kw,
         ).collect()
     )
     assert truth, "the six-stage wave must have survivors"

@@ -89,16 +89,14 @@ def test_temporal_join_streaming_semantics(spark, tmp_path):
     left = spark.readStream.schema(LEFT_SCHEMA).parquet(lpath)
     right = spark.readStream.schema(RIGHT_SCHEMA).parquet(rpath)
 
-    out_schema = T.StructType(
-        [
-            T.StructField("id", T.StringType()),
-            T.StructField("name", T.StringType()),
-            T.StructField("email", T.StringType()),
-        ]
-    )
     joined = temporal_join_streaming(
-        left, right, _join_cfg(), left_ts="lts", right_ts="rts", output_schema=out_schema
+        left, right, _join_cfg(), left_ts="lts", right_ts="rts"
     )
+    assert [(f.name, f.dataType) for f in joined.schema.fields] == [
+        ("id", T.StringType()),
+        ("name", T.StringType()),
+        ("email", T.StringType()),
+    ]
     q = (
         joined.writeStream.format("memory")
         .queryName("tj_out")
@@ -188,6 +186,21 @@ def test_sink_permanent_error_routes_to_dlq(spark, tmp_path):
     assert state[0]["component"] == "sink" and state[0]["n_failed"] == 1
     payload = json.loads(dlq.read(spark).collect()[0]["payload"])
     assert payload == {"k": 1, "v": "a"}
+
+
+def test_sink_permanent_error_without_dlq_reraises(spark, tmp_path):
+    """With no DLQ wired, a permanent error must fail the epoch: a
+    returned report would let the epoch commit with its rows written
+    nowhere."""
+    class FailingSink(ClickHouseSink):
+        def _write_once(self, df, batch_id=None):
+            raise RuntimeError("Code: 6. DB::Exception: Cannot parse text")
+
+    sink = FailingSink(table="t", parquet_fallback_path=str(tmp_path / "out"))
+    df = spark.createDataFrame([(1, "a")], ["k", "v"])
+    with pytest.raises(RuntimeError, match="Cannot parse text"):
+        sink.write_batch(df, batch_id=1)
+    assert sink.reports == []
 
 
 def test_sink_retryable_error_reraises(spark, tmp_path):
