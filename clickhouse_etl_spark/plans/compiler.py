@@ -3,8 +3,10 @@
 ``compile_pipeline`` turns a validated :class:`PipelineSpec` into a
 :class:`CompiledPipeline` whose ``run_batch`` executes the declarative
 chain over per-source batch DataFrames (parquet/JSON fixtures — this is
-the oracle-checked path), and whose transform chain is reused verbatim
-by the streaming runner (streaming/runner.py).
+the oracle-checked path). The streaming runner (streaming/runner.py)
+builds its own per-source chain from the same operators in the same
+order; its dedup stage is ``dropDuplicatesWithinWatermark``, which
+needs the spec's ``time_window`` (a windowless dedup is batch-only).
 
 Stage order within a source is fixed — filter -> dedup -> stateless
 transform — matching the reference's hardcoded processor order

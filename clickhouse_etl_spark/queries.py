@@ -6961,81 +6961,26 @@ _OTLP_ALL_FAMILIES_SQL = """
 @q("otlp_rollup_all_families", _OTLP_ALL_FAMILIES_SQL, "bench")
 def otlp_rollup_all_families(spark, sf_dir):
     """ALL FIVE OTLP datapoint families rolled up per (host, 5-minute
-    window) in one frame — the batch mirror of the five streaming
-    rollup functions (streaming/rollup.py), called HERE on a batch
+    window) in one frame — the streaming rollup
+    (``streaming.rollup.otlp_rollup_stream``) called HERE on a batch
     frame (withWatermark no-ops in batch, F.window's epoch-aligned
-    buckets equal the oracle's integer window arithmetic), so the
-    exact code the streams run is what the DuckDB oracle pins: gauge/
+    buckets equal the oracle's integer window arithmetic), so the exact
+    aggregation the stream runs is what the DuckDB oracle pins: gauge/
     sum number points, histogram dual-grain (scalars + per-bucket
-    counts via posexplode-before-agg), exp-histogram scalars (the
-    flattened record carries no bucket runs — flattener/metrics.go:
-    144-178), and summary latest-snapshot merge (lexicographic struct
-    max). Wide-row nulls mark members a family never sets. One flatten
-    pass feeds all six aggregates via localCheckpoint.
+    counts), exp-histogram scalars (the flattened record carries no
+    bucket runs — flattener/metrics.go:144-178), and summary
+    latest-snapshot merge (lexicographic struct max). Wide-row nulls
+    mark members a family never sets. One flatten pass feeds the one
+    aggregation.
 
     Reference: flattener/metrics.go:13-203 (the five families)."""
     from .sources.otlp import flatten_metrics
-    from .streaming.rollup import (
-        exp_histogram_rollup_stream,
-        histogram_rollup_stream,
-        metric_rollup_stream,
-        summary_rollup_stream,
-    )
+    from .streaming.rollup import otlp_rollup_stream
 
     ev = _t(spark, sf_dir, "events").filter(F.col("event_id") % 37 == 0)
-    # project the checkpoint down to the 10 columns the five rollup
-    # functions actually read (guide §2.3 — the wide flatten row
-    # carries 3 attr maps and 8 name/scope strings none of them use;
-    # materializing those at datapoint grain dominated the checkpoint)
-    flat = (
-        flatten_metrics(ev.select(_otlp_metrics_payload().alias("value")))
-        .select(
-            "metric_type", "resource_attributes", "timestamp",
-            "value_double", "value_int", "count", "sum", "min", "max",
-            "bucket_counts",
-        )
-        .localCheckpoint()
-    )
-
-    def _n(name):  # typed null for the wide-row members
-        return F.lit(None).cast("bigint").alias(name)
-
-    gauge = metric_rollup_stream(flat, metric_type="gauge").select(
-        "host", "window_start_us", F.lit("gauge").alias("metric_type"),
-        F.lit(-1).cast("int").alias("bucket_idx"), "n_points",
-        _n("total_count"), "sum_cents", "min_cents", "max_cents",
-        _n("bucket_n"), _n("last_count"), _n("last_sum_cents"),
-    )
-    summ = metric_rollup_stream(flat, metric_type="sum").select(
-        "host", "window_start_us", F.lit("sum").alias("metric_type"),
-        F.lit(-1).cast("int").alias("bucket_idx"), "n_points",
-        _n("total_count"), "sum_cents", "min_cents", "max_cents",
-        _n("bucket_n"), _n("last_count"), _n("last_sum_cents"),
-    )
-    hist = histogram_rollup_stream(flat).select(
-        "host", "window_start_us", F.lit("histogram").alias("metric_type"),
-        "bucket_idx", "n_points", "total_count", "sum_cents", "min_cents",
-        "max_cents", "bucket_n", _n("last_count"), _n("last_sum_cents"),
-    )
-    ehist = exp_histogram_rollup_stream(flat).select(
-        "host", "window_start_us",
-        F.lit("exp_histogram").alias("metric_type"),
-        F.lit(-1).cast("int").alias("bucket_idx"), "n_points",
-        "total_count", "sum_cents", "min_cents", "max_cents",
-        _n("bucket_n"), _n("last_count"), _n("last_sum_cents"),
-    )
-    summary = summary_rollup_stream(flat).select(
-        "host", "window_start_us", F.lit("summary").alias("metric_type"),
-        F.lit(-1).cast("int").alias("bucket_idx"), "n_points",
-        _n("total_count"), _n("sum_cents"), _n("min_cents"),
-        _n("max_cents"), _n("bucket_n"), "last_count", "last_sum_cents",
-    )
-    return (
-        gauge.unionByName(summ)
-        .unionByName(hist)
-        .unionByName(ehist)
-        .unionByName(summary)
-        .orderBy("host", "metric_type", "bucket_idx", "window_start_us")
+    flat = flatten_metrics(ev.select(_otlp_metrics_payload().alias("value")))
+    return otlp_rollup_stream(flat).orderBy(
+        "host", "metric_type", "bucket_idx", "window_start_us"
     )
 
 

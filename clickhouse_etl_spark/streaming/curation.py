@@ -54,7 +54,6 @@ def curation_scored_stream(
     bloom_path: str,
     weights_path: str,
     text_col: str = "text",
-    id_col: str = "doc_id",
     importance_path: "str | None" = None,
     decontam_path: "str | None" = None,
     decontam_n: "int | None" = None,
@@ -263,7 +262,6 @@ def curation_rollup_stream(
     window_duration: str = "5 minutes",
     watermark: str = "10 minutes",
     text_col: str = "text",
-    id_col: str = "doc_id",
     importance_path: "str | None" = None,
     decontam_path: "str | None" = None,
     decontam_n: "int | None" = None,
@@ -282,7 +280,7 @@ def curation_rollup_stream(
     row once at watermark passage.
     """
     scored = curation_scored_stream(
-        docs, bloom_path, weights_path, text_col=text_col, id_col=id_col,
+        docs, bloom_path, weights_path, text_col=text_col,
         importance_path=importance_path,
         decontam_path=decontam_path, decontam_n=decontam_n,
         decontam_format=decontam_format, neardup_path=neardup_path,

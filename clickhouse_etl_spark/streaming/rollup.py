@@ -4,19 +4,21 @@ The reference's OTLP path is a STREAM — payloads land on the ingest
 topic continuously and every observability deployment aggregates the
 flattened datapoints into fixed-window rollups in ClickHouse
 (glassflow-api internal/flattener/metrics.go feeds the sink table the
-rollup views read). The batch registry entry ``otlp_metric_rollup_5m``
-pins the rollup's arithmetic against the DuckDB oracle; this module
-runs the SAME flatten → window aggregation as a Structured Streaming
-chain: ``flatten_metrics`` is stateless (from_json + explodes), so it
-composes with an event-time watermark and tumbling-window aggregation
-under the RocksDB state store.
+rollup views read). This module runs flatten → window aggregation as
+ONE Structured Streaming aggregation over all five datapoint families:
+``flatten_metrics`` is stateless (from_json + explodes), so it composes
+with an event-time watermark and a tumbling-window group-by under the
+RocksDB state store — one stateful operator per deployment. The batch
+registry entry ``otlp_rollup_all_families`` calls the same function on
+a batch frame (the watermark no-ops), so the DuckDB oracle pins the
+code the stream runs.
 
 Late data: points older than the watermark relative to the max seen
 event time are dropped by the state store (the standard completeness /
 latency trade — size the watermark to the ingest path's p99 lag).
-Output mode "append" emits each (host, window) row exactly once, when
-the watermark passes the window end — the right shape for an
-append-only ClickHouse sink.
+Output mode "append" emits each (host, window, family, bucket) row
+exactly once, when the watermark passes the window end — the right
+shape for an append-only ClickHouse sink.
 """
 
 from __future__ import annotations
@@ -25,286 +27,109 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def metric_rollup_stream(
+def otlp_rollup_stream(
     flat: DataFrame,
     window_duration: str = "5 minutes",
     watermark: str = "10 minutes",
     host_attr: str = "host",
-    metric_type: str = "gauge",
 ) -> DataFrame:
-    """Event-time tumbling rollup over a flattened OTLP metrics STREAM
-    (``sources.otlp.flatten_metrics`` output): per (resource host,
-    window) point count, sum/min/max in exact integer cents, and
-    points/sec — the same aggregates as the oracle-backed batch entry
-    ``otlp_metric_rollup_5m``, windowed by Spark's ``window()`` instead
-    of integer arithmetic (identical bucketing for epoch-aligned
-    durations).
+    """Event-time tumbling rollup of every OTLP datapoint family in a
+    flattened metrics frame (``sources.otlp.flatten_metrics`` output;
+    flattener/metrics.go:13-213) — one projection, one watermark, one
+    ``groupBy(host, window, metric_type, bucket_idx)``.
 
-    ``metric_type`` selects the NUMBER-datapoint family to roll up
-    (VERDICT r7 #6): ``"gauge"`` (default) or ``"sum"`` — sum
-    datapoints carry either ``asDouble`` or ``asInt``
-    (flattener/metrics.go:24-45 keeps both), so the value is
-    ``coalesce(value_double, value_int)``. Histogram-family rollups
-    (count/sum/bucket_counts) live in :func:`histogram_rollup_stream`.
+    Output is the wide row (host, window_start_us, metric_type,
+    bucket_idx, n_points, total_count, sum_cents, min_cents, max_cents,
+    bucket_n, last_count, last_sum_cents); members a family never sets
+    are null. All cents are exact integers:
 
-    One watermarked hash-shuffle on (host, window); state is one row
-    per open window per host, evicted at watermark passage — bounded by
-    host cardinality, not traffic.
+    - gauge / sum (``bucket_idx = -1``): point count and sum/min/max of
+      the value in cents. Gauge reads ``value_double`` only (the
+      ``otlp_metric_rollup_5m`` contract); sum coalesces it with
+      ``value_int * 100`` in INTEGER arithmetic (a double round-trip
+      loses cent exactness past 2^53).
+    - histogram / exp_histogram (``bucket_idx = -1``): point count,
+      Σcount, Σsum, min(min), max(max). The flattened exp-histogram
+      record carries no bucket runs (flattener/metrics.go:144-178).
+    - histogram buckets (``bucket_idx >= 0``): Σ of that bucket's
+      counts — element-wise addition is the histogram merge rule. The
+      bucket grain is an explode BEFORE the aggregation, so state stays
+      one row per (host, open window, bucket), never an array buffer.
+    - summary (``bucket_idx = -1``): summaries are CUMULATIVE snapshots
+      (flattener/metrics.go:179-203), so a window's value is its LATEST
+      snapshot, merged as ``max(struct(timestamp, count, sum_cents))``
+      — lexicographic struct max is associative and commutative (safe
+      for partial aggregation and state-store merges) and deterministic
+      at equal timestamps.
+
+    State is one row per (host, open window, family, bucket), evicted
+    at watermark passage — bounded by host cardinality, not traffic.
     """
-    if metric_type not in ("gauge", "sum"):
-        raise ValueError(
-            f"metric_rollup_stream handles the number-datapoint "
-            f"families (gauge|sum), not {metric_type!r}; histograms "
-            "roll up via histogram_rollup_stream"
-        )
-    # gauge keeps value_double ONLY — mirroring the oracle-backed batch
-    # entry exactly (otlp_metric_rollup_5m); sum coalesces both number
-    # representations, with asInt cents computed in INTEGER arithmetic
-    # (value_int*100 — a double round-trip loses cent exactness past
-    # 2^53, violating the integer-cents invariant)
-    dbl_cents = F.round(F.col("value_double") * 100).cast("bigint")
-    if metric_type == "gauge":
-        cents = dbl_cents
-    else:
-        cents = F.coalesce(dbl_cents, F.col("value_int") * F.lit(100).cast("bigint"))
-    g = (
-        flat.filter(F.col("metric_type") == metric_type)
-        .select(
-            F.element_at(F.col("resource_attributes"), F.lit(host_attr)).alias(
-                "host"
+    mt = F.col("metric_type")
+    number = mt.isin("gauge", "sum")
+    summary = mt == "summary"
+    scalar = F.col("bucket_idx") == -1
+
+    def cents(c):
+        return F.round(F.col(c) * 100).cast("bigint")
+
+    value_cents = F.when(mt == "gauge", cents("value_double")).otherwise(
+        F.coalesce(cents("value_double"), F.col("value_int") * F.lit(100).cast("bigint"))
+    )
+    # one row per point at bucket_idx -1, plus one per histogram bucket
+    grains = F.concat(
+        F.array(F.struct(F.lit(-1).alias("bucket_idx"), F.lit(None).cast("bigint").alias("_bn"))),
+        F.when(
+            mt == "histogram",
+            F.transform(
+                "bucket_counts", lambda n, i: F.struct(i.alias("bucket_idx"), n.alias("_bn"))
             ),
+        ).otherwise(F.array()),
+    )
+    agg = (
+        flat.select(
+            F.element_at(F.col("resource_attributes"), F.lit(host_attr)).alias("host"),
             # flatten_metrics renders timestamps as the reference's
             # string format; event-time processing needs TimestampType
             F.to_timestamp("timestamp").alias("timestamp"),
-            cents.alias("cents"),
-        )
-        .withWatermark("timestamp", watermark)
-    )
-    win = F.window("timestamp", window_duration)
-    secs = F.lit(int(_duration_seconds(window_duration)))
-    return (
-        g.groupBy("host", win.alias("w"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_points"),
-            F.sum("cents").cast("bigint").alias("sum_cents"),
-            F.min("cents").cast("bigint").alias("min_cents"),
-            F.max("cents").cast("bigint").alias("max_cents"),
-        )
-        .select(
-            "host",
-            F.unix_micros(F.col("w.start")).alias("window_start_us"),
-            "n_points",
-            "sum_cents",
-            "min_cents",
-            "max_cents",
-            F.round(
-                F.col("n_points").cast("double") / secs.cast("double"), 6
-            ).alias("points_per_sec"),
-            F.lit(metric_type).alias("metric_type"),
-        )
-    )
-
-
-def histogram_rollup_stream(
-    flat: DataFrame,
-    window_duration: str = "5 minutes",
-    watermark: str = "10 minutes",
-    host_attr: str = "host",
-) -> DataFrame:
-    """Event-time tumbling rollup of the HISTOGRAM datapoint family
-    (VERDICT r7 #6) — the reference flattens all five families
-    (flattener/metrics.go:13-213); count, sum, and per-bucket counts
-    are associative, so they window exactly like the gauge rollup.
-
-    Two grains in ONE streaming frame (the flatten_metrics wide-row
-    convention — nulls for members a row kind never sets):
-
-    - ``bucket_idx = -1``: per (host, window) scalars — datapoint
-      count, Σcount (total observations), Σsum in exact cents,
-      min(min)/max(max) cents;
-    - ``bucket_idx >= 0``: per (host, window, bucket) Σ of that
-      bucket's counts (``bucket_counts[i]`` is the observations in
-      bucket i — element-wise addition is the histogram merge rule).
-
-    The bucket grain is a posexplode BEFORE the aggregation, so state
-    stays one row per (host, open window, bucket) — never a per-window
-    array buffer — and both branches share the same watermark. Append
-    mode emits each row once at watermark passage.
-    """
-    h = (
-        flat.filter(F.col("metric_type") == "histogram")
-        .select(
-            F.element_at(F.col("resource_attributes"), F.lit(host_attr)).alias(
-                "host"
-            ),
-            F.to_timestamp("timestamp").alias("timestamp"),
+            mt,
+            F.when(number, value_cents).otherwise(cents("sum")).alias("_s"),
+            F.when(number, value_cents).otherwise(cents("min")).alias("_lo"),
+            F.when(number, value_cents).otherwise(cents("max")).alias("_hi"),
             F.col("count").cast("bigint").alias("_cnt"),
-            F.round(F.col("sum") * 100).cast("bigint").alias("_sum_c"),
-            F.round(F.col("min") * 100).cast("bigint").alias("_min_c"),
-            F.round(F.col("max") * 100).cast("bigint").alias("_max_c"),
-            F.col("bucket_counts"),
+            F.inline(grains),
         )
         .withWatermark("timestamp", watermark)
-    )
-    win = F.window("timestamp", window_duration)
-    scalars = (
-        h.groupBy("host", win.alias("w"))
+        .groupBy(
+            "host", F.window("timestamp", window_duration).alias("w"),
+            "metric_type", "bucket_idx",
+        )
         .agg(
-            F.count("*").cast("bigint").alias("n_points"),
-            F.sum("_cnt").cast("bigint").alias("total_count"),
-            F.sum("_sum_c").cast("bigint").alias("sum_cents"),
-            F.min("_min_c").cast("bigint").alias("min_cents"),
-            F.max("_max_c").cast("bigint").alias("max_cents"),
-        )
-        .select(
-            "host",
-            F.unix_micros(F.col("w.start")).alias("window_start_us"),
-            F.lit(-1).cast("int").alias("bucket_idx"),
-            "n_points",
-            "total_count",
-            "sum_cents",
-            "min_cents",
-            "max_cents",
-            F.lit(None).cast("bigint").alias("bucket_n"),
-        )
-    )
-    buckets = (
-        h.select(
-            "host",
-            "timestamp",
-            F.posexplode("bucket_counts").alias("bucket_idx", "_bn"),
-        )
-        .groupBy("host", F.col("bucket_idx"), win.alias("w"))
-        .agg(F.sum("_bn").cast("bigint").alias("bucket_n"))
-        .select(
-            "host",
-            F.unix_micros(F.col("w.start")).alias("window_start_us"),
-            F.col("bucket_idx").cast("int").alias("bucket_idx"),
-            F.lit(None).cast("bigint").alias("n_points"),
-            F.lit(None).cast("bigint").alias("total_count"),
-            F.lit(None).cast("bigint").alias("sum_cents"),
-            F.lit(None).cast("bigint").alias("min_cents"),
-            F.lit(None).cast("bigint").alias("max_cents"),
-            "bucket_n",
-        )
-    )
-    return scalars.unionByName(buckets)
-
-
-def exp_histogram_rollup_stream(
-    flat: DataFrame,
-    window_duration: str = "5 minutes",
-    watermark: str = "10 minutes",
-    host_attr: str = "host",
-) -> DataFrame:
-    """Event-time tumbling rollup of the EXPONENTIAL-HISTOGRAM family
-    (VERDICT r8 #3) — count, sum, min, max merge associatively exactly
-    like the histogram family's scalar grain. The reference's flattened
-    record carries NO scale/zeroCount/bucket runs for this family
-    (models/otlp.go:134-157 has no fields for them;
-    flattener/metrics.go:144-178 never reads them), so the scalar grain
-    IS the complete rollup over the flattened stream — there is no
-    bucket grain to posexplode.
-
-    Output: (host, window_start_us, n_points, total_count, sum_cents,
-    min_cents, max_cents) — exact integer cents, one watermarked
-    hash-shuffle, state bounded by (host, open windows).
-    """
-    h = (
-        flat.filter(F.col("metric_type") == "exp_histogram")
-        .select(
-            F.element_at(F.col("resource_attributes"), F.lit(host_attr)).alias(
-                "host"
-            ),
-            F.to_timestamp("timestamp").alias("timestamp"),
-            F.col("count").cast("bigint").alias("_cnt"),
-            F.round(F.col("sum") * 100).cast("bigint").alias("_sum_c"),
-            F.round(F.col("min") * 100).cast("bigint").alias("_min_c"),
-            F.round(F.col("max") * 100).cast("bigint").alias("_max_c"),
-        )
-        .withWatermark("timestamp", watermark)
-    )
-    win = F.window("timestamp", window_duration)
-    return (
-        h.groupBy("host", win.alias("w"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_points"),
-            F.sum("_cnt").cast("bigint").alias("total_count"),
-            F.sum("_sum_c").cast("bigint").alias("sum_cents"),
-            F.min("_min_c").cast("bigint").alias("min_cents"),
-            F.max("_max_c").cast("bigint").alias("max_cents"),
-        )
-        .select(
-            "host",
-            F.unix_micros(F.col("w.start")).alias("window_start_us"),
-            "n_points",
-            "total_count",
-            "sum_cents",
-            "min_cents",
-            "max_cents",
+            F.count("*").alias("n"),
+            F.sum("_cnt").alias("cnt"),
+            F.sum("_s").alias("s"),
+            F.min("_lo").alias("lo"),
+            F.max("_hi").alias("hi"),
+            F.sum("_bn").alias("bn"),
+            F.max(F.struct("timestamp", "_cnt", "_s")).alias("last"),
         )
     )
 
+    def keep(cond, c, name):
+        return F.when(cond, F.col(c)).cast("bigint").alias(name)
 
-def summary_rollup_stream(
-    flat: DataFrame,
-    window_duration: str = "5 minutes",
-    watermark: str = "10 minutes",
-    host_attr: str = "host",
-) -> DataFrame:
-    """Event-time tumbling rollup of the SUMMARY family (VERDICT r8
-    #3). Summary datapoints are CUMULATIVE SNAPSHOTS — the OTLP spec
-    fixes summaries to cumulative temporality and the reference's
-    flattener carries no temporality for them
-    (flattener/metrics.go:179-203) — so merging two snapshots inside a
-    window is NOT addition: the window's value is the LATEST snapshot.
-
-    The merge is ``max(struct(timestamp, count, sum_cents))`` —
-    lexicographic struct max is associative and commutative (safe for
-    partial aggregation and state-store merges) and deterministic at
-    equal timestamps (count, then cents, break the tie).
-
-    Output: (host, window_start_us, n_points — snapshots observed,
-    last_count, last_sum_cents — the window-closing snapshot).
-    """
-    s = (
-        flat.filter(F.col("metric_type") == "summary")
-        .select(
-            F.element_at(F.col("resource_attributes"), F.lit(host_attr)).alias(
-                "host"
-            ),
-            F.to_timestamp("timestamp").alias("timestamp"),
-            F.col("count").cast("bigint").alias("_cnt"),
-            F.round(F.col("sum") * 100).cast("bigint").alias("_sum_c"),
-        )
-        .withWatermark("timestamp", watermark)
+    # the wide row: null every member the row's family never sets
+    return agg.select(
+        "host",
+        F.unix_micros(F.col("w.start")).alias("window_start_us"),
+        "metric_type",
+        "bucket_idx",
+        keep(scalar, "n", "n_points"),
+        keep(scalar & mt.isin("histogram", "exp_histogram"), "cnt", "total_count"),
+        keep(scalar & ~summary, "s", "sum_cents"),
+        keep(scalar & ~summary, "lo", "min_cents"),
+        keep(scalar & ~summary, "hi", "max_cents"),
+        keep(~scalar, "bn", "bucket_n"),
+        keep(summary, "last._cnt", "last_count"),
+        keep(summary, "last._s", "last_sum_cents"),
     )
-    win = F.window("timestamp", window_duration)
-    return (
-        s.groupBy("host", win.alias("w"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_points"),
-            F.max(F.struct("timestamp", "_cnt", "_sum_c")).alias("_last"),
-        )
-        .select(
-            "host",
-            F.unix_micros(F.col("w.start")).alias("window_start_us"),
-            "n_points",
-            F.col("_last._cnt").alias("last_count"),
-            F.col("_last._sum_c").alias("last_sum_cents"),
-        )
-    )
-
-
-def _duration_seconds(duration: str) -> float:
-    """Parse the small subset of Spark interval strings the rollup
-    accepts ("N seconds|minutes|hours")."""
-    parts = duration.strip().split()
-    if len(parts) != 2:
-        raise ValueError(f"unsupported window duration: {duration!r}")
-    n = float(parts[0])
-    unit = parts[1].rstrip("s")
-    scale = {"second": 1, "minute": 60, "hour": 3600}.get(unit)
-    if scale is None:
-        raise ValueError(f"unsupported window duration unit: {duration!r}")
-    return n * scale

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from ..operators.filter import apply_filter
 from ..operators.transform import apply_transform
 from ..operators.validate import validate_json
-from ..spec.model import PipelineSpec, SourceConfig
+from ..spec.model import PipelineSpec, SourceConfig, SpecError
 
 
 def kafka_source_stream(
@@ -78,7 +78,9 @@ def streaming_source_chain(
     (cmd/glassflow/dedup_component.go:210-225); spec-declared dataops
     apply the STREAM_SAFE_DATAOPS subset only — batch-only ops
     (exact_dedup's corpus window, simhash's per-doc aggregation) raise
-    SpecError at assembly time instead of silently skipping.
+    SpecError at assembly time instead of silently skipping. So does a
+    dedup stage without ``time_window``: batch dedups the whole input,
+    which a stream does not have.
 
     Validation runs when the source carries a raw ``value`` column and
     declares schema fields; ``dlq_sink`` receives its failure frame. A
@@ -99,7 +101,12 @@ def streaming_source_chain(
         if src.filter is not None:
             df = apply_filter(df, src.filter)
         if src.dedup is not None:
-            window_s = src.dedup.time_window_s or 3600
+            window_s = src.dedup.time_window_s
+            if not window_s:
+                raise SpecError(
+                    f"source {src.source_id!r}: a streaming dedup stage needs "
+                    "config.time_window (the watermark that bounds its state)"
+                )
             df = df.withWatermark(ts_col, f"{int(window_s)} seconds")
             # dropDuplicatesWithinWatermark takes column NAMES — route a
             # dot-path key through the same dual resolution as batch
@@ -115,7 +122,6 @@ def streaming_source_chain(
             df = apply_transform(df, src.transform)
         if src.dataops:
             from ..plans.compiler import STREAM_SAFE_DATAOPS, resolve_dataop
-            from ..spec.model import SpecError
 
             for d in src.dataops:
                 if d.op == "ann_serve":
@@ -237,36 +243,32 @@ class StreamingPipeline:
         else:
             df = next(iter(staged.values()))
 
+        batch_fn = sink_fn
         if serve_cfg is not None:
             # the sink mapping (if any) applies to the ANSWER frame, so
             # it moves inside the serving foreachBatch; the streaming
             # frame itself stays the raw query stream
+            from ..dataops.similarity import pq_index_serve_foreach_batch
+
             params = dict(serve_cfg.params)
             index_path = params.pop("index_path")
-            inner_sink = sink_fn
             mapping = self.spec.sink.mapping
 
-            def sink_fn(batch_df: DataFrame, batch_id: int) -> None:
-                # chunked wrapper: a backlog micro-batch over the LUT
-                # bound splits instead of killing the StreamingQuery
-                from ..dataops.similarity import pq_index_query_chunked
-
-                ans = pq_index_query_chunked(
-                    batch_df.sparkSession, index_path, batch_df, **params
-                )
+            def answer_sink(ans: DataFrame, batch_id: int) -> None:
                 if mapping:
                     from ..operators.mapper import apply_sink_mapping
 
                     ans = apply_sink_mapping(ans, mapping)
-                inner_sink(ans, batch_id)
+                sink_fn(ans, batch_id)
 
+            batch_fn = pq_index_serve_foreach_batch(spark, index_path, answer_sink, **params)
         elif self.spec.sink.mapping:
             from ..operators.mapper import apply_sink_mapping
 
             df = apply_sink_mapping(df, self.spec.sink.mapping)
 
         writer = (
-            df.writeStream.foreachBatch(sink_fn)
+            df.writeStream.foreachBatch(batch_fn)
             .option("checkpointLocation", f"{self.checkpoint_dir}/main")
             .outputMode("append")
         )

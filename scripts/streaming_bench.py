@@ -383,12 +383,13 @@ def classifier_inference_bench(spark) -> None:
 def otlp_rollup_bench(spark) -> None:
     """Streaming OTLP rollup chain (VERDICT r6 #7): synthesize OTLP/JSON
     metric payloads from the 10M-row events table, stream them through
-    flatten_metrics -> watermarked 5-minute tumbling rollup
-    (streaming/rollup.metric_rollup_stream) under the RocksDB state
-    store, and report sustained payload rows/s end to end."""
+    flatten_metrics -> the watermarked 5-minute tumbling rollup of all
+    five datapoint families (streaming/rollup.otlp_rollup_stream, one
+    stateful operator) under the RocksDB state store, and report
+    sustained payload rows/s end to end."""
     from clickhouse_etl_spark.queries import _otlp_metrics_payload
     from clickhouse_etl_spark.sources.otlp import flatten_metrics
-    from clickhouse_etl_spark.streaming.rollup import metric_rollup_stream
+    from clickhouse_etl_spark.streaming.rollup import otlp_rollup_stream
 
     src = f"{BASE}/otlp_payloads"
     ckpt = f"{BASE}/otlp_rollup_ckpt"
@@ -409,7 +410,7 @@ def otlp_rollup_bench(spark) -> None:
         .option("maxFilesPerTrigger", 8)
         .parquet(src)
     )
-    rolled = metric_rollup_stream(flatten_metrics(stream))
+    rolled = otlp_rollup_stream(flatten_metrics(stream))
     t0 = time.perf_counter()
     q = (
         rolled.writeStream.format("noop")
@@ -430,80 +431,6 @@ def otlp_rollup_bench(spark) -> None:
             }
         )
     )
-
-    # the histogram family (VERDICT r7 #6): scalar + per-bucket grains,
-    # two watermarked branches unioned into one append query
-    from clickhouse_etl_spark.streaming.rollup import histogram_rollup_stream
-
-    ckpt_h = f"{BASE}/otlp_hist_ckpt"
-    shutil.rmtree(ckpt_h, ignore_errors=True)
-    stream = (
-        spark.readStream.schema("value string")
-        .option("maxFilesPerTrigger", 8)
-        .parquet(src)
-    )
-    rolled = histogram_rollup_stream(flatten_metrics(stream))
-    t0 = time.perf_counter()
-    q = (
-        rolled.writeStream.format("noop")
-        .option("checkpointLocation", ckpt_h)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    dt = time.perf_counter() - t0
-    print(
-        json.dumps(
-            {
-                "metric": "otlp_histogram_rollup_stream_throughput",
-                "payload_rows_in": n_in,
-                "seconds": round(dt, 2),
-                "payload_rows_per_sec": int(n_in / dt),
-            }
-        )
-    )
-
-    # the remaining two families (VERDICT r8 #3): exp-histogram scalars
-    # (associative) and summary latest-snapshot merges — rollup now
-    # covers all five OTLP datapoint families
-    from clickhouse_etl_spark.streaming.rollup import (
-        exp_histogram_rollup_stream,
-        summary_rollup_stream,
-    )
-
-    for fam, fn in (
-        ("exp_histogram", exp_histogram_rollup_stream),
-        ("summary", summary_rollup_stream),
-    ):
-        ckpt_f = f"{BASE}/otlp_{fam}_ckpt"
-        shutil.rmtree(ckpt_f, ignore_errors=True)
-        stream = (
-            spark.readStream.schema("value string")
-            .option("maxFilesPerTrigger", 8)
-            .parquet(src)
-        )
-        rolled = fn(flatten_metrics(stream))
-        t0 = time.perf_counter()
-        q = (
-            rolled.writeStream.format("noop")
-            .option("checkpointLocation", ckpt_f)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        dt = time.perf_counter() - t0
-        print(
-            json.dumps(
-                {
-                    "metric": f"otlp_{fam}_rollup_stream_throughput",
-                    "payload_rows_in": n_in,
-                    "seconds": round(dt, 2),
-                    "payload_rows_per_sec": int(n_in / dt),
-                }
-            )
-        )
 
 
 def digest_lifecycle_bench(spark) -> None:

@@ -401,6 +401,42 @@ def test_streaming_json_source_with_dedup(spark, tmp_path):
     assert len(failures) == 1 and "malformed" in failures[0]["error"]
 
 
+def test_streaming_dedup_without_window_raises(spark, tmp_path):
+    """A dedup stage without ``time_window`` dedups the WHOLE input in
+    batch (first wins); a stream has no whole input, so assembly fails
+    loudly, naming the source, instead of substituting a window whose
+    answer differs from batch."""
+    from clickhouse_etl_spark.spec.model import SpecError
+
+    doc = {
+        "version": "v3",
+        "pipeline_id": "nowin",
+        "name": "dedup-no-window",
+        "sources": [{"type": "kafka", "source_id": "clicks", "topic": "clicks"}],
+        "transforms": [{"type": "dedup", "source_id": "clicks", "config": {"key": "id"}}],
+        "sink": {"type": "clickhouse", "table": "out", "max_batch_size": 100,
+                 "max_delay_time": "1s"},
+    }
+    spec = parse_pipeline_json(json.dumps(doc))
+    schema = T.StructType([
+        T.StructField("id", T.StringType()),
+        T.StructField("ts", T.TimestampType()),
+    ])
+    inp = _write_stream_input(
+        spark, str(tmp_path), "in", [("a", ts("2024-01-01T10:00:00"))], schema
+    )
+    sink = ClickHouseSink(table="out", parquet_fallback_path=str(tmp_path / "sinkout"))
+    pipe = StreamingPipeline(spec=spec, checkpoint_dir=str(tmp_path / "ckpt"))
+    with pytest.raises(SpecError, match="'clicks'.*time_window"):
+        pipe.start(
+            spark,
+            sources={"clicks": spark.readStream.schema(schema).parquet(inp)},
+            ts_cols={"clicks": "ts"},
+            sink_fn=sink.foreach_batch(),
+            trigger={"availableNow": True},
+        )
+
+
 def test_sink_replay_idempotency(spark, tmp_path):
     """At-least-once + idempotent write: replaying the same epoch (same
     batch_id, same rows) leaves exactly one logical copy after the
@@ -449,11 +485,18 @@ def test_metrics_listener_captures_progress(spark, tmp_path):
         spark.streams.removeListener(listener)
 
 
-def test_streaming_otlp_metric_rollup(spark, tmp_path):
-    """VERDICT r6 #7: the flatten -> 5-minute tumbling rollup chain runs
-    as a STREAM (watermark + window agg under the state store) and its
-    closed windows agree exactly with the batch form of the same
-    aggregation on the same payloads."""
+def _otlp_rollup_stream_matches_batch(
+    spark, tmp_path, modulus, window_duration, watermark, sentinel_after
+):
+    """Roll up the synthesized OTLP payloads of every ``event_id %
+    modulus == 0`` event (all five datapoint families) as ONE streaming
+    query and assert its closed windows equal the batch form of the
+    same aggregation on the same payloads. Three files, one
+    micro-batch each: the real payloads, a far-future sentinel whose
+    event time pushes the watermark past every real window so append
+    mode emits them all, then a late point inside an already-closed
+    window, which the watermark must drop. Returns the batch truth
+    keyed by (host, window_start_us, metric_type, bucket_idx)."""
     import time as _time
 
     from pyspark.sql import functions as F
@@ -461,276 +504,130 @@ def test_streaming_otlp_metric_rollup(spark, tmp_path):
     from clickhouse_etl_spark.queries import _otlp_metrics_payload
     from clickhouse_etl_spark.sources import load_table
     from clickhouse_etl_spark.sources.otlp import flatten_metrics
-    from clickhouse_etl_spark.streaming.rollup import metric_rollup_stream
+    from clickhouse_etl_spark.streaming.rollup import otlp_rollup_stream
 
     from tests.conftest import SF_DIR
 
-    ev = load_table(spark, SF_DIR, "events").filter(F.col("event_id") % 37 == 0)
+    def keyed(rows):
+        return {
+            (r["host"], r["window_start_us"], r["metric_type"], r["bucket_idx"]):
+            r.asDict()
+            for r in rows
+        }
+
+    ev = load_table(spark, SF_DIR, "events").filter(F.col("event_id") % modulus == 0)
     payloads = ev.select(_otlp_metrics_payload().alias("value"))
-
-    # batch truth: identical chain, batch execution (watermark no-ops)
-    truth = {
-        (r["host"], r["window_start_us"]): (
-            r["n_points"], r["sum_cents"], r["min_cents"], r["max_cents"],
-            r["points_per_sec"],
-        )
-        for r in metric_rollup_stream(flatten_metrics(payloads)).collect()
-    }
-    assert truth, "no gauge rollup rows in the batch truth"
-
-    # stream: real payload file first, then a far-future sentinel whose
-    # event time pushes the watermark past every real window so append
-    # mode emits them all (two files + maxFilesPerTrigger=1 => the
-    # sentinel lands in a later micro-batch)
-    src = str(tmp_path / "otlp_stream")
-    payloads.coalesce(1).write.mode("overwrite").parquet(src)
-    _time.sleep(1.1)  # file-mtime order drives parquet-source batching
-    max_ts = ev.agg(F.max("ts")).collect()[0][0]
-    sentinel = spark.createDataFrame([(max_ts,)], ["ts"]).select(
-        (F.unix_micros(F.col("ts").cast("timestamp")) + 86_400_000_000)
-        .alias("us")
-    ).select(
-        F.concat(
-            F.lit('{"resourceMetrics":[{"resource":{"attributes":[{"key":"host",'
-                  '"value":{"stringValue":"__sentinel__"}}]},"scopeMetrics":'
-                  '[{"scope":{"name":"meter","version":"1"},"metrics":'
-                  '[{"name":"g","unit":"1","gauge":{"dataPoints":'
-                  '[{"timeUnixNano":"'),
-            (F.col("us") * 1000).cast("string"),
-            F.lit('","asDouble":1.0}]}}]}]}]}'),
-        ).alias("value")
+    # batch truth: identical aggregation, batch execution (watermark no-ops)
+    truth = keyed(
+        otlp_rollup_stream(flatten_metrics(payloads), window_duration, watermark).collect()
     )
-    sentinel.coalesce(1).write.mode("append").parquet(src)
+    assert {k[2] for k in truth} == {"gauge", "sum", "histogram", "exp_histogram", "summary"}
+
+    src = str(tmp_path / f"otlp_stream_{modulus}")
+    payloads.coalesce(1).write.mode("overwrite").parquet(src)
+    min_ts, max_ts = ev.agg(F.min("ts"), F.max("ts")).first()
+    late_host = min(truth)[0]
+    for when, host in ((max_ts + sentinel_after, "__sentinel__"), (min_ts, late_host)):
+        _time.sleep(1.1)  # file-mtime order drives parquet-source batching
+        spark.createDataFrame(
+            [(when, host, 1.0, 1)],
+            "ts timestamp, event_type string, value double, user_id long",
+        ).select(_otlp_metrics_payload().alias("value")).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
 
     stream = (
         spark.readStream.schema("value string")
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    rolled = metric_rollup_stream(flatten_metrics(stream))
+    name = f"otlp_rollup_out_{modulus}"
     q = (
-        rolled.writeStream.format("memory")
-        .queryName("otlp_rollup_out")
+        otlp_rollup_stream(flatten_metrics(stream), window_duration, watermark)
+        .writeStream.format("memory")
+        .queryName(name)
         .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_rollup"))
+        .option("checkpointLocation", str(tmp_path / f"ckpt_rollup_{modulus}"))
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
-    got = {
-        (r["host"], r["window_start_us"]): (
-            r["n_points"], r["sum_cents"], r["min_cents"], r["max_cents"],
-            r["points_per_sec"],
-        )
-        for r in spark.sql("SELECT * FROM otlp_rollup_out").collect()
+    q.awaitTermination(240)
+    # one stateful operator rolls up every family
+    assert len(q.lastProgress["stateOperators"]) == 1
+    assert sum(
+        p["stateOperators"][0]["numRowsDroppedByWatermark"] for p in q.recentProgress
+    ) > 0, "the late point was not dropped by the watermark"
+    rows = [
+        r for r in spark.sql(f"SELECT * FROM {name}").collect()
         if r["host"] != "__sentinel__"
-    }
+    ]
+    got = keyed(rows)
+    # every row emitted once: the late point re-opened no closed window
+    assert len(got) == len(rows)
     assert got == truth
+    return truth
+
+
+def test_streaming_otlp_metric_rollup(spark, tmp_path):
+    """VERDICT r6 #7: the flatten -> 5-minute tumbling rollup of all
+    five OTLP datapoint families runs as ONE stream (watermark + window
+    agg under the state store) and its closed windows agree exactly
+    with the batch form — the gauge rows included."""
+    import datetime as _dt
+
+    truth = _otlp_rollup_stream_matches_batch(
+        spark, tmp_path, 37, "5 minutes", "10 minutes", _dt.timedelta(days=1)
+    )
+    gauge = [v for k, v in truth.items() if k[2] == "gauge"]
+    assert gauge, "no gauge rollup rows in the batch truth"
+    assert all(v["sum_cents"] is not None for v in gauge)
 
 
 def test_streaming_otlp_sum_and_histogram_rollup(spark, tmp_path):
     """VERDICT r7 #6: the rollup extends past gauges — sum datapoints
-    (asInt/asDouble) and the histogram family (count/sum/bucket_counts
-    are associative) roll up in the same watermark + tumbling-window
-    form, and every closed window agrees exactly with the batch form
-    of the same aggregation on the same payloads."""
+    and the histogram family (count/sum/bucket_counts are associative)
+    roll up in the same single stream, here at a 1-hour window, and
+    every closed window equals the batch form: scalars at bucket_idx
+    -1, per-bucket counts at bucket_idx >= 0."""
     import datetime as _dt
-    import time as _time
 
-    from pyspark.sql import functions as F
-
-    from clickhouse_etl_spark.queries import _otlp_metrics_payload
-    from clickhouse_etl_spark.sources import load_table
-    from clickhouse_etl_spark.sources.otlp import flatten_metrics
-    from clickhouse_etl_spark.streaming.rollup import (
-        histogram_rollup_stream,
-        metric_rollup_stream,
+    truth = _otlp_rollup_stream_matches_batch(
+        spark, tmp_path, 37, "1 hour", "2 hours", _dt.timedelta(days=1)
     )
-
-    from tests.conftest import SF_DIR
-
-    ev = load_table(spark, SF_DIR, "events").filter(F.col("event_id") % 37 == 0)
-    payloads = ev.select(_otlp_metrics_payload().alias("value"))
-    flat_b = flatten_metrics(payloads)
-
-    truth_sum = {
-        (r["host"], r["window_start_us"]): (
-            r["n_points"], r["sum_cents"], r["min_cents"], r["max_cents"],
-        )
-        for r in metric_rollup_stream(flat_b, metric_type="sum").collect()
-    }
-    truth_hist = {
-        (r["host"], r["window_start_us"], r["bucket_idx"]): (
-            r["n_points"], r["total_count"], r["sum_cents"],
-            r["min_cents"], r["max_cents"], r["bucket_n"],
-        )
-        for r in histogram_rollup_stream(flat_b).collect()
-    }
-    assert truth_sum, "no sum rollup rows in the batch truth"
-    assert any(k[2] >= 0 for k in truth_hist), "no bucket-grain rows"
-    assert any(k[2] == -1 for k in truth_hist), "no scalar-grain rows"
-
-    # stream: real payloads first, then a far-future sentinel carrying
-    # ALL metric families (each family's branch filters by metric_type
-    # BEFORE the watermark, so the sentinel must reach every branch to
-    # close the real windows)
-    src = str(tmp_path / "otlp_stream_multi")
-    payloads.coalesce(1).write.mode("overwrite").parquet(src)
-    _time.sleep(1.1)  # file-mtime order drives parquet-source batching
-    max_ts = ev.agg(F.max("ts")).collect()[0][0]
-    sent = spark.createDataFrame(
-        [(max_ts + _dt.timedelta(days=1), "__sentinel__", 1.0, 1)],
-        "ts timestamp, event_type string, value double, user_id long",
-    ).select(_otlp_metrics_payload().alias("value"))
-    sent.coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema("value string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    flat_s = flatten_metrics(stream)
-    q1 = (
-        metric_rollup_stream(flat_s, metric_type="sum")
-        .writeStream.format("memory")
-        .queryName("otlp_sum_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_sum"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2 = (
-        histogram_rollup_stream(flat_s)
-        .writeStream.format("memory")
-        .queryName("otlp_hist_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_hist"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q1.awaitTermination(180)
-    q2.awaitTermination(180)
-    got_sum = {
-        (r["host"], r["window_start_us"]): (
-            r["n_points"], r["sum_cents"], r["min_cents"], r["max_cents"],
-        )
-        for r in spark.sql("SELECT * FROM otlp_sum_out").collect()
-        if r["host"] != "__sentinel__"
-    }
-    got_hist = {
-        (r["host"], r["window_start_us"], r["bucket_idx"]): (
-            r["n_points"], r["total_count"], r["sum_cents"],
-            r["min_cents"], r["max_cents"], r["bucket_n"],
-        )
-        for r in spark.sql("SELECT * FROM otlp_hist_out").collect()
-        if r["host"] != "__sentinel__"
-    }
-    assert got_sum == truth_sum
-    assert got_hist == truth_hist
+    sums = [v for k, v in truth.items() if k[2] == "sum"]
+    assert sums, "no sum rollup rows in the batch truth"
+    assert all(v["sum_cents"] is not None for v in sums)
+    hist = {k: v for k, v in truth.items() if k[2] == "histogram"}
+    assert any(k[3] >= 0 for k in hist), "no bucket-grain rows"
+    assert any(k[3] == -1 for k in hist), "no scalar-grain rows"
+    # element-wise bucket addition: per window, the bucket counts add up
+    # to the scalar row's total count (each synthetic point's do)
+    for (host, w, _, idx), v in hist.items():
+        if idx == -1:
+            buckets = [
+                b["bucket_n"] for kb, b in hist.items()
+                if kb[:2] == (host, w) and kb[3] >= 0
+            ]
+            assert sum(buckets) == v["total_count"]
 
 
 def test_streaming_otlp_exp_hist_and_summary_rollup(spark, tmp_path):
-    """VERDICT r8 #3: the rollup covers all five OTLP datapoint
-    families — exponential-histogram scalars (count/sum/min/max,
-    associative, the flattened record carries no bucket runs) and
-    summary snapshots (cumulative temporality: the window merge is
-    latest-snapshot via lexicographic struct max, not addition). Every
-    closed window equals the batch form on the same payloads."""
+    """VERDICT r8 #3: at a 1-day window the same single stream equals
+    the batch form for every family, including exponential-histogram
+    scalars (the flattened record carries no bucket runs) and summary
+    snapshots (cumulative temporality: the window merge is
+    latest-snapshot via lexicographic struct max, not addition)."""
     import datetime as _dt
-    import time as _time
 
-    from pyspark.sql import functions as F
-
-    from clickhouse_etl_spark.queries import _otlp_metrics_payload
-    from clickhouse_etl_spark.sources import load_table
-    from clickhouse_etl_spark.sources.otlp import flatten_metrics
-    from clickhouse_etl_spark.streaming.rollup import (
-        exp_histogram_rollup_stream,
-        summary_rollup_stream,
+    truth = _otlp_rollup_stream_matches_batch(
+        spark, tmp_path, 7, "1 day", "2 days", _dt.timedelta(days=30)
     )
-
-    from tests.conftest import SF_DIR
-
-    ev = load_table(spark, SF_DIR, "events").filter(F.col("event_id") % 7 == 0)
-    payloads = ev.select(_otlp_metrics_payload().alias("value"))
-    flat_b = flatten_metrics(payloads)
-
-    truth_eh = {
-        (r["host"], r["window_start_us"]): (
-            r["n_points"], r["total_count"], r["sum_cents"],
-            r["min_cents"], r["max_cents"],
-        )
-        for r in exp_histogram_rollup_stream(flat_b, window_duration="1 day", watermark="2 days").collect()
-    }
-    truth_sm = {
-        (r["host"], r["window_start_us"]): (
-            r["n_points"], r["last_count"], r["last_sum_cents"],
-        )
-        for r in summary_rollup_stream(flat_b, window_duration="1 day", watermark="2 days").collect()
-    }
-    assert truth_eh, "no exp-histogram rollup rows in the batch truth"
-    assert truth_sm, "no summary rollup rows in the batch truth"
+    summary = [v for k, v in truth.items() if k[2] == "summary"]
     # the synthetic summary snapshot count is the constant 9 — the
     # latest-snapshot merge must surface it, not a sum of snapshots
-    assert all(v[1] == 9 for v in truth_sm.values())
+    assert all(v["last_count"] == 9 for v in summary)
     # windows with >1 snapshot prove the merge is NOT addition
-    assert any(v[0] > 1 for v in truth_sm.values())
-
-    # all-family sentinel (each branch filters metric_type BEFORE the
-    # watermark, so the sentinel must reach every branch)
-    src = str(tmp_path / "otlp_stream_eh_sm")
-    payloads.coalesce(1).write.mode("overwrite").parquet(src)
-    _time.sleep(1.1)  # file-mtime order drives parquet-source batching
-    max_ts = ev.agg(F.max("ts")).collect()[0][0]
-    sent = spark.createDataFrame(
-        [(max_ts + _dt.timedelta(days=30), "__sentinel__", 1.0, 1)],
-        "ts timestamp, event_type string, value double, user_id long",
-    ).select(_otlp_metrics_payload().alias("value"))
-    sent.coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema("value string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    flat_s = flatten_metrics(stream)
-    q1 = (
-        exp_histogram_rollup_stream(flat_s, window_duration="1 day", watermark="2 days")
-        .writeStream.format("memory")
-        .queryName("otlp_eh_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_eh"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2 = (
-        summary_rollup_stream(flat_s, window_duration="1 day", watermark="2 days")
-        .writeStream.format("memory")
-        .queryName("otlp_sm_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_sm"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q1.awaitTermination(180)
-    q2.awaitTermination(180)
-    got_eh = {
-        (r["host"], r["window_start_us"]): (
-            r["n_points"], r["total_count"], r["sum_cents"],
-            r["min_cents"], r["max_cents"],
-        )
-        for r in spark.sql("SELECT * FROM otlp_eh_out").collect()
-        if r["host"] != "__sentinel__"
-    }
-    got_sm = {
-        (r["host"], r["window_start_us"]): (
-            r["n_points"], r["last_count"], r["last_sum_cents"],
-        )
-        for r in spark.sql("SELECT * FROM otlp_sm_out").collect()
-        if r["host"] != "__sentinel__"
-    }
-    assert got_eh == truth_eh
-    assert got_sm == truth_sm
+    assert any(v["n_points"] > 1 for v in summary)
 
 
 def test_streaming_curation_chain_parity_with_batch(spark, tmp_path):
@@ -831,21 +728,21 @@ def test_sum_rollup_int_cents_exact_past_2e53(spark):
     the oracle-backed batch entry's contract (value_double ONLY; an
     int-valued gauge contributes a null-cents point, never a coerced
     value)."""
-    from clickhouse_etl_spark.streaming.rollup import metric_rollup_stream
+    from clickhouse_etl_spark.streaming.rollup import otlp_rollup_stream
 
     big = 9007199254740993  # 2^53 + 1
+    point = ({"host": "h"}, "2024-01-01 00:00:00", None, big, None, None, None, None, None)
     flat = spark.createDataFrame(
-        [
-            ("sum", {"host": "h"}, "2024-01-01 00:00:00", None, big),
-            ("gauge", {"host": "h"}, "2024-01-01 00:00:00", None, big),
-        ],
+        [("sum", *point), ("gauge", *point)],
         "metric_type string, resource_attributes map<string,string>, "
-        "timestamp string, value_double double, value_int long",
+        "timestamp string, value_double double, value_int long, count long, "
+        "sum double, min double, max double, bucket_counts array<bigint>",
     )
-    s = metric_rollup_stream(flat, metric_type="sum").collect()
+    rows = otlp_rollup_stream(flat).collect()
+    s = [r for r in rows if r["metric_type"] == "sum"]
     assert len(s) == 1
     assert s[0]["sum_cents"] == big * 100  # exact, past the double range
-    g = metric_rollup_stream(flat, metric_type="gauge").collect()
+    g = [r for r in rows if r["metric_type"] == "gauge"]
     assert len(g) == 1
     assert g[0]["n_points"] == 1 and g[0]["sum_cents"] is None
 
