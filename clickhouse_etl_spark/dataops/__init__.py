@@ -6,6 +6,11 @@ cosine top-k + LSH-bucketed scale path), text analysis (language-ID,
 quality scoring, token stats, fingerprinting), and multimodal binary
 column plumbing.
 
+Every cross-wave seen-set probe (``*_against_path``) reads its tier —
+exact digests or a Bloom bitmap — from the artifact's own columns, and
+every loaded artifact sits in one path-keyed cache that
+``release_artifact_cache(path)`` frees.
+
 Design rules: all hot-path math is Catalyst expressions (fold-based
 deterministic hashing, integer arithmetic) so results are reproducible
 across engines and the DuckDB oracle can replay them exactly; pairwise
@@ -22,15 +27,12 @@ from .dedup import (
     ngram_containment_pairs,
     dedup_against_path,
     exact_dedup,
-    release_ngram_digest_cache,
     write_ngram_bloom_table,
     write_ngram_digest_table,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     line_dedup,
     line_dedup_against_path,
-    release_line_digest_cache,
-    release_span_digest_cache,
     sentence_span_dedup,
     simhash,
     snapshot_diff,
@@ -54,6 +56,7 @@ from .similarity import (
     pq_index_query,
     truncate_renorm,
 )
+from .util import release_artifact_cache
 from .text import (
     bigram_pmi,
     doc_fingerprint,
@@ -77,13 +80,10 @@ __all__ = [
     "dedup_against",
     "dedup_against_path",
     "decontaminate_against_path",
-    "release_ngram_digest_cache",
     "write_ngram_bloom_table",
     "write_ngram_digest_table",
     "line_dedup",
     "line_dedup_against_path",
-    "release_line_digest_cache",
-    "release_span_digest_cache",
     "sentence_span_dedup",
     "span_dedup_against_path",
     "write_span_bloom_table",
@@ -92,6 +92,7 @@ __all__ = [
     "write_line_bloom_table",
     "write_line_digest_table",
     "snapshot_diff",
+    "release_artifact_cache",
     "cosine_topk",
     "embedding_near_dup_pairs",
     "ivf_pq_topk",

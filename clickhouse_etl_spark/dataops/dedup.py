@@ -8,6 +8,17 @@ it hash-partitions evenly.
 
 All hashing is the portable char-fold family (hashing.py) so the
 DuckDB oracle reproduces signatures bit-for-bit.
+
+Cross-wave dedup probes each key against one seen-set layer: a
+persisted artifact per grain (document, line, sentence span, 13-gram,
+LSH band; vector buckets in similarity.py), written either as exact
+digests (``write_*digest_table``) or as a Bloom bitmap
+(``write_*bloom_table``). Each ``*_against_path`` probe reads the tier
+from the artifact's columns (:func:`_seen_probe_factory`), the loaded
+artifact sits in the one path-keyed cache
+(:func:`~.util.cached_artifact`, freed by
+:func:`~.util.release_artifact_cache`), and the whole-row verdicts run
+through one drop/flag Arrow pass (:func:`_probe_pass`).
 """
 
 from __future__ import annotations
@@ -16,7 +27,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .hashing import MINHASH_COEFFS, affine_hash, char_fold_hash
-from .util import scale_out
+from .util import (
+    cached_artifact,
+    check_append_geometry,
+    read_geometry,
+    scale_out,
+    write_geometry,
+)
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -699,117 +716,61 @@ def dedup_against_path(
     seen_path: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    cache_static: bool = True,
-    seen_format: str = "digests",
 ) -> DataFrame:
     """Spec-surface / stream-safe form of :func:`dedup_against`: the
-    seen corpus comes from a parquet path (JSON-declarable), either a
-    documents table (digested on ``text_col``) or a precomputed digest
-    table (single ``digest`` column — ship digests, not text, between
-    ingest waves).
+    seen corpus comes from a parquet path (JSON-declarable), whose
+    columns say what it holds:
 
-    Batch: full :func:`dedup_against` (cross-wave anti-join + within-
-    batch first-wins). Streaming: the cross-wave anti-join only — a
-    stream-static LEFT ANTI join, which Structured Streaming executes
-    per micro-batch against the static digest set (broadcast when
-    small); within-stream duplicates are the dedup STAGE's job
-    (``dropDuplicatesWithinWatermark``), keeping this op row-local and
-    append-safe (VERDICT r4 #7).
+    - a :func:`write_bloom_table` bitmap — the probe becomes one
+      row-local Arrow pass against the closure-shipped bitmap (no join
+      at all — the 100-TB tier where even the digest table is too big
+      to ship). Seen documents still always drop; ~FPR of fresh
+      documents drop with them (declared bits/key trade);
+    - a :func:`write_digest_table` table (single ``digest`` column —
+      ship digests, not text, between ingest waves);
+    - otherwise a documents table, digested on ``text_col``.
 
-    ``cache_static=True`` (default) persists the distinct digest set on
-    the STREAMING path: Structured Streaming re-executes the static
-    side of a stream-static join on EVERY micro-batch, so an uncached
-    seen set re-reads and re-distincts per batch — negligible on local
-    disk at test scale (A/B best-of-2 measured parity), material when
-    the digest table lives on object storage or holds billions of
-    digests. The cache is the digest set — orders of magnitude smaller
-    than the corpus by construction; pass False for a digest table too
-    large for cluster cache (it then degrades to per-batch reads,
-    never to wrong results).
+    Batch: the cross-wave probe + within-batch first-wins (the full
+    :func:`dedup_against`). Streaming: the cross-wave probe only — on
+    the digest tiers a stream-static LEFT ANTI join, which Structured
+    Streaming executes per micro-batch against the static digest set
+    (broadcast when small); within-stream duplicates are the dedup
+    STAGE's job (``dropDuplicatesWithinWatermark``), keeping this op
+    row-local and append-safe (VERDICT r4 #7).
 
-    Cache LIFETIME (ADVICE r6): caches are registered per
-    ``seen_path`` — repeat calls for the same path REUSE the cached
-    frame instead of stacking a second copy, and a long session that
-    cycles through many waves should call
-    :func:`release_digest_cache` (one path or all) when a wave
-    completes; otherwise retired digest sets stay in executor storage
-    for the session's lifetime.
-
-    ``seen_format="bloom"`` points ``seen_path`` at a
-    :func:`write_bloom_table` artifact instead: the probe becomes one
-    row-local Arrow pass against the closure-shipped bitmap (no join
-    at all — the 100-TB tier where even the digest table is too big to
-    ship), followed by the same within-batch first-wins half on the
-    batch path. Seen documents still always drop; ~FPR of fresh
-    documents drop with them (declared bits/key trade).
+    The STREAMING path caches the distinct digest set: Structured
+    Streaming re-executes the static side of a stream-static join on
+    EVERY micro-batch, so an uncached seen set would re-read and
+    re-distinct per batch — material when the digest table lives on
+    object storage or holds billions of digests. The cache is keyed by
+    (path, ``text_col`` for a documents table) and rotates when the
+    artifact's file listing changes; call
+    :func:`~clickhouse_etl_spark.dataops.util.release_artifact_cache`
+    when a wave completes (ADVICE r6), otherwise retired digest sets
+    stay in executor storage for the session's lifetime.
     """
-    spark = df.sparkSession
-    if seen_format == "bloom":
+    seen_raw = df.sparkSession.read.parquet(seen_path)
+    fmt = _seen_format(seen_raw.columns)
+    if fmt == "bloom":
         survivors = dedup_against_bloom_path(df, seen_path, text_col, id_col)
-        if df.isStreaming:
-            return survivors
-        return exact_dedup_keep(survivors, text_col=text_col, id_col=id_col)
-    if seen_format != "digests":
-        raise ValueError(f"unknown seen_format {seen_format!r}: digests|bloom")
-    seen_raw = spark.read.parquet(seen_path)
-    if "digest" in seen_raw.columns:
-        seen = seen_raw.select(F.col("digest").alias("_h")).distinct()
     else:
-        seen = seen_raw.select(_content_digest(text_col).alias("_h")).distinct()
-    if df.isStreaming:
-        if cache_static:
-            # keyed by (path, file listing): a wave that REWRITES the
-            # digest table at the same path produces new part files
-            # (overwrite and append both change the listing), so a
-            # stale cached seen-set is detected and dropped instead of
-            # silently anti-joining against old digests (ADVICE r7)
-            sig = tuple(sorted(seen_raw.inputFiles()))
-            entry = _DIGEST_CACHES.get(seen_path)
-            if entry is not None and entry[0] != sig:
-                entry[1].unpersist()
-                entry = None
-            if entry is None:
-                entry = (sig, seen.cache())
-                _DIGEST_CACHES[seen_path] = entry
-            seen = entry[1]
-        return (
+        if fmt == "digests":
+            key, dep = F.col("digest"), None
+        else:
+            key, dep = _content_digest(text_col), text_col
+        seen = seen_raw.select(key.alias("_h")).distinct()
+        if df.isStreaming:
+            seen = cached_artifact(
+                ("digest_frame", seen_path, dep), [seen_raw], seen.cache
+            )
+        survivors = (
             df.withColumn("_h", _content_digest(text_col))
             .join(seen, "_h", "left_anti")
             .drop("_h")
         )
-    survivors = (
-        df.withColumn("_h", _content_digest(text_col))
-        .join(seen, "_h", "left_anti")
-        .drop("_h")
-    )
+    if df.isStreaming:
+        return survivors
     return exact_dedup_keep(survivors, text_col=text_col, id_col=id_col)
-
-
-#: streaming static-digest caches keyed by seen_path, valued
-#: (file-listing signature, cached frame) — see
-#: :func:`dedup_against_path` (cache lifetime + staleness) and
-#: :func:`release_digest_cache`
-_DIGEST_CACHES: dict = {}
-
-
-def release_digest_cache(seen_path: str | None = None) -> int:
-    """Unpersist the static digest cache for ``seen_path`` (or ALL
-    cached digest sets when None) — call when an ingest wave completes
-    so retired seen sets don't occupy executor storage for the session
-    lifetime. Returns the number of caches released. Safe to call for
-    a path that was never cached."""
-    paths = (
-        [seen_path]
-        if seen_path is not None
-        else list(_DIGEST_CACHES)
-    )
-    released = 0
-    for p in paths:
-        entry = _DIGEST_CACHES.pop(p, None)
-        if entry is not None:
-            entry[1].unpersist()
-            released += 1
-    return released
 
 
 def write_digest_table(
@@ -1016,13 +977,6 @@ def merge_bloom_tables(spark, paths: list[str], out_path: str, mode: str = "over
     )
 
 
-#: bloom bitmap broadcast caches keyed by seen_path, valued
-#: (file-listing signature, broadcast, m, n_hashes, n_shards) — repeat
-#: per-wave probes in one session reuse the executor-resident bitmap
-#: instead of stacking a new ~0.5 GB broadcast per call (ADVICE r7);
-#: see :func:`release_bloom_cache`
-_BLOOM_CACHES: dict = {}
-
 #: refuse to materialize a dense probe bitmap larger than this many
 #: bytes across all shards — a mis-declared capacity should fail loud
 #: at plan build, not slowly strain executors (VERDICT r7 nit); callers
@@ -1030,40 +984,35 @@ _BLOOM_CACHES: dict = {}
 _BLOOM_BITMAP_MAX_BYTES = 1 << 30
 
 
-def release_bloom_cache(seen_path: str | None = None) -> int:
-    """Unpersist the broadcast bloom bitmap for ``seen_path`` (or ALL
-    cached bitmaps when None) — the bloom mirror of
-    :func:`release_digest_cache`. Returns the number released."""
-    paths = (
-        [seen_path]
-        if seen_path is not None
-        else list(_BLOOM_CACHES)
-    )
-    released = 0
-    for p in paths:
-        entry = _BLOOM_CACHES.pop(p, None)
-        if entry is not None:
-            entry[1].unpersist()
-            released += 1
-    return released
-
-
-def _bloom_broadcast(spark, seen_path: str, max_bitmap_bytes: int | None = None):
+def _bloom_broadcast(
+    seen_raw: DataFrame, seen_path: str, max_bitmap_bytes: int | None = None
+):
     """(broadcast dense bitmap, m, n_hashes, n_shards) for the
-    :func:`write_bloom_table` artifact at ``seen_path`` — cached per
-    path (``_BLOOM_CACHES``), invalidated when the artifact's parquet
-    file listing changes, released via :func:`release_bloom_cache`.
-    Shared by :func:`dedup_against_bloom_path` and the fused curation
-    pass (streaming/curation.py)."""
+    :func:`write_bloom_table` artifact ``seen_raw`` read from
+    ``seen_path`` — one :func:`~.util.cached_artifact` entry per path.
+    The byte cap is checked from the geometry before the bitmap is
+    allocated, and again on a cache hit: a permissive first call must
+    not grandfather an oversized bitmap past a later, stricter
+    caller."""
     import numpy as np
 
-    seen_raw = spark.read.parquet(seen_path)
-    sig = tuple(sorted(seen_raw.inputFiles()))
-    entry = _BLOOM_CACHES.get(seen_path)
-    if entry is not None and entry[0] != sig:
-        entry[1].unpersist()
-        entry = None
-    if entry is None:
+    cap = (
+        max_bitmap_bytes
+        if max_bitmap_bytes is not None
+        else _BLOOM_BITMAP_MAX_BYTES
+    )
+
+    def check(m: int, n_shards: int) -> None:
+        total = n_shards * (m // _BLOOM_WORD_BITS + 1) * 8
+        if total > cap:
+            raise ValueError(
+                f"dense bloom bitmap would materialize {total} bytes "
+                f"across {n_shards} shard(s) (> {cap}); the declared "
+                "capacity is likely mis-sized — shrink it, or pass "
+                "max_bitmap_bytes to accept the footprint"
+            )
+
+    def load():
         rows = seen_raw.collect()
         if not rows:
             raise ValueError(
@@ -1075,11 +1024,12 @@ def _bloom_broadcast(spark, seen_path: str, max_bitmap_bytes: int | None = None)
         # mix m values the probe silently misreads, breaking the
         # no-false-negative guarantee (ADVICE r7; merge_bloom_tables
         # already asserts this)
+        sharded = "shard" in seen_raw.columns
         metas = {
             (
                 int(r["m"]),
                 int(r["n_hashes"]),
-                int(r["n_shards"]) if "n_shards" in r.asDict() else 1,
+                int(r["n_shards"]) if sharded else 1,
             )
             for r in rows
         }
@@ -1090,49 +1040,92 @@ def _bloom_broadcast(spark, seen_path: str, max_bitmap_bytes: int | None = None)
                 "one (m, n_hashes, n_shards)"
             )
         m, k, n_shards = next(iter(metas))
-        first = rows[0].asDict()
-        sharded = "shard" in first
-        words_per_shard = m // _BLOOM_WORD_BITS + 1
-        total_bytes = n_shards * words_per_shard * 8
-        cap = (
-            max_bitmap_bytes
-            if max_bitmap_bytes is not None
-            else _BLOOM_BITMAP_MAX_BYTES
-        )
-        if total_bytes > cap:
-            raise ValueError(
-                f"dense bloom bitmap would materialize {total_bytes} bytes "
-                f"across {n_shards} shard(s) (> {cap}); the declared "
-                "capacity is likely mis-sized — shrink it, or pass "
-                "max_bitmap_bytes to accept the footprint"
-            )
-        words = np.zeros((n_shards, words_per_shard), dtype=np.int64)
+        check(m, n_shards)
+        words = np.zeros((n_shards, m // _BLOOM_WORD_BITS + 1), dtype=np.int64)
         for r in rows:
             words[int(r["shard"]) if sharded else 0, int(r["word_idx"])] = int(
                 r["word"]
             )
         # ship the bitmap ONCE per executor, not once per task closure —
         # at the per-shard m <= 2^31 cap the dense array can reach
-        # ~0.5 GB per shard; cache per seen_path so repeated waves reuse
-        # it (release_bloom_cache frees it)
-        entry = (sig, spark.sparkContext.broadcast(words), m, k, n_shards)
-        _BLOOM_CACHES[seen_path] = entry
-    _, bc_words, m, k, n_shards = entry
-    # enforce the caller's cap on cache HITS too — a permissive first
-    # call must not grandfather an oversized bitmap past a later,
-    # stricter caller
-    cached_bytes = n_shards * (m // _BLOOM_WORD_BITS + 1) * 8
-    cap = (
-        max_bitmap_bytes if max_bitmap_bytes is not None else _BLOOM_BITMAP_MAX_BYTES
+        # ~0.5 GB per shard
+        bc_words = seen_raw.sparkSession.sparkContext.broadcast(words)
+        return bc_words, m, k, n_shards
+
+    bc_words, m, k, n_shards = cached_artifact(
+        ("bloom", seen_path), [seen_raw], load
     )
-    if cached_bytes > cap:
-        raise ValueError(
-            f"dense bloom bitmap is {cached_bytes} bytes across "
-            f"{n_shards} shard(s) (> {cap}); the declared capacity is "
-            "likely mis-sized — shrink it, or pass max_bitmap_bytes to "
-            "accept the footprint"
-        )
+    check(m, n_shards)
     return bc_words, m, k, n_shards
+
+
+def _probe_pass(
+    df: DataFrame,
+    col: str,
+    make_check,
+    action: str,
+    flag_col: "str | None",
+    count_col: "str | None",
+    op: str,
+) -> DataFrame:
+    """The ONE row-local drop/flag Arrow pass every ``*_against`` probe
+    runs: ``make_check(count)`` (called once per task, so each task
+    builds its kernel from the broadcast value) returns a check of one
+    ``col`` value. ``action="drop"`` keeps the rows whose check is
+    falsy, schema unchanged; ``action="flag"`` keeps every row and
+    appends ``flag_col`` (boolean, check > 0) plus ``count_col``
+    (bigint, the check's count). ``op`` names the dataop in the
+    column-clash error."""
+    from pyspark.sql.types import (
+        BooleanType,
+        LongType,
+        StructField,
+        StructType,
+    )
+
+    if action not in ("drop", "flag"):
+        raise ValueError(f"unknown action {action!r}: drop|flag")
+    flag_mode = action == "flag"
+    schema = df.schema
+    if flag_mode:
+        for c in (flag_col, count_col):
+            if c in df.columns:
+                raise ValueError(
+                    f"input already has a {c!r} column — rename it "
+                    f"before {op}"
+                )
+        schema = StructType(
+            list(df.schema.fields)
+            + [
+                StructField(flag_col, BooleanType()),
+                StructField(count_col, LongType()),
+            ]
+        )
+    in_cols = df.columns
+
+    def gen(batches):
+        import pandas as pd
+
+        check = make_check(flag_mode)
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            if flag_mode:
+                counts = [check(v) for v in pdf[col]]
+                out = pdf[in_cols].copy()
+                out[flag_col] = pd.Series(
+                    [c > 0 for c in counts], dtype="bool", index=out.index
+                )
+                out[count_col] = pd.Series(
+                    counts, dtype="int64", index=out.index
+                )
+                yield out
+            else:
+                keep = [i for i, v in enumerate(pdf[col]) if not check(v)]
+                if keep:
+                    yield pdf.iloc[keep][in_cols]
+
+    return df.mapInPandas(gen, schema)
 
 
 def dedup_against_bloom_path(
@@ -1156,21 +1149,17 @@ def dedup_against_bloom_path(
     md5/char-fold replay is bit-identical to the Catalyst build
     expressions (pinned by test)."""
     bc_words, m, k, n_shards = _bloom_broadcast(
-        df.sparkSession, seen_path, max_bitmap_bytes
+        df.sparkSession.read.parquet(seen_path), seen_path, max_bitmap_bytes
     )
-    in_cols = [f.name for f in df.schema.fields]
-    tcol = text_col
-
-    def survivors(batches):
-        seen = _bloom_probe_kernel(bc_words.value, m, k, n_shards)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            keep = [i for i, x in enumerate(pdf[tcol]) if not seen(x)]
-            if keep:
-                yield pdf.iloc[keep][in_cols]
-
-    return df.mapInPandas(survivors, df.schema)
+    return _probe_pass(
+        df,
+        text_col,
+        lambda count: _bloom_probe_kernel(bc_words.value, m, k, n_shards),
+        "drop",
+        None,
+        None,
+        "dedup_against",
+    )
 
 
 def _bloom_probe_kernel(wd, m: int, k: int, n_shards: int):
@@ -1573,19 +1562,12 @@ def write_line_bloom_table(
     lifecycle, for corpora whose distinct-line set is too large to
     broadcast as exact digests (size ``capacity`` to the true distinct
     LINE count). Cross-wave accumulation is :func:`merge_bloom_tables`
-    ONLY — in-place ``mode="append"`` is rejected (two waves' sparse
-    bitmap rows clobber each other's bits at load time: silent false
-    negatives; the band-tier lesson). Probe via
-    ``line_dedup_against_path(..., seen_format="bloom")``. No false
-    negatives: a seen line always drops; ~FPR of fresh lines drop with
-    it (bits/key trade, declared)."""
-    if mode == "append":
-        raise ValueError(
-            "bloom tables cannot append in place — rows from two waves "
-            "clobber each other's bits at load time (false negatives); "
-            "write each wave to its own path and OR-merge with "
-            "merge_bloom_tables"
-        )
+    ONLY — :func:`write_bloom_table` rejects in-place ``mode="append"``
+    (two waves' sparse bitmap rows clobber each other's bits at load
+    time: silent false negatives; the band-tier lesson). Probe via
+    :func:`line_dedup_against_path`. No false negatives: a seen line
+    always drops; ~FPR of fresh lines drop with it (bits/key trade,
+    declared)."""
     write_bloom_table(
         _distinct_lines(df, text_col),
         path,
@@ -1598,157 +1580,129 @@ def write_line_bloom_table(
     )
 
 
-#: exact line-digest broadcast caches keyed by seen_path, valued
-#: (file-listing signature, broadcast frozenset of 16-byte digests) —
-#: the line-grain mirror of _BLOOM_CACHES; see
-#: :func:`release_line_digest_cache`
-_LINE_DIGEST_CACHES: dict = {}
-
-#: refuse to broadcast an exact line-digest set larger than this many
-#: keys (~0.6 GB of Python set at 10M) — a bigger seen-set should move
-#: to the bloom tier (write_line_bloom_table), not strain executors;
-#: callers who accept the footprint pass max_broadcast_digests
-_LINE_DIGEST_MAX_KEYS = 10_000_000
+#: refuse to broadcast an exact digest set larger than this many keys
+#: (~0.6 GB of Python set at 10M) — a bigger seen-set should move to
+#: the bloom tier, not strain executors; callers who accept the
+#: footprint pass max_broadcast_digests
+_DIGEST_MAX_KEYS = 10_000_000
 
 
-def release_line_digest_cache(seen_path: str | None = None) -> int:
-    """Unpersist the broadcast line-digest set for ``seen_path`` (or
-    ALL when None) — the line-grain mirror of
-    :func:`release_digest_cache` / :func:`release_bloom_cache`.
-    Returns the number released."""
-    paths = (
-        [seen_path]
-        if seen_path is not None
-        else list(_LINE_DIGEST_CACHES)
-    )
-    released = 0
-    for p in paths:
-        entry = _LINE_DIGEST_CACHES.pop(p, None)
-        if entry is not None:
-            entry[1].unpersist()
-            released += 1
-    return released
-
-
-def _line_digest_broadcast(
-    spark,
+def _digest_broadcast(
+    seen_raw: DataFrame,
     seen_path: str,
-    max_broadcast_digests: int | None = None,
-    grain: str = "line",
+    max_broadcast_digests: int | None,
+    remedy: str,
 ):
-    """Broadcast frozenset of 16-byte digests for a
-    :func:`write_line_digest_table` / :func:`write_span_digest_table`
-    artifact at ``seen_path`` — cached per path, invalidated when the
-    artifact's parquet file listing changes (a wave appending or
-    rewriting the table rotates the cache), released via
-    :func:`release_line_digest_cache` (alias
-    :func:`release_span_digest_cache`). ``grain`` labels the fail-loud
-    messaging so a span-grain caller is pointed at the span-grain
-    bloom writer."""
-    seen_raw = spark.read.parquet(seen_path)
-    sig = tuple(sorted(seen_raw.inputFiles()))
-    entry = _LINE_DIGEST_CACHES.get(seen_path)
-    if entry is not None and entry[0] != sig:
-        entry[1].unpersist()
-        entry = None
-    if entry is None:
-        cap = (
-            max_broadcast_digests
-            if max_broadcast_digests is not None
-            else _LINE_DIGEST_MAX_KEYS
-        )
-        # the broadcast set is the DISTINCT digest set (append-mode
-        # waves overlap by design — 'overlap between appends is
-        # harmless'), so the cap must count distinct keys, not raw
-        # parquet rows; the distinct is the same one the collect pays
-        n = seen_raw.select("digest").distinct().count()
-        if n > cap:
-            raise ValueError(
-                f"{grain}-digest table at {seen_path!r} holds {n} "
-                f"distinct digests (> {cap}) — too large to broadcast "
-                f"exactly; use the bloom tier (write_{grain}_bloom_table "
-                "+ seen_format='bloom'), or pass max_broadcast_digests "
-                "to accept the footprint"
-            )
-        digests = frozenset(
-            bytes.fromhex(r["digest"])
-            for r in seen_raw.select("digest").distinct().collect()
-        )
-        entry = (sig, spark.sparkContext.broadcast(digests))
-        _LINE_DIGEST_CACHES[seen_path] = entry
-    # enforce the caller's cap on cache HITS too — a permissive first
-    # call must not grandfather an oversized set past a later, stricter
-    # caller (the r8 bloom-cache rule; the driver holds the broadcast
-    # value, so len() is free)
+    """Broadcast frozenset of the 16-byte digests in the digest table
+    ``seen_raw`` read from ``seen_path`` (any ``write_*digest_table``
+    artifact) — one :func:`~.util.cached_artifact` entry per path. One
+    read collects at most cap + 1 DISTINCT digests (append-mode waves
+    overlap by design, so the cap counts distinct keys, not parquet
+    rows): no collect holds more than that, and the cap fails
+    loud both on the load and on a cache hit (a permissive first call
+    must not grandfather an oversized set past a later, stricter
+    caller). ``remedy`` names the alternative in the error."""
     cap = (
         max_broadcast_digests
         if max_broadcast_digests is not None
-        else _LINE_DIGEST_MAX_KEYS
+        else _DIGEST_MAX_KEYS
     )
-    if len(entry[1].value) > cap:
-        raise ValueError(
-            f"{grain}-digest table at {seen_path!r} holds "
-            f"{len(entry[1].value)} distinct digests (> {cap}) — too "
-            f"large to broadcast exactly; use the bloom tier "
-            f"(write_{grain}_bloom_table + seen_format='bloom'), or "
-            "pass max_broadcast_digests to accept the footprint"
+
+    def check(n: int) -> None:
+        if n > cap:
+            raise ValueError(
+                f"digest table at {seen_path!r} holds more than {cap} "
+                f"distinct digests — too large to broadcast exactly; "
+                f"{remedy}, or pass max_broadcast_digests to accept the "
+                "footprint"
+            )
+
+    def load():
+        rows = seen_raw.select("digest").distinct().limit(cap + 1).collect()
+        check(len(rows))
+        return seen_raw.sparkSession.sparkContext.broadcast(
+            frozenset(bytes.fromhex(r["digest"]) for r in rows)
         )
-    return entry[1]
+
+    bc = cached_artifact(("digests", seen_path), [seen_raw], load)
+    check(len(bc.value))
+    return bc
 
 
-#: span-grain alias — line- and span-digest broadcasts share one cache
-#: (keyed by artifact path), so one release function serves both; the
-#: alias keeps span-grain call sites self-describing
-release_span_digest_cache = release_line_digest_cache
+def _digest_probe_kernel(seen_set):
+    """``key → bool`` membership in a resolved exact digest set (the
+    ``.value`` of a :func:`_digest_broadcast` broadcast) — the exact
+    tier's mirror of :func:`_bloom_probe_kernel`, with the same null
+    policy: ``None`` probes as ``""`` (:func:`_content_digest`)."""
+    import hashlib
+
+    def seen(key) -> bool:
+        k = key if key is not None else ""
+        return hashlib.md5(k.encode("utf-8")).digest() in seen_set
+
+    return seen
+
+
+#: the columns a write_bloom_table artifact carries (the shard columns
+#: are absent from pre-sharding artifacts)
+_BLOOM_COLS = frozenset({"word_idx", "word", "m", "n_hashes"})
+
+
+def _seen_format(columns) -> "str | None":
+    """The tier an artifact's columns declare: ``"bloom"`` for a
+    ``write_*bloom_table`` bitmap, ``"digests"`` for a
+    ``write_*digest_table`` digest set, None for anything else."""
+    if _BLOOM_COLS <= set(columns):
+        return "bloom"
+    if "digest" in columns:
+        return "digests"
+    return None
 
 
 def _seen_probe_factory(
     spark,
     seen_path: str,
-    seen_format: str,
     max_bitmap_bytes: int | None,
     max_broadcast_digests: int | None,
-    grain: str = "line",
+    grain: str,
 ):
     """A zero-arg factory producing a ``key_string → bool`` seen-probe
-    for a digest-table or bloom artifact — the ONE closure-shipping
-    definition the line-grain and span-grain probes share (``grain``
-    labels the digest tier's fail-loud messaging). Call the factory
-    INSIDE the Arrow generator so each task builds its own kernel from
-    the broadcast value."""
-    if seen_format == "bloom":
+    for the artifact at ``seen_path`` — the ONE closure-shipping
+    definition every seen-set probe shares. The artifact's columns
+    select the tier (see :func:`_seen_format`): a bloom bitmap, or the
+    exact digest set. ``grain`` names the grain's bloom writer in the
+    digest tier's fail-loud message. Call the factory INSIDE the Arrow
+    generator so each task builds its own kernel from the broadcast
+    value."""
+    seen_raw = spark.read.parquet(seen_path)
+    fmt = _seen_format(seen_raw.columns)
+    if fmt == "bloom":
         bc_words, m, k, n_shards = _bloom_broadcast(
-            spark, seen_path, max_bitmap_bytes
+            seen_raw, seen_path, max_bitmap_bytes
         )
-
-        def make_probe():
-            return _bloom_probe_kernel(bc_words.value, m, k, n_shards)
-
-    elif seen_format == "digests":
-        bc = _line_digest_broadcast(
-            spark, seen_path, max_broadcast_digests, grain=grain
+        return lambda: _bloom_probe_kernel(bc_words.value, m, k, n_shards)
+    if fmt == "digests":
+        writer = (
+            "write_bloom_table"
+            if grain == "document"
+            else f"write_{grain}_bloom_table"
         )
-
-        def make_probe():
-            import hashlib
-
-            seen_set = bc.value
-
-            def seen(key: str) -> bool:
-                return hashlib.md5(key.encode("utf-8")).digest() in seen_set
-
-            return seen
-
-    else:
-        raise ValueError(f"unknown seen_format {seen_format!r}: digests|bloom")
-    return make_probe
+        bc = _digest_broadcast(
+            seen_raw, seen_path, max_broadcast_digests,
+            f"use the bloom tier ({writer})",
+        )
+        return lambda: _digest_probe_kernel(bc.value)
+    raise ValueError(
+        f"{seen_path!r} holds neither a bloom table (write_*bloom_table: "
+        f"{sorted(_BLOOM_COLS)} columns) nor a digest table "
+        "(write_*digest_table: a 'digest' column)"
+    )
 
 
 def line_dedup_against_path(
     df: DataFrame,
     seen_path: str,
     text_col: str = "text",
-    seen_format: str = "digests",
     max_bitmap_bytes: int | None = None,
     max_broadcast_digests: int | None = None,
 ) -> DataFrame:
@@ -1779,11 +1733,11 @@ def line_dedup_against_path(
       ``line_dedup(line_dedup_against_path(wave2, digests(wave1)))``.
 
     Scale shape: ONE row-local Arrow ``mapInPandas`` pass — no join,
-    no shuffle, no state — with the seen-set in the task closure:
-    ``seen_format="digests"`` broadcasts the exact 16-byte digest set
-    (bounded by ``max_broadcast_digests``, default 10M keys — the
-    exact tier), ``seen_format="bloom"`` probes a
-    :func:`write_line_bloom_table` bitmap via the shared
+    no shuffle, no state — with the seen-set in the task closure, its
+    tier read from the artifact: a :func:`write_line_digest_table`
+    table broadcasts the exact 16-byte digest set (bounded by
+    ``max_broadcast_digests``, default 10M keys — the exact tier), a
+    :func:`write_line_bloom_table` bitmap is probed via the shared
     :func:`_bloom_probe_kernel` (the 100-TB tier: bits-per-line
     instead of 16 bytes; seen lines still always drop, ~FPR of fresh
     lines drop with them). Append-safe under Structured Streaming.
@@ -1800,7 +1754,7 @@ def line_dedup_against_path(
             "before line_dedup_against"
         )
     make_probe = _seen_probe_factory(
-        spark, seen_path, seen_format, max_bitmap_bytes, max_broadcast_digests
+        spark, seen_path, max_bitmap_bytes, max_broadcast_digests, "line"
     )
 
     from pyspark.sql.types import LongType, StructField, StructType
@@ -1874,7 +1828,6 @@ def write_span_digest_table(
     (
         _distinct_spans(df, text_col, span_sentences)
         .select(F.md5("span").alias("digest"))
-        .distinct()
         .write.mode(mode)
         .parquet(path)
     )
@@ -1896,13 +1849,6 @@ def write_span_bloom_table(
     the ordinary portable bloom build over the distinct span strings.
     Cross-wave accumulation is :func:`merge_bloom_tables` ONLY
     (in-place append clobbers bits — see the line-grain writer)."""
-    if mode == "append":
-        raise ValueError(
-            "bloom tables cannot append in place — rows from two waves "
-            "clobber each other's bits at load time (false negatives); "
-            "write each wave to its own path and OR-merge with "
-            "merge_bloom_tables"
-        )
     write_bloom_table(
         _distinct_spans(df, text_col, span_sentences),
         path,
@@ -1920,7 +1866,6 @@ def span_dedup_against_path(
     seen_path: str,
     span_sentences: int = 3,
     text_col: str = "text",
-    seen_format: str = "digests",
     max_bitmap_bytes: int | None = None,
     max_broadcast_digests: int | None = None,
 ) -> DataFrame:
@@ -1965,8 +1910,7 @@ def span_dedup_against_path(
             "before span_dedup_against"
         )
     make_probe = _seen_probe_factory(
-        spark, seen_path, seen_format, max_bitmap_bytes,
-        max_broadcast_digests, grain="span",
+        spark, seen_path, max_bitmap_bytes, max_broadcast_digests, "span"
     )
 
     from pyspark.sql.types import LongType, StructField, StructType
@@ -2124,13 +2068,6 @@ def write_ngram_bloom_table(
     clobbers bits — see the line-grain writer)."""
     if n < 1:
         raise ValueError("n must be >= 1")
-    if mode == "append":
-        raise ValueError(
-            "bloom tables cannot append in place — rows from two waves "
-            "clobber each other's bits at load time (false negatives); "
-            "write each wave to its own path and OR-merge with "
-            "merge_bloom_tables"
-        )
     write_bloom_table(
         _distinct_ngrams(df, text_col, n),
         path,
@@ -2193,7 +2130,6 @@ def decontaminate_against_path(
     action: str = "drop",
     flag_col: str = "contaminated",
     count_col: str = "n_dirty_ngrams",
-    seen_format: str = "digests",
     max_bitmap_bytes: int | None = None,
     max_broadcast_digests: int | None = None,
 ) -> DataFrame:
@@ -2241,77 +2177,21 @@ def decontaminate_against_path(
     the deployment shape (and the published case/punctuation-
     insensitive token convention at the published n).
     """
-    spark = df.sparkSession
     if n < 1:
         raise ValueError("n must be >= 1")
-    if action not in ("drop", "flag"):
-        raise ValueError(f"unknown action {action!r}: drop|flag")
-    if action == "flag":
-        for c in (flag_col, count_col):
-            if c in df.columns:
-                raise ValueError(
-                    f"input already has a {c!r} column — rename it "
-                    "before decontaminate_against"
-                )
     make_probe = _seen_probe_factory(
-        spark, seen_path, seen_format, max_bitmap_bytes,
-        max_broadcast_digests, grain="ngram",
+        df.sparkSession, seen_path, max_bitmap_bytes, max_broadcast_digests,
+        "ngram",
     )
-
-    from pyspark.sql.types import (
-        BooleanType,
-        LongType,
-        StructField,
-        StructType,
+    return _probe_pass(
+        df,
+        text_col,
+        lambda count: _decontam_probe_kernel(make_probe(), n, count),
+        action,
+        flag_col,
+        count_col,
+        "decontaminate_against",
     )
-
-    in_cols = [f.name for f in df.schema.fields]
-    if action == "flag":
-        schema = StructType(
-            list(df.schema.fields)
-            + [
-                StructField(flag_col, BooleanType()),
-                StructField(count_col, LongType()),
-            ]
-        )
-    else:
-        schema = df.schema
-    tcol = text_col
-    flag_mode = action == "flag"
-
-    def gen(batches):
-        import pandas as pd
-
-        check = _decontam_probe_kernel(make_probe(), n, count=flag_mode)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            keep_idx, flags, counts = [], [], []
-            for i, t in enumerate(pdf[tcol]):
-                if flag_mode:
-                    n_dirty = check(t)
-                    keep_idx.append(i)
-                    flags.append(n_dirty > 0)
-                    counts.append(n_dirty)
-                elif not check(t):
-                    keep_idx.append(i)
-            if keep_idx:
-                out = pdf.iloc[keep_idx][in_cols].copy()
-                if flag_mode:
-                    out[flag_col] = pd.Series(
-                        flags, dtype="bool", index=out.index
-                    )
-                    out[count_col] = pd.Series(
-                        counts, dtype="int64", index=out.index
-                    )
-                yield out
-
-    return df.mapInPandas(gen, schema)
-
-
-#: n-gram-grain alias — the decontamination digest broadcasts share the
-#: line/span digest cache (keyed by artifact path)
-release_ngram_digest_cache = release_line_digest_cache
 
 
 def _simhash_sigs_arrow(
@@ -2569,39 +2449,13 @@ def _distinct_band_keys(
     return scale_out(df.select(text_col)).mapInPandas(gen, schema).distinct()
 
 
-def _write_band_geometry(
-    spark, path: str, n: int, k: int, rows_per_band: int, mode: str
-) -> None:
-    (
-        spark.createDataFrame(
-            [(int(n), int(k), int(rows_per_band))],
-            "n int, k int, rows_per_band int",
-        )
-        .coalesce(1)
-        .write.mode(mode)
-        .parquet(f"{path.rstrip('/')}/geometry")
-    )
+_BAND_GEOMETRY = ("n", "k", "rows_per_band")
 
 
 def _band_geometry(spark, path: str) -> "tuple[int, int, int]":
-    """Read and validate the ONE geometry of a band artifact at
-    ``path`` — the probe derives (n, k, rows_per_band) FROM the
-    artifact, so there is no probe-side parameter to mismatch (the
-    bloom single-geometry lesson, solved by construction). Mixed
-    geometries (appends under different parameters) fail loud."""
-    rows = (
-        spark.read.parquet(f"{path.rstrip('/')}/geometry")
-        .distinct()
-        .collect()
-    )
-    if len(rows) != 1:
-        raise ValueError(
-            f"band artifact at {path!r} holds {len(rows)} distinct "
-            "geometries — every wave must register under the SAME "
-            "(n, k, rows_per_band); rebuild the artifact"
-        )
-    r = rows[0]
-    return int(r["n"]), int(r["k"]), int(r["rows_per_band"])
+    """The (n, k, rows_per_band) a band artifact was registered under
+    (:func:`~.util.read_geometry`)."""
+    return read_geometry(spark, path, _BAND_GEOMETRY, "band artifact")
 
 
 def write_band_digest_table(
@@ -2637,26 +2491,17 @@ def write_band_digest_table(
     :func:`minhash_lsh_pairs` candidate-join property).
     """
     _band_geometry_check(n, k, rows_per_band)
-    from .util import path_exists
-
-    if mode == "append" and path_exists(
-        df.sparkSession, f"{path.rstrip('/')}/geometry"
-    ):
-        existing = _band_geometry(df.sparkSession, path)
-        if existing != (int(n), int(k), int(rows_per_band)):
-            raise ValueError(
-                f"geometry mismatch appending to {path!r}: artifact "
-                f"registered under (n, k, rows_per_band)={existing}, "
-                f"append requested {(int(n), int(k), int(rows_per_band))}"
-                " — nothing was written; rebuild or match the geometry"
-            )
+    geometry = dict(zip(_BAND_GEOMETRY, (n, k, rows_per_band)))
+    check_append_geometry(
+        df.sparkSession, path, mode, geometry, "band artifact"
+    )
     (
         _distinct_band_keys(df, text_col, n, k, rows_per_band)
         .select(F.md5("band").alias("digest"))
         .write.mode(mode)
         .parquet(f"{path.rstrip('/')}/bands")
     )
-    _write_band_geometry(df.sparkSession, path, n, k, rows_per_band, mode)
+    write_geometry(df.sparkSession, path, geometry, mode)
 
 
 def write_band_bloom_table(
@@ -2676,11 +2521,10 @@ def write_band_bloom_table(
     wave's distinct band keys — the 100-TB tier of the near-dup
     lifecycle, for waves whose band-key set outgrows the exact digest
     broadcast (size ``capacity`` to the true distinct band-key count,
-    ~= kept_docs x n_bands). Probe via
-    ``neardup_against_path(..., seen_format="bloom")``. No false
-    negatives: a genuinely colliding band always hits; ~FPR of fresh
-    bands hit with it — compounding the LSH candidate FP rate by the
-    bloom FP rate (both declared trades). Cross-wave accumulation is
+    ~= kept_docs x n_bands). Probe via :func:`neardup_against_path`.
+    No false negatives: a genuinely colliding band always hits; ~FPR
+    of fresh bands hit with it — compounding the LSH candidate FP rate
+    by the bloom FP rate (both declared trades). Cross-wave accumulation is
     :func:`merge_band_bloom_tables` ONLY — appending sparse bitmap rows
     in place would let the loader's plain row assignment clobber bits
     across waves (silent false negatives), so ``mode="append"`` is
@@ -2703,7 +2547,8 @@ def write_band_bloom_table(
         mode=mode,
         n_shards=n_shards,
     )
-    _write_band_geometry(df.sparkSession, path, n, k, rows_per_band, mode)
+    geometry = dict(zip(_BAND_GEOMETRY, (n, k, rows_per_band)))
+    write_geometry(df.sparkSession, path, geometry, mode)
 
 
 def merge_band_bloom_tables(
@@ -2724,8 +2569,9 @@ def merge_band_bloom_tables(
         f"{out_path.rstrip('/')}/bands",
         mode=mode,
     )
-    n, k, rpb = next(iter(geoms))
-    _write_band_geometry(spark, out_path, n, k, rpb, mode)
+    write_geometry(
+        spark, out_path, dict(zip(_BAND_GEOMETRY, next(iter(geoms)))), mode
+    )
 
 
 def _band_keys_py(n: int, k: int, rows_per_band: int):
@@ -2793,7 +2639,6 @@ def neardup_against_path(
     action: str = "drop",
     flag_col: str = "neardup",
     count_col: str = "n_bands_hit",
-    seen_format: str = "digests",
     max_bitmap_bytes: "int | None" = None,
     max_broadcast_digests: "int | None" = None,
 ) -> DataFrame:
@@ -2837,82 +2682,20 @@ def neardup_against_path(
     (streaming_component.go:289-360).
     """
     spark = df.sparkSession
-    if action not in ("drop", "flag"):
-        raise ValueError(f"unknown action {action!r}: drop|flag")
-    if action == "flag":
-        for c in (flag_col, count_col):
-            if c in df.columns:
-                raise ValueError(
-                    f"input already has a {c!r} column — rename it "
-                    "before neardup_against"
-                )
-    n, k, rows_per_band = _band_geometry(spark, seen_path)
+    geometry = _band_geometry(spark, seen_path)
     make_probe = _seen_probe_factory(
-        spark,
-        f"{seen_path.rstrip('/')}/bands",
-        seen_format,
-        max_bitmap_bytes,
-        max_broadcast_digests,
-        grain="band",
+        spark, f"{seen_path.rstrip('/')}/bands", max_bitmap_bytes,
+        max_broadcast_digests, "band",
     )
-
-    from pyspark.sql.types import (
-        BooleanType,
-        LongType,
-        StructField,
-        StructType,
+    return _probe_pass(
+        df,
+        text_col,
+        lambda count: _neardup_probe_kernel(make_probe(), *geometry, count),
+        action,
+        flag_col,
+        count_col,
+        "neardup_against",
     )
-
-    in_cols = [f.name for f in df.schema.fields]
-    if action == "flag":
-        schema = StructType(
-            list(df.schema.fields)
-            + [
-                StructField(flag_col, BooleanType()),
-                StructField(count_col, LongType()),
-            ]
-        )
-    else:
-        schema = df.schema
-    tcol = text_col
-    flag_mode = action == "flag"
-
-    def gen(batches):
-        import pandas as pd
-
-        check = _neardup_probe_kernel(
-            make_probe(), n, k, rows_per_band, count=flag_mode
-        )
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            keep_idx, flags, counts = [], [], []
-            for i, t in enumerate(pdf[tcol]):
-                if flag_mode:
-                    hits = check(t)
-                    keep_idx.append(i)
-                    flags.append(hits > 0)
-                    counts.append(hits)
-                elif not check(t):
-                    keep_idx.append(i)
-            if keep_idx:
-                out = pdf.iloc[keep_idx][in_cols].copy()
-                if flag_mode:
-                    out[flag_col] = pd.Series(
-                        flags, dtype="bool", index=out.index
-                    )
-                    out[count_col] = pd.Series(
-                        counts, dtype="int64", index=out.index
-                    )
-                yield out
-
-    return df.mapInPandas(gen, schema)
-
-
-#: band-grain alias — the near-dup digest broadcasts share the
-#: line/span/ngram digest cache (keyed by artifact path; release with
-#: the BANDS subpath, f"{path}/bands")
-release_band_digest_cache = release_line_digest_cache
 
 
 def lsh_collision_probability(

@@ -31,7 +31,15 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .hashing import HASH_MOD
-from .util import path_exists, scale_out
+from .util import (
+    cached_artifact,
+    check_append_geometry,
+    path_exists,
+    read_geometry,
+    release_artifact_cache,
+    scale_out,
+    write_geometry,
+)
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -1344,50 +1352,34 @@ def pq_index_build(
     return meta
 
 
-#: loaded-index caches keyed by index path, valued (file-listing
-#: signature of meta/centroids/codebooks, meta dict, books, cents) —
-#: online serving answers a query stream per micro-batch, and the
-#: driver-side artifact loads (3 parquet reads + collects) would
-#: otherwise repeat per batch; invalidated when the artifact listing
-#: changes (rebuild rewrites all three; append reuses them), released
-#: via :func:`release_index_cache` (the bloom/digest cache lifecycle)
-_INDEX_CACHES: dict = {}
-
-
-def release_index_cache(path: str | None = None) -> int:
-    """Drop the loaded-index cache for ``path`` (or ALL when None).
-    Returns the number released."""
-    paths = [path] if path is not None else list(_INDEX_CACHES)
-    released = 0
-    for p in paths:
-        if _INDEX_CACHES.pop(p, None) is not None:
-            released += 1
-    return released
-
-
 def _load_index(spark, path: str):
     """(meta, books, cents) for the :func:`pq_index_build` artifact at
-    ``path`` — cached per path (see ``_INDEX_CACHES``)."""
+    ``path`` — online serving answers a query stream per micro-batch,
+    and these artifact loads (3 parquet reads + collects) would
+    otherwise repeat per batch, so the value is one
+    :func:`~.util.cached_artifact` entry per path: a rebuild rewrites
+    all three parts and rotates it, an append reuses them."""
     frames = {
         part: spark.read.parquet(f"{path}/{part}")
         for part in ("meta", "centroids", "codebooks")
     }
-    sig = tuple(sorted(f for fr in frames.values() for f in fr.inputFiles()))
-    entry = _INDEX_CACHES.get(path)
-    if entry is not None and entry[0] == sig:
-        return entry[1], entry[2], entry[3]
-    meta = frames["meta"].collect()[0].asDict()
-    books_rows = frames["codebooks"].collect()
-    books: list[list[list[float]]] = [
-        [None] * meta["n_codes"] for _ in range(meta["m"])
-    ]
-    for r in books_rows:
-        books[r["subspace"]][r["code"]] = list(r["centroid"])
-    books = [[c for c in sub if c is not None] for sub in books]
-    cents_rows = sorted(frames["centroids"].collect(), key=lambda r: r["cell"])
-    cents = [list(r["centroid"]) for r in cents_rows]
-    _INDEX_CACHES[path] = (sig, meta, books, cents)
-    return meta, books, cents
+
+    def load():
+        meta = frames["meta"].collect()[0].asDict()
+        books_rows = frames["codebooks"].collect()
+        books: list[list[list[float]]] = [
+            [None] * meta["n_codes"] for _ in range(meta["m"])
+        ]
+        for r in books_rows:
+            books[r["subspace"]][r["code"]] = list(r["centroid"])
+        books = [[c for c in sub if c is not None] for sub in books]
+        cents_rows = sorted(
+            frames["centroids"].collect(), key=lambda r: r["cell"]
+        )
+        cents = [list(r["centroid"]) for r in cents_rows]
+        return meta, books, cents
+
+    return cached_artifact(("index", path), list(frames.values()), load)
 
 
 def pq_index_query(
@@ -1665,7 +1657,8 @@ def pq_index_rebalance(
     index at all; local filesystems — on an object store, build to a
     versioned prefix and swap the serving pointer the same way). The
     serving cache rotates on the swap — both via the file-listing
-    signature and an explicit :func:`release_index_cache`.
+    signature and an explicit
+    :func:`~.util.release_artifact_cache`.
     """
     import os
     import shutil
@@ -1700,7 +1693,7 @@ def pq_index_rebalance(
     os.rename(path, old)
     os.rename(staging, path)
     shutil.rmtree(old)
-    release_index_cache(path)
+    release_artifact_cache(path)
     return new_meta
 
 
@@ -1898,39 +1891,7 @@ def _vec_bucket_keys_py(n_tables: int, bits_per_table: int, dim: int):
     return keys
 
 
-def _write_vec_bucket_geometry(
-    spark, path: str, n_tables: int, bits_per_table: int, dim: int,
-    mode: str,
-) -> None:
-    (
-        spark.createDataFrame(
-            [(int(n_tables), int(bits_per_table), int(dim))],
-            "n_tables int, bits_per_table int, dim int",
-        )
-        .coalesce(1)
-        .write.mode(mode)
-        .parquet(f"{path.rstrip('/')}/geometry")
-    )
-
-
-def _vec_bucket_geometry(spark, path: str) -> "tuple[int, int, int]":
-    """Read and validate the ONE geometry of a vector-bucket artifact
-    — the probe derives (n_tables, bits_per_table, dim) FROM the
-    artifact (the band-artifact rule: no probe-side parameter to
-    mismatch); mixed geometries fail loud."""
-    rows = (
-        spark.read.parquet(f"{path.rstrip('/')}/geometry")
-        .distinct()
-        .collect()
-    )
-    if len(rows) != 1:
-        raise ValueError(
-            f"vector-bucket artifact at {path!r} holds {len(rows)} "
-            "distinct geometries — every wave must register under the "
-            "SAME (n_tables, bits_per_table, dim); rebuild the artifact"
-        )
-    r = rows[0]
-    return int(r["n_tables"]), int(r["bits_per_table"]), int(r["dim"])
+_VEC_BUCKET_GEOMETRY = ("n_tables", "bits_per_table", "dim")
 
 
 def _vec_bucket_key_space(n_tables: int, bits_per_table: int) -> int:
@@ -2018,18 +1979,10 @@ def write_vec_bucket_table(
     spark = df.sparkSession
     keys = _vec_bucket_keys_py(n_tables, bits_per_table, dim)
     buckets_path = f"{path.rstrip('/')}/buckets"
-    geom_path = f"{path.rstrip('/')}/geometry"
-    appending = mode == "append" and path_exists(spark, geom_path)
-    if appending:
-        existing_geom = _vec_bucket_geometry(spark, path)
-        if existing_geom != (int(n_tables), int(bits_per_table), int(dim)):
-            raise ValueError(
-                f"geometry mismatch appending to {path!r}: artifact "
-                f"registered under (n_tables, bits_per_table, dim)="
-                f"{existing_geom}, append requested "
-                f"{(int(n_tables), int(bits_per_table), int(dim))} — "
-                "nothing was written; rebuild or match the geometry"
-            )
+    geometry = dict(zip(_VEC_BUCKET_GEOMETRY, (n_tables, bits_per_table, dim)))
+    appending = check_append_geometry(
+        spark, path, mode, geometry, "vector-bucket artifact"
+    )
     schema = StructType([StructField("bucket", StringType())])
     vcol = vec_col
 
@@ -2066,9 +2019,7 @@ def write_vec_bucket_table(
         f"at {path!r} (after this wave)",
     )
     new_digests.write.mode(mode).parquet(buckets_path)
-    _write_vec_bucket_geometry(
-        spark, path, n_tables, bits_per_table, dim, mode
-    )
+    write_geometry(spark, path, geometry, mode)
 
 
 def vec_dedup_against_path(
@@ -2119,94 +2070,30 @@ def vec_dedup_against_path(
     ``max_broadcast_digests`` past that). Append-safe under
     Structured Streaming (the ``semantic_dedup_against`` dataop).
     """
+    from .dedup import _digest_broadcast, _digest_probe_kernel, _probe_pass
+
     spark = df.sparkSession
-    if action not in ("drop", "flag"):
-        raise ValueError(f"unknown action {action!r}: drop|flag")
-    if action == "flag":
-        for c in (flag_col, count_col):
-            if c in df.columns:
-                raise ValueError(
-                    f"input already has a {c!r} column — rename it "
-                    "before vec_dedup_against"
-                )
-    n_tables, bits_per_table, dim = _vec_bucket_geometry(spark, seen_path)
+    n_tables, bits_per_table, dim = read_geometry(
+        spark, seen_path, _VEC_BUCKET_GEOMETRY, "vector-bucket artifact"
+    )
+    buckets = f"{seen_path.rstrip('/')}/buckets"
+    bc = _digest_broadcast(
+        spark.read.parquet(buckets), buckets, max_broadcast_digests,
+        "shard the waves",
+    )
     _vec_bucket_occupancy_check(
-        spark.read.parquet(f"{seen_path.rstrip('/')}/buckets")
-        .select("digest").distinct().count(),
-        n_tables, bits_per_table, max_occupancy,
+        len(bc.value), n_tables, bits_per_table, max_occupancy,
         f"at {seen_path!r}",
     )
-    from .dedup import _seen_probe_factory
 
-    make_probe = _seen_probe_factory(
-        spark,
-        f"{seen_path.rstrip('/')}/buckets",
-        "digests",
-        None,
-        max_broadcast_digests,
-        grain="bucket",
-    )
-
-    from pyspark.sql.types import (
-        BooleanType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    in_cols = [f.name for f in df.schema.fields]
-    if action == "flag":
-        schema = StructType(
-            list(df.schema.fields)
-            + [
-                StructField(flag_col, BooleanType()),
-                StructField(count_col, LongType()),
-            ]
-        )
-    else:
-        schema = df.schema
-    vcol = vec_col
-    flag_mode = action == "flag"
-
-    def gen(batches):
-        import pandas as pd
-
-        probe = make_probe()
+    def make_check(count: bool):
+        probe = _digest_probe_kernel(bc.value)
         keys = _vec_bucket_keys_py(n_tables, bits_per_table, dim)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            keep_idx, flags, counts = [], [], []
-            for i, v in enumerate(pdf[vcol]):
-                ks = keys(v)
-                if flag_mode:
-                    hits = sum(1 for key in ks if probe(key))
-                    keep_idx.append(i)
-                    flags.append(hits > 0)
-                    counts.append(hits)
-                elif not any(probe(key) for key in ks):
-                    keep_idx.append(i)
-            if keep_idx:
-                out = pdf.iloc[keep_idx][in_cols].copy()
-                if flag_mode:
-                    out[flag_col] = pd.Series(
-                        flags, dtype="bool", index=out.index
-                    )
-                    out[count_col] = pd.Series(
-                        counts, dtype="int64", index=out.index
-                    )
-                yield out
+        if count:
+            return lambda v: sum(1 for key in keys(v) if probe(key))
+        return lambda v: any(probe(key) for key in keys(v))
 
-    return df.mapInPandas(gen, schema)
-
-
-def release_vec_bucket_cache(seen_path: "str | None" = None) -> int:
-    """Unpersist the broadcast bucket-digest set for ``seen_path``'s
-    BUCKETS subpath (or ALL cached digest sets when None) — the
-    embedding-grain mirror of ``release_band_digest_cache`` (the
-    digest broadcasts share one cache, keyed by artifact subpath)."""
-    from .dedup import release_line_digest_cache
-
-    return release_line_digest_cache(
-        f"{seen_path.rstrip('/')}/buckets" if seen_path is not None else None
+    return _probe_pass(
+        df, vec_col, make_check, action, flag_col, count_col,
+        "vec_dedup_against",
     )

@@ -5932,9 +5932,9 @@ def docs_curation_e2e(spark, sf_dir):
     drop on both sides (the inner-join contract)."""
     import os
 
-    from .dataops.dedup import release_bloom_cache, write_bloom_table
+    from .dataops.dedup import write_bloom_table
     from .dataops.text import normalize_text, write_classifier_table
-    from .dataops.util import scale_out
+    from .dataops.util import release_artifact_cache, scale_out
     from .streaming.curation import curation_scored_stream
 
     docs = _t(spark, sf_dir, "documents")
@@ -5956,7 +5956,7 @@ def docs_curation_e2e(spark, sf_dir):
     write_classifier_table(
         normed, clf, text_col="text_norm", mode="overwrite"
     )
-    release_bloom_cache(bloom)  # re-read the fresh artifact, not a prior run's
+    release_artifact_cache(bloom)  # re-read the fresh artifact
     out = curation_scored_stream(docs, bloom, clf)
     return out.select(
         "doc_id", "n_tokens_raw", "n_tokens_norm", "score", "pred"
@@ -6436,10 +6436,9 @@ def docs_decontaminate_against(spark, sf_dir):
 
     from .dataops.dedup import (
         decontaminate_against_path,
-        release_ngram_digest_cache,
         write_ngram_digest_table,
     )
-    from .dataops.util import scale_out
+    from .dataops.util import release_artifact_cache, scale_out
 
     docs = _t(spark, sf_dir, "documents")
     base = (
@@ -6451,7 +6450,7 @@ def docs_decontaminate_against(spark, sf_dir):
         docs.filter(F.col("doc_id") % 10 == 0), seen,
         n=_DECONTAM_N, mode="overwrite",
     )
-    release_ngram_digest_cache(seen)  # re-read the fresh artifact
+    release_artifact_cache(seen)  # re-read the fresh artifact
     # single-file parquet reads as ONE partition — scale_out before the
     # compute-heavy inline probe (the r9 inline-DSIR rule; the SERVE
     # path, decontaminate_against_path itself, stays repartition-free)
@@ -7149,6 +7148,11 @@ _STALE_SIGNED = frozenset({
     "docs_top_terms",
     "docs_trained_classifier",
     "emb_pq_index_ann_topk",
+    # one seen-set layer: the probe reads its tier from the artifact
+    # (seen_format= gone), the artifact caches are one path-keyed
+    # cache with one release call, and the drop/flag Arrow pass is
+    # shared. The digest-tier flag verdicts are unchanged; oracle exact:
+    "docs_decontaminate_against",
 })
 
 

@@ -12,21 +12,27 @@ team actually runs on the ingest stream:
     classifier [→ DSIR importance scoring] → windowed rollup to the
     sink
 
-Every stage here is the stream-safe form of an oracle-backed batch op:
+Every stage here is the stream-safe form of an oracle-backed batch op
+(each seen-set probe reads its tier — exact digests or a Bloom bitmap
+— from the artifact's own columns):
 
 - :func:`~clickhouse_etl_spark.dataops.dedup.decontaminate_against_path`
   (optional first stage) — the published 13-gram benchmark-overlap
   drop, eval n-gram set in the task closure
-  (``write_ngram_digest_table`` artifacts);
+  (``write_ngram_digest_table`` or ``write_ngram_bloom_table``
+  artifacts);
 
 - :func:`~clickhouse_etl_spark.dataops.text.normalize_text` — row-local
   Arrow canonicalization (the ``docs_normalize_text`` entry);
-- :func:`~clickhouse_etl_spark.dataops.dedup.dedup_against_path` with
-  ``seen_format="bloom"`` — the 100-TB seen-set tier: one broadcast
-  bitmap probe, no join, no state (``write_bloom_table`` artifacts);
+- :func:`~clickhouse_etl_spark.dataops.dedup.dedup_against_path`
+  against a ``write_bloom_table`` artifact — the 100-TB seen-set tier:
+  one broadcast bitmap probe, no join, no state (a
+  ``write_digest_table`` artifact probes its exact digest set the same
+  way);
 - :func:`~clickhouse_etl_spark.dataops.dedup.neardup_against_path`
   (optional) — the published MinHash-LSH bucket-removal against a
-  persisted band seen-set (``write_band_digest_table`` artifacts),
+  persisted band seen-set (``write_band_digest_table`` or
+  ``write_band_bloom_table`` artifacts),
   probing the CANONICAL text after exact dedup (the published order:
   exact first, fuzzy second);
 - :func:`~clickhouse_etl_spark.dataops.text.classify_against_path` —
@@ -57,9 +63,7 @@ def curation_scored_stream(
     importance_path: "str | None" = None,
     decontam_path: "str | None" = None,
     decontam_n: "int | None" = None,
-    decontam_format: str = "digests",
     neardup_path: "str | None" = None,
-    neardup_format: str = "digests",
 ) -> DataFrame:
     """The row-local curation body (normalize → bloom dedup →
     classifier scoring, plus OPTIONAL DSIR importance scoring) without
@@ -89,20 +93,20 @@ def curation_scored_stream(
     FIRST stage — drop every document sharing any ``decontam_n``-gram
     (default the published 13) with the persisted eval-set artifact
     (:func:`~clickhouse_etl_spark.dataops.dedup.write_ngram_digest_table`,
-    or the bloom tier via ``decontam_format="bloom"``). The probe runs
-    on the RAW text (the published protocol's own case/punctuation
-    fold makes it normalization-independent, and dropping leaked docs
-    before any other work is the deployment order); row-local,
+    or the bloom tier). The probe runs on the RAW text (the published
+    protocol's own case/punctuation fold makes it
+    normalization-independent, and dropping leaked docs before any
+    other work is the deployment order); row-local,
     early-exits on the first dirty gram.
 
     ``neardup_path`` (optional) adds the MinHash-LSH NEAR-dup probe
     after the exact bloom dedup (the published order) — drop every
     document whose band keys collide with a persisted
     :func:`~clickhouse_etl_spark.dataops.dedup.write_band_digest_table`
-    artifact (or the bloom tier via ``neardup_format="bloom"``). The
-    probe runs on the CANONICAL text, so build the band artifact from
-    normalized survivors (``text_col="text_norm"``); geometry is read
-    from the artifact. Row-local, early-exits on the first band hit.
+    artifact (or the bloom tier). The probe runs on the CANONICAL
+    text, so build the band artifact from normalized survivors
+    (``text_col="text_norm"``); geometry is read from the artifact.
+    Row-local, early-exits on the first band hit.
     """
     from ..dataops.dedup import DECONTAM_NGRAM_N
 
@@ -125,8 +129,6 @@ def curation_scored_stream(
 
     from ..dataops.dedup import (
         _band_geometry,
-        _bloom_broadcast,
-        _bloom_probe_kernel,
         _decontam_probe_kernel,
         _neardup_probe_kernel,
         _seen_probe_factory,
@@ -141,7 +143,7 @@ def curation_scored_stream(
     from ..dataops.util import scale_out
 
     spark = docs.sparkSession
-    bc_words, m, k, n_shards = _bloom_broadcast(spark, bloom_path)
+    make_seen = _seen_probe_factory(spark, bloom_path, None, None, "document")
     dim, s_sum, n_tr, wt = _load_classifier(spark, weights_path)
     iw = (
         _load_importance(spark, importance_path)
@@ -149,9 +151,7 @@ def curation_scored_stream(
         else None
     )
     make_dc_probe = (
-        _seen_probe_factory(
-            spark, decontam_path, decontam_format, None, None, grain="ngram"
-        )
+        _seen_probe_factory(spark, decontam_path, None, None, "ngram")
         if decontam_path is not None
         else None
     )
@@ -159,8 +159,7 @@ def curation_scored_stream(
     if neardup_path is not None:
         nd_geom = _band_geometry(spark, neardup_path)
         make_nd_probe = _seen_probe_factory(
-            spark, f"{neardup_path.rstrip('/')}/bands", neardup_format,
-            None, None, grain="band",
+            spark, f"{neardup_path.rstrip('/')}/bands", None, None, "band"
         )
     else:
         nd_geom = make_nd_probe = None
@@ -190,7 +189,7 @@ def curation_scored_stream(
     # change to any stage reaches both by construction
     def fused(batches):
         norm = _normalize_kernel()
-        seen = _bloom_probe_kernel(bc_words.value, m, k, n_shards)
+        seen = make_seen()
         score = _score_kernel(dim, wt, s_sum, n_tr)
         iw_score = _iw_kernel(iw[0], iw[1]) if iw is not None else None
         dirty = (
@@ -265,9 +264,7 @@ def curation_rollup_stream(
     importance_path: "str | None" = None,
     decontam_path: "str | None" = None,
     decontam_n: "int | None" = None,
-    decontam_format: str = "digests",
     neardup_path: "str | None" = None,
-    neardup_format: str = "digests",
 ) -> DataFrame:
     """The full curation chain as ONE streaming frame: scored survivors
     rolled up per (tumbling window, pred) — kept/flagged document
@@ -283,8 +280,7 @@ def curation_rollup_stream(
         docs, bloom_path, weights_path, text_col=text_col,
         importance_path=importance_path,
         decontam_path=decontam_path, decontam_n=decontam_n,
-        decontam_format=decontam_format, neardup_path=neardup_path,
-        neardup_format=neardup_format,
+        neardup_path=neardup_path,
     )
     win = F.window(ts_col, window_duration)
     aggs = [

@@ -675,7 +675,7 @@ def section_r7b(spark) -> None:
     b_sz = sum(os.path.getsize(p) for p in glob.glob(f"{bloom_path}/*.parquet"))
     d_sz = sum(os.path.getsize(p) for p in glob.glob(f"{digest_path}/*.parquet"))
     dt = _best2_build(
-        lambda: dedup_against_path(bd, bloom_path, seen_format="bloom")
+        lambda: dedup_against_path(bd, bloom_path)
     )
     print(
         f"bloom_seen_set: {n_keys} keys, build {t_build:.1f}s, probe "
@@ -698,9 +698,9 @@ def section_r8(spark) -> None:
     from clickhouse_etl_spark.dataops.dedup import (
         dedup_against_path,
         exact_dedup,
-        release_bloom_cache,
         write_bloom_table,
     )
+    from clickhouse_etl_spark.dataops.util import release_artifact_cache
     from clickhouse_etl_spark.dataops.text import (
         classify_against_path,
         write_classifier_table,
@@ -863,11 +863,11 @@ def section_r8(spark) -> None:
     bs, bb = f"{BASE}/bloom_r8_small", f"{BASE}/bloom_r8_big"
     write_bloom_table(docs_small, bs, capacity=n_keys, mode="overwrite")
     write_bloom_table(docs_big, bb, capacity=n_keys, mode="overwrite")
-    release_bloom_cache()
+    release_artifact_cache()
     _pair(
         "bloom_probe",
-        dedup_against_path(docs_small, bs, seen_format="bloom"),
-        dedup_against_path(docs_big, bb, seen_format="bloom"),
+        dedup_against_path(docs_small, bs),
+        dedup_against_path(docs_big, bb),
         n_d_s, n_d_b, unit="docs",
     )
 
@@ -889,7 +889,7 @@ def section_r8(spark) -> None:
     # row and ~every doc flows on to the scorer
     from clickhouse_etl_spark.streaming.curation import curation_scored_stream
 
-    release_bloom_cache()
+    release_artifact_cache()
     _pair(
         "curation_fused_body",
         curation_scored_stream(docs_small, bs, model),
@@ -1036,9 +1036,9 @@ def section_r9(spark) -> None:
     from clickhouse_etl_spark.dataops.dedup import (
         dedup_against_path,
         exact_dedup,
-        release_bloom_cache,
         write_bloom_table,
     )
+    from clickhouse_etl_spark.dataops.util import release_artifact_cache
     from clickhouse_etl_spark.dataops.text import (
         classify_against_path,
         write_classifier_table,
@@ -1068,11 +1068,11 @@ def section_r9(spark) -> None:
     b1, b10 = f"{BASE}/bloom_r9_1m", f"{BASE}/bloom_r9_10m"
     write_bloom_table(d1, b1, capacity=n_keys, mode="overwrite")
     write_bloom_table(d10, b10, capacity=n_keys, mode="overwrite")
-    release_bloom_cache()
+    release_artifact_cache()
     _pair(
         "bloom_probe",
-        dedup_against_path(d1, b1, seen_format="bloom"),
-        dedup_against_path(d10, b10, seen_format="bloom"),
+        dedup_against_path(d1, b1),
+        dedup_against_path(d10, b10),
     )
 
     model = f"{BASE}/clf_r9"
@@ -1086,7 +1086,7 @@ def section_r9(spark) -> None:
         classify_against_path(d10, model),
     )
 
-    release_bloom_cache()
+    release_artifact_cache()
     _pair(
         "curation_fused_body",
         curation_scored_stream(d1, b1, model),
@@ -1169,13 +1169,14 @@ def section_r10(spark) -> None:
     ratio ≈ 1; > 2 prints SUPER-LINEAR."""
     from clickhouse_etl_spark.dataops.dedup import (
         line_dedup_against_path,
-        release_bloom_cache,
-        release_line_digest_cache,
         sentence_span_dedup,
         write_line_bloom_table,
         write_line_digest_table,
     )
-    from clickhouse_etl_spark.dataops.util import shuffle_partitions_for
+    from clickhouse_etl_spark.dataops.util import (
+        release_artifact_cache,
+        shuffle_partitions_for,
+    )
 
     d1, d10 = _decade_docs(spark)
     spark.conf.set(
@@ -1210,15 +1211,14 @@ def section_r10(spark) -> None:
     )
     _pair(
         "line_dedup_against[bloom]",
-        line_dedup_against_path(d1, bloom_path, seen_format="bloom"),
-        line_dedup_against_path(d10, bloom_path, seen_format="bloom"),
+        line_dedup_against_path(d1, bloom_path),
+        line_dedup_against_path(d10, bloom_path),
     )
-    release_line_digest_cache(dig_path)
-    release_bloom_cache(bloom_path)
+    release_artifact_cache(dig_path)
+    release_artifact_cache(bloom_path)
     # span-grain probe: same artifact/broadcast machinery, plus the
     # per-doc sentence split + k-span digesting in the kernel
     from clickhouse_etl_spark.dataops.dedup import (
-        release_span_digest_cache,
         span_dedup_against_path,
         write_span_digest_table,
     )
@@ -1245,7 +1245,7 @@ def section_r10(spark) -> None:
         span_dedup_against_path(lin1, span_path),
         span_dedup_against_path(lin10, span_path),
     )
-    release_span_digest_cache(span_path)
+    release_artifact_cache(span_path)
     # same lineation for the batch op: raw docs carry ONE sentence each
     # (no terminal marks -> no 3-spans -> the shuffle would be empty);
     # lineated, every span repeats 100+ ways — the all-dup worst case
@@ -1263,7 +1263,6 @@ def section_r10(spark) -> None:
     # flag enumerates every distinct dirty gram (the audit worst case).
     from clickhouse_etl_spark.dataops.dedup import (
         decontaminate_against_path,
-        release_ngram_digest_cache,
         write_ngram_digest_table,
     )
 
@@ -1286,7 +1285,7 @@ def section_r10(spark) -> None:
         decontaminate_against_path(d1, ngram_path, action="flag"),
         decontaminate_against_path(d10, ngram_path, action="flag"),
     )
-    release_ngram_digest_cache(ngram_path)
+    release_artifact_cache(ngram_path)
 
 
 def section_r10b(spark) -> None:
@@ -1301,13 +1300,14 @@ def section_r10b(spark) -> None:
     SUPER-LINEAR."""
     from clickhouse_etl_spark.dataops.dedup import (
         neardup_against_path,
-        release_band_digest_cache,
-        release_bloom_cache,
         write_band_bloom_table,
         write_band_digest_table,
     )
     from clickhouse_etl_spark.dataops.text import gopher_repetition
-    from clickhouse_etl_spark.dataops.util import shuffle_partitions_for
+    from clickhouse_etl_spark.dataops.util import (
+        release_artifact_cache,
+        shuffle_partitions_for,
+    )
 
     d1, d10 = _decade_docs(spark)
     spark.conf.set(
@@ -1347,11 +1347,11 @@ def section_r10b(spark) -> None:
     )
     _pair(
         "neardup_against[bloom,drop]",
-        neardup_against_path(d1, band_bloom, seen_format="bloom"),
-        neardup_against_path(d10, band_bloom, seen_format="bloom"),
+        neardup_against_path(d1, band_bloom),
+        neardup_against_path(d10, band_bloom),
     )
-    release_band_digest_cache(f"{band_path}/bands")
-    release_bloom_cache(f"{band_bloom}/bands")
+    release_artifact_cache(band_path)
+    release_artifact_cache(band_bloom)
 
     # the repetition battery: pure per-row compute, zero shuffle — the
     # n=5..10 coverage masks dominate (six Counter passes per doc)
@@ -1369,7 +1369,6 @@ def section_r10b(spark) -> None:
     # probe selectivity — signature + probe per vector with most
     # probes missing, the production shape
     from clickhouse_etl_spark.dataops.similarity import (
-        release_vec_bucket_cache,
         vec_dedup_against_path,
         write_vec_bucket_table,
     )
@@ -1401,7 +1400,7 @@ def section_r10b(spark) -> None:
         n1=100_000,
         n10=1_000_000,
     )
-    release_vec_bucket_cache(vb_path)
+    release_artifact_cache(vb_path)
 
 
 def main() -> None:

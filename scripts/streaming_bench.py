@@ -110,8 +110,8 @@ def ann_serving_bench(spark) -> None:
         pq_index_build,
         pq_index_query,
         pq_index_serve_foreach_batch,
-        release_index_cache,
     )
+    from clickhouse_etl_spark.dataops.util import release_artifact_cache
 
     n_vec = 1_000_000
     path = "/tmp/scale_pq_index"
@@ -141,7 +141,7 @@ def ann_serving_bench(spark) -> None:
             .write.mode("append")
             .parquet(qsrc)
         )
-    release_index_cache(path)
+    release_artifact_cache(path)
     # warm: one batch answer pays codegen + the one-time artifact load
     pq_index_query(
         spark, path,
@@ -198,13 +198,11 @@ def curation_chain_bench(spark) -> None:
     from pyspark.sql import types as T
 
     from clickhouse_etl_spark.dataops.dedup import (
-        release_band_digest_cache,
-        release_bloom_cache,
-        release_ngram_digest_cache,
         write_band_digest_table,
         write_bloom_table,
         write_ngram_digest_table,
     )
+    from clickhouse_etl_spark.dataops.util import release_artifact_cache
     from clickhouse_etl_spark.dataops.text import (
         normalize_text,
         write_classifier_table,
@@ -281,9 +279,7 @@ def curation_chain_bench(spark) -> None:
     ):
         best = float("inf")
         for i in range(2):
-            release_bloom_cache(bloom_path)
-            release_ngram_digest_cache()
-            release_band_digest_cache()
+            release_artifact_cache()
             tag = f"{'iw' if iw else 'plain'}{'_dc' if dc else ''}{'_nd' if nd else ''}"
             ckpt = f"{BASE}/curation_ckpt_{tag}_{i}"
             shutil.rmtree(ckpt, ignore_errors=True)
@@ -512,11 +508,10 @@ def line_dedup_lifecycle_bench(spark) -> None:
     closure artifact's footprint)."""
     from clickhouse_etl_spark.dataops.dedup import (
         line_dedup_against_path,
-        release_bloom_cache,
-        release_line_digest_cache,
         write_line_bloom_table,
         write_line_digest_table,
     )
+    from clickhouse_etl_spark.dataops.util import release_artifact_cache
 
     docs_dir = f"{BASE}/docs"
     digest_path = f"{BASE}/line_digests_seen"
@@ -535,16 +530,13 @@ def line_dedup_lifecycle_bench(spark) -> None:
         )
     schema = docs.schema
     results = {}
-    for label, kw in (
-        ("digests", {"seen_path": digest_path}),
-        ("bloom", {"seen_path": bloom_path, "seen_format": "bloom"}),
-    ):
+    for label, seen_path in (("digests", digest_path), ("bloom", bloom_path)):
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 8)
             .parquet(docs_dir)
         )
-        chain = line_dedup_against_path(stream, **kw)
+        chain = line_dedup_against_path(stream, seen_path)
         best = float("inf")
         for i in range(2):
             ckpt = f"{BASE}/line_dedup_ckpt_{label}_{i}"
@@ -560,8 +552,8 @@ def line_dedup_lifecycle_bench(spark) -> None:
             q.awaitTermination()
             best = min(best, time.perf_counter() - t0)
         results[label] = best
-    release_line_digest_cache(digest_path)
-    release_bloom_cache(bloom_path)
+    release_artifact_cache(digest_path)
+    release_artifact_cache(bloom_path)
     print(
         json.dumps(
             {
@@ -587,11 +579,10 @@ def neardup_lifecycle_bench(spark) -> None:
     compute-heaviest of the row-local probe stages."""
     from clickhouse_etl_spark.dataops.dedup import (
         neardup_against_path,
-        release_band_digest_cache,
-        release_bloom_cache,
         write_band_bloom_table,
         write_band_digest_table,
     )
+    from clickhouse_etl_spark.dataops.util import release_artifact_cache
 
     docs_dir = f"{BASE}/docs"
     digest_path = f"{BASE}/band_digests_seen"
@@ -610,16 +601,13 @@ def neardup_lifecycle_bench(spark) -> None:
         )
     schema = docs.schema
     results = {}
-    for label, kw in (
-        ("digests", {"seen_path": digest_path}),
-        ("bloom", {"seen_path": bloom_path, "seen_format": "bloom"}),
-    ):
+    for label, seen_path in (("digests", digest_path), ("bloom", bloom_path)):
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 8)
             .parquet(docs_dir)
         )
-        chain = neardup_against_path(stream, **kw)
+        chain = neardup_against_path(stream, seen_path)
         best = float("inf")
         for i in range(2):
             ckpt = f"{BASE}/neardup_ckpt_{label}_{i}"
@@ -635,8 +623,8 @@ def neardup_lifecycle_bench(spark) -> None:
             q.awaitTermination()
             best = min(best, time.perf_counter() - t0)
         results[label] = best
-    release_band_digest_cache(f"{digest_path}/bands")
-    release_bloom_cache(f"{bloom_path}/bands")
+    release_artifact_cache(digest_path)
+    release_artifact_cache(bloom_path)
     print(
         json.dumps(
             {

@@ -281,9 +281,7 @@ def curation_scored_staged(
     importance_path: "str | None" = None,
     decontam_path: "str | None" = None,
     decontam_n: "int | None" = None,
-    decontam_format: str = "digests",
     neardup_path: "str | None" = None,
-    neardup_format: str = "digests",
 ) -> DataFrame:
     """``curation_scored_stream`` as the composition of the public
     stage dataops, one Arrow pass per stage."""
@@ -303,7 +301,7 @@ def curation_scored_staged(
         docs = decontaminate_against_path(
             docs, decontam_path,
             n=DECONTAM_NGRAM_N if decontam_n is None else decontam_n,
-            text_col=text_col, seen_format=decontam_format,
+            text_col=text_col,
         )
     normed = normalize_text(docs, text_col=text_col, id_col=id_col)
     # the PROBE half only (not dedup_against_path, whose batch form adds
@@ -314,8 +312,7 @@ def curation_scored_staged(
     )
     if neardup_path is not None:
         fresh = neardup_against_path(
-            fresh, neardup_path, text_col="text_norm",
-            seen_format=neardup_format,
+            fresh, neardup_path, text_col="text_norm"
         )
     scored = classify_against_path(
         fresh, weights_path, text_col="text_norm", id_col=id_col

@@ -1316,6 +1316,14 @@ def test_digest_lifecycle_null_text_policy(spark, tmp_path):
     )
     kept = dedup_against_path(wave2, path)
     assert [r["doc_id"] for r in kept.collect()] == [12]
+    # the row-local exact-tier probe (the fused curation pass's) holds
+    # the same policy: None probes as ""
+    from clickhouse_etl_spark.dataops.dedup import _seen_probe_factory
+    from clickhouse_etl_spark.dataops.util import release_artifact_cache
+
+    seen = _seen_probe_factory(spark, path, None, None, "document")()
+    assert seen(None) and seen("") and not seen("fresh")
+    assert release_artifact_cache(path) == 1
 
 
 @pytest.mark.heavy
@@ -1645,7 +1653,12 @@ def test_release_digest_cache(spark, sf_dir, tmp_path):
     """ADVICE r6: per-path digest caches are reusable within a wave and
     releasable when the wave completes."""
     from clickhouse_etl_spark.dataops import dedup as dd
+    from clickhouse_etl_spark.dataops.util import (
+        _ARTIFACT_CACHE,
+        release_artifact_cache,
+    )
 
+    release_artifact_cache()  # entries other tests left behind
     docs = load_table(spark, sf_dir, "documents")
     seen = str(tmp_path / "digests")
     dd.write_digest_table(docs.limit(50), seen)
@@ -1657,10 +1670,86 @@ def test_release_digest_cache(spark, sf_dir, tmp_path):
     out1 = dd.dedup_against_path(stream, seen)
     out2 = dd.dedup_against_path(stream, seen)
     assert out1.isStreaming and out2.isStreaming
-    assert len(dd._DIGEST_CACHES) == 1
-    assert dd.release_digest_cache(seen) == 1
-    assert dd.release_digest_cache(seen) == 0
-    assert not dd._DIGEST_CACHES
+    assert list(_ARTIFACT_CACHE) == [("digest_frame", seen, None)]
+    assert release_artifact_cache(seen) == 1
+    assert release_artifact_cache(seen) == 0
+    assert not _ARTIFACT_CACHE
+
+
+def test_streaming_digest_cache_keys_text_col(spark, tmp_path):
+    """A documents-table seen set is digested on ``text_col``, so two
+    streaming probes of the same table on different columns must not
+    share one cached digest set: the second probe would otherwise
+    anti-join against the first column's digests."""
+    from clickhouse_etl_spark.dataops import dedup as dd
+    from clickhouse_etl_spark.dataops.util import release_artifact_cache
+
+    seen = str(tmp_path / "seen_docs")
+    spark.createDataFrame(
+        [("a", "x")], "text string, alt string"
+    ).write.parquet(seen)
+    src = str(tmp_path / "stream_src")
+    rows = spark.createDataFrame(
+        [(1, "x", "x")], "doc_id long, text string, alt string"
+    )
+    rows.write.parquet(src)
+
+    def kept(text_col):
+        stream = spark.readStream.schema(rows.schema).parquet(src)
+        name = f"text_col_probe_{text_col}"
+        q = (
+            dd.dedup_against_path(stream, seen, text_col=text_col)
+            .writeStream.format("memory")
+            .queryName(name)
+            .option("checkpointLocation", str(tmp_path / f"ckpt_{text_col}"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        out = spark.sql(f"SELECT doc_id FROM {name}").collect()
+        return [r["doc_id"] for r in out]
+
+    release_artifact_cache(seen)
+    assert kept("text") == [1]  # text digests are {md5("a")}
+    assert kept("alt") == []  # alt digests are {md5("x")}
+    assert release_artifact_cache(seen) == 2
+
+
+def test_release_artifact_cache_by_root_path(spark, tmp_path):
+    """Band and vector-bucket artifacts keep their seen sets under
+    ``/bands`` and ``/buckets``; releasing each by its root path frees
+    them, leaving the cache empty."""
+    from clickhouse_etl_spark.dataops.dedup import (
+        neardup_against_path,
+        write_band_digest_table,
+    )
+    from clickhouse_etl_spark.dataops.similarity import (
+        vec_dedup_against_path,
+        write_vec_bucket_table,
+    )
+    from clickhouse_etl_spark.dataops.util import (
+        _ARTIFACT_CACHE,
+        release_artifact_cache,
+    )
+
+    release_artifact_cache()
+    docs = spark.createDataFrame(
+        [(0, "one two three four five six")], "doc_id long, text string"
+    )
+    vecs = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.5, -1.0])], "vec_id long, embedding array<float>"
+    )
+    band, bucket = str(tmp_path / "band"), str(tmp_path / "bucket")
+    write_band_digest_table(docs, band, mode="overwrite")
+    write_vec_bucket_table(vecs, bucket, dim=4, mode="overwrite")
+    neardup_against_path(docs, band)
+    vec_dedup_against_path(vecs, bucket)
+    assert {k[1] for k in _ARTIFACT_CACHE} == {
+        f"{band}/bands", f"{bucket}/buckets"
+    }
+    assert release_artifact_cache(band) == 1
+    assert release_artifact_cache(bucket + "/") == 1
+    assert not _ARTIFACT_CACHE
 
 
 def test_keep_best_per_cluster_semantics(spark):
@@ -1811,14 +1900,14 @@ def test_bloom_table_no_false_negatives_and_fpr(spark, tmp_path):
         [(10_000 + i, f"seen document number {i}") for i in range(2000)],
         ["doc_id", "text"],
     )
-    out = dedup_against_path(replay, path, seen_format="bloom")
+    out = dedup_against_path(replay, path)
     assert out.count() == 0
 
     fresh = spark.createDataFrame(
         [(20_000 + i, f"fresh document number {i}") for i in range(2000)],
         ["doc_id", "text"],
     )
-    kept = dedup_against_path(fresh, path, seen_format="bloom").count()
+    kept = dedup_against_path(fresh, path).count()
     fpr = 1.0 - kept / 2000.0
     assert fpr < 0.03, f"bloom FPR {fpr} exceeds 3% at 10 bits/key, k=7"
 
@@ -1832,8 +1921,8 @@ def test_bloom_table_no_false_negatives_and_fpr(spark, tmp_path):
     # sharded build (the >214M-key tier mechanism): same guarantees
     path4 = str(tmp_path / "bloom_seen_sharded")
     write_bloom_table(seen, path4, capacity=2000, n_shards=4)
-    assert dedup_against_path(replay, path4, seen_format="bloom").count() == 0
-    kept4 = dedup_against_path(fresh, path4, seen_format="bloom").count()
+    assert dedup_against_path(replay, path4).count() == 0
+    kept4 = dedup_against_path(fresh, path4).count()
     assert 1.0 - kept4 / 2000.0 < 0.03
 
     # per-shard bitmap range guard points at the sharding fix
@@ -2001,6 +2090,10 @@ def test_digest_cache_invalidates_on_rewrite(spark, sf_dir, tmp_path):
     seen-set. The cache key is the parquet file listing (overwrite and
     append both change it)."""
     from clickhouse_etl_spark.dataops import dedup as dd
+    from clickhouse_etl_spark.dataops.util import (
+        _ARTIFACT_CACHE,
+        release_artifact_cache,
+    )
 
     docs = load_table(spark, sf_dir, "documents")
     seen = str(tmp_path / "digests_rw")
@@ -2010,21 +2103,22 @@ def test_digest_cache_invalidates_on_rewrite(spark, sf_dir, tmp_path):
         .selectExpr("value AS doc_id", "CAST(value AS STRING) AS text")
     )
     dd.dedup_against_path(stream, seen)
-    sig1, frame1 = dd._DIGEST_CACHES[seen]
+    key = ("digest_frame", seen, None)
+    sig1, frame1 = _ARTIFACT_CACHE[key]
     # repeat call with an unchanged table: reuses the same cache entry
     dd.dedup_against_path(stream, seen)
-    assert dd._DIGEST_CACHES[seen][0] == sig1
-    assert dd._DIGEST_CACHES[seen][1] is frame1
+    assert _ARTIFACT_CACHE[key][0] == sig1
+    assert _ARTIFACT_CACHE[key][1] is frame1
     # rewrite the table -> new part files -> cache must rotate
     dd.write_digest_table(docs.limit(40), seen, mode="overwrite")
     dd.dedup_against_path(stream, seen)
-    sig2, frame2 = dd._DIGEST_CACHES[seen]
+    sig2, frame2 = _ARTIFACT_CACHE[key]
     assert sig2 != sig1
     # the rotated entry is a FRESH frame over the new listing (the old
     # one was unpersisted; storageLevel can't observe that here because
     # the cache manager matches both frames' identical logical plans)
     assert frame2 is not frame1
-    assert dd.release_digest_cache(seen) == 1
+    assert release_artifact_cache(seen) == 1
 
 
 def test_bloom_probe_rejects_mixed_geometry(spark, tmp_path):
@@ -2066,6 +2160,7 @@ def test_bloom_bitmap_size_guard(spark, tmp_path):
     import pytest as _pytest
 
     from clickhouse_etl_spark.dataops import dedup as dd
+    from clickhouse_etl_spark.dataops.util import release_artifact_cache
 
     docs = spark.createDataFrame(
         [(i, f"doc {i}") for i in range(50)], ["doc_id", "text"]
@@ -2078,7 +2173,7 @@ def test_bloom_bitmap_size_guard(spark, tmp_path):
     assert dd.dedup_against_bloom_path(
         docs, path, max_bitmap_bytes=1 << 30
     ).count() == 0
-    dd.release_bloom_cache(path)
+    release_artifact_cache(path)
 
 
 def test_release_bloom_cache_and_rewrite_invalidation(spark, tmp_path):
@@ -2086,26 +2181,31 @@ def test_release_bloom_cache_and_rewrite_invalidation(spark, tmp_path):
     (no per-call broadcast stacking), invalidates when the artifact is
     rewritten, and releases on demand like the digest cache."""
     from clickhouse_etl_spark.dataops import dedup as dd
+    from clickhouse_etl_spark.dataops.util import (
+        _ARTIFACT_CACHE,
+        release_artifact_cache,
+    )
 
-    dd.release_bloom_cache()
+    release_artifact_cache()
     docs = spark.createDataFrame(
         [(i, f"doc {i}") for i in range(200)], ["doc_id", "text"]
     )
     path = str(tmp_path / "bloom_cache")
     dd.write_bloom_table(docs, path, capacity=1000)
     dd.dedup_against_bloom_path(docs, path)
-    entry1 = dd._BLOOM_CACHES[path]
+    entry1 = _ARTIFACT_CACHE[("bloom", path)]
     dd.dedup_against_bloom_path(docs, path)
-    assert dd._BLOOM_CACHES[path] is entry1  # reused, not re-broadcast
+    # reused, not re-broadcast
+    assert _ARTIFACT_CACHE[("bloom", path)] is entry1
     # rewrite with more keys: the probe must pick up the new bitmap
     more = spark.createDataFrame(
         [(i, f"extra {i}") for i in range(300)], ["doc_id", "text"]
     )
     dd.write_bloom_table(docs.unionByName(more), path, capacity=1000)
     assert dd.dedup_against_bloom_path(more, path).count() == 0
-    assert dd._BLOOM_CACHES[path] is not entry1
-    assert dd.release_bloom_cache(path) == 1
-    assert dd.release_bloom_cache(path) == 0
+    assert _ARTIFACT_CACHE[("bloom", path)] is not entry1
+    assert release_artifact_cache(path) == 1
+    assert release_artifact_cache(path) == 0
 
 
 def test_shingle_stream_preserves_id_type(spark):
@@ -2188,9 +2288,9 @@ def test_curation_fused_engine_identical(spark, sf_dir, tmp_path):
     from pyspark.sql import functions as F
 
     from clickhouse_etl_spark.dataops.dedup import (
-        release_bloom_cache,
         write_bloom_table,
     )
+    from clickhouse_etl_spark.dataops.util import release_artifact_cache
     from clickhouse_etl_spark.dataops.text import (
         normalize_text,
         write_classifier_table,
@@ -2280,10 +2380,7 @@ def test_curation_fused_engine_identical(spark, sf_dir, tmp_path):
     # probe on the RAW text — fused == staged with the stage active,
     # every benchmark-colliding doc is gone, the stage strictly
     # shrinks the survivor set, and clean survivors are unchanged
-    from clickhouse_etl_spark.dataops.dedup import (
-        release_ngram_digest_cache,
-        write_ngram_digest_table,
-    )
+    from clickhouse_etl_spark.dataops.dedup import write_ngram_digest_table
 
     dc_path = str(tmp_path / "fused_eval_ngrams")
     write_ngram_digest_table(
@@ -2330,7 +2427,6 @@ def test_curation_fused_engine_identical(spark, sf_dir, tmp_path):
     # canonical text (composition law)
     from clickhouse_etl_spark.dataops.dedup import (
         neardup_against_path,
-        release_band_digest_cache,
         write_band_digest_table,
     )
 
@@ -2365,9 +2461,9 @@ def test_curation_fused_engine_identical(spark, sf_dir, tmp_path):
         ).select("doc_id").collect()
     }
     assert set(a4) == {row for row in a3 if row[id_i] in nd_clean_ids}
-    release_band_digest_cache(f"{nd_path}/bands")
-    release_ngram_digest_cache(dc_path)
-    release_bloom_cache(bloom)
+    release_artifact_cache(nd_path)
+    release_artifact_cache(dc_path)
+    release_artifact_cache(bloom)
 
 
 def test_shingle_stream_null_id_both_engines(spark):
@@ -2503,23 +2599,27 @@ def test_index_cache_survives_append_rotates_on_rebuild(spark, sf_dir, tmp_path)
     from pyspark.sql import functions as F
 
     from clickhouse_etl_spark.dataops import similarity as sim
+    from clickhouse_etl_spark.dataops.util import (
+        _ARTIFACT_CACHE,
+        release_artifact_cache,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings")
     path = str(tmp_path / "cache_idx")
-    sim.release_index_cache()
+    release_artifact_cache()
     sim.pq_index_build(emb.filter("vec_id < 400"), path)
     queries = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
     before = sim.pq_index_query(spark, path, queries).collect()
     assert before
-    entry0 = sim._INDEX_CACHES[path]
+    entry0 = _ARTIFACT_CACHE[("index", path)]
 
     # append new vectors: cache entry reused, appended ids queryable
     sim.pq_index_append(spark, path, emb.filter("vec_id >= 400"))
     after = sim.pq_index_query(spark, path, queries)
     ids_after = {r["neighbor_id"] for r in after.collect()}
-    assert sim._INDEX_CACHES[path] is entry0
+    assert _ARTIFACT_CACHE[("index", path)] is entry0
     n_codes = spark.read.parquet(f"{path}/codes").count()
     assert n_codes == emb.count()  # append landed
     assert ids_after  # answers still flow over the grown index
@@ -2527,8 +2627,8 @@ def test_index_cache_survives_append_rotates_on_rebuild(spark, sf_dir, tmp_path)
     # rebuild: listings change -> cache rotates
     sim.pq_index_build(emb, path)
     sim.pq_index_query(spark, path, queries.limit(1)).collect()
-    assert sim._INDEX_CACHES[path] is not entry0
-    sim.release_index_cache(path)
+    assert _ARTIFACT_CACHE[("index", path)] is not entry0
+    release_artifact_cache(path)
 
 
 @pytest.mark.heavy
@@ -2544,11 +2644,12 @@ def test_pq_index_cell_skew_report_and_rebalance(spark, sf_dir, tmp_path):
     from pyspark.sql import functions as F
 
     from clickhouse_etl_spark.dataops import similarity as sim
+    from clickhouse_etl_spark.dataops.util import release_artifact_cache
 
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.filter("vec_id < 250").select("vec_id", "embedding")
     path = str(tmp_path / "skew_idx")
-    sim.release_index_cache()
+    release_artifact_cache()
     sim.pq_index_build(base, path, n_centroids=8)
     stats0 = sim.pq_index_cell_stats(spark, path)
     assert stats0["n_cells"] == 8
@@ -2622,7 +2723,7 @@ def test_pq_index_cell_skew_report_and_rebalance(spark, sf_dir, tmp_path):
     sim.pq_index_build(base, lean, n_centroids=8, store_vectors=False)
     with pytest.raises(ValueError, match="store_vectors"):
         sim.pq_index_rebalance(spark, lean)
-    sim.release_index_cache()
+    release_artifact_cache()
 
 
 def test_gopher_rules_battery(spark):
@@ -2745,10 +2846,11 @@ def test_serving_chunks_oversized_query_batch(spark, sf_dir, tmp_path):
     from pyspark.sql import functions as F
 
     from clickhouse_etl_spark.dataops import similarity as sim
+    from clickhouse_etl_spark.dataops.util import release_artifact_cache
 
     emb = load_table(spark, sf_dir, "embeddings")
     path = str(tmp_path / "serve_chunk_idx")
-    sim.release_index_cache()
+    release_artifact_cache()
     sim.pq_index_build(emb.filter("vec_id < 400"), path)
     queries = emb.filter(F.col("vec_id") < 25).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -2777,7 +2879,7 @@ def test_serving_chunks_oversized_query_batch(spark, sf_dir, tmp_path):
         sim.pq_index_query_chunked(
             spark, path, queries, k=3, max_queries=10, max_serve_chunks=2
         )
-    sim.release_index_cache()
+    release_artifact_cache()
 
 
 def test_c4_filters_battery(spark):
@@ -2946,12 +3048,11 @@ def test_span_dedup_against_lifecycle(spark, tmp_path):
     corpus; the Python sentence split replays the Spark expression."""
     from clickhouse_etl_spark.dataops.dedup import (
         _sentences_expr,
-        release_bloom_cache,
-        release_line_digest_cache,
         span_dedup_against_path,
         write_span_bloom_table,
         write_span_digest_table,
     )
+    from clickhouse_etl_spark.dataops.util import release_artifact_cache
 
     wave1 = spark.createDataFrame(
         [(0, "alpha one. beta two. gamma three. delta four.")],
@@ -2991,14 +3092,10 @@ def test_span_dedup_against_lifecycle(spark, tmp_path):
     write_span_bloom_table(wave1, bpath, capacity=100)
     bloom_out = {
         r["doc_id"]: (r["text"], r["n_sentences_kept"])
-        for r in span_dedup_against_path(
-            wave2, bpath, seen_format="bloom"
-        ).collect()
+        for r in span_dedup_against_path(wave2, bpath).collect()
     }
     assert bloom_out == out
-    assert (
-        span_dedup_against_path(wave1, bpath, seen_format="bloom").count() == 0
-    )
+    assert span_dedup_against_path(wave1, bpath).count() == 0
 
     # Python split parity with the Spark expression on the edges
     edges = [
@@ -3026,8 +3123,7 @@ def test_span_dedup_against_lifecycle(spark, tmp_path):
         span_dedup_against_path(
             span_dedup_against_path(wave2, path), path
         )
-    release_line_digest_cache()
-    release_bloom_cache()
+    release_artifact_cache()
 
 
 def test_line_dedup_against_lifecycle(spark, tmp_path):
@@ -3040,9 +3136,9 @@ def test_line_dedup_against_lifecycle(spark, tmp_path):
     from clickhouse_etl_spark.dataops.dedup import (
         line_dedup,
         line_dedup_against_path,
-        release_line_digest_cache,
         write_line_digest_table,
     )
+    from clickhouse_etl_spark.dataops.util import release_artifact_cache
 
     wave1 = spark.createDataFrame(
         [
@@ -3089,7 +3185,7 @@ def test_line_dedup_against_lifecycle(spark, tmp_path):
         r["doc_id"]: r["text_dedup"] for r in line_dedup(probed_frame).collect()
     }
     assert composed == union_out
-    assert release_line_digest_cache(path) == 1
+    assert release_artifact_cache(path) == 1
 
 
 def test_line_dedup_against_bloom_tier(spark, tmp_path):
@@ -3098,10 +3194,10 @@ def test_line_dedup_against_bloom_tier(spark, tmp_path):
     the bloom probe equals the exact digest probe row for row."""
     from clickhouse_etl_spark.dataops.dedup import (
         line_dedup_against_path,
-        release_bloom_cache,
         write_line_bloom_table,
         write_line_digest_table,
     )
+    from clickhouse_etl_spark.dataops.util import release_artifact_cache
 
     wave1 = spark.createDataFrame(
         [(i, f"seen boilerplate line number {i}.\ncommon footer line.") for i in range(50)],
@@ -3120,11 +3216,11 @@ def test_line_dedup_against_bloom_tier(spark, tmp_path):
     write_line_digest_table(wave1, dpath, mode="overwrite")
 
     # replaying wave 1 through the bloom probe leaves nothing
-    assert line_dedup_against_path(wave1, bpath, seen_format="bloom").count() == 0
+    assert line_dedup_against_path(wave1, bpath).count() == 0
 
     bloom_out = {
         r["doc_id"]: (r["text"], r["n_lines_kept"])
-        for r in line_dedup_against_path(wave2, bpath, seen_format="bloom").collect()
+        for r in line_dedup_against_path(wave2, bpath).collect()
     }
     digest_out = {
         r["doc_id"]: (r["text"], r["n_lines_kept"])
@@ -3133,7 +3229,7 @@ def test_line_dedup_against_bloom_tier(spark, tmp_path):
     assert bloom_out == digest_out
     assert set(bloom_out) == {100 + i for i in range(50)}
     assert all(t == f"fresh content line {k - 100}." for k, (t, _) in bloom_out.items())
-    release_bloom_cache(bpath)
+    release_artifact_cache(bpath)
 
 
 def test_line_digest_cache_rotates_on_append(spark, tmp_path):
@@ -3143,9 +3239,9 @@ def test_line_digest_cache_rotates_on_append(spark, tmp_path):
     at line grain)."""
     from clickhouse_etl_spark.dataops.dedup import (
         line_dedup_against_path,
-        release_line_digest_cache,
         write_line_digest_table,
     )
+    from clickhouse_etl_spark.dataops.util import release_artifact_cache
 
     w1 = spark.createDataFrame([(0, "first wave line.")], "doc_id long, text string")
     w2 = spark.createDataFrame([(1, "second wave line.")], "doc_id long, text string")
@@ -3160,13 +3256,13 @@ def test_line_digest_cache_rotates_on_append(spark, tmp_path):
     write_line_digest_table(w2, path, mode="append")
     out2 = line_dedup_against_path(probe_doc, path).collect()
     assert out2[0]["text"] == "still fresh line."
-    assert release_line_digest_cache() >= 1
+    assert release_artifact_cache() >= 1
 
 
 def test_line_dedup_against_guards(spark, tmp_path):
     """Fail-loud surfaces: a seen-set too large to broadcast exactly
     names the bloom tier; an input already carrying n_lines_kept is a
-    clash; an unknown seen_format raises."""
+    clash; a path holding neither artifact format raises."""
     import pytest as _pytest
 
     from clickhouse_etl_spark.dataops.dedup import (
@@ -3201,8 +3297,11 @@ def test_line_dedup_against_guards(spark, tmp_path):
         line_dedup_against_path(
             w1.withColumn("n_lines_kept", F.lit(1)), path
         )
-    with _pytest.raises(ValueError, match="seen_format"):
-        line_dedup_against_path(w1, path, seen_format="nope")
+    # the tier is read from the artifact: a documents table is neither
+    docs_path = str(tmp_path / "docs")
+    w1.write.parquet(docs_path)
+    with _pytest.raises(ValueError, match="neither"):
+        line_dedup_against_path(w1, docs_path)
 
 
 def test_importance_weights_target_affinity(spark):
@@ -3379,9 +3478,9 @@ def test_decontaminate_against_lifecycle(spark, tmp_path):
     cached seen-set rotates on the listing change."""
     from clickhouse_etl_spark.dataops.dedup import (
         decontaminate_against_path,
-        release_ngram_digest_cache,
         write_ngram_digest_table,
     )
+    from clickhouse_etl_spark.dataops.util import release_artifact_cache
 
     bench = spark.createDataFrame(
         [
@@ -3443,7 +3542,7 @@ def test_decontaminate_against_lifecycle(spark, tmp_path):
     }
     assert flagged2[12] == (True, 1)
     assert flagged2[10] == (True, 2)  # suite-1 verdicts unchanged
-    assert release_ngram_digest_cache(path) == 1
+    assert release_artifact_cache(path) == 1
 
 
 def test_decontaminate_ngram_catalyst_python_parity(spark):
@@ -3486,10 +3585,10 @@ def test_decontaminate_bloom_tier(spark, tmp_path):
     tiers agree exactly."""
     from clickhouse_etl_spark.dataops.dedup import (
         decontaminate_against_path,
-        release_bloom_cache,
         write_ngram_bloom_table,
         write_ngram_digest_table,
     )
+    from clickhouse_etl_spark.dataops.util import release_artifact_cache
 
     bench = spark.createDataFrame(
         [(i, f"benchmark question number {i} asks about topic {i}")
@@ -3518,7 +3617,7 @@ def test_decontaminate_bloom_tier(spark, tmp_path):
     blo = {
         r["doc_id"]: (r["contaminated"], r["n_dirty_ngrams"])
         for r in decontaminate_against_path(
-            train, bpath, n=5, action="flag", seen_format="bloom"
+            train, bpath, n=5, action="flag"
         ).collect()
     }
     assert {d for d, (c, _) in dig.items() if c} == {100 + i for i in range(40) if i % 2 == 0}
@@ -3528,7 +3627,7 @@ def test_decontaminate_bloom_tier(spark, tmp_path):
         if c:
             assert blo[d][0]
     assert blo == dig  # deterministic corpus: tiers agree exactly here
-    release_bloom_cache(bpath)
+    release_artifact_cache(bpath)
 
 
 def test_decontaminate_guards(spark, tmp_path):
@@ -3597,9 +3696,9 @@ def test_neardup_against_lifecycle(spark, tmp_path):
         _band_keys_expr,
         _distinct_band_keys,
         neardup_against_path,
-        release_band_digest_cache,
         write_band_digest_table,
     )
+    from clickhouse_etl_spark.dataops.util import release_artifact_cache
 
     wave1 = spark.createDataFrame(
         [
@@ -3666,7 +3765,7 @@ def test_neardup_against_lifecycle(spark, tmp_path):
         for r in neardup_against_path(wave3, path, action="flag").collect()
     }
     assert flagged3[20] == 4
-    assert release_band_digest_cache(f"{path}/bands") == 1
+    assert release_artifact_cache(path) == 1
 
 
 def test_neardup_band_catalyst_python_parity(spark):
@@ -3772,10 +3871,10 @@ def test_neardup_bloom_tier(spark, tmp_path):
     from clickhouse_etl_spark.dataops.dedup import (
         merge_band_bloom_tables,
         neardup_against_path,
-        release_bloom_cache,
         write_band_bloom_table,
         write_band_digest_table,
     )
+    from clickhouse_etl_spark.dataops.util import release_artifact_cache
 
     wave1 = spark.createDataFrame(
         [
@@ -3807,7 +3906,7 @@ def test_neardup_bloom_tier(spark, tmp_path):
     bloom_flags = {
         r["doc_id"]
         for r in neardup_against_path(
-            probe_df, bpath, action="flag", seen_format="bloom"
+            probe_df, bpath, action="flag"
         ).collect()
         if r["neardup"]
     }
@@ -3826,12 +3925,12 @@ def test_neardup_bloom_tier(spark, tmp_path):
     merged_flags = {
         r["doc_id"]
         for r in neardup_against_path(
-            probe_df, mpath, action="flag", seen_format="bloom"
+            probe_df, mpath, action="flag"
         ).collect()
         if r["neardup"]
     }
     assert bloom_flags | {12} <= merged_flags
-    release_bloom_cache()
+    release_artifact_cache()
 
 
 @pytest.mark.heavy
@@ -3876,9 +3975,9 @@ def test_neardup_guards(spark, tmp_path):
     ] == [True]
     # a legacy artifact that DID accumulate two geometries (pre-guard
     # code) still fails loud at probe time
-    from clickhouse_etl_spark.dataops.dedup import _write_band_geometry
+    from clickhouse_etl_spark.dataops.util import write_geometry
 
-    _write_band_geometry(spark, path, 3, 4, 2, "append")
+    write_geometry(spark, path, {"n": 3, "k": 4, "rows_per_band": 2}, "append")
     with _pytest.raises(ValueError, match="distinct geometries"):
         neardup_against_path(docs, path)
 
@@ -4065,10 +4164,10 @@ def test_vec_dedup_against_lifecycle(spark, sf_dir, tmp_path):
     and the cache rotates on the listing change."""
     from clickhouse_etl_spark.dataops.similarity import (
         _vec_bucket_keys_py,
-        release_vec_bucket_cache,
         vec_dedup_against_path,
         write_vec_bucket_table,
     )
+    from clickhouse_etl_spark.dataops.util import release_artifact_cache
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     w1 = emb.filter("vec_id % 2 = 0")
@@ -4127,7 +4226,7 @@ def test_vec_dedup_against_lifecycle(spark, sf_dir, tmp_path):
         path, action="flag",
     ).collect()[0]
     assert again["semantic_neardup"] and again["n_tables_hit"] == 8
-    assert release_vec_bucket_cache(path) == 1
+    assert release_artifact_cache(path) == 1
 
 
 @pytest.mark.heavy
@@ -4226,11 +4325,11 @@ def test_vec_dedup_against_guards(spark, tmp_path):
 
     # a legacy artifact that DID accumulate two geometries (written by
     # pre-guard code) still fails loud at probe time
-    from clickhouse_etl_spark.dataops.similarity import (
-        _write_vec_bucket_geometry,
-    )
+    from clickhouse_etl_spark.dataops.util import write_geometry
 
-    _write_vec_bucket_geometry(spark, path, 8, 4, 8, "append")
+    write_geometry(
+        spark, path, {"n_tables": 8, "bits_per_table": 4, "dim": 8}, "append"
+    )
     with _pytest.raises(ValueError, match="distinct geometries"):
         vec_dedup_against_path(vecs, path)
 

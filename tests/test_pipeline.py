@@ -578,10 +578,11 @@ def test_classify_against_requires_weights_path_at_parse_time(spark):
 
 
 def test_dedup_against_bloom_on_streaming_chain(spark, tmp_path):
-    """seen_format="bloom" on the declarable dedup_against dataop: the
-    probe is one row-local Arrow pass against the closure-shipped
-    bitmap — stream-safe — and drops exactly the seen documents on
-    this corpus (false positives are possible in general, not
+    """A bloom artifact behind the declarable dedup_against dataop
+    (the tier is read from the artifact's columns): the probe is one
+    row-local Arrow pass against the closure-shipped bitmap —
+    stream-safe — and drops exactly the seen documents on this corpus
+    (false positives are possible in general, not
     observed at this size; no false negatives by construction)."""
     from pyspark.sql import types as T
 
@@ -618,7 +619,7 @@ def test_dedup_against_bloom_on_streaming_chain(spark, tmp_path):
         dataops=(
             DataopConfig(
                 op="dedup_against",
-                params={"seen_path": bloom_dir, "seen_format": "bloom"},
+                params={"seen_path": bloom_dir},
             ),
         ),
     )
@@ -687,7 +688,7 @@ def test_repetition_signals_streaming_chain_runs(spark, tmp_path):
 def test_streaming_curation_dataops_spec_chain(spark, tmp_path):
     """The full curation deployment declared through the SPEC surface
     (VERDICT r7 #2, public-API form): normalize_text →
-    dedup_against(seen_format=bloom) → classify_against as v3 dataop
+    dedup_against(bloom artifact) → classify_against as v3 dataop
     transforms on a STREAMING source — the reference's fixed
     filter→dedup→transform order extended with the LLM ops. The stream
     output must equal the fused single-pass curation body on the same
@@ -695,9 +696,9 @@ def test_streaming_curation_dataops_spec_chain(spark, tmp_path):
     from pyspark.sql import types as T
 
     from clickhouse_etl_spark.dataops.dedup import (
-        release_bloom_cache,
         write_bloom_table,
     )
+    from clickhouse_etl_spark.dataops.util import release_artifact_cache
     from clickhouse_etl_spark.dataops.text import (
         normalize_text,
         write_classifier_table,
@@ -749,8 +750,7 @@ def test_streaming_curation_dataops_spec_chain(spark, tmp_path):
         dataops=(
             DataopConfig(op="normalize_text"),
             DataopConfig(op="dedup_against", params={
-                "seen_path": bloom, "seen_format": "bloom",
-                "text_col": "text_norm",
+                "seen_path": bloom, "text_col": "text_norm",
             }),
             DataopConfig(op="classify_against", params={
                 "weights_path": weights, "text_col": "text_norm",
@@ -773,7 +773,7 @@ def test_streaming_curation_dataops_spec_chain(spark, tmp_path):
         for r in spark.sql("SELECT * FROM curation_spec_chain").collect()
     )
     assert got == truth
-    release_bloom_cache(bloom)
+    release_artifact_cache(bloom)
 
 
 @pytest.mark.heavy
@@ -789,13 +789,11 @@ def test_six_stage_curation_chain_from_one_pipeline_json(spark, tmp_path):
     from pyspark.sql import types as T
 
     from clickhouse_etl_spark.dataops.dedup import (
-        release_band_digest_cache,
-        release_bloom_cache,
-        release_ngram_digest_cache,
         write_band_digest_table,
         write_bloom_table,
         write_ngram_digest_table,
     )
+    from clickhouse_etl_spark.dataops.util import release_artifact_cache
     from clickhouse_etl_spark.dataops.text import (
         normalize_text,
         write_classifier_table,
@@ -873,7 +871,7 @@ def test_six_stage_curation_chain_from_one_pipeline_json(spark, tmp_path):
              "config": {"op": "normalize_text"}},
             {"type": "dataop", "source_id": "documents",
              "config": {"op": "dedup_against", "seen_path": bloom,
-                        "seen_format": "bloom", "text_col": "text_norm"}},
+                        "text_col": "text_norm"}},
             {"type": "dataop", "source_id": "documents",
              "config": {"op": "neardup_against", "seen_path": nd_path,
                         "text_col": "text_norm"}},
@@ -924,9 +922,7 @@ def test_six_stage_curation_chain_from_one_pipeline_json(spark, tmp_path):
         for r in spark.sql("SELECT * FROM curation_six_stage").collect()
     )
     assert got == truth
-    for rel in (release_bloom_cache, release_ngram_digest_cache):
-        rel()
-    release_band_digest_cache()
+    release_artifact_cache()
 
 
 @pytest.mark.heavy
@@ -943,9 +939,9 @@ def test_multi_wave_curation_lifecycle(spark, tmp_path):
 
     from clickhouse_etl_spark.dataops.dedup import (
         merge_bloom_tables,
-        release_bloom_cache,
         write_bloom_table,
     )
+    from clickhouse_etl_spark.dataops.util import release_artifact_cache
     from clickhouse_etl_spark.dataops.text import (
         normalize_text,
         write_classifier_table,
@@ -1015,7 +1011,7 @@ def test_multi_wave_curation_lifecycle(spark, tmp_path):
         for r in spark.read.parquet(rebuilt).collect()
     )
     assert a == b
-    release_bloom_cache()
+    release_artifact_cache()
 
 
 @pytest.mark.heavy
@@ -1034,8 +1030,8 @@ def test_ann_serve_on_spec_surface(spark, sf_dir, tmp_path):
     from clickhouse_etl_spark.dataops.similarity import (
         pq_index_build,
         pq_index_query,
-        release_index_cache,
     )
+    from clickhouse_etl_spark.dataops.util import release_artifact_cache
     from clickhouse_etl_spark.plans.compiler import (
         DATAOPS,
         STREAM_SAFE_DATAOPS,
@@ -1069,7 +1065,7 @@ def test_ann_serve_on_spec_surface(spark, sf_dir, tmp_path):
 
     emb = load_table(spark, sf_dir, "embeddings")
     index_path = str(tmp_path / "serve_idx")
-    release_index_cache()
+    release_artifact_cache()
     pq_index_build(emb.filter("vec_id < 400"), index_path)
     queries = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -1145,7 +1141,7 @@ def test_ann_serve_on_spec_surface(spark, sf_dir, tmp_path):
     )
     with _pytest.raises(SpecError, match="SINK-SIDE"):
         streaming_source_chain(cfg, "query_id")(stream)
-    release_index_cache()
+    release_artifact_cache()
 
 
 def test_r9_dataops_on_spec_surface(spark, tmp_path):

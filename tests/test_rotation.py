@@ -108,7 +108,7 @@ def test_loaded_rotation_is_pinned():
     assert Counter(rnd for _, rnd in rows) == {9: 35, 10: 40, 11: 50}
     digest = hashlib.sha256(json.dumps(rows).encode()).hexdigest()
     assert digest == (
-        "727204b36b0f9117dc46509db5cf9fccb0833a12616131ac8e0cd0ea313ec2ce"
+        "5bb36ca1684c368bfebc33883d9d37d9ca773769a8063d385623307146d6c5ce"
     )
 
 

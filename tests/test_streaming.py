@@ -642,9 +642,9 @@ def test_streaming_curation_chain_parity_with_batch(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from clickhouse_etl_spark.dataops.dedup import (
-        release_bloom_cache,
         write_bloom_table,
     )
+    from clickhouse_etl_spark.dataops.util import release_artifact_cache
     from clickhouse_etl_spark.dataops.text import (
         normalize_text,
         write_classifier_table,
@@ -679,7 +679,7 @@ def test_streaming_curation_chain_parity_with_batch(spark, tmp_path):
     }
     assert truth, "batch curation rollup is empty"
     assert len({k[0] for k in truth}) > 3, "need several windows"
-    release_bloom_cache(bloom)
+    release_artifact_cache(bloom)
 
     # stream the same corpus + a far-future sentinel doc that survives
     # every row-local stage (fresh text, trained stopword buckets) so
@@ -718,7 +718,7 @@ def test_streaming_curation_chain_parity_with_batch(spark, tmp_path):
         if r["window_start_us"] < sentinel_us - 600_000_000
     }
     assert got == truth
-    release_bloom_cache(bloom)
+    release_artifact_cache(bloom)
 
 
 def test_sum_rollup_int_cents_exact_past_2e53(spark):
@@ -757,9 +757,9 @@ def test_curation_stream_to_idempotent_sink_with_replay(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from clickhouse_etl_spark.dataops.dedup import (
-        release_bloom_cache,
         write_bloom_table,
     )
+    from clickhouse_etl_spark.dataops.util import release_artifact_cache
     from clickhouse_etl_spark.dataops.text import (
         normalize_text,
         write_classifier_table,
@@ -833,7 +833,7 @@ def test_curation_stream_to_idempotent_sink_with_replay(spark, tmp_path):
             .select(F.col("_batch_id")).distinct().collect()
         }
         assert batches_again == batches_first
-    release_bloom_cache(bloom)
+    release_artifact_cache(bloom)
 
 
 def test_pq_index_online_serving_parity(spark, tmp_path):
@@ -845,6 +845,10 @@ def test_pq_index_online_serving_parity(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from clickhouse_etl_spark.dataops import similarity as sim
+    from clickhouse_etl_spark.dataops.util import (
+        _ARTIFACT_CACHE,
+        release_artifact_cache,
+    )
     from clickhouse_etl_spark.sources import load_table
 
     from tests.conftest import SF_DIR
@@ -860,7 +864,7 @@ def test_pq_index_online_serving_parity(spark, tmp_path):
         tuple(r) for r in sim.pq_index_query(spark, path, queries).collect()
     )
     assert truth
-    entry0 = sim._INDEX_CACHES[path]
+    entry0 = _ARTIFACT_CACHE[("index", path)]
 
     src = str(tmp_path / "serve_queries")
     # two files -> two micro-batches
@@ -885,13 +889,13 @@ def test_pq_index_online_serving_parity(spark, tmp_path):
     q.awaitTermination(180)
     assert sorted(got) == truth
     # every batch served from the ONE cached artifact load
-    assert sim._INDEX_CACHES[path] is entry0
+    assert _ARTIFACT_CACHE[("index", path)] is entry0
     # rebuild rotates the cache (new artifact listing)
     sim.pq_index_build(emb.filter("vec_id % 2 = 0"), path)
     sim.pq_index_query(spark, path, queries.limit(1))
-    assert sim._INDEX_CACHES[path] is not entry0
-    assert sim.release_index_cache(path) == 1
-    assert sim.release_index_cache(path) == 0
+    assert _ARTIFACT_CACHE[("index", path)] is not entry0
+    assert release_artifact_cache(path) == 1
+    assert release_artifact_cache(path) == 0
 
 
 def test_line_dedup_against_stream_parity_and_wave_lifecycle(spark, tmp_path):
@@ -904,9 +908,9 @@ def test_line_dedup_against_stream_parity_and_wave_lifecycle(spark, tmp_path):
     wave-3 doc against the accumulated set."""
     from clickhouse_etl_spark.dataops.dedup import (
         line_dedup_against_path,
-        release_line_digest_cache,
         write_line_digest_table,
     )
+    from clickhouse_etl_spark.dataops.util import release_artifact_cache
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig
     from clickhouse_etl_spark.streaming.runner import streaming_source_chain
 
@@ -996,7 +1000,7 @@ def test_line_dedup_against_stream_parity_and_wave_lifecycle(spark, tmp_path):
         for r in line_dedup_against_path(wave3, seen).collect()
     }
     assert out3 == {21: "third wave only line."}
-    release_line_digest_cache()
+    release_artifact_cache()
 
 def test_decontaminate_against_stream_parity(spark, tmp_path):
     """Streaming decontamination: a training stream probes the
@@ -1006,9 +1010,9 @@ def test_decontaminate_against_stream_parity(spark, tmp_path):
     at n-gram grain."""
     from clickhouse_etl_spark.dataops.dedup import (
         decontaminate_against_path,
-        release_ngram_digest_cache,
         write_ngram_digest_table,
     )
+    from clickhouse_etl_spark.dataops.util import release_artifact_cache
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig
     from clickhouse_etl_spark.streaming.runner import streaming_source_chain
 
@@ -1085,7 +1089,7 @@ def test_decontaminate_against_stream_parity(spark, tmp_path):
         for r in spark.sql("SELECT * FROM decontam_stream_out").collect()
     }
     assert got == truth
-    release_ngram_digest_cache()
+    release_artifact_cache()
 
 
 def test_neardup_against_stream_parity(spark, tmp_path):
@@ -1096,9 +1100,9 @@ def test_neardup_against_stream_parity(spark, tmp_path):
     at near-dup grain."""
     from clickhouse_etl_spark.dataops.dedup import (
         neardup_against_path,
-        release_band_digest_cache,
         write_band_digest_table,
     )
+    from clickhouse_etl_spark.dataops.util import release_artifact_cache
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig
     from clickhouse_etl_spark.streaming.runner import streaming_source_chain
 
@@ -1173,4 +1177,4 @@ def test_neardup_against_stream_parity(spark, tmp_path):
         for r in spark.sql("SELECT * FROM neardup_stream_out").collect()
     }
     assert got == truth
-    release_band_digest_cache()
+    release_artifact_cache()
