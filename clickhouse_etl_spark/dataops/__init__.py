@@ -49,7 +49,6 @@ from .similarity import (
     sample_centroids,
     sample_codebooks,
     embedding_near_dup_pairs,
-    ivf_pq_topk,
     mean_center,
     pq_index_append,
     pq_index_build,
@@ -95,7 +94,6 @@ __all__ = [
     "release_artifact_cache",
     "cosine_topk",
     "embedding_near_dup_pairs",
-    "ivf_pq_topk",
     "pq_index_build",
     "pq_index_append",
     "pq_index_query",

@@ -1699,6 +1699,59 @@ def _seen_probe_factory(
     )
 
 
+def _excise_pass(
+    df: DataFrame,
+    text_col: str,
+    count_col: str,
+    op: str,
+    make_probe,
+    survivors,
+) -> DataFrame:
+    """The ONE row-local excise-and-reassemble Arrow pass the line and
+    span probes run: ``survivors(text, probe)`` returns a document's
+    surviving pieces in original order (null text reads as ``""``),
+    with ``probe`` built once per task by ``make_probe()`` from the
+    broadcast value. Survivors rejoin with ``\\n``, REWRITING
+    ``text_col`` in place; ``count_col`` (bigint, the survivor count)
+    is appended; a document with no survivors vanishes. ``op`` names
+    the dataop in the column-clash error."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    if count_col in df.columns:
+        raise ValueError(
+            f"input already has a {count_col!r} column — rename it "
+            f"before {op}"
+        )
+    in_cols = df.columns
+    schema = StructType(
+        list(df.schema.fields) + [StructField(count_col, LongType())]
+    )
+
+    def gen(batches):
+        import pandas as pd
+
+        probe = make_probe()
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            keep_idx, texts, counts = [], [], []
+            for i, t in enumerate(pdf[text_col]):
+                kept = survivors(t if t is not None else "", probe)
+                if kept:
+                    keep_idx.append(i)
+                    texts.append("\n".join(kept))
+                    counts.append(len(kept))
+            if keep_idx:
+                out = pdf.iloc[keep_idx][in_cols].copy()
+                out[text_col] = texts
+                out[count_col] = pd.Series(
+                    counts, dtype="int64", index=out.index
+                )
+                yield out
+
+    return df.mapInPandas(gen, schema)
+
+
 def line_dedup_against_path(
     df: DataFrame,
     seen_path: str,
@@ -1747,51 +1800,18 @@ def line_dedup_against_path(
     (streaming_component.go:289-360 — transform slots between source
     and sink).
     """
-    spark = df.sparkSession
-    if "n_lines_kept" in df.columns:
-        raise ValueError(
-            "input already has an 'n_lines_kept' column — rename it "
-            "before line_dedup_against"
-        )
     make_probe = _seen_probe_factory(
-        spark, seen_path, max_bitmap_bytes, max_broadcast_digests, "line"
+        df.sparkSession, seen_path, max_bitmap_bytes, max_broadcast_digests,
+        "line",
     )
 
-    from pyspark.sql.types import LongType, StructField, StructType
+    def survivors(t, probe):
+        return [li for li in t.split("\n") if li and not probe(li)]
 
-    in_cols = [f.name for f in df.schema.fields]
-    schema = StructType(
-        list(df.schema.fields) + [StructField("n_lines_kept", LongType())]
+    return _excise_pass(
+        df, text_col, "n_lines_kept", "line_dedup_against", make_probe,
+        survivors,
     )
-    tcol = text_col
-
-    def gen(batches):
-        import pandas as pd
-
-        probe = make_probe()
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            keep_idx, texts, counts = [], [], []
-            for i, t in enumerate(pdf[tcol]):
-                lines = [
-                    li
-                    for li in (t if t is not None else "").split("\n")
-                    if li and not probe(li)
-                ]
-                if lines:
-                    keep_idx.append(i)
-                    texts.append("\n".join(lines))
-                    counts.append(len(lines))
-            if keep_idx:
-                out = pdf.iloc[keep_idx][in_cols].copy()
-                out[tcol] = texts
-                out["n_lines_kept"] = pd.Series(
-                    counts, dtype="int64", index=out.index
-                )
-                yield out
-
-    return df.mapInPandas(gen, schema)
 
 
 def _distinct_spans(
@@ -1901,64 +1921,29 @@ def span_dedup_against_path(
     :func:`_seen_probe_factory`); no join, no shuffle, no state —
     append-safe under Structured Streaming.
     """
-    spark = df.sparkSession
+    import re
+
     if span_sentences < 1:
         raise ValueError("span_sentences must be >= 1")
-    if "n_sentences_kept" in df.columns:
-        raise ValueError(
-            "input already has an 'n_sentences_kept' column — rename it "
-            "before span_dedup_against"
-        )
     make_probe = _seen_probe_factory(
-        spark, seen_path, max_bitmap_bytes, max_broadcast_digests, "span"
+        df.sparkSession, seen_path, max_bitmap_bytes, max_broadcast_digests,
+        "span",
     )
-
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    in_cols = [f.name for f in df.schema.fields]
-    schema = StructType(
-        list(df.schema.fields) + [StructField("n_sentences_kept", LongType())]
-    )
-    tcol = text_col
+    split = re.compile(r"[.!?]").split
     span_k = span_sentences
 
-    def gen(batches):
-        import re
+    def survivors(t, probe):
+        sents = [s2 for s in split(t) if (s2 := s.strip(" \n"))]
+        drop: set = set()
+        for j in range(0, len(sents) - span_k + 1):
+            if probe(_SPAN_SEP.join(sents[j : j + span_k])):
+                drop.update(range(j, j + span_k))
+        return [s for j, s in enumerate(sents) if j not in drop]
 
-        import pandas as pd
-
-        probe = make_probe()
-        split = re.compile(r"[.!?]").split
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            keep_idx, texts, counts = [], [], []
-            for i, t in enumerate(pdf[tcol]):
-                sents = [
-                    s2
-                    for s in split(t if t is not None else "")
-                    if (s2 := s.strip(" \n"))
-                ]
-                if not sents:
-                    continue
-                drop: set = set()
-                for j in range(0, len(sents) - span_k + 1):
-                    if probe(_SPAN_SEP.join(sents[j : j + span_k])):
-                        drop.update(range(j, j + span_k))
-                kept = [s for j2, s in enumerate(sents) if j2 not in drop]
-                if kept:
-                    keep_idx.append(i)
-                    texts.append("\n".join(kept))
-                    counts.append(len(kept))
-            if keep_idx:
-                out = pdf.iloc[keep_idx][in_cols].copy()
-                out[tcol] = texts
-                out["n_sentences_kept"] = pd.Series(
-                    counts, dtype="int64", index=out.index
-                )
-                yield out
-
-    return df.mapInPandas(gen, schema)
+    return _excise_pass(
+        df, text_col, "n_sentences_kept", "span_dedup_against", make_probe,
+        survivors,
+    )
 
 
 #: Published eval-set decontamination n-gram length: GPT-3 (Brown et

@@ -932,7 +932,6 @@ def normalize_text(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    engine: str = "pandas",
 ) -> DataFrame:
     """Deterministic text canonicalization — the cleanup pass run
     before dedup/tokenization so that case and punctuation variants of
@@ -944,83 +943,54 @@ def normalize_text(
     folding is exactly what a cross-engine pipeline must avoid.
 
     Adds ``text_norm`` plus the before/after whitespace token counts
-    (the shrinkage diagnostic). Row-local, no shuffle.
-
-    ``engine="pandas"`` (default) runs the whole pass Arrow-batched —
-    compiled Python regex + counts, one ``mapInPandas``, ~6× the
-    Catalyst regexp_replace chain at 100k docs and still stream-safe.
-    Value-identical to ``engine="catalyst"`` (equality-pinned on the
-    test corpus), including the null contract (NULL text →
-    (NULL, -1, -1)); the post-replace strip is safe because every
-    non-[a-z0-9 space] char — tabs and newlines included — has already
-    become a plain space.
+    (the shrinkage diagnostic); an input that already carries one of
+    these columns has it replaced in place, as ``withColumn`` would.
+    Row-local, no shuffle: the whole pass is one Arrow-batched
+    ``mapInPandas`` (compiled Python regex + counts), stream-safe. The
+    null contract is NULL text → (NULL, -1, -1); the post-replace strip
+    is safe because every non-[a-z0-9 space] char — tabs and newlines
+    included — has already become a plain space.
     """
-    if engine == "pandas":
-        import pandas as pd
+    import pandas as pd
 
-        from pyspark.sql import types as T
+    from pyspark.sql import types as T
 
-        schema = T.StructType(
-            list(df.schema.fields)
-            + [
-                T.StructField("text_norm", T.StringType(), True),
-                T.StructField("n_tokens_raw", T.LongType(), True),
-                T.StructField("n_tokens_norm", T.LongType(), True),
-            ]
+    added = {
+        name: T.StructField(name, dtype, True)
+        for name, dtype in (
+            ("text_norm", T.StringType()),
+            ("n_tokens_raw", T.LongType()),
+            ("n_tokens_norm", T.LongType()),
         )
-        in_cols = [f.name for f in df.schema.fields]
-        tcol = text_col
-        # single-file parquet reads as ONE partition — without an
-        # explicit repartition the whole Python regex pass runs on one
-        # core (the CLAUDE.md compute-heavy-dataop rule); scale_out is
-        # a no-op on streams
-        df = scale_out(df)
-
-        def normalize(batches):
-            norm = _normalize_kernel()
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                norms, nraws, nnorms = [], [], []
-                for x in pdf[tcol]:
-                    cleaned, nr, nn = norm(x)
-                    norms.append(cleaned)
-                    nraws.append(nr)
-                    nnorms.append(nn)
-                out = pdf[in_cols].copy()
-                out["text_norm"] = norms
-                out["n_tokens_raw"] = pd.Series(nraws, dtype="int64").values
-                out["n_tokens_norm"] = pd.Series(nnorms, dtype="int64").values
-                yield out
-
-        return df.mapInPandas(normalize, schema)
-
-    lowered = F.lower(F.col(text_col))
-    cleaned = F.trim(
-        F.regexp_replace(
-            F.regexp_replace(lowered, "[^a-z0-9 ]", " "), " +", " "
-        )
+    }
+    schema = T.StructType(
+        [added.pop(f.name, f) for f in df.schema.fields] + list(added.values())
     )
-    # Token counts stay in whole-stage codegen: counting nonempty
-    # space-split tokens == counting non-space runs (regexp_count), and
-    # on the already-collapsed canonical form it's just spaces + 1.
-    # The previous size(filter(split(...))) HOFs were CodegenFallback
-    # (interpreted per token). coalesce(-1) preserves the legacy
-    # size(NULL) = -1 contract for null text.
-    n_raw = F.coalesce(
-        F.regexp_count(F.col(text_col), F.lit("[^ ]+")), F.lit(-1)
-    )
-    n_norm = F.coalesce(
-        F.when(cleaned == "", F.lit(0)).otherwise(
-            F.length(cleaned)
-            - F.length(F.replace(cleaned, F.lit(" "), F.lit("")))
-            + 1
-        ),
-        F.lit(-1),
-    )
-    return df.withColumn("text_norm", cleaned).withColumn(
-        "n_tokens_raw", n_raw.cast("bigint")
-    ).withColumn("n_tokens_norm", n_norm.cast("bigint"))
+    in_cols = [f.name for f in df.schema.fields]
+    # single-file parquet reads as ONE partition — without an
+    # explicit repartition the whole Python regex pass runs on one
+    # core (the compute-heavy-dataop rule); scale_out is
+    # a no-op on streams
+    df = scale_out(df)
+
+    def normalize(batches):
+        norm = _normalize_kernel()
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            norms, nraws, nnorms = [], [], []
+            for x in pdf[text_col]:
+                cleaned, nr, nn = norm(x)
+                norms.append(cleaned)
+                nraws.append(nr)
+                nnorms.append(nn)
+            out = pdf[in_cols].copy()
+            out["text_norm"] = norms
+            out["n_tokens_raw"] = pd.Series(nraws, dtype="int64").values
+            out["n_tokens_norm"] = pd.Series(nnorms, dtype="int64").values
+            yield out
+
+    return df.mapInPandas(normalize, schema)
 
 
 def importance_weights(
@@ -1873,8 +1843,8 @@ def write_classifier_table(
 def _normalize_kernel():
     """Compiled row-local normalize function — ``text → (text_norm,
     n_tokens_raw, n_tokens_norm)`` replaying :func:`normalize_text`'s
-    semantics exactly (NULL → (None, -1, -1)). The ONE definition the
-    pandas engine and the fused curation pass
+    semantics exactly (NULL → (None, -1, -1)). The ONE definition
+    normalize_text and the fused curation pass
     (streaming/curation.py) both call, so the character class can
     never silently diverge between them."""
     import re as _re

@@ -3067,34 +3067,6 @@ _PQ_INDEX_SQL = f"""
 """
 
 
-@q("emb_ivf_pq_ann_topk", _PQ_INDEX_SQL)
-def emb_ivf_pq_ann_topk(spark, sf_dir):
-    """IVF+PQ composed ANN (dataops/similarity.ivf_pq_topk): cells
-    shrink the candidate set, PQ codes shrink bytes-per-candidate; one
-    corpus pass computes both, ADC shortlist + exact re-rank. The
-    canonical web-scale layout; recall vs brute force in
-    test_dataops.py. Oracle-backed since r6 with the injected sample
-    artifacts — the oracle SQL is the SAME _PQ_INDEX_SQL as the
-    persisted-index entry, because ivf_pq_topk and pq_index_query
-    share _ivf_adc_answer and the same deterministic artifacts: one
-    oracle pins BOTH paths (plus their equality)."""
-    from .dataops.similarity import (
-        ivf_pq_topk,
-        sample_centroids,
-        sample_codebooks,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return ivf_pq_topk(
-        emb, queries, k=10, n_probe=8,
-        centroids=sample_centroids(emb, n_centroids=16),
-        codebooks=sample_codebooks(emb, m=8, n_codes=16),
-    )
-
-
 @q("emb_pq_index_ann_topk", _PQ_INDEX_SQL)
 def emb_pq_index_ann_topk(spark, sf_dir):
     """ANN against a PERSISTED IVF+PQ index (dataops/similarity.
@@ -3107,8 +3079,8 @@ def emb_pq_index_ann_topk(spark, sf_dir):
     reproduces the entire persisted lifecycle — cell assignment, PQ
     codes, probe fan-out, cell-bounded ADC (self excluded BEFORE the
     shortlist, matching _ivf_adc_answer), shortlist, exact re-rank —
-    through the parquet round-trip. Output equality with the
-    fresh-build ivf_pq_topk (production k-means path) stays pinned in
+    through the parquet round-trip. The default build (k-means cells,
+    sampled codebooks) is recall-pinned against brute force in
     test_dataops.py."""
     import os
 
@@ -5195,12 +5167,7 @@ def docs_curation_v4(spark, sf_dir):
     from .dataops.util import scale_out
 
     docs = _t(spark, sf_dir, "documents")
-    # in-chain the fused Catalyst regex form measures ~0.3s faster at
-    # bench corpus sizes (codegen fusion beats the Arrow boundary below
-    # ~20k docs; interleaved ABBA, CLAUDE.md) — past the crossover a
-    # production chain flips to the default engine="pandas" (4.8x per
-    # doc at 100k)
-    norm = normalize_text(docs, engine="catalyst").select(
+    norm = normalize_text(docs).select(
         "doc_id", "source", F.col("text_norm").alias("text")
     )
     w1 = Window.partitionBy(F.md5("text")).orderBy("doc_id")
@@ -5509,83 +5476,6 @@ def docs_bpe_word_table(spark, sf_dir):
         .filter(F.col("rank") <= 200)
         .select("word", "count", "rank")
         .orderBy("rank")
-    )
-
-
-@q(
-    "otlp_metric_rollup_5m",
-    """
-    WITH e AS (SELECT * FROM events WHERE event_id % 37 = 0),
-    b AS (
-        SELECT event_type AS host,
-               epoch_us(ts) // 300000000 AS win,
-               CAST(round(value * 100) AS BIGINT) AS cents
-        FROM e
-    )
-    SELECT host,
-           CAST(win AS BIGINT) AS window_id,
-           CAST(win * 300000000 AS BIGINT) AS window_start_us,
-           CAST(count(*) AS BIGINT) AS n_points,
-           CAST(sum(cents) AS BIGINT) AS sum_cents,
-           CAST(min(cents) AS BIGINT) AS min_cents,
-           CAST(max(cents) AS BIGINT) AS max_cents,
-           round(CAST(count(*) AS DOUBLE) / 300.0, 6) AS points_per_sec
-    FROM b
-    GROUP BY host, win
-    ORDER BY host, win
-    """,
-)
-def otlp_metric_rollup_5m(spark, sf_dir):
-    """Downstream observability rollup on the OTLP surface: the gauge
-    datapoint stream (through the FULL ingest flattener — the same
-    synthesized payload and flatten_metrics path as the S5 entry, so
-    the rollup verifies the ns-timestamp round-trip and resource-attr
-    extraction too) aggregated per (resource host, 5-minute tumbling
-    window): point count, sum/min/max in exact cents, and points/sec
-    rate. Window ids via exact integer arithmetic (us − us mod P, then
-    an exact-multiple division), matching DuckDB ``//``. The
-    post-ingest metrics rollup every observability deployment of the
-    reference runs in ClickHouse, expressed as one hash-shuffle."""
-    from .sources.otlp import flatten_metrics
-
-    ev = _t(spark, sf_dir, "events").filter(F.col("event_id") % 37 == 0)
-    # gauge-only flatten (kinds=): the rollup keeps only the gauge
-    # family, so the other four families' datapoint structs are never
-    # built — the metric_type filter below is then a no-op kept for
-    # the declared-intent read
-    flat = flatten_metrics(
-        ev.select(_otlp_metrics_payload().alias("value")), kinds=("gauge",)
-    )
-    P = 300_000_000
-    us = F.unix_micros(F.to_timestamp("timestamp"))
-    g = flat.filter(F.col("metric_type") == "gauge").select(
-        F.element_at(F.col("resource_attributes"), F.lit("host")).alias("host"),
-        us.alias("us"),
-        F.round(F.col("value_double") * 100).cast("bigint").alias("cents"),
-    )
-    win = ((F.col("us") - F.col("us") % F.lit(P)) / F.lit(P)).cast("bigint")
-    return (
-        g.withColumn("window_id", win)
-        .groupBy("host", "window_id")
-        .agg(
-            F.count("*").cast("bigint").alias("n_points"),
-            F.sum("cents").cast("bigint").alias("sum_cents"),
-            F.min("cents").cast("bigint").alias("min_cents"),
-            F.max("cents").cast("bigint").alias("max_cents"),
-        )
-        .select(
-            "host",
-            "window_id",
-            (F.col("window_id") * F.lit(P)).cast("bigint").alias("window_start_us"),
-            "n_points",
-            "sum_cents",
-            "min_cents",
-            "max_cents",
-            F.round(F.col("n_points").cast("double") / F.lit(300.0), 6).alias(
-                "points_per_sec"
-            ),
-        )
-        .orderBy("host", "window_id")
     )
 
 
@@ -7027,10 +6917,15 @@ def otlp_rollup_all_families(spark, sf_dir):
 # sliding_window_agg (the F.window API surface is tumbling_window_agg
 # — slide is a parameter — and the general sliding aggregate is
 # events_moving_sum_1h's RANGE frame; the streaming windowed form is
-# otlp_metric_rollup_5m), emb_balanced_sample (the per-group
+# otlp_rollup_all_families), emb_balanced_sample (the per-group
 # constant-K cap surface is docs_domain_cap; the learned-group variant
 # is the new emb_cluster_sample; dataops/similarity.balanced_sample
 # stays unit-tested).
+# One implementation per operator (r12): otlp_metric_rollup_5m (its
+# gauge count/sum/min/max rows are otlp_rollup_all_families' gauge rows
+# through otlp_rollup_stream; the flattener stays core as
+# otlp_flatten_metrics) and emb_ivf_pq_ann_topk (the same _PQ_INDEX_SQL
+# oracle and the same _ivf_adc_answer as emb_pq_index_ann_topk).
 # ---------------------------------------------------------------------------
 _ARTIFACT_DIR = Path(__file__).resolve().parents[1]
 
@@ -7084,10 +6979,8 @@ _STALE_SIGNED = frozenset({
     # per payload (was five — one per family union branch); parity
     # pinned row-identical on the real payloads at both SFs, oracle
     # exact. all_families additionally narrows its checkpoint to the
-    # ten columns the rollup functions read; rollup_5m passes
-    # kinds=("gauge",):
+    # ten columns the rollup functions read:
     "otlp_flatten_metrics",
-    "otlp_metric_rollup_5m",
     "otlp_rollup_all_families",
     # OPTIMIZATION r12: LSH bucket joins ship keys+norms only
     # (_lsh_buckets_batched keep_vec=False); vectors join back once
@@ -7135,7 +7028,6 @@ _STALE_SIGNED = frozenset({
     "docs_ngram_containment_pairs",
     "docs_ngram_jaccard_pairs",
     "emb_ivf_ann_topk",
-    "emb_ivf_pq_ann_topk",
     "emb_pq_ann_topk",
     "docs_curation_e2e",
     "emb_cluster_sample",
@@ -7153,6 +7045,11 @@ _STALE_SIGNED = frozenset({
     # cache with one release call, and the drop/flag Arrow pass is
     # shared. The digest-tier flag verdicts are unchanged; oracle exact:
     "docs_decontaminate_against",
+    # one implementation per operator: normalize_text keeps only its
+    # Arrow pass (engine= gone; the Catalyst form is the test-side
+    # reference) and replaces existing output columns in place; oracle
+    # exact:
+    "docs_normalize_text",
 })
 
 

@@ -441,15 +441,7 @@ def flatten_traces(df: DataFrame, payload_col: str = "value") -> DataFrame:
     )
 
 
-#: family order of the flattened datapoint stream (proto field order)
-METRIC_KINDS = ("gauge", "sum", "histogram", "exp_histogram", "summary")
-
-
-def flatten_metrics(
-    df: DataFrame,
-    payload_col: str = "value",
-    kinds: tuple[str, ...] = METRIC_KINDS,
-) -> DataFrame:
+def flatten_metrics(df: DataFrame, payload_col: str = "value") -> DataFrame:
     """One wide nullable row per datapoint for all five metric kinds —
     gauge / sum / histogram / exponential-histogram / summary
     (flattener/metrics.go:13-203).  Parity notes: the reference's record
@@ -464,13 +456,8 @@ def flatten_metrics(
     arrays concatenated and exploded once.  (The previous five-branch
     union re-derived the parse subtree per family — five full JSON
     parses of every payload, the dominant cost of this source at
-    scale.)  ``kinds`` lets a single-family consumer (e.g. a gauge-only
-    rollup stream) skip building the other families' rows entirely; the
-    default keeps all five.
+    scale.)  Families concatenate in proto field order.
     """
-    unknown = set(kinds) - set(METRIC_KINDS)
-    if unknown:
-        raise ValueError(f"unknown metric kinds: {sorted(unknown)}")
     req = F.from_json(F.col(payload_col).cast("string"), METRICS_REQUEST_SCHEMA)
     rm = df.select(F.explode(req.getField("resourceMetrics")).alias("rm"))
     sm = rm.select(F.col("rm.resource").alias("resource"), F.explode("rm.scopeMetrics").alias("sm"))
@@ -586,12 +573,10 @@ def flatten_metrics(
         T.StructField("eb", T.ArrayType(T.DoubleType())),
         T.StructField("attrs", _ATTR),
     ]))
-    arrays = [
+    dp_all = F.concat(*(
         F.coalesce(F.transform(dps, body), F.array().cast(norm_dp))
-        for kind, (dps, body) in family.items()
-        if kind in kinds
-    ]
-    dp_all = arrays[0] if len(arrays) == 1 else F.concat(*arrays)
+        for dps, body in family.values()
+    ))
     rows = mt.select("resource", "scope", "m", F.explode(dp_all).alias("dp"))
     return rows.select(
         _nano_ts(F.col("dp.t_ns")).alias("timestamp"),

@@ -45,7 +45,7 @@ def otlp_rollup_stream(
 
     - gauge / sum (``bucket_idx = -1``): point count and sum/min/max of
       the value in cents. Gauge reads ``value_double`` only (the
-      ``otlp_metric_rollup_5m`` contract); sum coalesces it with
+      ``otlp_rollup_all_families`` contract); sum coalesces it with
       ``value_int * 100`` in INTEGER arithmetic (a double round-trip
       loses cent exactness past 2^53).
     - histogram / exp_histogram (``bucket_idx = -1``): point count,

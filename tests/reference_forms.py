@@ -61,6 +61,29 @@ def pq_encode_expr(
     )
 
 
+def normalize_text_expr(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """``normalize_text``: regexp_replace chain; token counts as
+    non-space runs on the raw text and spaces + 1 on the collapsed
+    form, with coalesce(-1) for NULL text."""
+    cleaned = F.trim(
+        F.regexp_replace(
+            F.regexp_replace(F.lower(F.col(text_col)), "[^a-z0-9 ]", " "), " +", " "
+        )
+    )
+    n_raw = F.coalesce(F.regexp_count(F.col(text_col), F.lit("[^ ]+")), F.lit(-1))
+    n_norm = F.coalesce(
+        F.when(cleaned == "", F.lit(0)).otherwise(
+            F.length(cleaned) - F.length(F.replace(cleaned, F.lit(" "), F.lit(""))) + 1
+        ),
+        F.lit(-1),
+    )
+    return df.withColumns({
+        "text_norm": cleaned,
+        "n_tokens_raw": n_raw.cast("bigint"),
+        "n_tokens_norm": n_norm.cast("bigint"),
+    })
+
+
 def top_terms_expr(
     df: DataFrame,
     text_col: str = "text",

@@ -673,15 +673,22 @@ def test_pq_encode_codes_in_range(spark, sf_dir):
     assert {r["vec_id"]: list(r["pq_codes"]) for r in out} == cat
 
 
-def test_ivf_pq_topk_recall_vs_brute_force(spark, sf_dir):
-    from clickhouse_etl_spark.dataops.similarity import ivf_pq_topk
+def test_ivf_pq_topk_recall_vs_brute_force(spark, sf_dir, tmp_path):
+    """A default IVF+PQ build (k-means cells, sampled codebooks) then a
+    query against it keeps recall above the floor."""
+    from clickhouse_etl_spark.dataops.similarity import (
+        pq_index_build,
+        pq_index_query,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
     brute = cosine_topk(emb, queries, k=5)
-    approx = ivf_pq_topk(emb, queries, k=5, n_centroids=16, n_probe=8)
+    path = str(tmp_path / "idx")
+    pq_index_build(emb, path, n_centroids=16)
+    approx = pq_index_query(spark, path, queries, k=5, n_probe=8)
     b = {(r["query_id"], r["neighbor_id"]) for r in brute.collect()}
     a = {(r["query_id"], r["neighbor_id"]) for r in approx.collect()}
     recall = len(a & b) / len(b)
@@ -806,36 +813,52 @@ def test_pool_frame_features_contract(spark):
     assert pool_frame_features(images, dim=16).count() == 0
 
 
-def test_ann_empty_query_set_returns_empty(spark, sf_dir):
-    """ADVICE r5: pq_topk/ivf_pq_topk on an empty query set must return
-    an empty frame with the standard schema, not crash on (0,)-shaped
-    numpy slicing."""
-    from clickhouse_etl_spark.dataops.similarity import ivf_pq_topk, pq_topk
+def test_ann_empty_query_set_returns_empty(spark, sf_dir, tmp_path):
+    """ADVICE r5: pq_topk/pq_index_query on an empty query set must
+    return an empty frame with the standard schema, not crash on
+    (0,)-shaped numpy slicing."""
+    from functools import partial
+
+    from clickhouse_etl_spark.dataops.similarity import (
+        pq_index_build,
+        pq_index_query,
+        pq_topk,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings")
     none = emb.filter(F.col("vec_id") < 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    for fn in (pq_topk, ivf_pq_topk):
-        out = fn(emb, none, k=3)
+    path = str(tmp_path / "idx")
+    pq_index_build(emb, path)
+    for fn in (partial(pq_topk, emb), partial(pq_index_query, spark, path)):
+        out = fn(none, k=3)
         assert out.columns == ["query_id", "neighbor_id", "rank", "sim"]
         assert out.count() == 0
 
 
-def test_ann_query_collect_guard(spark, sf_dir):
+def test_ann_query_collect_guard(spark, sf_dir, tmp_path):
     """VERDICT r4 #6: the driver-side LUT query collect is bounded —
     oversized query sets get an actionable error, not a driver OOM."""
+    from functools import partial
+
     import pytest
 
-    from clickhouse_etl_spark.dataops.similarity import ivf_pq_topk, pq_topk
+    from clickhouse_etl_spark.dataops.similarity import (
+        pq_index_build,
+        pq_index_query,
+        pq_topk,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.limit(20).select(F.col("vec_id").alias("query_id"), "embedding")
-    for fn in (pq_topk, ivf_pq_topk):
+    path = str(tmp_path / "idx")
+    pq_index_build(emb, path)
+    for fn in (partial(pq_topk, emb), partial(pq_index_query, spark, path)):
         with pytest.raises(ValueError, match="max_queries"):
-            fn(emb, queries, k=3, max_queries=5)
+            fn(queries, k=3, max_queries=5)
         # and None disables the guard
-        assert fn(emb, queries.limit(3), k=3, max_queries=None).count() > 0
+        assert fn(queries.limit(3), k=3, max_queries=None).count() > 0
 
 
 def test_cells_batched_zero_norm_vector_deterministic(spark):
@@ -885,12 +908,12 @@ def test_balanced_sample_spec_surface_documents_defaults(spark):
 
 
 @pytest.mark.heavy
-def test_pq_index_persisted_equals_fresh_build(spark, sf_dir, tmp_path):
-    """VERDICT r4 #2: the persisted-index query path answers exactly what
-    the fresh-build ivf_pq_topk answers (same deterministic index, shared
-    answer stage) — for both self-contained and codes-only indexes."""
+def test_pq_index_codes_only_equals_self_contained(spark, sf_dir, tmp_path):
+    """VERDICT r4 #2: a codes-only index (caller supplies the corpus for
+    the re-rank) answers exactly what a self-contained index answers,
+    refuses a re-rank without vectors, and the codes table is
+    partitioned by cell."""
     from clickhouse_etl_spark.dataops.similarity import (
-        ivf_pq_topk,
         pq_index_build,
         pq_index_query,
     )
@@ -899,11 +922,6 @@ def test_pq_index_persisted_equals_fresh_build(spark, sf_dir, tmp_path):
     queries = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    fresh = sorted(
-        (r["query_id"], r["neighbor_id"], r["rank"], r["sim"])
-        for r in ivf_pq_topk(emb, queries, k=5, n_centroids=16, n_probe=8).collect()
-    )
-
     path = str(tmp_path / "idx")
     meta = pq_index_build(emb, path, n_centroids=16, m=8, n_codes=16)
     assert meta["dim"] == 64 and meta["store_vectors"]
@@ -911,7 +929,7 @@ def test_pq_index_persisted_equals_fresh_build(spark, sf_dir, tmp_path):
         (r["query_id"], r["neighbor_id"], r["rank"], r["sim"])
         for r in pq_index_query(spark, path, queries, k=5, n_probe=8).collect()
     )
-    assert persisted == fresh and len(fresh) > 0
+    assert len(persisted) > 0
 
     # codes-only index: caller supplies the corpus for the re-rank
     lean_path = str(tmp_path / "idx_lean")
@@ -923,7 +941,7 @@ def test_pq_index_persisted_equals_fresh_build(spark, sf_dir, tmp_path):
             spark, lean_path, queries, k=5, n_probe=8, corpus=emb
         ).collect()
     )
-    assert lean == fresh
+    assert lean == persisted
     # ...and refuses to re-rank without vectors
     import pytest
     with pytest.raises(ValueError, match="store_vectors"):
@@ -1965,6 +1983,8 @@ def test_normalize_text_engines_identical(spark, sf_dir):
     """The Arrow normalize pass must replay the Catalyst regex chain
     value-for-value, including the NULL-text (NULL, -1, -1) contract
     and messy whitespace/punctuation edges."""
+    from reference_forms import normalize_text_expr
+
     from clickhouse_etl_spark.dataops.text import normalize_text
     from clickhouse_etl_spark.sources.batch import load_table
 
@@ -1984,10 +2004,29 @@ def test_normalize_text_engines_identical(spark, sf_dir):
     ).withColumn("n_chars", F.length("text").cast("long"))
     corpus = docs.unionByName(edge.select(*docs.columns))
     a = sorted(tuple(r) for r in normalize_text(corpus).collect())
-    b = sorted(
-        tuple(r) for r in normalize_text(corpus, engine="catalyst").collect()
-    )
+    b = sorted(tuple(r) for r in normalize_text_expr(corpus).collect())
     assert a == b
+
+
+def test_normalize_text_replaces_existing_output_columns(spark):
+    """An input that already carries the output columns (a re-run over
+    normalized rows) gets them replaced in place, as ``withColumn``
+    does — the Arrow pass used to append duplicate fields and fail in
+    the Python worker with a result-schema mismatch."""
+    from reference_forms import normalize_text_expr
+
+    from clickhouse_etl_spark.dataops.text import normalize_text
+
+    df = spark.createDataFrame(
+        [(1, "Hello, World!", "stale", 9, 9), (2, None, None, None, None)],
+        "doc_id long, text string, text_norm string, "
+        "n_tokens_raw long, n_tokens_norm long",
+    )
+    out = normalize_text(df)
+    ref = normalize_text_expr(df)
+    assert out.columns == ref.columns == df.columns
+    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, ref.collect()))
+    assert out.filter("doc_id = 1").first()[2:] == ("hello world", 2, 2)
 
 
 def test_clf_idiv_exact_across_int64_range(spark):

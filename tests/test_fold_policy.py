@@ -137,21 +137,23 @@ def test_decontam_write_probe_parity_beyond_ascii(spark, tmp_path):
 
 
 def test_normalize_engines_agree_beyond_ascii(spark):
-    """normalize_text's pandas and catalyst engines stay equal on
-    non-ASCII rows (the ASCII-class scrub makes even the DuckDB-
-    divergent fold corners collapse identically: divergent characters
-    are non-[a-z0-9 ] on every engine and scrub to spaces)."""
+    """normalize_text's Arrow pass stays equal to the Catalyst regex
+    reference on non-ASCII rows (the ASCII-class scrub makes even the
+    DuckDB-divergent fold corners collapse identically: divergent
+    characters are non-[a-z0-9 ] on every engine and scrub to spaces)."""
     rows = [(i, c) for i, c in enumerate(CASES + ["İ MIXED ΑΣ case 42"])]
     df = spark.createDataFrame(rows, "doc_id long, text string")
+    from reference_forms import normalize_text_expr
+
     from clickhouse_etl_spark.dataops.text import normalize_text
 
     a = {
         r["doc_id"]: (r["text_norm"], r["n_tokens_raw"], r["n_tokens_norm"])
-        for r in normalize_text(df, engine="pandas").collect()
+        for r in normalize_text(df).collect()
     }
     b = {
         r["doc_id"]: (r["text_norm"], r["n_tokens_raw"], r["n_tokens_norm"])
-        for r in normalize_text(df, engine="catalyst").collect()
+        for r in normalize_text_expr(df).collect()
     }
     assert a == b
 

