@@ -1,5 +1,5 @@
-"""plans — compile a PipelineSpec into executable DataFrame chains."""
+"""plans — assemble a PipelineSpec into one DataFrame, batch or streaming."""
 
-from .compiler import CompiledPipeline, compile_pipeline
+from .compiler import build_pipeline, source_chain
 
-__all__ = ["compile_pipeline", "CompiledPipeline"]
+__all__ = ["build_pipeline", "source_chain"]

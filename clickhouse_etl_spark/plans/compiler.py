@@ -1,17 +1,18 @@
-"""Spec -> plan compiler: one operator library, two runners.
+"""Spec -> plan assembler: one operator library, one assembler, two drivers.
 
-``compile_pipeline`` turns a validated :class:`PipelineSpec` into a
-:class:`CompiledPipeline` whose ``run_batch`` executes the declarative
-chain over per-source batch DataFrames (parquet/JSON fixtures — this is
-the oracle-checked path). The streaming runner (streaming/runner.py)
-builds its own per-source chain from the same operators in the same
-order; its dedup stage is ``dropDuplicatesWithinWatermark``, which
-needs the spec's ``time_window`` (a windowless dedup is batch-only).
+``build_pipeline`` turns a validated :class:`PipelineSpec` plus one
+typed DataFrame per source into one output frame: each source's
+:func:`source_chain`, then the temporal join (or the single source),
+then the sink mapping. Batch callers (the oracle-checked path) collect
+or write it; the streaming runner (streaming/runner.py) validates raw
+payloads, calls the same assembler, and only then starts its queries.
 
 Stage order within a source is fixed — filter -> dedup -> stateless
-transform — matching the reference's hardcoded processor order
-(cmd/glassflow/dedup_component.go:210-225). Disabled stages are
-simply absent (reference uses NoopProcessor).
+transform -> dataops — matching the reference's hardcoded processor
+order (cmd/glassflow/dedup_component.go:210-225). Disabled stages are
+simply absent (reference uses NoopProcessor). The three mode-dependent
+choices (dedup form, join form, stream-safety of dataops) read
+``df.isStreaming``; there is no mode option.
 
 There is deliberately no optimizer here: the spec is declarative and
 compiles 1:1 to DataFrame operations; Catalyst owns predicate pushdown,
@@ -23,12 +24,11 @@ and key-hash partitioning alignment for the stateful ops.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-from typing import Callable, Optional
+from typing import Callable, Optional, Sequence
 
 from pyspark.sql import DataFrame
 
-from ..operators.dedup import dedup_first_wins, dedup_windowed
+from ..operators.dedup import _key_col, dedup_first_wins, dedup_windowed
 from ..operators.filter import apply_filter
 from ..operators.join import temporal_join_batch
 from ..operators.mapper import apply_sink_mapping
@@ -36,78 +36,119 @@ from ..operators.transform import apply_transform
 from ..spec.model import PipelineSpec, SourceConfig, SpecError
 
 
-@dataclass
-class CompiledPipeline:
-    spec: PipelineSpec
-    #: per-source transform chain (filter -> dedup -> stateless transform)
-    source_chains: dict[str, Callable[[DataFrame], DataFrame]]
-
-    def run_batch(
-        self,
-        inputs: dict[str, DataFrame],
-        ts_cols: Optional[dict[str, str]] = None,
-        order_cols: Optional[dict[str, list[str]]] = None,
-    ) -> DataFrame:
-        """Execute the full pipeline over batch inputs.
-
-        ``ts_cols``/``order_cols`` supply the event-time column and the
-        deterministic arrival-order tiebreak per source (batch mode has
-        no arrival order — SURVEY.md §7.5.1).
-        """
-        ts_cols = ts_cols or {}
-        order_cols = order_cols or {}
-        staged: dict[str, DataFrame] = {}
-        for sid, chain in self.source_chains.items():
-            df = inputs[sid]
-            staged[sid] = chain(df)
-
-        spec = self.spec
-        if spec.join is not None:
-            left = staged[spec.join.left.source_id]
-            right = staged[spec.join.right.source_id]
-            df = temporal_join_batch(
-                left,
-                right,
-                spec.join,
-                right_ts_col=ts_cols.get(spec.join.right.source_id),
-                right_tiebreak=order_cols.get(spec.join.right.source_id, []),
-                left_ts_col=ts_cols.get(spec.join.left.source_id),
-            )
-        else:
-            if len(staged) != 1:
-                raise ValueError("multiple sources without a join are separate pipelines")
-            df = next(iter(staged.values()))
-
-        if spec.sink.mapping:
-            df = apply_sink_mapping(df, spec.sink.mapping)
-        return df
-
-
-def _chain_for_source(
+def source_chain(
     src: SourceConfig,
-    ts_col: Optional[str],
-    order: list[str],
+    ts_col: Optional[str] = None,
+    order: Sequence[str] = (),
 ) -> Callable[[DataFrame], DataFrame]:
+    """Per-source chain: filter -> dedup -> transform -> dataops.
+
+    Dedup on a streaming frame is ``dropDuplicatesWithinWatermark`` on
+    ``ts_col`` and needs the spec's ``time_window`` (the watermark that
+    bounds its state); on a batch frame it is ``dedup_windowed`` when
+    there is a ``ts_col`` and a window, else ``dedup_first_wins``, with
+    ``order`` as the deterministic arrival-order tiebreak (batch mode
+    has no arrival order — SURVEY.md §7.5.1). A streaming frame accepts
+    only STREAM_SAFE_DATAOPS: batch-only ops raise SpecError at
+    assembly time instead of silently skipping."""
+
     def chain(df: DataFrame) -> DataFrame:
         if src.filter is not None:
             df = apply_filter(df, src.filter)
         if src.dedup is not None:
-            if ts_col and src.dedup.time_window_s:
-                df = dedup_windowed(df, src.dedup.key, ts_col, src.dedup.time_window_s, order)
+            key, window_s = src.dedup.key, src.dedup.time_window_s
+            if df.isStreaming:
+                if not window_s:
+                    raise SpecError(
+                        f"source {src.source_id!r}: a streaming dedup stage needs "
+                        "config.time_window (the watermark that bounds its state)"
+                    )
+                # dropDuplicatesWithinWatermark takes column NAMES — route
+                # a dot-path key through the same dual resolution as batch
+                # dedup by materializing it as a helper column first
+                df = df.withWatermark(ts_col, f"{int(window_s)} seconds")
+                df = (
+                    df.withColumn("_dedup_key", _key_col(df, key))
+                    .dropDuplicatesWithinWatermark(["_dedup_key"])
+                    .drop("_dedup_key")
+                )
+            elif ts_col and window_s:
+                df = dedup_windowed(df, key, ts_col, window_s, list(order))
             else:
-                df = dedup_first_wins(df, src.dedup.key, order or df.columns[:1])
+                df = dedup_first_wins(df, key, list(order) or df.columns[:1])
         if src.transform is not None:
             df = apply_transform(df, src.transform)
         for d in src.dataops:
+            if df.isStreaming and d.op not in STREAM_SAFE_DATAOPS:
+                if d.op == "ann_serve":
+                    raise SpecError(
+                        "dataop 'ann_serve' streams SINK-SIDE only: declare "
+                        "it as the LAST transform of a joinless single-source "
+                        "pipeline and StreamingPipeline wires it into "
+                        "foreachBatch (it collects each micro-batch's bounded "
+                        "query set to prune the codes scan, which a mid-chain "
+                        "streaming frame cannot do)."
+                    )
+                raise SpecError(
+                    f"dataop {d.op!r} is batch-only (needs a bounded corpus); "
+                    f"stream-safe ops: {sorted(STREAM_SAFE_DATAOPS)}. For "
+                    "streaming dedup use the dedup stage "
+                    "(dropDuplicatesWithinWatermark)."
+                )
             df = resolve_dataop(d.op)(df, **d.params)
         return df
 
     return chain
 
 
+def build_pipeline(
+    spec: PipelineSpec,
+    frames: dict[str, DataFrame],
+    ts_cols: Optional[dict[str, str]] = None,
+    order_cols: Optional[dict[str, list[str]]] = None,
+    state_gc_timeout_ms: Optional[int] = None,
+) -> DataFrame:
+    """Assemble the whole pipeline over one typed frame per source.
+
+    ``ts_cols``/``order_cols`` give each source's event-time column and
+    arrival-order tiebreak. The join is ``temporal_join_streaming`` on
+    streaming frames (``state_gc_timeout_ms`` is its processing-time
+    GC) and ``temporal_join_batch`` otherwise. Building the frame
+    starts nothing, so a SpecError here leaves no query running."""
+    ts_cols = ts_cols or {}
+    order_cols = order_cols or {}
+    staged = {
+        s.source_id: source_chain(s, ts_cols.get(s.source_id), order_cols.get(s.source_id, ()))(
+            frames[s.source_id]
+        )
+        for s in spec.sources
+    }
+    j = spec.join
+    if j is None:
+        (df,) = staged.values()
+    else:
+        left, right = staged[j.left.source_id], staged[j.right.source_id]
+        left_ts, right_ts = ts_cols.get(j.left.source_id), ts_cols.get(j.right.source_id)
+        if left.isStreaming:
+            from ..streaming.temporal_join import temporal_join_streaming
+
+            df = temporal_join_streaming(
+                left, right, j, left_ts, right_ts, state_gc_timeout_ms=state_gc_timeout_ms
+            )
+        else:
+            df = temporal_join_batch(
+                left, right, j, right_ts_col=right_ts,
+                right_tiebreak=order_cols.get(j.right.source_id, []), left_ts_col=left_ts,
+            )
+    if spec.sink.mapping:
+        df = apply_sink_mapping(df, spec.sink.mapping)
+    return df
+
+
 # Every dataop name a spec may declare (validated at parse time by
-# spec.model). The batch chain applies all of them; the streaming chain
-# applies only STREAM_SAFE_DATAOPS and raises SpecError on the rest.
+# spec.model). source_chain applies all of them to a batch frame; a
+# streaming frame takes only STREAM_SAFE_DATAOPS and raises SpecError
+# on the rest.
 DATAOPS = frozenset({
     "exact_dedup", "simhash", "language_id", "quality_score", "token_stats",
     "fingerprint", "repetition_signals", "split_assign", "mixture_sample",
@@ -224,10 +265,10 @@ STREAM_SAFE_DATAOPS = DATAOPS - {
 def resolve_dataop(op: str):
     """Beyond-reference spec extension: training-data ops declared as
     ``{"type": "dataop", "config": {"op": ..., ...params}}`` transforms
-    run after the reference's fixed stage order — the batch chain
-    applies every op in ``DATAOPS``; the streaming chain applies the
-    ``STREAM_SAFE_DATAOPS`` subset and rejects the rest at assembly
-    time.  Corpus-global ops (near-dup pair mining, clustering,
+    run after the reference's fixed stage order — ``source_chain``
+    applies every op in ``DATAOPS`` to a batch frame and only the
+    ``STREAM_SAFE_DATAOPS`` subset to a streaming frame, rejecting the
+    rest at assembly time.  Corpus-global ops (near-dup pair mining, clustering,
     packing) stay library-level because they need a bounded batch to
     be well-defined."""
     from ..dataops.chunking import (
@@ -375,18 +416,3 @@ def resolve_dataop(op: str):
     except KeyError:
         raise SpecError(f"unknown dataop {op!r}; available: {sorted(registry)}") from None
 
-
-def compile_pipeline(
-    spec: PipelineSpec,
-    ts_cols: Optional[dict[str, str]] = None,
-    order_cols: Optional[dict[str, list[str]]] = None,
-) -> CompiledPipeline:
-    ts_cols = ts_cols or {}
-    order_cols = order_cols or {}
-    chains = {
-        s.source_id: _chain_for_source(
-            s, ts_cols.get(s.source_id), order_cols.get(s.source_id, [])
-        )
-        for s in spec.sources
-    }
-    return CompiledPipeline(spec=spec, source_chains=chains)

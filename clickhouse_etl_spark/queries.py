@@ -196,17 +196,16 @@ _CANONICAL_V3 = {
 )
 def pipeline_canonical(spark, sf_dir):
     """The flagship: a full v3 pipeline document (the reference's wire
-    format, api/pipeline.go:199-330) parsed, compiled, and executed —
+    format, api/pipeline.go:199-330) parsed, assembled, and executed —
     filter -> windowed dedup -> temporal join -> sink mapping."""
-    from .plans import compile_pipeline
+    from .plans import build_pipeline
     from .spec import parse_pipeline_json
 
-    spec = parse_pipeline_json(_CANONICAL_V3)
-    plan = compile_pipeline(spec, ts_cols={"events": "ts"}, order_cols={"events": ["event_id"], "orders": ["o_orderkey"]})
-    return plan.run_batch(
+    return build_pipeline(
+        parse_pipeline_json(_CANONICAL_V3),
         {"events": _t(spark, sf_dir, "events"), "orders": _t(spark, sf_dir, "orders")},
-        ts_cols={"orders": "o_orderdate"},
-        order_cols={"orders": ["o_orderkey"]},
+        ts_cols={"events": "ts", "orders": "o_orderdate"},
+        order_cols={"events": ["event_id"], "orders": ["o_orderkey"]},
     )
 
 

@@ -32,6 +32,7 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.validate import dlq_frame
 from .dlq import DLQWriter
 from .errors import Classification, classify_clickhouse_error
 
@@ -115,11 +116,11 @@ class ClickHouseSink:
             if self.dlq is None:
                 raise  # nowhere to divert the rows: fail the epoch
             # permanent/unknown -> DLQ the whole batch payload-wise
-            failed = df.select(
-                F.lit("sink").alias("component"),
-                F.lit(f"{cls.value}: {str(err)[:200]}").alias("error"),
-                F.to_json(F.struct(*[F.col(c) for c in df.columns])).alias("payload"),
-                F.current_timestamp().alias("dlq_ts"),
+            failed = dlq_frame(
+                df,
+                "sink",
+                F.lit(f"{cls.value}: {str(err)[:200]}"),
+                F.to_json(F.struct(*[F.col(c) for c in df.columns])),
             )
             self.dlq.write(failed)
             report = SinkWriteReport(batch_id, df.count(), "dlq", str(err)[:500])

@@ -228,7 +228,14 @@ def parse_pipeline_json(doc: str | dict) -> PipelineSpec:
     # missing 'enabled' means DISABLED: the reference's Go unmarshal
     # zero-values Join.Enabled to false and gates on it everywhere —
     # a hand-authored doc omitting the key must behave identically
-    if j and j.get("enabled", False):
+    if not (j and j.get("enabled", False)):
+        if len(slots) != 1:
+            # one source per sink path (SURVEY.md §2.8): without a join
+            # the second source's rows would have nowhere to go
+            raise SpecError(
+                f"a pipeline without a join takes exactly 1 source, got {len(slots)}"
+            )
+    else:
         jtype = j.get("type", "temporal")
         if jtype != "temporal":
             raise SpecError(f"only temporal join is supported, got {jtype!r}")

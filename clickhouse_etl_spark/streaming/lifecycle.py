@@ -61,7 +61,8 @@ class RunningPipeline:
     spec: PipelineSpec
     checkpoint_dir: str
     query: object  # StreamingQuery
-    start_args: dict
+    start_args: dict  # StreamingPipeline.start keyword arguments
+    dlq_queries: list = field(default_factory=list)
 
 
 @dataclass
@@ -80,42 +81,44 @@ class PipelineManager:
         ts_cols: dict[str, str],
         sink_fn: Callable[[DataFrame, int], None],
         trigger: Optional[dict] = None,
+        dlq_writer=None,
     ) -> RunningPipeline:
         if spec.pipeline_id in self.pipelines:
             raise ValueError(f"pipeline {spec.pipeline_id!r} already exists")
-        runner = StreamingPipeline(spec=spec, checkpoint_dir=checkpoint_dir)
-        query = runner.start(spark, sources, ts_cols, sink_fn, trigger)
         rp = RunningPipeline(
             spec=spec,
             checkpoint_dir=checkpoint_dir,
-            query=query,
+            query=None,
             start_args={
-                "sources": sources, "ts_cols": ts_cols,
-                "sink_fn": sink_fn, "trigger": trigger,
+                "sources": sources, "ts_cols": ts_cols, "sink_fn": sink_fn,
+                "trigger": trigger, "dlq_writer": dlq_writer,
             },
         )
+        self._start(spark, rp)
         self.pipelines[spec.pipeline_id] = rp
         return rp
 
     def stop(self, pipeline_id: str) -> None:
+        """Stop the main query and the pipeline's DLQ queries."""
         rp = self._get(pipeline_id)
-        if rp.query.isActive:
-            rp.query.stop()
-            rp.query.awaitTermination(60)
+        for q in (rp.query, *rp.dlq_queries):
+            if q.isActive:
+                q.stop()
+                q.awaitTermination(60)
 
     def resume(self, spark: SparkSession, pipeline_id: str) -> RunningPipeline:
         rp = self._get(pipeline_id)
         if rp.query.isActive:
             return rp
-        runner = StreamingPipeline(spec=rp.spec, checkpoint_dir=rp.checkpoint_dir)
-        rp.query = runner.start(
-            spark,
-            rp.start_args["sources"],
-            rp.start_args["ts_cols"],
-            rp.start_args["sink_fn"],
-            rp.start_args["trigger"],
-        )
+        self.stop(pipeline_id)  # a DLQ query may outlive a failed main query
+        self._start(spark, rp)
         return rp
+
+    @staticmethod
+    def _start(spark: SparkSession, rp: RunningPipeline) -> None:
+        runner = StreamingPipeline(spec=rp.spec, checkpoint_dir=rp.checkpoint_dir)
+        rp.query = runner.start(spark, **rp.start_args)
+        rp.dlq_queries = runner.dlq_queries
 
     def edit(
         self, spark: SparkSession, pipeline_id: str, new_spec: PipelineSpec

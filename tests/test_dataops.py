@@ -4396,8 +4396,8 @@ def test_vec_dedup_against_guards(spark, tmp_path):
 
     from pyspark.sql import types as T
 
+    from clickhouse_etl_spark.plans import source_chain
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
 
     schema = T.StructType([
         T.StructField("vec_id", T.LongType()),
@@ -4416,7 +4416,7 @@ def test_vec_dedup_against_guards(spark, tmp_path):
             op="semantic_dedup_against", params={"seen_path": ok}
         ),),
     )
-    out_stream = streaming_source_chain(cfg, "ts")(stream)
+    out_stream = source_chain(cfg, "ts")(stream)
     assert out_stream.isStreaming
     assert set(out_stream.columns) == {"vec_id", "embedding", "ts"}
 
@@ -4623,8 +4623,8 @@ def test_scrub_pii_battery_streams(spark, tmp_path):
 
     from pyspark.sql import types as T
 
+    from clickhouse_etl_spark.plans import source_chain
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
 
     schema = T.StructType([
         T.StructField("doc_id", T.LongType()),
@@ -4640,7 +4640,7 @@ def test_scrub_pii_battery_streams(spark, tmp_path):
         source_id="documents",
         dataops=(DataopConfig(op="scrub_pii_battery", params={}),),
     )
-    out = streaming_source_chain(cfg, "ts")(stream)
+    out = source_chain(cfg, "ts")(stream)
     assert out.isStreaming
     assert "text_scrubbed" in out.columns and "pii_ip" in out.columns
     # and the one micro-batch actually scrubs

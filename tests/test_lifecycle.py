@@ -76,6 +76,39 @@ def test_stop_resume_continues_from_checkpoint(spark, tmp_path):
     assert not os.path.isdir(str(tmp_path / "ckpt"))
 
 
+def test_managed_pipeline_routes_failures_to_dlq(spark, tmp_path):
+    """A managed pipeline over raw payloads writes its validation
+    failures to the DLQ, and stop() stops the DLQ query with the main
+    one (it used to start no DLQ query and drop the failures)."""
+    from clickhouse_etl_spark.sinks import DLQWriter
+
+    spec = parse_pipeline_json(json.dumps(DOC))
+    raw = T.StructType([T.StructField("value", T.StringType())])
+    inp = str(tmp_path / "in")
+    spark.createDataFrame([('{"id":"a","name":"A"}',), ('{broken',)], raw).write.parquet(inp)
+
+    sink = ClickHouseSink(table="out", parquet_fallback_path=str(tmp_path / "out"))
+    dlq = DLQWriter(str(tmp_path / "dlq"))
+    mgr = PipelineManager()
+    rp = mgr.create(
+        spark, spec, str(tmp_path / "ckpt"), {"s": spark.readStream.schema(raw).parquet(inp)},
+        {"s": "id"}, sink.foreach_batch(), dlq_writer=dlq,
+    )
+    queries = [rp.query, *rp.dlq_queries]
+    try:
+        assert len(queries) == 2
+        for q in queries:
+            q.processAllAvailable()
+        assert [r["id"] for r in spark.read.parquet(str(tmp_path / "out")).collect()] == ["a"]
+        failures = dlq.read(spark).collect()
+        assert len(failures) == 1 and failures[0]["payload"] == "{broken"
+        mgr.stop("lc1")
+        assert not any(q.isActive for q in queries)
+    finally:
+        for q in queries:
+            q.stop()
+
+
 @pytest.mark.heavy
 def test_edit_incompatible_spec_rotates_checkpoint(spark, tmp_path):
     """A state-shape-changing edit (adding windowed dedup) cannot resume

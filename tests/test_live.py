@@ -86,11 +86,7 @@ def test_kafka_pipeline_dedup_golden(spark, tmp_path):
 
     from clickhouse_etl_spark.sinks import ClickHouseSink
     from clickhouse_etl_spark.spec import parse_pipeline_json
-    from clickhouse_etl_spark.streaming.runner import (
-        StreamingPipeline,
-        kafka_source_stream,
-        streaming_source_chain,  # noqa: F401  (imported for parity docs)
-    )
+    from clickhouse_etl_spark.streaming.runner import StreamingPipeline, kafka_source_stream
 
     topic = f"live_smoke_{uuid.uuid4().hex[:8]}"
     # produce via Spark's batch Kafka writer (same connector the source

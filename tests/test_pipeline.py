@@ -11,7 +11,7 @@ import json
 
 import pytest
 
-from clickhouse_etl_spark.plans import compile_pipeline
+from clickhouse_etl_spark.plans import build_pipeline
 from clickhouse_etl_spark.spec import parse_pipeline_json
 
 V3_DOC = {
@@ -94,10 +94,11 @@ def test_parse_and_run(spark):
         ["user_id", "email", "uts"],
     )
 
-    plan = compile_pipeline(spec, order_cols={"orders": ["seq"]})
-    out = plan.run_batch(
+    out = build_pipeline(
+        spec,
         {"orders": orders, "users": users},
         ts_cols={"users": "uts"},
+        order_cols={"orders": ["seq"]},
     )
     rows = out.collect()
     assert out.columns == ["order_id", "amount", "created_at", "email"]
@@ -108,11 +109,87 @@ def test_parse_and_run(spark):
     assert r["created_at"] == dt.datetime(2024, 1, 1, 10)
 
 
+def test_two_sources_without_join_rejected_at_parse_time():
+    """Without a join, a second source has no path to the sink: a stream
+    used to drop its rows silently. One source per sink path."""
+    from clickhouse_etl_spark.spec.model import SpecError
+
+    for join in ({"enabled": False}, None):
+        doc = dict(V3_DOC, join=join)
+        with pytest.raises(SpecError, match="without a join takes exactly 1 source, got 2"):
+            parse_pipeline_json(json.dumps(doc))
+
+
+def test_build_pipeline_batch_stream_parity(spark, tmp_path):
+    """One assembler, two drivers: the same spec (filter, windowed
+    dedup, stateless transform, sink mapping) through build_pipeline on
+    a batch frame and on the same rows as an availableNow stream gives
+    the same rows. Each key's duplicates sit inside one 1h window and
+    the keys spread over distinct windows, so the batch bucket dedup
+    and the watermark dedup both keep the earliest row per key."""
+    from pyspark.sql import types as T
+
+    doc = {
+        "version": "v3", "pipeline_id": "parity", "name": "parity",
+        "sources": [{"type": "kafka", "source_id": "ev", "topic": "ev"}],
+        "transforms": [
+            {"type": "filter", "source_id": "ev", "config": {"expression": "amount > 1"}},
+            {"type": "dedup", "source_id": "ev", "config": {"key": "id", "time_window": "1h"}},
+            {"type": "stateless", "source_id": "ev", "config": {"transforms": [
+                {"expression": "id", "output_name": "id", "output_type": "string"},
+                {"expression": "upper(name)", "output_name": "name", "output_type": "string"},
+                {"expression": "amount * 2", "output_name": "amt2", "output_type": "float64"},
+            ]}},
+        ],
+        "sink": {
+            "type": "clickhouse", "table": "out", "max_batch_size": 100, "max_delay_time": "1s",
+            "mapping": [
+                {"name": "id", "column_name": "id", "column_type": "String"},
+                {"name": "name", "column_name": "name", "column_type": "String"},
+                {"name": "amt2", "column_name": "total", "column_type": "Float64"},
+            ],
+        },
+    }
+    spec = parse_pipeline_json(json.dumps(doc))
+    schema = T.StructType([
+        T.StructField("id", T.StringType()),
+        T.StructField("name", T.StringType()),
+        T.StructField("amount", T.DoubleType()),
+        T.StructField("ts", T.TimestampType()),
+    ])
+    base = dt.datetime(2024, 1, 1, 10)
+    rows = [
+        ("a", "x", 5.0, base),
+        ("b", "z", 0.5, base + dt.timedelta(minutes=1)),             # filtered
+        ("b", "w", 3.0, base + dt.timedelta(minutes=2)),
+        ("a", "y", 7.0, base + dt.timedelta(minutes=10)),            # duplicate
+        ("c", "v", 4.0, base + dt.timedelta(hours=1, minutes=5)),
+        ("c", "u", 9.0, base + dt.timedelta(hours=1, minutes=20)),   # duplicate
+    ]
+    inp = str(tmp_path / "in")
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(inp)
+
+    got = []
+    q = (
+        build_pipeline(spec, {"ev": spark.readStream.schema(schema).parquet(inp)}, {"ev": "ts"})
+        .writeStream.foreachBatch(lambda df, _bid: got.extend(df.collect()))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    batch = build_pipeline(spec, {"ev": spark.createDataFrame(rows, schema)}, {"ev": "ts"})
+    expected = [("a", "X", 10.0), ("b", "W", 6.0), ("c", "V", 8.0)]
+    assert batch.columns == ["id", "name", "total"]
+    assert sorted(map(tuple, batch.collect())) == expected
+    assert sorted(map(tuple, got)) == expected
+
+
 def test_dataop_transforms_in_spec(spark):
     """Beyond-reference spec extension: training-data ops declared as
-    v3 `dataop` transforms run on the compiled chain after the fixed
+    v3 `dataop` transforms run on the assembled chain after the fixed
     filter→dedup→transform order, in declared order."""
-    from clickhouse_etl_spark.plans import compile_pipeline
+    from clickhouse_etl_spark.plans import build_pipeline
     from clickhouse_etl_spark.sources import load_table
     from clickhouse_etl_spark.spec import parse_pipeline_json
 
@@ -151,9 +228,8 @@ def test_dataop_transforms_in_spec(spark):
     assert [d.op for d in spec.source("documents").dataops] == [
         "exact_dedup", "quality_score", "token_stats"
     ]
-    plan = compile_pipeline(spec)
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    out = plan.run_batch({"documents": docs})
+    out = build_pipeline(spec, {"documents": docs})
     assert out.columns == ["doc_id", "quality", "n_tokens"]
     n = out.count()
     assert 0 < n <= docs.count()
@@ -173,7 +249,7 @@ def test_dataop_transforms_in_spec(spark):
 def test_streaming_chain_applies_stream_safe_dataops(spark, tmp_path):
     """ADVICE r3: spec-declared dataops must not silently vanish in a
     streaming deployment — the stream-safe subset applies in
-    streaming_source_chain; batch-only ops raise SpecError at assembly
+    source_chain; batch-only ops raise SpecError at assembly
     time (plan construction, no query started)."""
     import pytest as _pytest
 
@@ -184,7 +260,7 @@ def test_streaming_chain_applies_stream_safe_dataops(spark, tmp_path):
         SourceConfig,
         SpecError,
     )
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
+    from clickhouse_etl_spark.plans import source_chain
 
     schema = T.StructType([
         T.StructField("doc_id", T.LongType()),
@@ -201,7 +277,7 @@ def test_streaming_chain_applies_stream_safe_dataops(spark, tmp_path):
         source_id="documents",
         dataops=(DataopConfig(op="token_stats"), DataopConfig(op="quality_score")),
     )
-    out = streaming_source_chain(safe, "ts")(stream)
+    out = source_chain(safe, "ts")(stream)
     assert out.isStreaming
     assert "n_tokens" in out.columns and "quality" in out.columns
 
@@ -210,14 +286,14 @@ def test_streaming_chain_applies_stream_safe_dataops(spark, tmp_path):
         source_id="documents", dataops=(DataopConfig(op="upsample_mixture",
                                                      params={"source_col": "text"}),)
     )
-    out2 = streaming_source_chain(ups, "ts")(stream)
+    out2 = source_chain(ups, "ts")(stream)
     assert out2.isStreaming and "copy_idx" in out2.columns
 
     unsafe = SourceConfig(
         source_id="documents", dataops=(DataopConfig(op="exact_dedup"),)
     )
     with _pytest.raises(SpecError, match="batch-only"):
-        streaming_source_chain(unsafe, "ts")(stream)
+        source_chain(unsafe, "ts")(stream)
 
 
 def test_r4_dataops_on_spec_surface(spark, tmp_path):
@@ -230,8 +306,8 @@ def test_r4_dataops_on_spec_surface(spark, tmp_path):
         STREAM_SAFE_DATAOPS,
         resolve_dataop,
     )
+    from clickhouse_etl_spark.plans import source_chain
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig, SpecError
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
 
     new_ops = {"span_dedup", "rare_token_ratio", "balanced_sample"}
     assert new_ops <= DATAOPS and not (new_ops & STREAM_SAFE_DATAOPS)
@@ -253,7 +329,7 @@ def test_r4_dataops_on_spec_surface(spark, tmp_path):
     for op in sorted(new_ops):
         cfg = SourceConfig(source_id="documents", dataops=(DataopConfig(op=op),))
         with pytest.raises(SpecError, match="batch-only"):
-            streaming_source_chain(cfg, "ts")(stream)
+            source_chain(cfg, "ts")(stream)
 
 
 def test_dedup_against_streaming_parity_with_batch(spark, tmp_path):
@@ -265,9 +341,9 @@ def test_dedup_against_streaming_parity_with_batch(spark, tmp_path):
     from pyspark.sql import types as T
 
     from clickhouse_etl_spark.dataops.dedup import dedup_against_path
+    from clickhouse_etl_spark.plans import source_chain
     from clickhouse_etl_spark.plans.compiler import STREAM_SAFE_DATAOPS
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
 
     assert "dedup_against" in STREAM_SAFE_DATAOPS
 
@@ -301,7 +377,7 @@ def test_dedup_against_streaming_parity_with_batch(spark, tmp_path):
         source_id="documents",
         dataops=(DataopConfig(op="dedup_against", params={"seen_path": seen_dir}),),
     )
-    out = streaming_source_chain(src, "ts")(stream)
+    out = source_chain(src, "ts")(stream)
     assert out.isStreaming
     q = (
         out.writeStream.format("memory")
@@ -374,8 +450,8 @@ def test_r6_dataops_on_spec_surface(spark, tmp_path):
         STREAM_SAFE_DATAOPS,
         resolve_dataop,
     )
+    from clickhouse_etl_spark.plans import source_chain
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig, SpecError
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
 
     assert {"normalize_text", "hash_embedding"} <= DATAOPS
     assert "normalize_text" in STREAM_SAFE_DATAOPS
@@ -402,13 +478,13 @@ def test_r6_dataops_on_spec_surface(spark, tmp_path):
     safe = SourceConfig(
         source_id="documents", dataops=(DataopConfig(op="normalize_text"),)
     )
-    out = streaming_source_chain(safe, "ts")(stream)
+    out = source_chain(safe, "ts")(stream)
     assert out.isStreaming and "text_norm" in out.columns
     unsafe = SourceConfig(
         source_id="documents", dataops=(DataopConfig(op="hash_embedding"),)
     )
     with _pytest.raises(SpecError, match="batch-only"):
-        streaming_source_chain(unsafe, "ts")(stream)
+        source_chain(unsafe, "ts")(stream)
 
 
 def test_r7_dataops_on_spec_surface(spark, tmp_path):
@@ -427,8 +503,8 @@ def test_r7_dataops_on_spec_surface(spark, tmp_path):
         STREAM_SAFE_DATAOPS,
         resolve_dataop,
     )
+    from clickhouse_etl_spark.plans import source_chain
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig, SpecError
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
 
     assert {"trained_classifier", "cluster_sample"} <= DATAOPS
     assert not ({"trained_classifier", "cluster_sample"} & STREAM_SAFE_DATAOPS)
@@ -464,7 +540,7 @@ def test_r7_dataops_on_spec_surface(spark, tmp_path):
     for op in ("trained_classifier", "cluster_sample"):
         cfg = SourceConfig(source_id="documents", dataops=(DataopConfig(op=op),))
         with _pytest.raises(SpecError, match="batch-only"):
-            streaming_source_chain(cfg, "ts")(stream)
+            source_chain(cfg, "ts")(stream)
 
 
 def test_classify_against_streaming_parity_with_batch(spark, tmp_path):
@@ -481,9 +557,9 @@ def test_classify_against_streaming_parity_with_batch(spark, tmp_path):
         trained_quality_classifier,
         write_classifier_table,
     )
+    from clickhouse_etl_spark.plans import source_chain
     from clickhouse_etl_spark.plans.compiler import STREAM_SAFE_DATAOPS
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
 
     assert "classify_against" in STREAM_SAFE_DATAOPS
 
@@ -525,7 +601,7 @@ def test_classify_against_streaming_parity_with_batch(spark, tmp_path):
             DataopConfig(op="classify_against", params={"weights_path": weights_dir}),
         ),
     )
-    out = streaming_source_chain(src, "ts")(stream)
+    out = source_chain(src, "ts")(stream)
     assert out.isStreaming
     q = (
         out.writeStream.format("memory")
@@ -587,8 +663,8 @@ def test_dedup_against_bloom_on_streaming_chain(spark, tmp_path):
     from pyspark.sql import types as T
 
     from clickhouse_etl_spark.dataops.dedup import write_bloom_table
+    from clickhouse_etl_spark.plans import source_chain
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
 
     seen = spark.createDataFrame(
         [(100, "already ingested one"), (101, "already ingested two")],
@@ -623,7 +699,7 @@ def test_dedup_against_bloom_on_streaming_chain(spark, tmp_path):
             ),
         ),
     )
-    out = streaming_source_chain(src, "ts")(stream)
+    out = source_chain(src, "ts")(stream)
     assert out.isStreaming
     q = (
         out.writeStream.format("memory")
@@ -648,8 +724,8 @@ def test_repetition_signals_streaming_chain_runs(spark, tmp_path):
     a stream and emits the per-row signals."""
     from pyspark.sql import types as T
 
+    from clickhouse_etl_spark.plans import source_chain
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
 
     schema = T.StructType([
         T.StructField("doc_id", T.LongType()),
@@ -669,7 +745,7 @@ def test_repetition_signals_streaming_chain_runs(spark, tmp_path):
         source_id="documents",
         dataops=(DataopConfig(op="repetition_signals"),),
     )
-    out = streaming_source_chain(src, "ts")(stream)
+    out = source_chain(src, "ts")(stream)
     assert out.isStreaming
     q = (
         out.writeStream.format("memory")
@@ -703,9 +779,9 @@ def test_streaming_curation_dataops_spec_chain(spark, tmp_path):
         normalize_text,
         write_classifier_table,
     )
+    from clickhouse_etl_spark.plans import source_chain
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig
     from clickhouse_etl_spark.streaming.curation import curation_scored_stream
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
 
     corpus = spark.createDataFrame(
         [(i, "the a quick brown fox jumps over " * (1 + i % 5)) for i in range(80)],
@@ -757,7 +833,7 @@ def test_streaming_curation_dataops_spec_chain(spark, tmp_path):
             }),
         ),
     )
-    out = streaming_source_chain(src, "ts")(stream)
+    out = source_chain(src, "ts")(stream)
     assert out.isStreaming
     q = (
         out.writeStream.format("memory")
@@ -799,8 +875,8 @@ def test_six_stage_curation_chain_from_one_pipeline_json(spark, tmp_path):
         write_classifier_table,
         write_importance_table,
     )
+    from clickhouse_etl_spark.plans import source_chain
     from clickhouse_etl_spark.sources import load_table
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
     from reference_forms import curation_scored_staged
 
     corpus = (
@@ -904,7 +980,7 @@ def test_six_stage_curation_chain_from_one_pipeline_json(spark, tmp_path):
         T.StructField("ts", T.TimestampType()),
     ])
     stream = spark.readStream.schema(schema).parquet(wave_dir)
-    out = streaming_source_chain(
+    out = source_chain(
         spec.source("documents"), "ts"
     )(stream)
     assert out.isStreaming
@@ -1044,8 +1120,8 @@ def test_ann_serve_on_spec_surface(spark, sf_dir, tmp_path):
         SourceConfig,
         SpecError,
     )
+    from clickhouse_etl_spark.plans import source_chain
     from clickhouse_etl_spark.streaming import StreamingPipeline
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
 
     assert "ann_serve" in DATAOPS
     assert "ann_serve" not in STREAM_SAFE_DATAOPS  # mid-chain: rejected
@@ -1140,7 +1216,7 @@ def test_ann_serve_on_spec_surface(spark, sf_dir, tmp_path):
         ),
     )
     with _pytest.raises(SpecError, match="SINK-SIDE"):
-        streaming_source_chain(cfg, "query_id")(stream)
+        source_chain(cfg, "query_id")(stream)
     release_artifact_cache()
 
 
@@ -1159,8 +1235,8 @@ def test_r9_dataops_on_spec_surface(spark, tmp_path):
         STREAM_SAFE_DATAOPS,
         resolve_dataop,
     )
+    from clickhouse_etl_spark.plans import source_chain
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig, SpecError
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
 
     assert {"gopher_rules", "temperature_mixture"} <= DATAOPS
     assert "gopher_rules" in STREAM_SAFE_DATAOPS
@@ -1193,13 +1269,13 @@ def test_r9_dataops_on_spec_surface(spark, tmp_path):
     safe = SourceConfig(
         source_id="documents", dataops=(DataopConfig(op="gopher_rules"),)
     )
-    out = streaming_source_chain(safe, "ts")(stream)
+    out = source_chain(safe, "ts")(stream)
     assert out.isStreaming and "pass_gopher" in out.columns
     unsafe = SourceConfig(
         source_id="documents", dataops=(DataopConfig(op="temperature_mixture"),)
     )
     with _pytest.raises(SpecError, match="batch-only"):
-        streaming_source_chain(unsafe, "ts")(stream)
+        source_chain(unsafe, "ts")(stream)
 
 
 def test_c4_and_line_dedup_on_spec_surface(spark, tmp_path):
@@ -1217,8 +1293,8 @@ def test_c4_and_line_dedup_on_spec_surface(spark, tmp_path):
         STREAM_SAFE_DATAOPS,
         resolve_dataop,
     )
+    from clickhouse_etl_spark.plans import source_chain
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig, SpecError
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
 
     assert {"c4_filters", "line_dedup"} <= DATAOPS
     assert "c4_filters" in STREAM_SAFE_DATAOPS
@@ -1249,13 +1325,13 @@ def test_c4_and_line_dedup_on_spec_surface(spark, tmp_path):
     safe = SourceConfig(
         source_id="documents", dataops=(DataopConfig(op="c4_filters"),)
     )
-    out = streaming_source_chain(safe, "ts")(stream)
+    out = source_chain(safe, "ts")(stream)
     assert out.isStreaming and "pass_c4" in out.columns
     unsafe = SourceConfig(
         source_id="documents", dataops=(DataopConfig(op="line_dedup"),)
     )
     with _pytest.raises(SpecError, match="batch-only"):
-        streaming_source_chain(unsafe, "ts")(stream)
+        source_chain(unsafe, "ts")(stream)
 
 
 def test_line_dedup_against_on_spec_surface(spark, tmp_path):
@@ -1276,9 +1352,9 @@ def test_line_dedup_against_on_spec_surface(spark, tmp_path):
         STREAM_SAFE_DATAOPS,
         resolve_dataop,
     )
+    from clickhouse_etl_spark.plans import source_chain
     from clickhouse_etl_spark.spec import parse_pipeline_json
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig, SpecError
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
 
     assert "line_dedup_against" in DATAOPS
     assert "line_dedup_against" in STREAM_SAFE_DATAOPS
@@ -1338,7 +1414,7 @@ def test_line_dedup_against_on_spec_surface(spark, tmp_path):
         source_id="documents",
         dataops=(DataopConfig(op="line_dedup_against", params={"seen_path": seen}),),
     )
-    out_stream = streaming_source_chain(safe, "ts")(stream)
+    out_stream = source_chain(safe, "ts")(stream)
     assert out_stream.isStreaming and "n_lines_kept" in out_stream.columns
 
     # the span-grain sibling shares the surface contract: stream-safe,
@@ -1364,7 +1440,7 @@ def test_line_dedup_against_on_spec_surface(spark, tmp_path):
         ),
     )
     stream2 = spark.readStream.schema(schema).parquet(src_dir)
-    out2 = streaming_source_chain(safe_span, "ts")(stream2)
+    out2 = source_chain(safe_span, "ts")(stream2)
     assert out2.isStreaming and "n_sentences_kept" in out2.columns
 
 
@@ -1436,9 +1512,9 @@ def test_importance_against_on_spec_surface(spark, tmp_path):
         STREAM_SAFE_DATAOPS,
         resolve_dataop,
     )
+    from clickhouse_etl_spark.plans import source_chain
     from clickhouse_etl_spark.spec import parse_pipeline_json
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig, SpecError
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
 
     assert "importance_against" in DATAOPS
     assert "importance_against" in STREAM_SAFE_DATAOPS
@@ -1486,7 +1562,7 @@ def test_importance_against_on_spec_surface(spark, tmp_path):
         dataops=(DataopConfig(op="importance_against",
                               params={"weights_path": path}),),
     )
-    s_out = streaming_source_chain(safe, "ts")(stream)
+    s_out = source_chain(safe, "ts")(stream)
     assert s_out.isStreaming and "score" in s_out.columns
 
 
@@ -1508,9 +1584,9 @@ def test_decontaminate_against_on_spec_surface(spark, tmp_path):
         STREAM_SAFE_DATAOPS,
         resolve_dataop,
     )
+    from clickhouse_etl_spark.plans import source_chain
     from clickhouse_etl_spark.spec import parse_pipeline_json
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig, SpecError
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
 
     assert "decontaminate_against" in DATAOPS
     assert "decontaminate_against" in STREAM_SAFE_DATAOPS
@@ -1577,7 +1653,7 @@ def test_decontaminate_against_on_spec_surface(spark, tmp_path):
             op="decontaminate_against", params={"seen_path": seen, "n": 3}
         ),),
     )
-    out_stream = streaming_source_chain(safe, "ts")(stream)
+    out_stream = source_chain(safe, "ts")(stream)
     assert out_stream.isStreaming
     assert set(out_stream.columns) == {"doc_id", "text", "ts"}
 
@@ -1601,9 +1677,9 @@ def test_neardup_against_on_spec_surface(spark, tmp_path):
         STREAM_SAFE_DATAOPS,
         resolve_dataop,
     )
+    from clickhouse_etl_spark.plans import source_chain
     from clickhouse_etl_spark.spec import parse_pipeline_json
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig, SpecError
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
 
     assert "neardup_against" in DATAOPS
     assert "neardup_against" in STREAM_SAFE_DATAOPS
@@ -1670,6 +1746,6 @@ def test_neardup_against_on_spec_surface(spark, tmp_path):
             op="neardup_against", params={"seen_path": seen}
         ),),
     )
-    out_stream = streaming_source_chain(safe, "ts")(stream)
+    out_stream = source_chain(safe, "ts")(stream)
     assert out_stream.isStreaming
     assert set(out_stream.columns) == {"doc_id", "text", "ts"}

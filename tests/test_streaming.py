@@ -437,6 +437,48 @@ def test_streaming_dedup_without_window_raises(spark, tmp_path):
         )
 
 
+def test_failed_start_leaves_no_query_running(spark, tmp_path):
+    """An assembly-time SpecError (here a batch-only dataop on a stream)
+    leaves nothing running: no DLQ query may start before the whole
+    plan is built, or it keeps running with its checkpoint held."""
+    from clickhouse_etl_spark.spec.model import SpecError
+
+    doc = {
+        "version": "v3",
+        "pipeline_id": "orphan",
+        "name": "orphan-dlq",
+        "sources": [
+            {"type": "kafka", "source_id": "s", "topic": "s",
+             "schema_fields": [{"name": "id", "type": "string"}, {"name": "text", "type": "string"}]},
+        ],
+        "transforms": [{"type": "dataop", "source_id": "s", "config": {"op": "exact_dedup"}}],
+        "sink": {"type": "clickhouse", "table": "out", "max_batch_size": 100,
+                 "max_delay_time": "1s"},
+    }
+    spec = parse_pipeline_json(json.dumps(doc))
+    raw_schema = T.StructType([T.StructField("value", T.StringType())])
+    inp = _write_stream_input(
+        spark, str(tmp_path), "in", [('{"id":"a","text":"x"}',), ('{broken',)], raw_schema
+    )
+    sink = ClickHouseSink(table="out", parquet_fallback_path=str(tmp_path / "sinkout"))
+    pipe = StreamingPipeline(spec=spec, checkpoint_dir=str(tmp_path / "ckpt"))
+    before = {q.id for q in spark.streams.active}
+    try:
+        with pytest.raises(SpecError, match="'exact_dedup' is batch-only"):
+            pipe.start(
+                spark,
+                sources={"s": spark.readStream.schema(raw_schema).parquet(inp)},
+                ts_cols={"s": "id"},
+                sink_fn=sink.foreach_batch(),
+                dlq_writer=DLQWriter(str(tmp_path / "dlq")),
+            )
+        assert {q.id for q in spark.streams.active} == before
+    finally:
+        for q in spark.streams.active:
+            if q.id not in before:
+                q.stop()
+
+
 def test_sink_replay_idempotency(spark, tmp_path):
     """At-least-once + idempotent write: replaying the same epoch (same
     batch_id, same rows) leaves exactly one logical copy after the
@@ -911,8 +953,8 @@ def test_line_dedup_against_stream_parity_and_wave_lifecycle(spark, tmp_path):
         write_line_digest_table,
     )
     from clickhouse_etl_spark.dataops.util import release_artifact_cache
+    from clickhouse_etl_spark.plans import source_chain
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
 
     wave1 = spark.createDataFrame(
         [
@@ -969,7 +1011,7 @@ def test_line_dedup_against_stream_parity_and_wave_lifecycle(spark, tmp_path):
         .parquet(src)
     )
     q = (
-        streaming_source_chain(cfg, "ts")(stream)
+        source_chain(cfg, "ts")(stream)
         .writeStream.format("memory")
         .queryName("line_dedup_stream_out")
         .outputMode("append")
@@ -1013,8 +1055,8 @@ def test_decontaminate_against_stream_parity(spark, tmp_path):
         write_ngram_digest_table,
     )
     from clickhouse_etl_spark.dataops.util import release_artifact_cache
+    from clickhouse_etl_spark.plans import source_chain
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
 
     bench = spark.createDataFrame(
         [
@@ -1075,7 +1117,7 @@ def test_decontaminate_against_stream_parity(spark, tmp_path):
         .parquet(src)
     )
     q = (
-        streaming_source_chain(cfg, "ts")(stream)
+        source_chain(cfg, "ts")(stream)
         .writeStream.format("memory")
         .queryName("decontam_stream_out")
         .outputMode("append")
@@ -1103,8 +1145,8 @@ def test_neardup_against_stream_parity(spark, tmp_path):
         write_band_digest_table,
     )
     from clickhouse_etl_spark.dataops.util import release_artifact_cache
+    from clickhouse_etl_spark.plans import source_chain
     from clickhouse_etl_spark.spec.model import DataopConfig, SourceConfig
-    from clickhouse_etl_spark.streaming.runner import streaming_source_chain
 
     wave1 = spark.createDataFrame(
         [
@@ -1163,7 +1205,7 @@ def test_neardup_against_stream_parity(spark, tmp_path):
         .parquet(src)
     )
     q = (
-        streaming_source_chain(cfg, "ts")(stream)
+        source_chain(cfg, "ts")(stream)
         .writeStream.format("memory")
         .queryName("neardup_stream_out")
         .outputMode("append")
