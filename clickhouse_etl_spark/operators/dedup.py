@@ -14,8 +14,8 @@ Spark mapping:
   ``window_s`` bucket. This is the deterministic, shuffle-once,
   SQL-expressible form of the TTL rule; the processing-time ->
   event-time shift is the documented divergence (SURVEY.md §7.5.2).
-- streaming: ``dropDuplicatesWithinWatermark`` in streaming/runner.py
-  gives the faithful "seen within the last window" behavior with state
+- streaming: ``dropDuplicatesWithinWatermark``, chosen by
+  ``plans.compiler.source_chain`` for a streaming frame, gives the faithful "seen within the last window" behavior with state
   eviction by watermark.
 
 Scale notes: both forms are a single hash shuffle on the key (plus

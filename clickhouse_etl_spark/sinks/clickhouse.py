@@ -18,10 +18,10 @@ DLQ (permanent), backtick-quote identifiers. Spark mapping:
   write: RETRYABLE re-raises (Spark retries the epoch from the
   checkpoint), PERMANENT/UNKNOWN divert the batch to the DLQ.
 
-The JDBC driver jar is not bundled in this environment; writes fall
-back to a parquet "table directory" target so the full control flow
-(idempotency column, classification, DLQ diversion) is testable
-offline. Point ``jdbc_url`` at a real ClickHouse to go live.
+The JDBC driver jar is not bundled; writes fall back to a parquet
+"table directory" with one ``_batch_id=N/`` partition per epoch
+(``dlq.write_epoch``; the path belongs to one pipeline), so the full
+control flow is testable offline. Point ``jdbc_url`` at ClickHouse to go live.
 """
 
 from __future__ import annotations
@@ -29,11 +29,11 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Callable, Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..operators.validate import dlq_frame
-from .dlq import DLQWriter
+from .dlq import DLQWriter, stamp_epoch, write_epoch
 from .errors import Classification, classify_clickhouse_error
 
 
@@ -60,7 +60,7 @@ class ClickHouseSink:
     write_parallelism: int = 4              # ≈ reference worker pool (GOMAXPROCS-2)
     reports: list = field(default_factory=list)
 
-    def _write_once(self, df: DataFrame, batch_id: Optional[int] = None) -> None:
+    def _write_once(self, df: DataFrame) -> None:
         if self.jdbc_url:
             (
                 df.repartition(self.write_parallelism)
@@ -72,15 +72,7 @@ class ClickHouseSink:
                 .save()
             )
         elif self.parquet_fallback_path:
-            # per-epoch directory overwrite: a replayed batch rewrites its
-            # own partition instead of appending a second physical copy —
-            # the fallback-side equivalent of ReplacingMergeTree collapsing
-            # replayed inserts on the real ClickHouse target
-            if batch_id is not None:
-                batch_dir = f"{self.parquet_fallback_path}/_batch_id={batch_id}"
-                df.drop("_batch_id").write.mode("overwrite").parquet(batch_dir)
-            else:
-                df.write.mode("append").parquet(self.parquet_fallback_path)
+            write_epoch(df, self.parquet_fallback_path)
         else:
             raise ValueError("ClickHouseSink needs jdbc_url or parquet_fallback_path")
 
@@ -92,20 +84,13 @@ class ClickHouseSink:
         batch to the DLQ; with no DLQ wired they re-raise too, since
         returning would commit an epoch whose rows went nowhere.
 
-        The micro-batch is evaluated exactly once: the row count for the
-        success report rides on the write job as an observed metric (no
-        post-write recount), and the epoch's target directory comes from
-        the ``batch_id`` argument (no driver round-trip to re-read the
-        stamp column). At thousands of epochs both used to cost a full
-        second evaluation + a collect per batch."""
-        from pyspark.sql import Observation
-
+        The micro-batch is evaluated exactly once: the report's row count
+        is an observed metric on the write job (no post-write recount),
+        observed below the stamp so the constant ``_batch_id`` partition
+        column still folds and the write plans no per-row sort."""
         obs = Observation()
-        stamped = df.withColumn("_batch_id", F.lit(batch_id).cast("bigint")).observe(
-            obs, F.count(F.lit(1)).alias("rows")
-        )
         try:
-            self._write_once(stamped, batch_id)
+            self._write_once(stamp_epoch(df.observe(obs, F.count(F.lit(1)).alias("rows")), batch_id))
             report = SinkWriteReport(batch_id, obs.get["rows"], "written")
         except Exception as err:  # noqa: BLE001 — classification boundary
             cls = classify_clickhouse_error(err)
@@ -116,14 +101,15 @@ class ClickHouseSink:
             if self.dlq is None:
                 raise  # nowhere to divert the rows: fail the epoch
             # permanent/unknown -> DLQ the whole batch payload-wise
+            obs = Observation()
             failed = dlq_frame(
-                df,
+                df.observe(obs, F.count(F.lit(1)).alias("rows")),
                 "sink",
                 F.lit(f"{cls.value}: {str(err)[:200]}"),
                 F.to_json(F.struct(*[F.col(c) for c in df.columns])),
             )
-            self.dlq.write(failed)
-            report = SinkWriteReport(batch_id, df.count(), "dlq", str(err)[:500])
+            self.dlq.write(stamp_epoch(failed, batch_id))
+            report = SinkWriteReport(batch_id, obs.get["rows"], "dlq", str(err)[:500])
         self.reports.append(report)
         return report
 
@@ -132,19 +118,3 @@ class ClickHouseSink:
             self.write_batch(df, batch_id)
 
         return fn
-
-    def read_deduped(self, spark) -> DataFrame:
-        """Read the parquet-fallback target with replay duplicates
-        collapsed: one copy per (_batch_id, row content).
-
-        On real ClickHouse the same guarantee comes from the table
-        engine — ReplacingMergeTree ORDER BY (_batch_id, row key)
-        collapses replayed inserts at merge time (the design SURVEY.md
-        §7.5.4 calls for). This helper is the fallback-side equivalent
-        so the at-least-once + idempotent-write story is testable
-        offline.
-        """
-        if not self.parquet_fallback_path:
-            raise ValueError("read_deduped applies to the parquet fallback target")
-        df = spark.read.parquet(self.parquet_fallback_path)
-        return df.dropDuplicates(df.columns)

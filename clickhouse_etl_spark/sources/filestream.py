@@ -19,7 +19,7 @@ state in the same checkpoint: a document re-dropped in a later wave is
 skipped forever. State grows with one (digest) row per unique doc —
 bounded by corpus cardinality, the same contract as the reference's
 dedup KV store (SURVEY.md §2.4); for watermark-bounded state use the
-event-time dedup in streaming/runner.py instead.
+event-time dedup of ``plans.compiler.source_chain`` instead.
 """
 
 from __future__ import annotations

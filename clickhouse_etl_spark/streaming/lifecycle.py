@@ -64,6 +64,11 @@ class RunningPipeline:
     start_args: dict  # StreamingPipeline.start keyword arguments
     dlq_queries: list = field(default_factory=list)
 
+    @property
+    def running(self) -> bool:
+        """Only while every query, the DLQ ones too, is active."""
+        return all(q.isActive for q in (self.query, *self.dlq_queries))
+
 
 @dataclass
 class PipelineManager:
@@ -108,9 +113,9 @@ class PipelineManager:
 
     def resume(self, spark: SparkSession, pipeline_id: str) -> RunningPipeline:
         rp = self._get(pipeline_id)
-        if rp.query.isActive:
+        if rp.running:
             return rp
-        self.stop(pipeline_id)  # a DLQ query may outlive a failed main query
+        self.stop(pipeline_id)  # any query may outlive the others
         self._start(spark, rp)
         return rp
 
@@ -151,7 +156,7 @@ class PipelineManager:
 
     def status(self) -> dict[str, str]:
         return {
-            pid: ("running" if rp.query.isActive else "stopped")
+            pid: ("running" if rp.running else "stopped")
             for pid, rp in self.pipelines.items()
         }
 

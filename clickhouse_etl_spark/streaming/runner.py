@@ -8,14 +8,14 @@ DLQ split (the reference's ingestor step), sink-side ``ann_serve``
 wiring and ``writeStream``. Stage order, dedup, join and sink mapping
 come from ``plans.compiler.build_pipeline``, the same assembler batch
 callers use; no query starts until it has returned. Delivery
-semantics: checkpointing + the sink's idempotency column give
-at-least-once with harmless replays, replacing the reference's
+semantics: checkpointing + the one epoch-keyed write of the sink and
+the DLQ (``sinks.dlq.write_epoch``) give at-least-once with harmless
+replays (a replayed epoch replaces its rows), replacing the reference's
 ack/commit choreography (kafka/consumer.go:253-362).
 
-Dedup is ``dropDuplicatesWithinWatermark`` — the faithful "first seen
-within window wins" with state eviction by watermark (the reference's
-Badger TTL, deduplication/badger/deduplication.go:30-103, shifted from
-processing to event time as documented).
+Streaming dedup (``dropDuplicatesWithinWatermark``, the reference's
+Badger TTL shifted from processing to event time) is chosen in
+``plans.compiler.source_chain``, not here.
 """
 
 from __future__ import annotations
@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..operators.validate import validate_json
 from ..plans.compiler import build_pipeline
+from ..sinks.dlq import stamp_epoch
 from ..spec.model import PipelineSpec, SourceConfig
 
 
@@ -103,7 +104,7 @@ class StreamingPipeline:
         query start only after ``build_pipeline`` returns, so an
         assembly-time SpecError leaves nothing running.
         """
-        trigger = trigger or {"processingTime": f"{int(self.spec.sink.max_delay_time_s)} seconds"}
+        trigger = trigger or {"processingTime": f"{round(self.spec.sink.max_delay_time_s * 1e3)} milliseconds"}
         self.dlq_queries = []
 
         # sink-side ANN serving (VERDICT r8 #4): a TERMINAL ann_serve
@@ -152,7 +153,7 @@ class StreamingPipeline:
             for sid, dlq in failures.items():
                 self.dlq_queries.append(
                     dlq.writeStream.foreachBatch(
-                        lambda b, _bid: dlq_writer.write(b) if not b.isEmpty() else None
+                        lambda b, bid: dlq_writer.write(stamp_epoch(b, bid))
                     )
                     .option("checkpointLocation", f"{self.checkpoint_dir}/dlq_{sid}")
                     .outputMode("append")

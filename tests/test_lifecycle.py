@@ -148,3 +148,37 @@ def test_edit_incompatible_spec_rotates_checkpoint(spark, tmp_path):
     assert rp.checkpoint_dir != str(tmp_path / "ckpt")
     out = spark.read.parquet(str(tmp_path / "out"))
     assert {r["id"] for r in out.collect()} == {"a", "b"}
+
+
+def test_dead_dlq_query_stops_pipeline_and_resume_restarts_it(spark, tmp_path):
+    """A pipeline runs only while all its queries run: a dead DLQ query
+    shows as stopped, and resume() restarts every query."""
+    from clickhouse_etl_spark.sinks import DLQWriter
+
+    spec = parse_pipeline_json(json.dumps(DOC))
+    raw = T.StructType([T.StructField("value", T.StringType())])
+    inp = str(tmp_path / "in")
+    spark.createDataFrame([('{"id":"a","name":"A"}',), ('{broken',)], raw).write.parquet(inp)
+
+    sink = ClickHouseSink(table="out", parquet_fallback_path=str(tmp_path / "out"))
+    mgr = PipelineManager()
+    rp = mgr.create(
+        spark, spec, str(tmp_path / "ckpt"), {"s": spark.readStream.schema(raw).parquet(inp)},
+        {"s": "id"}, sink.foreach_batch(), dlq_writer=DLQWriter(str(tmp_path / "dlq")),
+    )
+    started = [rp.query, *rp.dlq_queries]
+    try:
+        for q in started:
+            q.processAllAvailable()  # a stop inside batch 0 can strand its offset log
+        assert mgr.status() == {"lc1": "running"}
+        (dq,) = rp.dlq_queries
+        dq.stop()
+        assert mgr.status() == {"lc1": "stopped"}
+        rp = mgr.resume(spark, "lc1")
+        started += [rp.query, *rp.dlq_queries]
+        assert len(rp.dlq_queries) == 1 and rp.dlq_queries[0] is not dq
+        assert all(q.isActive for q in started[2:])
+        assert mgr.status() == {"lc1": "running"}
+    finally:
+        for q in started:
+            q.stop()

@@ -174,18 +174,18 @@ def test_sink_write_and_idempotency_column(spark, tmp_path):
 
 def test_sink_permanent_error_routes_to_dlq(spark, tmp_path):
     class FailingSink(ClickHouseSink):
-        def _write_once(self, df, batch_id=None):
+        def _write_once(self, df):
             raise RuntimeError("Code: 6. DB::Exception: Cannot parse text")
 
     dlq = DLQWriter(str(tmp_path / "dlq"))
     sink = FailingSink(table="t", parquet_fallback_path=str(tmp_path / "out"), dlq=dlq)
     df = spark.createDataFrame([(1, "a")], ["k", "v"])
     report = sink.write_batch(df, batch_id=1)
-    assert report.outcome == "dlq"
+    assert report.outcome == "dlq" and report.rows == 1
     state = dlq.state(spark).collect()
     assert state[0]["component"] == "sink" and state[0]["n_failed"] == 1
-    payload = json.loads(dlq.read(spark).collect()[0]["payload"])
-    assert payload == {"k": 1, "v": "a"}
+    (row,) = dlq.read(spark).collect()
+    assert json.loads(row["payload"]) == {"k": 1, "v": "a"} and row["_batch_id"] == 1
 
 
 def test_sink_permanent_error_without_dlq_reraises(spark, tmp_path):
@@ -193,7 +193,7 @@ def test_sink_permanent_error_without_dlq_reraises(spark, tmp_path):
     returned report would let the epoch commit with its rows written
     nowhere."""
     class FailingSink(ClickHouseSink):
-        def _write_once(self, df, batch_id=None):
+        def _write_once(self, df):
             raise RuntimeError("Code: 6. DB::Exception: Cannot parse text")
 
     sink = FailingSink(table="t", parquet_fallback_path=str(tmp_path / "out"))
@@ -205,7 +205,7 @@ def test_sink_permanent_error_without_dlq_reraises(spark, tmp_path):
 
 def test_sink_retryable_error_reraises(spark, tmp_path):
     class FlakySink(ClickHouseSink):
-        def _write_once(self, df, batch_id=None):
+        def _write_once(self, df):
             raise RuntimeError("Code: 159. Timeout exceeded")
 
     sink = FlakySink(table="t", parquet_fallback_path=str(tmp_path / "out"))
@@ -481,19 +481,15 @@ def test_failed_start_leaves_no_query_running(spark, tmp_path):
 
 def test_sink_replay_idempotency(spark, tmp_path):
     """At-least-once + idempotent write: replaying the same epoch (same
-    batch_id, same rows) leaves exactly one logical copy after the
-    ReplacingMergeTree-equivalent dedup (SURVEY.md §7.5.4)."""
+    batch_id, same rows) leaves exactly one physical copy — the
+    fallback-side equivalent of ReplacingMergeTree (SURVEY.md §7.5.4)."""
     sink = ClickHouseSink(table="t", parquet_fallback_path=str(tmp_path / "out"))
     df = spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"])
     sink.write_batch(df, batch_id=3)
     sink.write_batch(df, batch_id=3)  # replayed epoch
-    # per-epoch directory overwrite -> even the PHYSICAL copy is single
-    # (the fallback-side ReplacingMergeTree equivalence)
     raw = spark.read.parquet(str(tmp_path / "out"))
     assert raw.count() == 2
-    deduped = sink.read_deduped(spark)
-    assert deduped.count() == 2
-    assert {(r["k"], r["v"]) for r in deduped.collect()} == {(1, "a"), (2, "b")}
+    assert {(r["k"], r["v"], r["_batch_id"]) for r in raw.collect()} == {(1, "a", 3), (2, "b", 3)}
 
 
 def test_metrics_listener_captures_progress(spark, tmp_path):
