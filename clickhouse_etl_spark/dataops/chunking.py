@@ -11,7 +11,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .fold import fold_lower
-from .util import scale_out
+from .util import _arrow_pass, scale_out
 
 #: shared with the oracle SQL verbatim — plain patterns that parse
 #: identically under Java regex and RE2
@@ -78,51 +78,32 @@ def top_terms(
     """
     from collections import Counter
 
-    import pandas as pd
-
     from pyspark.sql import types as T
 
-    schema = T.StructType([
-        [f for f in df.schema.fields if f.name == id_col][0],
+    fields = [
         T.StructField("term", T.StringType(), True),
         T.StructField("tf", T.LongType(), True),
         T.StructField("rank", T.IntegerType(), True),
-    ])
+    ]
+
+    def topk(pdf):
+        rows, terms, tfs, ranks = [], [], [], []
+        for i, x in enumerate(pdf[text_col]):
+            if x is None:
+                continue
+            cnt = Counter(
+                t for t in fold_lower(x).split(" ") if len(t) >= min_len
+            )
+            best = sorted(cnt.items(), key=lambda it: (-it[1], it[0]))[:k]
+            for r, (term, tf) in enumerate(best, start=1):
+                rows.append(i)
+                terms.append(term)
+                tfs.append(tf)
+                ranks.append(r)
+        return rows, [terms, tfs, ranks]
+
     src = scale_out(df.select(id_col, text_col))
-    tcol = text_col
-
-    def topk(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids, terms, tfs, ranks = [], [], [], []
-            for did, x in zip(pdf[id_col], pdf[tcol]):
-                if x is None:
-                    continue
-                cnt = Counter(
-                    t for t in fold_lower(x).split(" ")
-                    if len(t) >= min_len
-                )
-                if not cnt:
-                    continue
-                best = sorted(
-                    cnt.items(), key=lambda it: (-it[1], it[0])
-                )[:k]
-                for r, (term, tf) in enumerate(best, start=1):
-                    ids.append(did)
-                    terms.append(term)
-                    tfs.append(tf)
-                    ranks.append(r)
-            if not ids:
-                continue
-            yield pd.DataFrame({
-                id_col: pd.Series(ids, dtype=pdf[id_col].dtype),
-                "term": terms,
-                "tf": pd.Series(tfs, dtype="int64"),
-                "rank": pd.Series(ranks, dtype="int32"),
-            })
-
-    return src.mapInPandas(topk, schema)
+    return _arrow_pass(src, fields, "top_terms", keep=[id_col])(lambda: topk)
 
 
 def scrub_pii(

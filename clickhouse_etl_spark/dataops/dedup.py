@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from .hashing import MINHASH_COEFFS, affine_hash, char_fold_hash
 from .util import (
+    _arrow_pass,
     cached_artifact,
     check_append_geometry,
     read_geometry,
@@ -104,38 +105,30 @@ def _shingle_stream(
     space-joined n-word windows, first-occurrence-distinct), so the
     stream is row-identical to the expression form (equality-pinned in
     tests)."""
-    import pandas as pd
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
+    from pyspark.sql.types import (
+        IntegralType,
+        LongType,
+        StringType,
+        StructField,
+    )
 
     # preserve the input id column's actual type (ADVICE r7: hardcoding
     # 'id long' diverged from the expression form for int32/string ids)
     id_field = df.schema[id_col]
-    out_schema = StructType(
-        [
-            StructField("id", id_field.dataType, id_field.nullable),
-            StructField("sz", LongType(), False),
-            StructField("g", StringType(), True),
-        ]
-    )
-    # nullable int ids must use pandas NULLABLE dtypes on the OUTPUT
+    fields = [
+        StructField("id", id_field.dataType, id_field.nullable),
+        StructField("sz", LongType(), False),
+        StructField("g", StringType(), True),
+    ]
+    # nullable int ids keep a pandas NULLABLE dtype on the OUTPUT
     # (ADVICE r8: a numpy int64 Series raises on a NULL id where the
-    # expression form flows it through) — AND a non-null carrier on the
-    # INPUT: Arrow→pandas converts an int column containing any NULL to
+    # expression form flows it through; the pass types "id" from its
+    # field) — AND travel on a non-null carrier on the INPUT:
+    # Arrow→pandas converts an int column containing any NULL to
     # float64, silently rounding ids past 2^53 (review r9), so nullable
     # int ids travel as coalesce(id, 0) + an isNull flag and the kernel
     # reconstructs None exactly.
-    _np_int = {
-        "bigint": "int64", "int": "int32", "smallint": "int16",
-        "tinyint": "int8",
-    }
-    _pd_int = {
-        "bigint": "Int64", "int": "Int32", "smallint": "Int16",
-        "tinyint": "Int8",
-    }
-    simple = id_field.dataType.simpleString()
-    nullable_int = id_field.nullable and simple in _np_int
-    id_dtype = (_pd_int if id_field.nullable else _np_int).get(simple, "object")
-    if nullable_int:
+    if id_field.nullable and isinstance(id_field.dataType, IntegralType):
         src = df.select(
             F.coalesce(F.col(id_col), F.lit(0))
             .cast(id_field.dataType)
@@ -150,39 +143,32 @@ def _shingle_stream(
             F.col(text_col).alias("_txt_c"),
         )
 
-    def gen(batches):
-        for pdf in batches:
-            ids: list = []
-            szs: list = []
-            gs: list = []
-            for did, id_null, text in zip(
-                pdf["_id_c"], pdf["_id_n"], pdf["_txt_c"]
-            ):
-                if id_null:
-                    did = None
-                if text is None:
-                    continue  # split(NULL) -> NULL, explode drops the row
-                w = text.split(" ")
-                if len(w) < n:
-                    continue  # _word_ngrams guards short docs to []
-                # dict.fromkeys == array_distinct (first-occurrence order)
-                grams = list(
-                    dict.fromkeys(
-                        " ".join(w[i : i + n]) for i in range(len(w) - n + 1)
-                    )
+    def shingles(pdf):
+        ids: list = []
+        szs: list = []
+        gs: list = []
+        for did, id_null, text in zip(pdf["_id_c"], pdf["_id_n"], pdf["_txt_c"]):
+            if id_null:
+                did = None
+            if text is None:
+                continue  # split(NULL) -> NULL, explode drops the row
+            w = text.split(" ")
+            if len(w) < n:
+                continue  # _word_ngrams guards short docs to []
+            # dict.fromkeys == array_distinct (first-occurrence order)
+            grams = list(
+                dict.fromkeys(
+                    " ".join(w[i : i + n]) for i in range(len(w) - n + 1)
                 )
-                ids.extend([did] * len(grams))
-                szs.extend([len(grams)] * len(grams))
-                gs.extend(grams)
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(ids, dtype=id_dtype),
-                    "sz": pd.Series(szs, dtype="int64"),
-                    "g": pd.Series(gs, dtype="object"),
-                }
             )
+            ids.extend([did] * len(grams))
+            szs.extend([len(grams)] * len(grams))
+            gs.extend(grams)
+        return None, [ids, szs, gs]
 
-    return src.mapInPandas(gen, out_schema)
+    return _arrow_pass(src, fields, "the shingle stream", keep=())(
+        lambda: shingles
+    )
 
 
 def _shared_shingle_pairs(
@@ -1076,56 +1062,30 @@ def _probe_pass(
     appends ``flag_col`` (boolean, check > 0) plus ``count_col``
     (bigint, the check's count). ``op`` names the dataop in the
     column-clash error."""
-    from pyspark.sql.types import (
-        BooleanType,
-        LongType,
-        StructField,
-        StructType,
-    )
+    from pyspark.sql.types import BooleanType, LongType, StructField
 
     if action not in ("drop", "flag"):
         raise ValueError(f"unknown action {action!r}: drop|flag")
     flag_mode = action == "flag"
-    schema = df.schema
-    if flag_mode:
-        for c in (flag_col, count_col):
-            if c in df.columns:
-                raise ValueError(
-                    f"input already has a {c!r} column — rename it "
-                    f"before {op}"
-                )
-        schema = StructType(
-            list(df.schema.fields)
-            + [
-                StructField(flag_col, BooleanType()),
-                StructField(count_col, LongType()),
-            ]
-        )
-    in_cols = df.columns
+    fields = (
+        [StructField(flag_col, BooleanType()), StructField(count_col, LongType())]
+        if flag_mode
+        else []
+    )
 
-    def gen(batches):
-        import pandas as pd
-
+    def make_batch():
         check = make_check(flag_mode)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            if flag_mode:
-                counts = [check(v) for v in pdf[col]]
-                out = pdf[in_cols].copy()
-                out[flag_col] = pd.Series(
-                    [c > 0 for c in counts], dtype="bool", index=out.index
-                )
-                out[count_col] = pd.Series(
-                    counts, dtype="int64", index=out.index
-                )
-                yield out
-            else:
-                keep = [i for i, v in enumerate(pdf[col]) if not check(v)]
-                if keep:
-                    yield pdf.iloc[keep][in_cols]
 
-    return df.mapInPandas(gen, schema)
+        def flag(pdf):
+            counts = [check(v) for v in pdf[col]]
+            return None, [[c > 0 for c in counts], counts]
+
+        def drop(pdf):
+            return [i for i, v in enumerate(pdf[col]) if not check(v)], []
+
+        return flag if flag_mode else drop
+
+    return _arrow_pass(df, fields, op)(make_batch)
 
 
 def dedup_against_bloom_path(
@@ -1715,25 +1675,14 @@ def _excise_pass(
     ``text_col`` in place; ``count_col`` (bigint, the survivor count)
     is appended; a document with no survivors vanishes. ``op`` names
     the dataop in the column-clash error."""
-    from pyspark.sql.types import LongType, StructField, StructType
+    from pyspark.sql.types import LongType, StructField
 
-    if count_col in df.columns:
-        raise ValueError(
-            f"input already has a {count_col!r} column — rename it "
-            f"before {op}"
-        )
-    in_cols = df.columns
-    schema = StructType(
-        list(df.schema.fields) + [StructField(count_col, LongType())]
-    )
+    fields = [df.schema[text_col], StructField(count_col, LongType())]
 
-    def gen(batches):
-        import pandas as pd
-
+    def make_batch():
         probe = make_probe()
-        for pdf in batches:
-            if not len(pdf):
-                continue
+
+        def excise(pdf):
             keep_idx, texts, counts = [], [], []
             for i, t in enumerate(pdf[text_col]):
                 kept = survivors(t if t is not None else "", probe)
@@ -1741,15 +1690,11 @@ def _excise_pass(
                     keep_idx.append(i)
                     texts.append("\n".join(kept))
                     counts.append(len(kept))
-            if keep_idx:
-                out = pdf.iloc[keep_idx][in_cols].copy()
-                out[text_col] = texts
-                out[count_col] = pd.Series(
-                    counts, dtype="int64", index=out.index
-                )
-                yield out
+            return keep_idx, [texts, counts]
 
-    return df.mapInPandas(gen, schema)
+        return excise
+
+    return _arrow_pass(df, fields, op, rewrite=(text_col,))(make_batch)
 
 
 def line_dedup_against_path(
@@ -2199,13 +2144,13 @@ def _simhash_sigs_arrow(
     Scale shape: row-local (no shuffle); callers ``scale_out`` first.
     """
     import numpy as np
-    import pandas as pd
+    from pyspark.sql.types import LongType, StructField
 
     from .hashing import HASH_BASE, HASH_MOD
 
     jidx = np.arange(bits, dtype=np.int64)
 
-    def gen(batches):
+    def make_batch():
         memo: dict = {}
 
         def h(w: str) -> int:
@@ -2217,7 +2162,7 @@ def _simhash_sigs_arrow(
                 memo[w] = v
             return v
 
-        for pdf in batches:
+        def sigs_of(pdf):
             ids, sigs = [], []
             for did, text in zip(pdf[id_col], pdf[text_col]):
                 if text is None:
@@ -2231,14 +2176,14 @@ def _simhash_sigs_arrow(
                 sig = int(((votes > 0).astype(np.int64) << jidx).sum())
                 ids.append(did)
                 sigs.append(sig)
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "simhash": pd.Series(sigs, dtype="int64"),
-                }
-            )
+            return None, [ids, sigs]
 
-    return df.select(id_col, text_col).mapInPandas(gen, f"{id_col} long, simhash long")
+        return sigs_of
+
+    fields = [StructField(id_col, LongType()), StructField("simhash", LongType())]
+    return _arrow_pass(
+        df.select(id_col, text_col), fields, "simhash signatures", keep=()
+    )(make_batch)
 
 
 def simhash_near_dup_pairs(
@@ -2411,27 +2356,24 @@ def _distinct_band_keys(
     nested higher-order functions are CodegenFallback — interpreted
     per shingle — which made the one-time artifact build ~25x slower
     than the probe at decade scale (the `_shingle_stream` lesson)."""
-    from pyspark.sql.types import StringType, StructField, StructType
+    from pyspark.sql.types import StringType, StructField
 
     band_keys = _band_keys_py(n, k, rows_per_band)
-    schema = StructType([StructField("band", StringType())])
-    tcol = text_col
 
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = set()
-            for t in pdf[tcol]:
-                out.update(band_keys(t))
-            if out:
-                yield pd.DataFrame({"band": sorted(out)})
+    def keys_of(pdf):
+        out = set()
+        for t in pdf[text_col]:
+            out.update(band_keys(t))
+        return None, [sorted(out)]
 
     # prune to the text column BEFORE the repartition + Arrow
     # boundary — the writers receive arbitrarily wide wave frames
-    return scale_out(df.select(text_col)).mapInPandas(gen, schema).distinct()
+    return _arrow_pass(
+        scale_out(df.select(text_col)),
+        [StructField("band", StringType())],
+        "band keys",
+        keep=(),
+    )(lambda: keys_of).distinct()
 
 
 _BAND_GEOMETRY = ("n", "k", "rows_per_band")

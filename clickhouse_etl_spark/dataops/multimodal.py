@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .util import _arrow_pass
+
 #: metadata contract for a multimodal asset column
 ASSET_META_SCHEMA = T.StructType(
     [
@@ -184,35 +186,27 @@ def resize_assets(
     same DLQ-style contract as decode_assets)."""
     import numpy as np
 
-    def resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            fmts = pdf["asset_meta"].map(lambda m: _meta_field(m, "format"))
-            payloads = pdf[payload_col].map(
-                lambda b: b if isinstance(b, bytes) else (b"" if b is None else bytes(b))
-            )
-            out = np.full(n, None, dtype=object)
-            ok = np.zeros(n, dtype=bool)
-            decodable = fmts.isin(("png", "jpeg")).to_numpy()
-            idxs = np.flatnonzero(decodable)
-            for i, payload, fmt in zip(idxs, payloads.to_numpy()[idxs], fmts.to_numpy()[idxs]):
-                try:
-                    out[i] = _resize_bytes(payload, fmt, width, height)
-                    ok[i] = True
-                except Exception:  # noqa: BLE001 — row-level isolation
-                    pass
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col].astype("int64"),
-                    "format": fmts,
-                    "width": pd.array([width] * n, dtype="Int32"),
-                    "height": pd.array([height] * n, dtype="Int32"),
-                    "payload": out,
-                    "resize_ok": ok,
-                }
-            )
+    def resize(pdf):
+        n = len(pdf)
+        fmts = pdf["asset_meta"].map(lambda m: _meta_field(m, "format"))
+        payloads = pdf[payload_col].map(
+            lambda b: b if isinstance(b, bytes) else (b"" if b is None else bytes(b))
+        )
+        out = np.full(n, None, dtype=object)
+        ok = np.zeros(n, dtype=bool)
+        decodable = fmts.isin(("png", "jpeg")).to_numpy()
+        idxs = np.flatnonzero(decodable)
+        for i, payload, fmt in zip(idxs, payloads.to_numpy()[idxs], fmts.to_numpy()[idxs]):
+            try:
+                out[i] = _resize_bytes(payload, fmt, width, height)
+                ok[i] = True
+            except Exception:  # noqa: BLE001 — row-level isolation
+                pass
+        return None, [pdf[id_col], fmts, [width] * n, [height] * n, out, ok]
 
-    return df.mapInPandas(resize_batches, schema=RESIZED_SCHEMA)
+    return _arrow_pass(df, RESIZED_SCHEMA.fields, "resize_assets", keep=())(
+        lambda: resize
+    )
 
 
 FRAME_SCHEMA = T.StructType(
@@ -243,35 +237,28 @@ def sample_frames(
     assets yield no rows (filter-in-flight, the frame table is sparse).
     """
 
-    def frame_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, fidx, fts, fpay = [], [], [], []
-            metas = pdf["asset_meta"]
-            for aid, payload, m in zip(
-                pdf[id_col].to_numpy(),
-                pdf[payload_col].to_numpy(),
-                metas.to_numpy(),
-            ):
-                if _meta_field(m, "media_type") != "video":
-                    continue
-                raw = payload if isinstance(payload, bytes) else (b"" if payload is None else bytes(payload))
-                duration_ms = len(raw)
-                n = min(max_frames, max(duration_ms // every_ms, 0))
-                for k in range(n):
-                    ts = k * every_ms
-                    lo = ts % max(len(raw) - 8, 1) if raw else 0
-                    ids.append(int(aid)); fidx.append(k); fts.append(ts)
-                    fpay.append(raw[lo : lo + 8] if raw else b"")
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.array(ids, dtype="int64"),
-                    "frame_index": pd.array(fidx, dtype="Int32"),
-                    "frame_ts_ms": pd.array(fts, dtype="int64"),
-                    "frame_payload": pd.array(fpay, dtype=object),
-                }
-            )
+    def frames(pdf):
+        ids, fidx, fts, fpay = [], [], [], []
+        for aid, payload, m in zip(
+            pdf[id_col].to_numpy(),
+            pdf[payload_col].to_numpy(),
+            pdf["asset_meta"].to_numpy(),
+        ):
+            if _meta_field(m, "media_type") != "video":
+                continue
+            raw = payload if isinstance(payload, bytes) else (b"" if payload is None else bytes(payload))
+            duration_ms = len(raw)
+            n = min(max_frames, max(duration_ms // every_ms, 0))
+            for k in range(n):
+                ts = k * every_ms
+                lo = ts % max(len(raw) - 8, 1) if raw else 0
+                ids.append(int(aid)); fidx.append(k); fts.append(ts)
+                fpay.append(raw[lo : lo + 8] if raw else b"")
+        return None, [ids, fidx, fts, fpay]
 
-    return df.mapInPandas(frame_batches, schema=FRAME_SCHEMA)
+    return _arrow_pass(df, FRAME_SCHEMA.fields, "sample_frames", keep=())(
+        lambda: frames
+    )
 
 
 FEATURE_SCHEMA = T.StructType(
@@ -299,27 +286,22 @@ def extract_features(
     semantic_dedup, lsh/ivf) compose directly downstream."""
     import numpy as np
 
-    def feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats, oks = [], []
-            for payload in pdf[payload_col].to_numpy():
-                raw = payload if isinstance(payload, bytes) else (b"" if payload is None else bytes(payload))
-                if not raw:
-                    feats.append(None); oks.append(False); continue
-                arr = np.frombuffer(raw, dtype=np.uint8)
-                hist = np.bincount(arr % dim, minlength=dim).astype(np.float64)
-                nrm = float(np.sqrt((hist * hist).sum()))
-                feats.append((hist / nrm).astype(np.float32) if nrm else None)
-                oks.append(nrm > 0)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col].astype("int64"),
-                    "feature": pd.array(feats, dtype=object),
-                    "feature_ok": oks,
-                }
-            )
+    def features(pdf):
+        feats, oks = [], []
+        for payload in pdf[payload_col].to_numpy():
+            raw = payload if isinstance(payload, bytes) else (b"" if payload is None else bytes(payload))
+            if not raw:
+                feats.append(None); oks.append(False); continue
+            arr = np.frombuffer(raw, dtype=np.uint8)
+            hist = np.bincount(arr % dim, minlength=dim).astype(np.float64)
+            nrm = float(np.sqrt((hist * hist).sum()))
+            feats.append((hist / nrm).astype(np.float32) if nrm else None)
+            oks.append(nrm > 0)
+        return None, [pdf[id_col], feats, oks]
 
-    return df.mapInPandas(feature_batches, schema=FEATURE_SCHEMA)
+    return _arrow_pass(df, FEATURE_SCHEMA.fields, "extract_features", keep=())(
+        lambda: features
+    )
 
 
 def pool_frame_features(

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from .hashing import HASH_MOD
 from .util import (
+    _arrow_pass,
     cached_artifact,
     check_append_geometry,
     path_exists,
@@ -274,7 +275,6 @@ def _cells_batched(
     both Arrow stages in ONE pass with no extra exchange (ADVICE r4).
     """
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
 
@@ -285,35 +285,31 @@ def _cells_batched(
     for j in range(dim):
         cnorm += C[:, j] * C[:, j]
     cnorm = np.sqrt(cnorm)
+
+    def cells_of(pdf):
+        X = np.asarray([np.asarray(v, dtype="float64") for v in pdf[vec_col]])
+        d = np.zeros((X.shape[0], k_cells))
+        vnorm = np.zeros(X.shape[0])
+        for j in range(dim):  # sequential fold order of _dot/_norm2
+            d += X[:, j, None] * C[None, :, j]
+            vnorm += X[:, j] * X[:, j]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            sims = d / (np.sqrt(vnorm)[:, None] * cnorm[None, :])
+        sims[~np.isfinite(sims)] = -np.inf  # degenerate → tie rule only
+        cells = []
+        idx = np.arange(k_cells)
+        for r in range(X.shape[0]):
+            order = np.lexsort((-idx, -sims[r]))  # desc (sim, index)
+            cells.append([int(i) for i in order[:n_top]])
+        return None, [cells]
+
     # passthrough: every input column survives, _cells appends — lets
     # callers chain this after pq_encode (codes ride along)
-    schema = T.StructType(
-        list(df.schema.fields)
-        + [T.StructField("_cells", T.ArrayType(T.IntegerType()), False)]
-    )
-
-    def cell_batches(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.asarray([np.asarray(v, dtype="float64") for v in pdf[vec_col]])
-            d = np.zeros((X.shape[0], k_cells))
-            vnorm = np.zeros(X.shape[0])
-            for j in range(dim):  # sequential fold order of _dot/_norm2
-                d += X[:, j, None] * C[None, :, j]
-                vnorm += X[:, j] * X[:, j]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sims = d / (np.sqrt(vnorm)[:, None] * cnorm[None, :])
-            sims[~np.isfinite(sims)] = -np.inf  # degenerate → tie rule only
-            cells = []
-            idx = np.arange(k_cells)
-            for r in range(X.shape[0]):
-                order = np.lexsort((-idx, -sims[r]))  # desc (sim, index)
-                cells.append([int(i) for i in order[:n_top]])
-            yield pdf.assign(_cells=cells)
-
-    src = df if pre_scaled else scale_out(df)
-    return src.mapInPandas(cell_batches, schema)
+    return _arrow_pass(
+        df if pre_scaled else scale_out(df),
+        [T.StructField("_cells", T.ArrayType(T.IntegerType()), False)],
+        "IVF cell assignment",
+    )(lambda: cells_of)
 
 
 def ivf_topk(
@@ -449,7 +445,6 @@ def _lsh_buckets_batched(
     form on any BLAS (no matmul reduction-order dependence).
     """
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
 
@@ -457,51 +452,37 @@ def _lsh_buckets_batched(
     P = np.asarray(
         [_pseudo_hyperplane(dim, j) for j in range(n_planes)], dtype="float64"
     )
-    fields = [df.schema[id_col]]
-    if keep_vec:
-        fields.append(df.schema[vec_col])
+    fields = [T.StructField("_bkt", T.StringType(), False)]
     if with_norm:
-        fields.append(T.StructField("_n", T.DoubleType(), False))
-    fields.append(T.StructField("_bkt", T.StringType(), False))
-    schema = T.StructType(fields)
+        fields.insert(0, T.StructField("_n", T.DoubleType(), False))
 
-    def bucket_batches(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.asarray([np.asarray(v, dtype="float64") for v in pdf[vec_col]])
-            d = np.zeros((X.shape[0], n_planes))
-            for j in range(dim):  # dimension-by-dimension: _dot's fold order
-                d += X[:, j, None] * P[None, :, j]
-            bits = (d > 0).astype("int64")
-            out_id, out_vec, out_n, out_b = [], [], [], []
-            if with_norm:
-                nrm = np.zeros(X.shape[0])
-                for j in range(dim):  # same fold order as _norm2
-                    nrm += X[:, j] * X[:, j]
-                nrm = np.sqrt(nrm)
-            ids = pdf[id_col].to_numpy()
-            vecs = pdf[vec_col].to_numpy()
-            for t in range(n_tables):
-                code = np.zeros(X.shape[0], dtype="int64")
-                for p in range(bits_per_table):
-                    code += bits[:, t * bits_per_table + p] << p
-                for r in range(X.shape[0]):
-                    out_id.append(ids[r])
-                    if keep_vec:
-                        out_vec.append(vecs[r])
-                    if with_norm:
-                        out_n.append(float(nrm[r]))
-                    out_b.append(f"{t}:{code[r]}")
-            data = {id_col: out_id}
-            if keep_vec:
-                data[vec_col] = out_vec
-            if with_norm:
-                data["_n"] = out_n
-            data["_bkt"] = out_b
-            yield pd.DataFrame(data)
+    def buckets_of(pdf):
+        X = np.asarray([np.asarray(v, dtype="float64") for v in pdf[vec_col]])
+        d = np.zeros((X.shape[0], n_planes))
+        for j in range(dim):  # dimension-by-dimension: _dot's fold order
+            d += X[:, j, None] * P[None, :, j]
+        bits = (d > 0).astype("int64")
+        bkts = []
+        for t in range(n_tables):
+            code = np.zeros(X.shape[0], dtype="int64")
+            for p in range(bits_per_table):
+                code += bits[:, t * bits_per_table + p] << p
+            bkts.extend(f"{t}:{c}" for c in code)
+        values = [bkts]
+        if with_norm:
+            nrm = np.zeros(X.shape[0])
+            for j in range(dim):  # same fold order as _norm2
+                nrm += X[:, j] * X[:, j]
+            values.insert(0, np.tile(np.sqrt(nrm), n_tables))
+        # one row per (table, vector), table-major
+        return np.tile(np.arange(X.shape[0]), n_tables), values
 
-    return scale_out(df).select(id_col, vec_col).mapInPandas(bucket_batches, schema)
+    return _arrow_pass(
+        scale_out(df).select(id_col, vec_col),
+        fields,
+        "LSH bucketing",
+        keep=[id_col, vec_col] if keep_vec else [id_col],
+    )(lambda: buckets_of)
 
 
 def lsh_bucket_topk(
@@ -922,40 +903,28 @@ def pq_encode(
 
     m = len(codebooks)
     sub = len(codebooks[0][0])
-    vec_field = corpus.schema[vec_col]
-    schema = T.StructType([
-        corpus.schema[id_col],
-        vec_field,
-        T.StructField("pq_codes", T.ArrayType(T.IntegerType()), False),
-    ])
     books_np = [np.asarray(b, dtype="float64") for b in codebooks]
 
-    def encode_batches(batches):
-        for pdf in batches:
-            X = np.asarray(
-                [np.asarray(v, dtype="float64") for v in pdf[vec_col]]
-            )
-            if len(pdf) == 0:
-                yield pdf.assign(pq_codes=[])
-                continue
-            codes = np.empty((len(pdf), m), dtype="int32")
-            for s in range(m):
-                Xs = X[:, s * sub : (s + 1) * sub]
-                C = books_np[s]
-                d = np.zeros((Xs.shape[0], C.shape[0]))
-                # dimension-by-dimension accumulation = the exact
-                # sequential fold order of the expression form
-                for j in range(sub):
-                    diff = Xs[:, j, None] - C[None, :, j]
-                    d += diff * diff
-                codes[:, s] = np.argmin(d, axis=1)
-            yield pdf[[id_col, vec_col]].assign(
-                pq_codes=[list(map(int, row)) for row in codes]
-            )
+    def encode(pdf):
+        X = np.asarray([np.asarray(v, dtype="float64") for v in pdf[vec_col]])
+        codes = np.empty((len(pdf), m), dtype="int32")
+        for s in range(m):
+            Xs = X[:, s * sub : (s + 1) * sub]
+            C = books_np[s]
+            d = np.zeros((Xs.shape[0], C.shape[0]))
+            # dimension-by-dimension accumulation = the exact
+            # sequential fold order of the expression form
+            for j in range(sub):
+                diff = Xs[:, j, None] - C[None, :, j]
+                d += diff * diff
+            codes[:, s] = np.argmin(d, axis=1)
+        return None, [[list(map(int, row)) for row in codes]]
 
-    return scale_out(corpus).select(id_col, vec_col).mapInPandas(
-        encode_batches, schema
-    )
+    return _arrow_pass(
+        scale_out(corpus).select(id_col, vec_col),
+        [T.StructField("pq_codes", T.ArrayType(T.IntegerType()), False)],
+        "pq_encode",
+    )(lambda: encode)
 
 
 def _adc_luts(Q, books: list) -> list:
@@ -1046,31 +1015,27 @@ def pq_topk(
         np.asarray([list(r["_qvec"]) for r in qrows], dtype="float64"), books
     )
 
-    id_field = corpus.schema[id_col]
-    out_schema = T.StructType([
-        T.StructField(query_id_col, id_field.dataType, False),
-        id_field,
-        T.StructField("_adc", T.DoubleType(), False),
-    ])
     qid_arr = np.asarray(qids)
 
-    def adc_batches(batches):
-        import pandas as pd
+    def adc(pdf):
+        codes = np.asarray([list(c) for c in pdf["pq_codes"]], dtype="int64")
+        d = np.zeros((len(qid_arr), len(pdf)))
+        for s in range(m):  # subspace-by-subspace: expression fold order
+            d = d + luts[s][:, codes[:, s]]
+        # one row per (query, corpus row), query-major
+        return np.tile(np.arange(len(pdf)), len(qid_arr)), [
+            np.repeat(qid_arr, len(pdf)), d.reshape(-1),
+        ]
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            codes = np.asarray([list(c) for c in pdf["pq_codes"]], dtype="int64")
-            d = np.zeros((len(qid_arr), len(pdf)))
-            for s in range(m):  # subspace-by-subspace: expression fold order
-                d = d + luts[s][:, codes[:, s]]
-            yield pd.DataFrame({
-                query_id_col: np.repeat(qid_arr, len(pdf)),
-                id_col: np.tile(pdf[id_col].to_numpy(), len(qid_arr)),
-                "_adc": d.reshape(-1),
-            })
-
-    scored = encoded.mapInPandas(adc_batches, out_schema)
+    scored = _arrow_pass(
+        encoded,
+        [
+            T.StructField(query_id_col, corpus.schema[id_col].dataType, False),
+            T.StructField("_adc", T.DoubleType(), False),
+        ],
+        "ADC scoring",
+        keep=[id_col],
+    )(lambda: adc)
     w = Window.partitionBy(query_id_col).orderBy(F.col("_adc").asc(), F.col(id_col))
     short = (
         scored.withColumn("_rn", F.row_number().over(w))
@@ -1140,33 +1105,24 @@ def _ivf_adc_answer(
     cand = cells_codes.join(F.broadcast(q), "_cell").filter(
         F.col(id_col) != F.col(query_id_col)
     )
-    id_field = vecs.schema[id_col]
-    adc_schema = T.StructType([
-        T.StructField(query_id_col, id_field.dataType, False),
-        id_field,
-        T.StructField("_adc", T.DoubleType(), False),
-    ])
 
-    def adc_batches(batches):
-        import pandas as pd
+    def adc(pdf):
+        codes = np.asarray([list(cd) for cd in pdf["_codes"]], dtype="int64")
+        qidx = np.asarray([qpos[v] for v in pdf[query_id_col]])
+        d = np.zeros(len(pdf))
+        for s in range(m):  # subspace order == the expression fold
+            d = d + luts[s][qidx, codes[:, s]]
+        return None, [pdf[query_id_col], d]
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            codes = np.asarray([list(cd) for cd in pdf["_codes"]], dtype="int64")
-            qidx = np.asarray([qpos[v] for v in pdf[query_id_col]])
-            d = np.zeros(len(pdf))
-            for s in range(m):  # subspace order == the expression fold
-                d = d + luts[s][qidx, codes[:, s]]
-            yield pd.DataFrame({
-                query_id_col: pdf[query_id_col].to_numpy(),
-                id_col: pdf[id_col].to_numpy(),
-                "_adc": d,
-            })
-
-    scored = cand.select(query_id_col, id_col, "_codes").mapInPandas(
-        adc_batches, adc_schema
-    )
+    scored = _arrow_pass(
+        cand.select(query_id_col, id_col, "_codes"),
+        [
+            T.StructField(query_id_col, vecs.schema[id_col].dataType, False),
+            T.StructField("_adc", T.DoubleType(), False),
+        ],
+        "ADC scoring",
+        keep=[id_col],
+    )(lambda: adc)
     w = Window.partitionBy(query_id_col).orderBy(F.col("_adc").asc(), F.col(id_col))
     # no dropDuplicates needed: each corpus vector lives in exactly ONE
     # cell (n_top=1 above), so a (query, vector) pair can match at most
@@ -1897,7 +1853,7 @@ def write_vec_bucket_table(
     and <= the key space absolutely, so the occupancy count and the
     checkpoint are both bounded by geometry, never by corpus size.
     """
-    from pyspark.sql.types import StringType, StructField, StructType
+    from pyspark.sql.types import StringType, StructField
 
     spark = df.sparkSession
     keys = _vec_bucket_keys_py(n_tables, bits_per_table, dim)
@@ -1906,27 +1862,23 @@ def write_vec_bucket_table(
     appending = check_append_geometry(
         spark, path, mode, geometry, "vector-bucket artifact"
     )
-    schema = StructType([StructField("bucket", StringType())])
-    vcol = vec_col
 
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = set()
-            for v in pdf[vcol]:
-                out.update(keys(v))
-            if out:
-                yield pd.DataFrame({"bucket": sorted(out)})
+    def keys_of(pdf):
+        out = set()
+        for v in pdf[vec_col]:
+            out.update(keys(v))
+        return None, [sorted(out)]
 
     # one kernel pass over the corpus; the checkpointed result is
     # bounded by the geometry's key space (tiny), reused by both the
     # pre-write occupancy count and the write itself
     new_digests = (
-        scale_out(df.select(vec_col))
-        .mapInPandas(gen, schema)
+        _arrow_pass(
+            scale_out(df.select(vec_col)),
+            [StructField("bucket", StringType())],
+            "vector bucket keys",
+            keep=(),
+        )(lambda: keys_of)
         .distinct()
         .select(F.md5("bucket").alias("digest"))
         .localCheckpoint(eager=True)

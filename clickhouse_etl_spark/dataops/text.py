@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from .fold import fold_lower, fold_space_tokens
 from .hashing import affine_hash, char_fold_hash
-from .util import scale_out
+from .util import _arrow_pass, scale_out
 
 #: tiny fixed stopword lists per language — heuristic n-gram-free
 #: language ID; deterministic and oracle-replayable. Order matters for
@@ -450,70 +450,55 @@ def repetition_signals(
     """
     from collections import Counter
 
-    import pandas as pd
-
     from pyspark.sql import types as T
 
-    schema = T.StructType([
-        [f for f in df.schema.fields if f.name == id_col][0],
+    fields = [
         T.StructField("n_tokens", T.LongType(), True),
         T.StructField("n_distinct_tokens", T.LongType(), True),
         T.StructField("dup_token_ratio", T.DoubleType(), True),
         T.StructField("top_bigram", T.StringType(), True),
         T.StructField("top_bigram_count", T.LongType(), True),
         T.StructField("top_bigram_char_frac", T.DoubleType(), True),
-    ])
-    src = scale_out(df.select(id_col, text_col))
-    tcol = text_col
+    ]
 
-    def signals(batches):
-        for pdf in batches:
-            if not len(pdf):
+    def signals(pdf):
+        n_t, n_d, ratio, grams, cnts, fracs = [], [], [], [], [], []
+        for x in pdf[text_col]:
+            if x is None:
+                # size(NULL) = -1 legacy contract with the
+                # coalesced no-bigram defaults
+                n_t.append(-1)
+                n_d.append(-1)
+                ratio.append(0.0)
+                grams.append("")
+                cnts.append(0)
+                fracs.append(0.0)
                 continue
-            n_t, n_d, ratio, grams, cnts, fracs = [], [], [], [], [], []
-            for x in pdf[tcol]:
-                if x is None:
-                    # size(NULL) = -1 legacy contract with the
-                    # coalesced no-bigram defaults
-                    n_t.append(-1)
-                    n_d.append(-1)
-                    ratio.append(0.0)
-                    grams.append("")
-                    cnts.append(0)
-                    fracs.append(0.0)
-                    continue
-                toks = [t for t in x.split(" ") if t]
-                n = len(toks)
-                d = len(set(toks))
-                n_t.append(n)
-                n_d.append(d)
-                ratio.append((n - d) / n if n > 0 else 0.0)
-                if n >= 2:
-                    cnt = Counter(
-                        toks[i] + " " + toks[i + 1] for i in range(n - 1)
-                    )
-                    neg_c, g = min((-c, g) for g, c in cnt.items())
-                    c = -neg_c
-                    grams.append(g)
-                    cnts.append(c)
-                    fracs.append(
-                        (c * len(g)) / len(x) if len(x) > 0 else 0.0
-                    )
-                else:
-                    grams.append("")
-                    cnts.append(0)
-                    fracs.append(0.0)
-            yield pd.DataFrame({
-                id_col: pdf[id_col].values,
-                "n_tokens": pd.Series(n_t, dtype="int64"),
-                "n_distinct_tokens": pd.Series(n_d, dtype="int64"),
-                "dup_token_ratio": pd.Series(ratio, dtype="float64"),
-                "top_bigram": grams,
-                "top_bigram_count": pd.Series(cnts, dtype="int64"),
-                "top_bigram_char_frac": pd.Series(fracs, dtype="float64"),
-            })
+            toks = [t for t in x.split(" ") if t]
+            n = len(toks)
+            d = len(set(toks))
+            n_t.append(n)
+            n_d.append(d)
+            ratio.append((n - d) / n if n > 0 else 0.0)
+            if n >= 2:
+                cnt = Counter(
+                    toks[i] + " " + toks[i + 1] for i in range(n - 1)
+                )
+                neg_c, g = min((-c, g) for g, c in cnt.items())
+                c = -neg_c
+                grams.append(g)
+                cnts.append(c)
+                fracs.append((c * len(g)) / len(x) if len(x) > 0 else 0.0)
+            else:
+                grams.append("")
+                cnts.append(0)
+                fracs.append(0.0)
+        return None, [n_t, n_d, ratio, grams, cnts, fracs]
 
-    return src.mapInPandas(signals, schema)
+    src = scale_out(df.select(id_col, text_col))
+    return _arrow_pass(src, fields, "repetition_signals", keep=[id_col])(
+        lambda: signals
+    )
 
 
 def boilerplate_ngrams(
@@ -951,46 +936,36 @@ def normalize_text(
     is safe because every non-[a-z0-9 space] char — tabs and newlines
     included — has already become a plain space.
     """
-    import pandas as pd
-
     from pyspark.sql import types as T
 
-    added = {
-        name: T.StructField(name, dtype, True)
-        for name, dtype in (
-            ("text_norm", T.StringType()),
-            ("n_tokens_raw", T.LongType()),
-            ("n_tokens_norm", T.LongType()),
-        )
-    }
-    schema = T.StructType(
-        [added.pop(f.name, f) for f in df.schema.fields] + list(added.values())
-    )
-    in_cols = [f.name for f in df.schema.fields]
-    # single-file parquet reads as ONE partition — without an
-    # explicit repartition the whole Python regex pass runs on one
-    # core (the compute-heavy-dataop rule); scale_out is
-    # a no-op on streams
-    df = scale_out(df)
+    fields = [
+        T.StructField("text_norm", T.StringType(), True),
+        T.StructField("n_tokens_raw", T.LongType(), True),
+        T.StructField("n_tokens_norm", T.LongType(), True),
+    ]
 
-    def normalize(batches):
+    def make_batch():
         norm = _normalize_kernel()
-        for pdf in batches:
-            if not len(pdf):
-                continue
+
+        def normalize(pdf):
             norms, nraws, nnorms = [], [], []
             for x in pdf[text_col]:
                 cleaned, nr, nn = norm(x)
                 norms.append(cleaned)
                 nraws.append(nr)
                 nnorms.append(nn)
-            out = pdf[in_cols].copy()
-            out["text_norm"] = norms
-            out["n_tokens_raw"] = pd.Series(nraws, dtype="int64").values
-            out["n_tokens_norm"] = pd.Series(nnorms, dtype="int64").values
-            yield out
+            return None, [norms, nraws, nnorms]
 
-    return df.mapInPandas(normalize, schema)
+        return normalize
+
+    # single-file parquet reads as ONE partition — without an
+    # explicit repartition the whole Python regex pass runs on one
+    # core (the compute-heavy-dataop rule); scale_out is
+    # a no-op on streams
+    return _arrow_pass(
+        scale_out(df), fields, "normalize_text",
+        rewrite=[f.name for f in fields],
+    )(make_batch)
 
 
 def importance_weights(
@@ -1198,37 +1173,17 @@ def _iw_score_frame(
     what a streaming chain wants — ``tokens_col``/``score_col`` rename
     them so the stage composes next to other scorers that already own
     the default names)."""
-    import numpy as np
-
     from pyspark.sql import types as T
 
-    added = [
+    fields = [
         T.StructField(tokens_col, T.LongType(), True),
         T.StructField(score_col, T.LongType(), True),
     ]
-    if keep_input:
-        clash = {tokens_col, score_col} & set(df.columns)
-        if clash:
-            raise ValueError(
-                f"input already carries {sorted(clash)} — rename those "
-                "columns before scoring (the op appends "
-                f"{tokens_col}/{score_col})"
-            )
-        schema = T.StructType(list(df.schema.fields) + added)
-        out_cols = [f.name for f in df.schema.fields]
-    else:
-        id_field = df.schema[id_col]
-        schema = T.StructType(
-            [T.StructField(id_col, id_field.dataType, id_field.nullable)]
-            + added
-        )
-        out_cols = [id_col]
 
-    def score_batches(batches):
+    def make_batch():
         score = _iw_kernel(dim, wt_map)
-        for pdf in batches:
-            if not len(pdf):
-                continue
+
+        def score_batch(pdf):
             # Python str.lower() here vs Spark lower() on the
             # weight-build path: identical on ASCII, divergent on
             # locale-sensitive Unicode corners ('İ' etc.) — engine
@@ -1238,14 +1193,15 @@ def _iw_score_frame(
             tok_lists = [fold_space_tokens(x) for x in pdf[text_col]]
             keep = [i for i, tl in enumerate(tok_lists) if tl]
             if not keep:
-                continue  # token-less docs drop, as in the catalyst form
-            n_toks, scores = score([tok_lists[i] for i in keep])
-            out = pdf.iloc[keep][out_cols].copy()
-            out[tokens_col] = np.asarray(n_toks, dtype=np.int64)
-            out[score_col] = np.asarray(scores, dtype=np.int64)
-            yield out
+                return None  # token-less docs drop, as in the catalyst form
+            return keep, score([tok_lists[i] for i in keep])
 
-    return df.mapInPandas(score_batches, schema)
+        return score_batch
+
+    return _arrow_pass(
+        df, fields, "importance scoring",
+        keep=None if keep_input else [id_col],
+    )(make_batch)
 
 
 def write_importance_table(
@@ -1362,21 +1318,17 @@ def hash_embedding(
     float.
     """
     import numpy as np
-    import pandas as pd
 
     from .hashing import HASH_BASE, HASH_MOD
     from pyspark.sql import types as T
 
-    src = scale_out(df.select(id_col, text_col))
-    id_field = [f for f in src.schema.fields if f.name == id_col][0]
-    schema = T.StructType([
-        id_field,
+    fields = [
         T.StructField("n_tokens", T.LongType(), True),
         T.StructField("embedding", T.ArrayType(T.DoubleType()), True),
         T.StructField("l2_norm", T.DoubleType(), True),
-    ])
+    ]
 
-    def featurize(batches):
+    def make_batch():
         # per-distinct-token bucket memo across batches (Zipf head)
         bucket: dict[str, int] = {}
 
@@ -1390,14 +1342,12 @@ def hash_embedding(
                 bucket[w] = b
             return b
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
+        def featurize(pdf):
             tok_lists = [fold_space_tokens(x) for x in pdf[text_col]]
             # token-less docs have no features and emit no row
             keep = [i for i, tl in enumerate(tok_lists) if tl]
             if not keep:
-                continue
+                return None
             lens = np.fromiter(
                 (len(tok_lists[i]) for i in keep), dtype=np.int64,
                 count=len(keep),
@@ -1417,15 +1367,12 @@ def hash_embedding(
             # above 128 elements); summing the zero squares too
             # replays the Catalyst aggregate bit for bit
             norms = np.sqrt(np.sum(mat * mat, axis=1))
-            emb = (mat / norms[:, None]).tolist()
-            yield pd.DataFrame({
-                id_col: pdf[id_col].iloc[keep].values,
-                "n_tokens": pd.Series(lens, dtype="int64"),
-                "embedding": emb,
-                "l2_norm": pd.Series(norms, dtype="float64"),
-            })
+            return keep, [lens, (mat / norms[:, None]).tolist(), norms]
 
-    return src.mapInPandas(featurize, schema)
+        return featurize
+
+    src = scale_out(df.select(id_col, text_col))
+    return _arrow_pass(src, fields, "hash_embedding", keep=[id_col])(make_batch)
 
 
 def hash_feature_classifier(
@@ -1525,25 +1472,17 @@ def _classifier_feats(
     — an unrecoverable 'Block rdd_N does not exist' failure, hit at
     10M docs in scale_test section_r9)."""
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
 
     from .hashing import char_fold_hash_py
 
-    src = scale_out(df.select(id_col, train_col, label_col, text_col))
-    id_field = [f for f in src.schema.fields if f.name == id_col][0]
-    feat_schema = T.StructType([
-        id_field,
-        T.StructField("_tr", T.LongType(), True),
-        T.StructField("_y", T.LongType(), True),
-        T.StructField("_n", T.LongType(), True),
-        T.StructField("_b", T.LongType(), True),
-        T.StructField("_c", T.LongType(), True),
-        T.StructField("_f", T.LongType(), True),
-    ])
+    fields = [
+        T.StructField(name, T.LongType(), True)
+        for name in ("_tr", "_y", "_n", "_b", "_c", "_f")
+    ]
 
-    def featurize(batches):
+    def make_batch():
         bucket: dict[str, int] = {}
 
         def tok_bucket(w: str) -> int:
@@ -1553,13 +1492,11 @@ def _classifier_feats(
                 bucket[w] = b
             return b
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
+        def featurize(pdf):
             tok_lists = [fold_space_tokens(x) for x in pdf[text_col]]
             keep = [i for i, tl in enumerate(tok_lists) if tl]
             if not keep:
-                continue
+                return None
             lens = np.fromiter(
                 (len(tok_lists[i]) for i in keep), dtype=np.int64,
                 count=len(keep),
@@ -1574,30 +1511,26 @@ def _classifier_feats(
                 rows * dim + flat, minlength=len(keep) * dim
             ).reshape(len(keep), dim)
             di, bi = mat.nonzero()
+            at = np.asarray(keep).take(di)
             n_di = lens.take(di)
             c_di = mat[di, bi]
-            yield pd.DataFrame({
-                id_col: pdf[id_col].iloc[keep].values.take(di),
-                "_tr": pd.Series(
-                    pdf[train_col].iloc[keep].values.take(di),
-                    dtype="int64",
-                ),
-                "_y": pd.Series(
-                    pdf[label_col].iloc[keep].values.take(di),
-                    dtype="int64",
-                ),
-                "_n": pd.Series(n_di, dtype="int64"),
-                "_b": pd.Series(bi, dtype="int64"),
-                "_c": pd.Series(c_di, dtype="int64"),
+            return at, [
+                pdf[train_col].to_numpy().take(at),
+                pdf[label_col].to_numpy().take(at),
+                n_di,
+                bi,
+                c_di,
                 # numpy int64 floor division — exact, and c*2^20
                 # stays far under 2^63 (c <= per-doc token count)
-                "_f": pd.Series(
-                    (c_di.astype(np.int64) * _CLF_FP) // n_di,
-                    dtype="int64",
-                ),
-            })
+                (c_di.astype(np.int64) * _CLF_FP) // n_di,
+            ]
 
-    feats = src.mapInPandas(featurize, feat_schema)
+        return featurize
+
+    src = scale_out(df.select(id_col, train_col, label_col, text_col))
+    feats = _arrow_pass(src, fields, "classifier features", keep=[id_col])(
+        make_batch
+    )
     # feats feeds THREE consumers (weights, scoring, and the threshold
     # via scored) — without a checkpoint each one re-derives the whole
     # feature pass (the q15/curation two-consumer lesson)
@@ -1988,45 +1921,33 @@ def classify_against_path(
     Output: input columns + (score BIGINT, pred INT); token-less
     documents drop (as in the batch op).
     """
-    import pandas as pd
-
     from pyspark.sql import types as T
 
-    clash = {"score", "pred"} & set(df.columns)
-    if clash:
-        raise ValueError(
-            f"input already carries {sorted(clash)} — rename those "
-            "columns before scoring (the op appends score/pred)"
-        )
-    dim, s_sum, n_tr, wt = _load_classifier(df.sparkSession, weights_path)
-
-    schema = T.StructType(
-        list(df.schema.fields)
-        + [
+    run = _arrow_pass(
+        df,
+        [
             T.StructField("score", T.LongType(), True),
             T.StructField("pred", T.IntegerType(), True),
-        ]
+        ],
+        "scoring (the op appends score/pred)",
     )
-    in_cols = [f.name for f in df.schema.fields]
+    dim, s_sum, n_tr, wt = _load_classifier(df.sparkSession, weights_path)
 
-    def score_batches(batches):
+    def make_batch():
         score = _score_kernel(dim, wt, s_sum, n_tr)
-        for pdf in batches:
-            if not len(pdf):
-                continue
+
+        def score_batch(pdf):
             tok_lists = [fold_space_tokens(x) for x in pdf[text_col]]
             keep0 = [i for i, tl in enumerate(tok_lists) if tl]
             if not keep0:
-                continue  # token-less docs drop, as in the batch op
+                return None  # token-less docs drop, as in the batch op
             sel, scores, preds = score([tok_lists[i] for i in keep0])
-            if not sel:
-                continue  # all-unseen docs: the batch inner join drops them
-            out = pdf.iloc[[keep0[j] for j in sel]][in_cols].copy()
-            out["score"] = pd.Series(scores, dtype="int64").values
-            out["pred"] = pd.Series(preds, dtype="int32").values
-            yield out
+            # all-unseen docs: the batch inner join drops them
+            return [keep0[j] for j in sel], [scores, preds]
 
-    return df.mapInPandas(score_batches, schema)
+        return score_batch
+
+    return run(make_batch)
 
 
 def rare_token_ratio(
@@ -2540,91 +2461,54 @@ def gopher_repetition(df: DataFrame, text_col: str = "text") -> DataFrame:
     coverage), which is why this battery is an Arrow kernel while
     :func:`gopher_rules` stays a Catalyst expression battery.
     """
-    out_cols = (
-        list(_REPETITION_COUNTERS) + list(_REPETITION_FLAGS)
-        + ["pass_repetition"]
-    )
-    clash = [c for c in out_cols if c in df.columns]
-    if clash:
-        raise ValueError(
-            f"input already has column(s) {clash} — rename them before "
-            "gopher_repetition"
-        )
+    from pyspark.sql.types import IntegerType, LongType, StructField
 
-    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
-
-    schema = StructType(
-        list(df.schema.fields)
-        + [StructField(c, LongType()) for c in _REPETITION_COUNTERS]
+    fields = (
+        [StructField(c, LongType()) for c in _REPETITION_COUNTERS]
         + [StructField(c, IntegerType()) for c in _REPETITION_FLAGS]
         + [StructField("pass_repetition", IntegerType())]
     )
-    in_cols = [f.name for f in df.schema.fields]
-    tcol = text_col
     th = GOPHER_REPETITION_THRESHOLDS
+    # (flag, numerator counter, denominator counter, threshold key)
+    rules = [
+        ("r_dup_line", "rep_dup_lines", "rep_n_lines", "dup_line_frac"),
+        ("r_dup_para", "rep_dup_paras", "rep_n_paras", "dup_para_frac"),
+        (
+            "r_dup_line_chars", "rep_chars_dup_lines", "rep_chars_lines",
+            "dup_line_char_frac",
+        ),
+        (
+            "r_dup_para_chars", "rep_chars_dup_paras", "rep_chars_paras",
+            "dup_para_char_frac",
+        ),
+    ] + [
+        (f"r_top_{n}gram", f"rep_top{n}_chars", "rep_chars_toks",
+         f"top_{n}gram_char_frac")
+        for n in (2, 3, 4)
+    ] + [
+        (f"r_dup_{n}gram", f"rep_dup{n}_chars", "rep_chars_toks",
+         f"dup_{n}gram_char_frac")
+        for n in (5, 6, 7, 8, 9, 10)
+    ]
 
-    def gen(batches):
-        import pandas as pd
+    def repetition(pdf):
+        counters = [_repetition_counters(t) for t in pdf[text_col]]
+        cols = {
+            name: [c[i] for c in counters]
+            for i, name in enumerate(_REPETITION_COUNTERS)
+        }
+        flags = {
+            flag: [
+                1 if 100 * a <= th[key] * b else 0
+                for a, b in zip(cols[numer], cols[denom])
+            ]
+            for flag, numer, denom, key in rules
+        }
+        conj = [1] * len(pdf)
+        for name in _REPETITION_FLAGS:
+            conj = [c & v for c, v in zip(conj, flags[name])]
+        return None, [
+            *cols.values(), *(flags[n] for n in _REPETITION_FLAGS), conj
+        ]
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            counters = [_repetition_counters(t) for t in pdf[tcol]]
-            out = pdf[in_cols].copy()
-            cols = {
-                name: [c[i] for c in counters]
-                for i, name in enumerate(_REPETITION_COUNTERS)
-            }
-            for name, vals in cols.items():
-                out[name] = pd.Series(vals, dtype="int64", index=out.index)
-
-            def keep(numer, denom, pct):
-                return [
-                    1 if 100 * a <= pct * b else 0
-                    for a, b in zip(cols[numer], cols[denom])
-                ]
-
-            flags = {
-                "r_dup_line": keep(
-                    "rep_dup_lines", "rep_n_lines", th["dup_line_frac"]
-                ),
-                "r_dup_para": keep(
-                    "rep_dup_paras", "rep_n_paras", th["dup_para_frac"]
-                ),
-                "r_dup_line_chars": keep(
-                    "rep_chars_dup_lines", "rep_chars_lines",
-                    th["dup_line_char_frac"],
-                ),
-                "r_dup_para_chars": keep(
-                    "rep_chars_dup_paras", "rep_chars_paras",
-                    th["dup_para_char_frac"],
-                ),
-                "r_top_2gram": keep(
-                    "rep_top2_chars", "rep_chars_toks",
-                    th["top_2gram_char_frac"],
-                ),
-                "r_top_3gram": keep(
-                    "rep_top3_chars", "rep_chars_toks",
-                    th["top_3gram_char_frac"],
-                ),
-                "r_top_4gram": keep(
-                    "rep_top4_chars", "rep_chars_toks",
-                    th["top_4gram_char_frac"],
-                ),
-            }
-            for n in (5, 6, 7, 8, 9, 10):
-                flags[f"r_dup_{n}gram"] = keep(
-                    f"rep_dup{n}_chars", "rep_chars_toks",
-                    th[f"dup_{n}gram_char_frac"],
-                )
-            conj = [1] * len(pdf)
-            for name in _REPETITION_FLAGS:
-                vals = flags[name]
-                out[name] = pd.Series(vals, dtype="int32", index=out.index)
-                conj = [c & v for c, v in zip(conj, vals)]
-            out["pass_repetition"] = pd.Series(
-                conj, dtype="int32", index=out.index
-            )
-            yield out
-
-    return df.mapInPandas(gen, schema)
+    return _arrow_pass(df, fields, "gopher_repetition")(lambda: repetition)

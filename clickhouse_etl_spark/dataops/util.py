@@ -1,5 +1,6 @@
-"""Shared dataops utilities: partition sizing, and the artifact cache
-and geometry sidecar every seen-set and index artifact shares."""
+"""Shared dataops utilities: partition sizing, the one row-local Arrow
+pass, and the artifact cache and geometry sidecar every seen-set and
+index artifact shares."""
 
 from __future__ import annotations
 
@@ -27,6 +28,99 @@ def scale_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     if df.rdd.getNumPartitions() < max(2, target // 2):
         return df.repartition(target)
     return df
+
+
+#: numpy dtype of each numeric Spark type a pass emits, and the pandas
+#: masked dtype an integral/boolean column that can hold NULL keeps
+_NUMPY_DTYPES = {
+    "bigint": "int64", "int": "int32", "smallint": "int16",
+    "tinyint": "int8", "boolean": "bool", "double": "float64",
+    "float": "float32",
+}
+_MASKED_DTYPES = {
+    "bigint": "Int64", "int": "Int32", "smallint": "Int16",
+    "tinyint": "Int8", "boolean": "boolean",
+}
+
+
+def _pass_column(values, field):
+    """``values`` (list, array or Series) as a positional pandas/numpy
+    array typed from the Spark ``field``: a nullable integral/boolean
+    field keeps a masked dtype (a NULL flows through as NULL instead of
+    raising or turning into a float), floats stay numpy (NaN reads as
+    NULL at the Arrow boundary), everything else is a 1-D object array."""
+    import numpy as np
+    import pandas as pd
+
+    name = field.dataType.simpleString()
+    if field.nullable and name in _MASKED_DTYPES:
+        return pd.array(values, dtype=_MASKED_DTYPES[name])
+    if name in _NUMPY_DTYPES:
+        return np.asarray(values, dtype=_NUMPY_DTYPES[name])
+    return pd.array(values, dtype=object)
+
+
+def _arrow_pass(df: DataFrame, fields: list, op: str, keep=None, rewrite=()):
+    """The ONE row-local Python pass over Arrow batches — every
+    ``mapInPandas`` a dataop (or the curation stream) runs goes through
+    it, on a batch frame and on a micro-batch alike.
+
+    Validates and builds the output schema at plan build: the ``keep``
+    input columns (default all, in input order), then the new
+    ``fields``. A new field named like a kept input column raises the
+    one clash error, unless ``rewrite`` names it — then it replaces the
+    input column in place (its position, the new field's type), as
+    ``withColumn`` would. Returns ``run(make_batch)``, which builds the
+    frame: ``make_batch()`` is called once per task (kernels, memos and
+    broadcast reads live there) and returns ``batch(pdf)``, called per
+    non-empty Arrow batch. ``batch`` returns None (emit nothing) or
+    ``(rows, values)``: ``rows`` are the positions of the input rows it
+    emits (repeats allowed — explode-shaped passes fit; None = every
+    row in order; ignored when no input column is kept), ``values`` the
+    new columns' values in ``fields`` order, each typed from its Spark
+    field (:func:`_pass_column`). Batches with no output row are
+    skipped."""
+    from pyspark.sql.types import StructType
+
+    kept = list(df.columns if keep is None else keep)
+    new = {f.name: f for f in fields}
+    clash = sorted(c for c in kept if c in new and c not in rewrite)
+    if clash:
+        raise ValueError(
+            f"input already carries {clash} — rename those columns "
+            f"before {op}"
+        )
+    schema = StructType(
+        [new.pop(c, df.schema[c]) for c in kept] + list(new.values())
+    )
+    names = schema.fieldNames()
+    taken = [c for c in kept if c not in {f.name for f in fields}]
+
+    def run(make_batch) -> DataFrame:
+        def batches_of(batches):
+            import pandas as pd
+
+            batch = make_batch()
+            for pdf in batches:
+                if not len(pdf):
+                    continue
+                res = batch(pdf)
+                if res is None:
+                    continue
+                rows, values = res
+                cols = {
+                    c: pdf[c].array if rows is None else pdf[c].array.take(rows)
+                    for c in taken
+                }
+                for f, v in zip(fields, values):
+                    cols[f.name] = _pass_column(v, f)
+                out = pd.DataFrame({c: cols[c] for c in names})
+                if len(out):
+                    yield out
+
+        return df.mapInPandas(batches_of, schema)
+
+    return run
 
 
 #: measured healthy load per shuffle partition for sort/state-heavy
@@ -71,6 +165,18 @@ def path_exists(spark, path: str) -> bool:
     p = jvm.org.apache.hadoop.fs.Path(path)
     fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
     return bool(fs.exists(p))
+
+
+def delete_path(spark, path: str) -> None:
+    """Recursively delete ``path`` through its Hadoop FileSystem,
+    resolved as :func:`path_exists` resolves it — a plain local path,
+    a ``file://`` URI and an object-store URI alike. A missing path is
+    a no-op; a delete the FileSystem refuses raises ``OSError``."""
+    jvm = spark._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    if fs.exists(p) and not fs.delete(p, True):
+        raise OSError(f"could not delete {path!r}")
 
 
 #: every loaded seen-set and index artifact, keyed (kind, path, *the

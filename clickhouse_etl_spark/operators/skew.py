@@ -7,9 +7,6 @@ joins at runtime; these helpers cover the cases AQE cannot fix:
   splits each key into N sub-groups (partial agg), then a second tiny
   aggregation merges the partials. Classic two-phase combine — total
   shuffle volume is unchanged but the widest reducer shrinks N-fold.
-- ``salted_broadcast_left``: a skewed equi-join where the small side
-  fits a broadcast needs no salt at all (broadcast joins don't shuffle
-  the big side); the helper just documents/enforces that choice.
 - ``replicate_join_right``: for a shuffle join with one hot left key,
   replicate each right row N times with salt ids and salt the left
   randomly-but-deterministically (hash of a row id), so the hot key

@@ -13,9 +13,6 @@ DLQ path belongs to one pipeline, or pipelines overwrite each other.
 
 from __future__ import annotations
 
-import shutil
-from pathlib import Path
-
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -79,5 +76,11 @@ class DLQWriter:
         return self.read(spark).orderBy(F.col("dlq_ts")).limit(limit)
 
     def purge(self) -> None:
-        shutil.rmtree(self.path, ignore_errors=True)
-        Path(self.path).mkdir(parents=True, exist_ok=True)
+        """Delete every DLQ row: the path goes through its Hadoop
+        FileSystem (local paths and URIs alike), and ``read`` of the
+        purged path is empty. A failed delete raises."""
+        # imported here: the streaming modules import this one, and the
+        # dataops package would then load in every Python worker
+        from ..dataops.util import delete_path
+
+        delete_path(SparkSession.active(), self.path)

@@ -108,26 +108,10 @@ def curation_scored_stream(
     (``text_col="text_norm"``); geometry is read from the artifact.
     Row-local, early-exits on the first band hit.
     """
-    from ..dataops.dedup import DECONTAM_NGRAM_N
-
-    if decontam_n is None:
-        decontam_n = DECONTAM_NGRAM_N
-    # the fused pass rebuilds its output frame, so a pre-existing
-    # output column would be duplicated — reject it up front
-    guarded = {"text_norm", "n_tokens_raw", "n_tokens_norm", "score", "pred"}
-    if importance_path is not None:
-        guarded |= {"iw_tokens", "iw_score"}
-    clash = guarded & set(docs.columns)
-    if clash:
-        raise ValueError(
-            f"input already carries {sorted(clash)} — rename those "
-            "columns before the curation pass"
-        )
-
-    import pandas as pd
     from pyspark.sql import types as T
 
     from ..dataops.dedup import (
+        DECONTAM_NGRAM_N,
         _band_geometry,
         _decontam_probe_kernel,
         _neardup_probe_kernel,
@@ -140,7 +124,24 @@ def curation_scored_stream(
         _normalize_kernel,
         _score_kernel,
     )
-    from ..dataops.util import scale_out
+    from ..dataops.util import _arrow_pass, scale_out
+
+    if decontam_n is None:
+        decontam_n = DECONTAM_NGRAM_N
+    fields = [
+        T.StructField("text_norm", T.StringType(), True),
+        T.StructField("n_tokens_raw", T.LongType(), True),
+        T.StructField("n_tokens_norm", T.LongType(), True),
+        T.StructField("score", T.LongType(), True),
+        T.StructField("pred", T.IntegerType(), True),
+    ]
+    if importance_path is not None:
+        fields += [
+            T.StructField("iw_tokens", T.LongType(), True),
+            T.StructField("iw_score", T.LongType(), True),
+        ]
+    # the clash check runs here, before any artifact loads
+    run = _arrow_pass(scale_out(docs), fields, "the curation pass")
 
     spark = docs.sparkSession
     make_seen = _seen_probe_factory(spark, bloom_path, None, None, "document")
@@ -163,31 +164,12 @@ def curation_scored_stream(
         )
     else:
         nd_geom = make_nd_probe = None
-    in_cols = [f.name for f in docs.schema.fields]
-    schema = T.StructType(
-        list(docs.schema.fields)
-        + [
-            T.StructField("text_norm", T.StringType(), True),
-            T.StructField("n_tokens_raw", T.LongType(), True),
-            T.StructField("n_tokens_norm", T.LongType(), True),
-            T.StructField("score", T.LongType(), True),
-            T.StructField("pred", T.IntegerType(), True),
-        ]
-        + (
-            [
-                T.StructField("iw_tokens", T.LongType(), True),
-                T.StructField("iw_score", T.LongType(), True),
-            ]
-            if iw is not None
-            else []
-        )
-    )
     tcol = text_col
 
     # the fused pass COMPOSES the ops' shared row-local kernels — the
     # single definitions the standalone dataops run — so a semantic
     # change to any stage reaches both by construction
-    def fused(batches):
+    def make_fused():
         norm = _normalize_kernel()
         seen = make_seen()
         score = _score_kernel(dim, wt, s_sum, n_tr)
@@ -202,9 +184,8 @@ def curation_scored_stream(
             if make_nd_probe is not None
             else None
         )
-        for pdf in batches:
-            if not len(pdf):
-                continue
+
+        def fused(pdf):
             # pass 1 (per row): decontamination verdict on the RAW
             # text, then normalize + bloom probe on the canonical
             # text; survivors accumulate token lists
@@ -226,31 +207,28 @@ def curation_scored_stream(
                 nnorms.append(nn)
                 tok_lists.append(toks)
             if not keep0:
-                continue
+                return None
             # pass 2 (vectorized scorer; all-unseen docs drop inside)
             sel, scores, preds = score(tok_lists)
             if not sel:
-                continue
-            out = pdf.iloc[[keep0[j] for j in sel]][in_cols].copy()
-            out["text_norm"] = [norms[j] for j in sel]
-            out["n_tokens_raw"] = pd.Series(
-                [nraws[j] for j in sel], dtype="int64"
-            ).values
-            out["n_tokens_norm"] = pd.Series(
-                [nnorms[j] for j in sel], dtype="int64"
-            ).values
-            out["score"] = pd.Series(scores, dtype="int64").values
-            out["pred"] = pd.Series(preds, dtype="int32").values
+                return None
+            values = [
+                [norms[j] for j in sel],
+                [nraws[j] for j in sel],
+                [nnorms[j] for j in sel],
+                scores,
+                preds,
+            ]
             if iw_score is not None:
                 # pass 3 (vectorized importance scorer) over the SAME
                 # token lists the classifier consumed — identical to
                 # importance_against_path on text_norm
-                iw_toks, iw_scores = iw_score([tok_lists[j] for j in sel])
-                out["iw_tokens"] = pd.Series(iw_toks, dtype="int64").values
-                out["iw_score"] = pd.Series(iw_scores, dtype="int64").values
-            yield out
+                values += iw_score([tok_lists[j] for j in sel])
+            return [keep0[j] for j in sel], values
 
-    return scale_out(docs).mapInPandas(fused, schema)
+        return fused
+
+    return run(make_fused)
 
 
 def curation_rollup_stream(

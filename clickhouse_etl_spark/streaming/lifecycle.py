@@ -17,7 +17,6 @@ running pipeline is a StreamingQuery + its checkpoint directory:
 
 from __future__ import annotations
 
-import shutil
 from dataclasses import dataclass, field
 from typing import Callable, Optional
 
@@ -27,22 +26,26 @@ from ..spec.model import PipelineSpec
 from .runner import StreamingPipeline
 
 
-def _await_first_progress(query, timeout_s: float = 30.0) -> None:
-    """Block until the restarted query makes progress, terminates
-    cleanly (bounded triggers), or fails — raising the failure so the
-    caller can rotate the checkpoint. Without this, a state-incompatible
-    restart reports success and dies in the background."""
+def _await_healthy(queries, timeout_s: float = 30.0) -> None:
+    """Block until every query a (re)start launched — the main query and
+    each DLQ query — makes progress, terminates cleanly (bounded
+    triggers), or fails, raising the first failure. Without this, a
+    restart that dies in its first micro-batch (a state-incompatible
+    edit, a stranded offset log) reports success and dies in the
+    background."""
     import time
 
+    pending = list(queries)
     deadline = time.monotonic() + timeout_s
-    while time.monotonic() < deadline:
-        if query.exception() is not None:
-            raise query.exception()
-        if query.recentProgress:
-            return
-        if not query.isActive:
-            return  # terminated without error (availableNow/once runs)
-        time.sleep(0.25)
+    while pending and time.monotonic() < deadline:
+        for q in list(pending):
+            active = q.isActive  # read before exception(): no race
+            if q.exception() is not None:
+                raise q.exception()
+            if q.recentProgress or not active:
+                pending.remove(q)
+        if pending:
+            time.sleep(0.25)
 
 
 def _fresh_checkpoint_dir(current: str) -> str:
@@ -112,11 +115,19 @@ class PipelineManager:
                 q.awaitTermination(60)
 
     def resume(self, spark: SparkSession, pipeline_id: str) -> RunningPipeline:
+        """Restart every query from the checkpoint and wait until each
+        is healthy; a restart that dies raises, with the pipeline's
+        surviving queries stopped."""
         rp = self._get(pipeline_id)
         if rp.running:
             return rp
         self.stop(pipeline_id)  # any query may outlive the others
         self._start(spark, rp)
+        try:
+            _await_healthy((rp.query, *rp.dlq_queries))
+        except Exception:
+            self.stop(pipeline_id)
+            raise
         return rp
 
     @staticmethod
@@ -141,18 +152,18 @@ class PipelineManager:
         rp = self._get(pipeline_id)
         rp.spec = new_spec
         try:
-            out = self.resume(spark, pipeline_id)
-            _await_first_progress(out.query)
-            return out
+            return self.resume(spark, pipeline_id)
         except Exception:  # noqa: BLE001 — any restart failure rotates
             fresh = _fresh_checkpoint_dir(rp.checkpoint_dir)
             rp.checkpoint_dir = fresh
             return self.resume(spark, pipeline_id)
 
     def terminate(self, pipeline_id: str) -> None:
+        from ..dataops.util import delete_path  # see DLQWriter.purge
+
         self.stop(pipeline_id)
         rp = self.pipelines.pop(pipeline_id)
-        shutil.rmtree(rp.checkpoint_dir, ignore_errors=True)
+        delete_path(SparkSession.active(), rp.checkpoint_dir)
 
     def status(self) -> dict[str, str]:
         return {

@@ -2582,19 +2582,72 @@ def test_calibrated_pred_product_exact_across_int64():
     assert preds == [1, 0]
 
 
-def test_curation_clash_guard_both_engines(spark):
-    """ADVICE r8: the curation body rejects an input that already
-    carries one of its output columns instead of silently overwriting
-    text_norm."""
-    import pytest as _pytest
-
+def _clash_case(name):
+    """(input column that clashes, build(df, tmp_path) -> frame) for
+    each Arrow pass that keeps its input columns; ``build`` writes the
+    artifact its probe loads first."""
+    from clickhouse_etl_spark.dataops import dedup, similarity, text
     from clickhouse_etl_spark.streaming.curation import curation_scored_stream
 
+    def seen(write, probe, **kw):
+        def build(df, tmp):
+            path = str(tmp / "art")
+            write(df, path, mode="overwrite")
+            return probe(df, path, **kw)
+
+        return build
+
+    return {
+        "curation_scored_stream": ("text_norm", lambda df, tmp: curation_scored_stream(
+            df, "/nonexistent", "/nonexistent")),
+        "classify_against_path": ("score", lambda df, tmp: text.classify_against_path(
+            df, "/nonexistent")),
+        "importance_against_path": ("n_tokens", lambda df, tmp: (
+            text.write_importance_table(df, str(tmp / "iw"), target_sources=["web"], dim=64),
+            text.importance_against_path(df, str(tmp / "iw")))[1]),
+        "gopher_repetition": ("pass_repetition", lambda df, tmp: text.gopher_repetition(df)),
+        "decontaminate_against_path": ("contaminated", seen(
+            dedup.write_ngram_digest_table, dedup.decontaminate_against_path,
+            action="flag")),
+        "neardup_against_path": ("neardup", seen(
+            dedup.write_band_digest_table, dedup.neardup_against_path, action="flag")),
+        "line_dedup_against_path": ("n_lines_kept", seen(
+            dedup.write_line_digest_table, dedup.line_dedup_against_path)),
+        "span_dedup_against_path": ("n_sentences_kept", seen(
+            dedup.write_span_digest_table, dedup.span_dedup_against_path)),
+        "vec_dedup_against_path": ("n_tables_hit", lambda df, tmp: seen(
+            lambda d, p, mode: similarity.write_vec_bucket_table(d, p, dim=2, mode=mode),
+            similarity.vec_dedup_against_path, action="flag",
+        )(df.select("doc_id", "n_tables_hit", F.array(F.lit(1.0), F.lit(0.5)).alias(
+            "embedding")), tmp)),
+        "_cells_batched": ("_cells", lambda df, tmp: similarity._cells_batched(
+            df.withColumn("embedding", F.array(F.lit(1.0), F.lit(0.5))),
+            [[1.0, 0.0]], 1, "doc_id", "embedding")),
+    }[name]
+
+
+@pytest.mark.parametrize("name", [
+    "curation_scored_stream", "classify_against_path", "importance_against_path",
+    "gopher_repetition", "decontaminate_against_path", "neardup_against_path",
+    "line_dedup_against_path", "span_dedup_against_path", "vec_dedup_against_path",
+    "_cells_batched",
+])
+def test_arrow_pass_rejects_an_input_carrying_an_output_column(spark, tmp_path, name):
+    """Every Arrow pass that keeps its input columns rejects an input
+    that already carries one of its output columns, with one wording
+    naming the column (normalize_text replaces in place instead — see
+    test_normalize_text_replaces_existing_output_columns). The clash
+    is checked at plan build: the curation and classifier passes raise
+    before loading any artifact."""
+    col, build = _clash_case(name)
     df = spark.createDataFrame(
-        [(1, "some text", "stale")], ["doc_id", "text", "text_norm"]
-    )
-    with _pytest.raises(ValueError, match="already carries"):
-        curation_scored_stream(df, "/nonexistent", "/nonexistent")
+        [(1, "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu nu. "
+          "Second sentence here.\nline two", "web")],
+        "doc_id long, text string, source string",
+    ).withColumn(col, F.lit(1))
+    with pytest.raises(ValueError, match="already carries") as err:
+        build(df, tmp_path)
+    assert "rename" in str(err.value) and repr(col) in str(err.value)
 
 
 def test_score_kernel_chunking_identical(spark, monkeypatch):
@@ -3471,11 +3524,8 @@ def test_importance_table_serve_parity(spark, tmp_path):
     srv = importance_against_path(new, path).collect()[0]
     assert srv["score"] == 2 * _CLF_FP and srv["n_tokens"] == 2
 
-    # clash guard + artifact guards fail loud
-    with _pytest.raises(ValueError, match="rename"):
-        importance_against_path(
-            served, path
-        )  # already carries n_tokens/score
+    # artifact guard fails loud (the clash guard is in
+    # test_arrow_pass_rejects_an_input_carrying_an_output_column)
     with _pytest.raises(Exception):
         importance_against_path(df, str(tmp_path / "missing"))
 
@@ -4024,10 +4074,6 @@ def test_neardup_guards(spark, tmp_path):
     write_band_digest_table(docs, ok, mode="overwrite")
     with _pytest.raises(ValueError, match="drop|flag"):
         neardup_against_path(docs, ok, action="verify")
-    with _pytest.raises(ValueError, match="rename"):
-        neardup_against_path(
-            docs.withColumn("neardup", docs.doc_id > 0), ok, action="flag"
-        )
 
     b1 = str(tmp_path / "b1")
     b2 = str(tmp_path / "b2")
@@ -4096,11 +4142,6 @@ def test_gopher_repetition_battery(spark):
     for k, v in c.items():
         assert row[k] == v, k
     assert row["pass_repetition"] in (0, 1)
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="rename"):
-        gopher_repetition(gopher_repetition(df))
 
     # composes after gopher_rules: column sets are disjoint by design,
     # and the composed battery reproduces the standalone values
@@ -4381,10 +4422,6 @@ def test_vec_dedup_against_guards(spark, tmp_path):
         vec_dedup_against_path(wrong_dim, ok).collect()
     with _pytest.raises(ValueError, match="drop|flag"):
         vec_dedup_against_path(vecs, ok, action="verify")
-    with _pytest.raises(ValueError, match="rename"):
-        vec_dedup_against_path(
-            vecs.withColumn("n_tables_hit", F.lit(1)), ok, action="flag"
-        )
     with _pytest.raises(ValueError, match="int64"):
         _vec_bucket_keys_py(1, 63, 8)
     with _pytest.raises(ValueError, match=">= 1"):

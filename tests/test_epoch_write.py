@@ -113,6 +113,20 @@ def test_dlq_write_needs_epoch_and_empty_epoch_writes_nothing(spark, tmp_path):
     assert files == []
 
 
+def test_dlq_purge_deletes_a_uri_path(spark, tmp_path, monkeypatch):
+    """purge() deletes through the path's FileSystem: a file:// DLQ is
+    emptied, and no stray relative 'file:' directory appears."""
+    monkeypatch.chdir(tmp_path)
+    root = tmp_path / "dlq"
+    dlq = DLQWriter(root.as_uri())
+    dlq.write(stamp_epoch(_dlq_rows(spark, 2, "validate"), 0))
+    assert dlq.read(spark).count() == 2
+    dlq.purge()
+    assert dlq.read(spark).count() == 0
+    assert not root.exists()
+    assert not (tmp_path / "file:").exists()
+
+
 def test_dlq_read_raises_on_a_second_layout(spark, tmp_path):
     """Only a missing path reads as an empty DLQ. A directory holding
     two layouts (the old ``component=`` root next to ``_batch_id=``)

@@ -11,7 +11,7 @@ from pyspark.sql import types as T
 
 from clickhouse_etl_spark.sinks import ClickHouseSink
 from clickhouse_etl_spark.spec.model import parse_pipeline_json
-from clickhouse_etl_spark.streaming.lifecycle import PipelineManager
+from clickhouse_etl_spark.streaming.lifecycle import PipelineManager, RunningPipeline
 
 SCHEMA = T.StructType(
     [
@@ -74,6 +74,14 @@ def test_stop_resume_continues_from_checkpoint(spark, tmp_path):
     mgr.terminate("lc1")
     assert "lc1" not in mgr.pipelines
     assert not os.path.isdir(str(tmp_path / "ckpt"))
+
+    # a file:// checkpoint URI is deleted through its FileSystem too
+    uri_ckpt = tmp_path / "ckpt_uri"
+    (uri_ckpt / "offsets").mkdir(parents=True)
+    (uri_ckpt / "offsets" / "0").write_text("v1\n")
+    mgr.pipelines["lc2"] = RunningPipeline(spec, uri_ckpt.as_uri(), rp.query, {})
+    mgr.terminate("lc2")
+    assert not uri_ckpt.exists()
 
 
 def test_managed_pipeline_routes_failures_to_dlq(spark, tmp_path):
@@ -179,6 +187,43 @@ def test_dead_dlq_query_stops_pipeline_and_resume_restarts_it(spark, tmp_path):
         assert len(rp.dlq_queries) == 1 and rp.dlq_queries[0] is not dq
         assert all(q.isActive for q in started[2:])
         assert mgr.status() == {"lc1": "running"}
+    finally:
+        for q in started:
+            q.stop()
+
+
+def test_resume_raises_when_a_restarted_query_dies(spark, tmp_path):
+    """resume() waits on every query it restarts: a DLQ query that dies
+    in its first micro-batch (here a corrupt offset log) raises instead
+    of reporting the pipeline as started, and no query is left running."""
+    from clickhouse_etl_spark.sinks import DLQWriter
+
+    spec = parse_pipeline_json(json.dumps(DOC))
+    raw = T.StructType([T.StructField("value", T.StringType())])
+    inp = str(tmp_path / "in")
+    spark.createDataFrame([('{"id":"a","name":"A"}',), ('{broken',)], raw).write.parquet(inp)
+
+    sink = ClickHouseSink(table="out", parquet_fallback_path=str(tmp_path / "out"))
+    mgr = PipelineManager()
+    ckpt = tmp_path / "ckpt"
+    rp = mgr.create(
+        spark, spec, str(ckpt), {"s": spark.readStream.schema(raw).parquet(inp)},
+        {"s": "id"}, sink.foreach_batch(), dlq_writer=DLQWriter(str(tmp_path / "dlq")),
+    )
+    started = [rp.query, *rp.dlq_queries]
+    try:
+        for q in started:
+            q.processAllAvailable()
+        mgr.stop("lc1")
+        offsets = ckpt / "dlq_s" / "offsets"
+        last = max((p for p in offsets.iterdir() if p.name.isdigit()), key=lambda p: int(p.name))
+        last.write_text("v999\n")  # an offset log no Spark version reads
+        with pytest.raises(Exception):
+            mgr.resume(spark, "lc1")
+        rp = mgr.pipelines["lc1"]
+        started += [rp.query, *rp.dlq_queries]
+        assert not any(q.isActive for q in started)
+        assert mgr.status() == {"lc1": "stopped"}
     finally:
         for q in started:
             q.stop()
