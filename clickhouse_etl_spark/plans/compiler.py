@@ -66,7 +66,7 @@ def source_chain(
                 # dropDuplicatesWithinWatermark takes column NAMES — route
                 # a dot-path key through the same dual resolution as batch
                 # dedup by materializing it as a helper column first
-                df = df.withWatermark(ts_col, f"{int(window_s)} seconds")
+                df = df.withWatermark(ts_col, f"{round(window_s * 1e3)} milliseconds")
                 df = (
                     df.withColumn("_dedup_key", _key_col(df, key))
                     .dropDuplicatesWithinWatermark(["_dedup_key"])

@@ -13,33 +13,41 @@ glassflow-api/internal/join/temporal.go:119-291):
 - buffers expire after their side's time_window; expired rows vanish
   (inner-join behavior).
 
-Implementation: both streams union into one tagged stream; groupBy(key)
-.applyInPandasWithState keeps {latest right, pending lefts} per key.
-Within a micro-batch, rows process in event-time order (batch stands in
-for arrival order — same tie-break the batch oracle documents).
-State is sharded by key across executors — unlike the reference, which
-pins the join to a single replica (scaling/page.mdx:211), this scales
-horizontally; ordering guarantees are per-key, which is exactly what
-the KV-buffer algorithm provides anyway.
+Implementation: both streams union into one tagged stream (rows with a
+NULL key are dropped there: a NULL key never joins, as in batch);
+``groupBy(_bucket).applyInPandasWithState`` runs one Python call per
+key bucket per micro-batch. There is one bucket per shuffle partition
+(``spark.sql.shuffle.partitions``): bucket ``i`` is the precomputed id
+that Spark's hash partitioner sends to partition ``i``, and a key's
+bucket is ``pmod(xxhash64(key), P)``, so each state partition holds
+exactly one bucket. Within a micro-batch, rows process in event-time
+order (batch stands in for arrival order — same tie-break the batch
+oracle documents); ordering guarantees are per key, which is exactly
+what the KV-buffer algorithm provides anyway.
 
-The per-key batch is processed WITHOUT a Python row loop: only the
-output-projected fields travel through the union (typed columns — no
-JSON encode/decode anywhere), pending lefts live column-oriented in
-state, and the arrival-order rules reduce to two ``searchsorted``
-lookups over the sorted right timestamps —
+A bucket's state is one Arrow IPC blob holding a table with one row
+per key, sorted by key: the latest right, the pending lefts as list
+columns (flattened values plus per-key offsets) and the key's
+last-touched processing time. The micro-batch step has no Python row
+or key loop. It sorts the bucket's rows once by (key, ts, side) and
+reduces the arrival-order rules to running maxima/minima of right
+positions, reset at each key segment:
 
 - a left's immediate-join partner is the latest right processed before
-  it  (``searchsorted(right_us, left_us, 'left') - 1``; equal-ts rights
-  sort after lefts, so they are not yet arrived);
+  it (equal-ts rights sort after lefts, so they are not yet arrived);
+  with no batch right before it, the key's state right;
 - a buffered left's drain partner is the first right processed after
-  it (``searchsorted(..., 'left')``), emitted only if the left is
-  still alive at that moment — later rights never see it because every
-  drain clears the buffer.
+  it, emitted only if the left is still alive at that moment — later
+  rights never see it because every drain clears the buffer; the
+  state's pending lefts drain at the key's first batch right.
 
 Expiry uses event time relative to the maximum timestamp seen per key
-(processing-time TTL in the reference — the documented semantic shift,
-SURVEY.md §7.5.2) plus a processing-time state timeout as a GC
-backstop for keys that stop receiving events.
+in the micro-batch (processing-time TTL in the reference — the
+documented semantic shift, SURVEY.md §7.5.2); a key with no rows in
+the micro-batch keeps its state unchanged. The optional
+processing-time GC backstop is per key: a key idle past the timeout is
+dropped the next time its bucket runs, and a bucket idle past it is
+dropped whole by its state timeout.
 """
 
 from __future__ import annotations
@@ -48,12 +56,25 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..spec.model import JoinConfig
+
+# Spark's grouped-state value: the bucket count the blob was written
+# under (a changed spark.sql.shuffle.partitions would move keys between
+# buckets) and the bucket's Arrow IPC table
+_STATE_SCHEMA = T.StructType(
+    [
+        T.StructField("n_buckets", T.IntegerType()),
+        T.StructField("keys", T.BinaryType()),
+    ]
+)
 
 
 def _side_fields(side_df: DataFrame, rules) -> list[tuple[str, str, T.DataType]]:
@@ -95,237 +116,279 @@ def _tagged_union(
         *[F.lit(None).cast(t).alias(f"_l{i}") for i, (_, _, t) in enumerate(l_fields)],
         *[proj(right, n, t).alias(f"_r{i}") for i, (n, _, t) in enumerate(r_fields)],
     )
-    return lhs.unionByName(rhs)
+    # the batch equi-join never matches NULL = NULL
+    return lhs.unionByName(rhs).where(F.col("_key").isNotNull())
 
 
-def _state_schema(l_fields, r_fields) -> T.StructType:
-    return T.StructType(
+def _murmur3_int(v: int, seed: int = 42) -> int:
+    """Spark's ``Murmur3_x86_32.hashInt``: the hash its partitioner
+    (and SQL ``hash()``) takes of one int column."""
+    m = 0xFFFFFFFF
+
+    def rotl(x, r):
+        return ((x << r) | (x >> (32 - r))) & m
+
+    k = rotl((v * 0xCC9E2D51) & m, 15) * 0x1B873593 & m
+    h = (rotl(seed ^ k, 13) * 5 + 0xE6546B64) & m
+    h ^= 4
+    h = ((h ^ (h >> 16)) * 0x85EBCA6B) & m
+    h = ((h ^ (h >> 13)) * 0xC2B2AE35) & m
+    h ^= h >> 16
+    return h - (1 << 32) if h >> 31 else h
+
+
+def _bucket_ids(n: int) -> list[int]:
+    """Bucket ids v_0..v_{n-1} with pmod(hash(v_i), n) == i: the id
+    Spark's hash partitioner sends to shuffle partition i."""
+    ids: dict[int, int] = {}
+    v = 0
+    while len(ids) < n:
+        ids.setdefault(_murmur3_int(v) % n, v)
+        v += 1
+    return [ids[i] for i in range(n)]
+
+
+def _arrow_type(dtype: T.DataType) -> pa.DataType:
+    """State column type: Spark's Arrow mapping, with timestamps kept
+    zone-less so they round-trip to the naive values the rows carry."""
+    t = to_arrow_type(dtype)
+    return pa.timestamp("us") if pa.types.is_timestamp(t) else t
+
+
+def _state_table_schema(l_types: list[T.DataType], r_types: list[T.DataType]) -> pa.Schema:
+    """One row per key, sorted by ``_key``; ``_right_us`` is NULL when
+    the key holds no right; ``_left_us``/``_l{i}`` list the key's
+    pending lefts in arrival order."""
+    return pa.schema(
         [
-            T.StructField("has_right", T.BooleanType()),
-            T.StructField("right_us", T.LongType()),
-            *[T.StructField(f"_r{i}", t) for i, (_, _, t) in enumerate(r_fields)],
-            T.StructField("left_us", T.ArrayType(T.LongType())),
-            *[T.StructField(f"_l{i}", T.ArrayType(t)) for i, (_, _, t) in enumerate(l_fields)],
+            ("_key", pa.string()),
+            ("_touched_ms", pa.int64()),
+            ("_right_us", pa.int64()),
+            *[(f"_r{j}", _arrow_type(t)) for j, t in enumerate(r_types)],
+            ("_left_us", pa.list_(pa.int64())),
+            *[(f"_l{i}", pa.list_(_arrow_type(t))) for i, t in enumerate(l_types)],
         ]
     )
 
 
-def _py(v):
-    """numpy scalar -> python scalar for state serialization."""
-    if isinstance(v, np.generic):
-        v = v.item()
-    if isinstance(v, float) and pd.isna(v):
-        return None
-    return v
+def _dump(table: pa.Table) -> bytes:
+    sink = pa.BufferOutputStream()
+    with pa.ipc.new_stream(sink, table.schema) as w:
+        w.write_table(table)
+    return sink.getvalue().to_pybytes()
 
 
-def _coercer(dtype: T.DataType):
-    """State values must match the state schema's python types exactly —
-    the union's null-padding upcasts int columns to float64 in pandas,
-    so a long field would otherwise arrive as float and fail the state
-    serializer."""
-    if isinstance(dtype, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)):
-        return lambda v: None if (v := _py(v)) is None else int(v)
-    if isinstance(dtype, (T.DoubleType, T.FloatType)):
-        return lambda v: None if (v := _py(v)) is None else float(v)
-    if isinstance(dtype, T.BooleanType):
-        return lambda v: None if (v := _py(v)) is None else bool(v)
-    return _py
+def _load(blob: bytes) -> pa.Table:
+    return pa.ipc.open_stream(blob).read_all()
+
+
+def _values(col) -> np.ndarray:
+    """Arrow column -> numpy in the same form PySpark hands the rows
+    (NULL ints as NaN floats, dates as objects, naive timestamps)."""
+    return col.to_pandas().to_numpy()
 
 
 def _make_step(
     cfg: JoinConfig,
     l_out: list[str],   # output names fed by the left side, in _l{i} order
     r_out: list[str],   # output names fed by the right side, in _r{i} order
-    l_coerce: list,     # per-left-field state coercers
-    r_coerce: list,     # per-right-field state coercers
+    l_types: list[T.DataType],
+    r_types: list[T.DataType],
     out_names: list[str],  # full output column order
+    state_gc_timeout_ms: int | None = None,
 ):
-    """The per-key micro-batch step: vectorized searchsorted join over
-    one key's sorted rows + the columnar state tuple, kept free of the
+    """The per-bucket micro-batch step, kept free of the
     applyInPandasWithState wiring so it is testable without a session.
 
-    Signature: step(rows_pdf, state_tuple_or_None) ->
-    (out_pdf_or_None, new_state_tuple_or_None) where the state tuple is
-    (has_right, right_us, *right_fields, left_us_list, *left_field_lists)
-    — the exact _state_schema layout."""
-    left_ttl_us = int(cfg.left.time_window_s * 1_000_000)
-    right_ttl_us = int(cfg.right.time_window_s * 1_000_000)
+    Signature: step(rows_pdf, state_table_or_None, now_ms) ->
+    (out_pdf_or_None, new_state_table_or_None). ``rows_pdf`` holds the
+    bucket's rows (``_key`` not NULL, ``_us``, ``_side`` 0=left/1=right,
+    ``_l{i}``, ``_r{j}``); the state table has the
+    ``_state_table_schema`` layout."""
+    left_ttl = int(cfg.left.time_window_s * 1_000_000)
+    right_ttl = int(cfg.right.time_window_s * 1_000_000)
     l_cols = [f"_l{i}" for i in range(len(l_out))]
-    r_cols = [f"_r{i}" for i in range(len(r_out))]
-    n_r = len(r_cols)
+    r_cols = [f"_r{j}" for j in range(len(r_out))]
+    schema = _state_table_schema(l_types, r_types)
 
-    def step(rows: pd.DataFrame, st: tuple | None):
-        if st is not None:
-            has_right = bool(st[0])
-            right_us = st[1]
-            st_r = list(st[2 : 2 + n_r])
-            st_l_us = np.asarray(st[2 + n_r] or [], dtype="int64")
-            st_l = [list(a or []) for a in st[3 + n_r :]]
-        else:
-            has_right, right_us = False, None
-            st_r = [None] * n_r
-            st_l_us = np.asarray([], dtype="int64")
-            st_l = [[] for _ in l_cols]
+    def step(rows: pd.DataFrame, state: pa.Table | None, now_ms: int):
+        if state is None:
+            state = schema.empty_table()
+        n = len(rows)
 
-        rows = rows.sort_values(["_us", "_side"], kind="mergesort")
+        # ---- keys: sorted union of the state's and the batch's ----
+        s_key = state.column("_key").to_numpy()
+        codes, uniq = pd.factorize(rows["_key"].to_numpy(dtype=object))
+        keys = np.union1d(s_key, uniq)
+        n_keys = len(keys)
+        ks = np.searchsorted(keys, s_key)  # state row -> key index
 
+        # ---- batch rows, sorted once by (key, ts, side) ----
+        kb = np.searchsorted(keys, uniq)[codes]
         us = rows["_us"].to_numpy(dtype="int64", na_value=0)
-        side = rows["_side"].to_numpy()
-        l_pos = np.flatnonzero(side == 0)
-        r_pos = np.flatnonzero(side == 1)
-        l_us = us[l_pos]
-        r_us = us[r_pos]
-        max_us = int(us.max()) if us.size else 0
-        l_vals = [rows[c].to_numpy()[l_pos] for c in l_cols]
-        r_vals = [rows[c].to_numpy()[r_pos] for c in r_cols]
+        side = rows["_side"].to_numpy(dtype="int64")
+        order = np.lexsort((side, us, kb))
+        kb, us, is_r = kb[order], us[order], side[order] == 1
+        idx = np.arange(n)
+        seg_lo = np.flatnonzero(np.r_[True, kb[1:] != kb[:-1]])
+        seg_hi = np.r_[seg_lo[1:], n]
+        seg_len = seg_hi - seg_lo
+        seg_key = kb[seg_lo]
+        # latest right at or before each row / first right at or after
+        # it, both within the row's key segment (-1: none)
+        prev = np.maximum.accumulate(np.where(is_r, idx, -1))
+        prev[prev < np.repeat(seg_lo, seg_len)] = -1
+        nxt = np.minimum.accumulate(np.where(is_r, idx, n)[::-1])[::-1]
+        nxt[nxt >= np.repeat(seg_hi, seg_len)] = -1
 
-        emits: list[pd.DataFrame] = []
+        # ---- pools: batch rows (original order) then state values;
+        #      emits and the new state are index takes into them ----
+        l_pool = [
+            np.concatenate([rows[c].to_numpy(), _values(pc.list_flatten(state.column(c)))])
+            for c in l_cols
+        ]
+        r_pool = [
+            np.concatenate([rows[c].to_numpy(), _values(state.column(c))]) for c in r_cols
+        ]
+        p_us = pc.list_flatten(state.column("_left_us")).to_numpy()
+        p_key = ks[pc.list_parent_indices(state.column("_left_us")).to_numpy()]
 
-        def emit(n, left_arrays, right_arrays):
-            if not n:
-                return
-            data = {}
-            for name, arr in zip(l_out, left_arrays):
-                data[name] = arr
-            for name, arr in zip(r_out, right_arrays):
-                data[name] = arr
-            emits.append(pd.DataFrame(data, columns=out_names))
+        # per-key state right before the batch
+        has_r = np.zeros(n_keys, dtype=bool)
+        r_us = np.zeros(n_keys, dtype="int64")
+        r_src = np.zeros(n_keys, dtype="int64")
+        has_r[ks] = state.column("_right_us").is_valid().to_numpy()
+        r_us[ks] = state.column("_right_us").fill_null(0).to_numpy()
+        r_src[ks] = n + np.arange(len(s_key))
 
-        # 1. state-pending lefts drain at the FIRST batch right (alive
-        #    ones emit; the drain clears the buffer either way)
-        if r_pos.size and st_l_us.size:
-            alive = (
-                np.ones(st_l_us.size, dtype=bool)
-                if left_ttl_us == 0
-                else (int(r_us[0]) - st_l_us <= left_ttl_us)
-            )
-            k = int(alive.sum())
-            emit(
-                k,
-                [np.asarray(a, dtype=object)[alive] for a in st_l],
-                [np.repeat(np.asarray([rv[0]], dtype=object), k) for rv in r_vals],
-            )
-        if r_pos.size:
-            st_l_us = np.asarray([], dtype="int64")
-            st_l = [[] for _ in l_cols]
+        # ---- lefts of the batch ----
+        lrow = np.flatnonzero(~is_r)
+        lk, lus, p, q = kb[lrow], us[lrow], prev[lrow], nxt[lrow]
+        b_imm = (p >= 0) & ((right_ttl == 0) | (lus - us[p] <= right_ttl))
+        s_imm = (p < 0) & has_r[lk] & ((right_ttl == 0) | (lus - r_us[lk] <= right_ttl))
+        buffered = ~(b_imm | s_imm)
+        drain = buffered & (q >= 0) & ((left_ttl == 0) | (us[q] - lus <= left_ttl))
+        pending = buffered & (q < 0)
 
-        if l_pos.size:
-            # latest batch right processed before each left
-            p = np.searchsorted(r_us, l_us, side="left") - 1
-            pr_us = r_us[np.clip(p, 0, None)] if r_us.size else np.zeros_like(l_us)
-            batch_imm = (p >= 0) & (
-                (right_ttl_us == 0) | (l_us - pr_us <= right_ttl_us)
-            )
-            state_imm = (
-                (p == -1)
-                & has_right
-                & ((right_ttl_us == 0) | (l_us - int(right_us or 0) <= right_ttl_us))
-            )
+        # state-pending lefts drain at their key's first batch right
+        # (alive ones emit; the drain clears the buffer either way)
+        first_r = np.full(n_keys, -1)
+        first_r[seg_key] = nxt[seg_lo]
+        p_first = first_r[p_key]
+        p_drained = p_first >= 0
+        s_drain = p_drained & ((left_ttl == 0) | (us[p_first] - p_us <= left_ttl))
 
-            # 2. immediate joins against the state right (pre-batch value)
-            k = int(state_imm.sum())
-            emit(
-                k,
-                [a[state_imm] for a in l_vals],
-                [np.repeat(np.asarray([sv], dtype=object), k) for sv in st_r],
-            )
-            # 3. immediate joins against batch rights
-            pi = p[batch_imm]
-            emit(pi.size, [a[batch_imm] for a in l_vals], [rv[pi] for rv in r_vals])
+        li = np.concatenate(
+            [n + np.flatnonzero(s_drain), order[lrow[s_imm]], order[lrow[b_imm]], order[lrow[drain]]]
+        )
+        ri = np.concatenate(
+            [order[p_first[s_drain]], r_src[lk[s_imm]], order[p[b_imm]], order[q[drain]]]
+        )
+        out = None
+        if li.size:
+            data = {name: pool[li] for name, pool in zip(l_out, l_pool)}
+            data.update({name: pool[ri] for name, pool in zip(r_out, r_pool)})
+            out = pd.DataFrame(data, columns=out_names)
 
-            # 4. buffered lefts drain at the first right AFTER them,
-            #    iff still alive then; expired ones are dropped by that
-            #    same drain and never reach a later right
-            q = np.searchsorted(r_us, l_us, side="left")
-            buffered = ~(batch_imm | state_imm)
-            has_drain = buffered & (q < r_us.size)
-            if has_drain.any():
-                qi = q[has_drain]
-                d_alive = (
-                    np.ones(qi.size, dtype=bool)
-                    if left_ttl_us == 0
-                    else (r_us[qi] - l_us[has_drain] <= left_ttl_us)
-                )
-                sel = np.flatnonzero(has_drain)[d_alive]
-                emit(sel.size, [a[sel] for a in l_vals], [rv[qi[d_alive]] for rv in r_vals])
+        # ---- new state: touched keys take the batch's last right and
+        #      pending lefts, then expire against their max ts ----
+        touched = np.zeros(n_keys, dtype=bool)
+        touched[seg_key] = True
+        max_us = np.zeros(n_keys, dtype="int64")
+        max_us[seg_key] = us[seg_hi - 1]
+        last_r = prev[seg_hi - 1]
+        got = last_r >= 0
+        has_r[seg_key[got]] = True
+        r_us[seg_key[got]] = us[last_r[got]]
+        r_src[seg_key[got]] = order[last_r[got]]
+        if right_ttl:
+            has_r &= ~(touched & (max_us - r_us > right_ttl))
 
-            pending = buffered & (q >= r_us.size)
-        else:
-            pending = np.zeros(0, dtype=bool)
+        keep_old = ~p_drained
+        e_key = np.concatenate([p_key[keep_old], kb[lrow[pending]]])
+        e_us = np.concatenate([p_us[keep_old], us[lrow[pending]]])
+        e_src = np.concatenate([n + np.flatnonzero(keep_old), order[lrow[pending]]])
+        alive = np.ones(e_key.size, dtype=bool)
+        if left_ttl:
+            alive = ~(touched[e_key] & (max_us[e_key] - e_us > left_ttl))
 
-        # ---- new state ----
-        if r_pos.size:
-            has_right, right_us = True, int(r_us[-1])
-            st_r = [c(rv[-1]) for c, rv in zip(r_coerce, r_vals)]
-        new_l_us = np.concatenate([st_l_us, l_us[pending]]) if l_pos.size else st_l_us
-        new_l = [
-            list(old) + [c(v) for v in a[pending]]
-            for old, c, a in zip(st_l, l_coerce, l_vals)
-        ] if l_pos.size else st_l
-        if left_ttl_us and new_l_us.size:
-            keep = max_us - new_l_us <= left_ttl_us
-            new_l_us = new_l_us[keep]
-            new_l = [[v for v, k in zip(a, keep) if k] for a in new_l]
-        if right_ttl_us and has_right and max_us - int(right_us) > right_ttl_us:
-            has_right, right_us = False, None
-            st_r = [None] * n_r
-
-        if not has_right and not new_l_us.size:
-            new_state = None
-        else:
-            new_state = (
-                has_right,
-                right_us,
-                *st_r,
-                [int(v) for v in new_l_us],
-                *new_l,
-            )
-        out = pd.concat(emits, ignore_index=True) if emits else None
-        return out, new_state
+        touched_ms = np.zeros(n_keys, dtype="int64")
+        touched_ms[ks] = state.column("_touched_ms").to_numpy()
+        touched_ms[touched] = now_ms
+        live = np.ones(n_keys, dtype=bool)
+        if state_gc_timeout_ms is not None:
+            live = touched | (now_ms - touched_ms <= state_gc_timeout_ms)
+        alive &= live[e_key]
+        e_key, e_us, e_src = e_key[alive], e_us[alive], e_src[alive]
+        n_pend = np.bincount(e_key, minlength=n_keys)
+        kept = np.flatnonzero(live & (has_r | (n_pend > 0)))
+        if not kept.size:
+            return out, None
+        o = np.argsort(e_key, kind="stable")  # old pending first, then the batch's
+        e_us, e_src = e_us[o], e_src[o]
+        offsets = pa.array(np.r_[0, np.cumsum(n_pend[kept])], pa.int32())
+        no_r = ~has_r[kept]
+        new = pa.Table.from_arrays(
+            [
+                pa.array(keys[kept], pa.string()),
+                pa.array(touched_ms[kept]),
+                pa.array(r_us[kept], mask=no_r),
+                *[
+                    pa.array(pool[r_src[kept]], schema.field(c).type, mask=no_r, from_pandas=True)
+                    for c, pool in zip(r_cols, r_pool)
+                ],
+                pa.ListArray.from_arrays(offsets, pa.array(e_us)),
+                *[
+                    pa.ListArray.from_arrays(
+                        offsets,
+                        pa.array(pool[e_src], schema.field(c).type.value_type, from_pandas=True),
+                    )
+                    for c, pool in zip(l_cols, l_pool)
+                ],
+            ],
+            schema=schema,
+        )
+        return out, new
 
     return step
 
 
-def _make_processor(
-    cfg: JoinConfig,
-    l_out: list[str],
-    r_out: list[str],
-    l_coerce: list,
-    r_coerce: list,
-    out_names: list[str],
-    state_gc_timeout_ms: int | None,
-):
-    step = _make_step(cfg, l_out, r_out, l_coerce, r_coerce, out_names)
-
-    def empty_out() -> pd.DataFrame:
-        return pd.DataFrame(columns=out_names)
-
+def _make_processor(step, n_buckets: int, out_names: list[str], state_gc_timeout_ms: int | None):
     def process(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
+        if state.hasTimedOut:  # the whole bucket sat idle past the GC timeout
             state.remove()
-            yield empty_out()
+            yield pd.DataFrame(columns=out_names)
             return
 
+        old = None
+        if state.exists:
+            written_under, blob = state.get
+            if written_under != n_buckets:
+                raise RuntimeError(
+                    f"temporal join state was written with {written_under} key buckets, "
+                    f"this query has {n_buckets}: restart the checkpoint with the "
+                    "spark.sql.shuffle.partitions it was written under"
+                )
+            old = _load(blob)
         chunks = list(pdfs)
         rows = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-        out, new_state = step(rows, state.get if state.exists else None)
+        out, new = step(rows, old, state.getCurrentProcessingTimeMs())
 
-        if new_state is None:
+        if new is None:
             state.remove()
         else:
-            state.update(new_state)
-            # GC backstop for keys that go quiet — ONLY when configured:
-            # a registered processing-time timer keeps an availableNow
-            # query alive with empty epochs until it fires, so
-            # bounded/batch-parity runs must leave it off (event-time
-            # pruning above already caps state for active keys)
+            state.update((n_buckets, _dump(new)))
+            # GC backstop for buckets that go quiet — ONLY when
+            # configured: a registered processing-time timer keeps an
+            # availableNow query alive with empty epochs until it
+            # fires, so bounded/batch-parity runs must leave it off
+            # (event-time pruning already caps state for active keys)
             if state_gc_timeout_ms is not None:
                 state.setTimeoutDuration(state_gc_timeout_ms)
 
-        yield out if out is not None else empty_out()
+        yield out if out is not None else pd.DataFrame(columns=out_names)
 
     return process
 
@@ -358,19 +421,24 @@ def temporal_join_streaming(
         [T.StructField(o, out_types[o], True) for o in out_names]
     )
 
+    n_buckets = int(left.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    bucket_of = F.pmod(F.xxhash64("_key"), F.lit(n_buckets)).cast("int")
     union = _tagged_union(left, right, cfg, left_ts, right_ts, l_fields, r_fields)
-    return union.groupBy("_key").applyInPandasWithState(
-        _make_processor(
-            cfg,
-            [o for _, o, _ in l_fields],
-            [o for _, o, _ in r_fields],
-            [_coercer(t) for _, _, t in l_fields],
-            [_coercer(t) for _, _, t in r_fields],
-            out_names,
-            state_gc_timeout_ms,
-        ),
+    step = _make_step(
+        cfg,
+        [o for _, o, _ in l_fields],
+        [o for _, o, _ in r_fields],
+        [t for _, _, t in l_fields],
+        [t for _, _, t in r_fields],
+        out_names,
+        state_gc_timeout_ms,
+    )
+    return union.withColumn(
+        "_bucket", F.element_at(F.array(*map(F.lit, _bucket_ids(n_buckets))), bucket_of + 1)
+    ).groupBy("_bucket").applyInPandasWithState(
+        _make_processor(step, n_buckets, out_names, state_gc_timeout_ms),
         outputStructType=output_schema,
-        stateStructType=_state_schema(l_fields, r_fields),
+        stateStructType=_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.ProcessingTimeTimeout
         if state_gc_timeout_ms is not None

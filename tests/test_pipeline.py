@@ -185,6 +185,44 @@ def test_build_pipeline_batch_stream_parity(spark, tmp_path):
     assert sorted(map(tuple, got)) == expected
 
 
+def test_stream_dedup_watermark_keeps_sub_second_windows(spark, tmp_path):
+    """A "500ms" dedup window is a 500 ms watermark, not int(0.5) = 0 s.
+    Micro-batch 1 ends at 10.0 s, so the watermark is 9.5 s. Micro-batch
+    3 filters late rows against it: the 9.7 s row is on time (a 0 s
+    watermark drops it as late), the 9.4 s row is late either way."""
+    from pyspark.sql import types as T
+
+    doc = {
+        "version": "v3", "pipeline_id": "wm", "name": "wm",
+        "sources": [{"type": "kafka", "source_id": "ev", "topic": "ev"}],
+        "transforms": [
+            {"type": "dedup", "source_id": "ev", "config": {"key": "id", "time_window": "500ms"}},
+        ],
+        "sink": {"type": "clickhouse", "table": "out", "max_batch_size": 100,
+                 "max_delay_time": "1s"},
+    }
+    schema = T.StructType([T.StructField("id", T.StringType()),
+                           T.StructField("ts", T.TimestampType())])
+    base = dt.datetime(2024, 1, 1, 10)
+    inp = str(tmp_path / "in")
+    sec = lambda s: base + dt.timedelta(seconds=s)  # noqa: E731
+    for rows in ([("a", sec(0)), ("x", sec(10))],
+                 [("y", sec(10))],
+                 [("b", sec(9.7)), ("c", sec(9.4))]):
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(inp)
+    got = []
+    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(inp)
+    q = (
+        build_pipeline(parse_pipeline_json(json.dumps(doc)), {"ev": stream}, {"ev": "ts"})
+        .writeStream.foreachBatch(lambda df, _bid: got.extend(r.id for r in df.collect()))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert sorted(got) == ["a", "b", "x", "y"]
+
+
 def test_dataop_transforms_in_spec(spark):
     """Beyond-reference spec extension: training-data ops declared as
     v3 `dataop` transforms run on the assembled chain after the fixed

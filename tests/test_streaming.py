@@ -117,6 +117,153 @@ def test_temporal_join_streaming_semantics(spark, tmp_path):
     assert len(rows) == 2
 
 
+def _run_join(joined, ckpt):
+    got = []
+    q = (
+        joined.writeStream.foreachBatch(lambda df, _bid: got.extend(df.collect()))
+        .option("checkpointLocation", str(ckpt))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    if q.exception() is not None:
+        raise q.exception()
+    return sorted((tuple(r) for r in got), key=repr)
+
+
+def _batch_join(spark, lpath, rpath, cfg):
+    from clickhouse_etl_spark.operators.join import temporal_join_batch
+
+    out = temporal_join_batch(spark.read.parquet(lpath), spark.read.parquet(rpath), cfg,
+                              right_ts_col="rts", left_ts_col="lts")
+    return sorted((tuple(r) for r in out.collect()), key=repr)
+
+
+def test_temporal_join_streaming_null_keys_never_join(spark, tmp_path):
+    """The stream joins what the batch join joins: a NULL-key left and
+    a NULL-key right never match."""
+    base = ts("2024-01-01T10:00:00")
+    lpath = _write_stream_input(spark, str(tmp_path), "left",
+                                [("u1", "Alice", base), (None, "Nobody", base)], LEFT_SCHEMA)
+    rpath = _write_stream_input(spark, str(tmp_path), "right", [
+        ("u1", "a@x", base + dt.timedelta(milliseconds=100)),
+        (None, "null@x", base + dt.timedelta(milliseconds=100)),
+    ], RIGHT_SCHEMA)
+    want = _batch_join(spark, lpath, rpath, _join_cfg())
+    assert want == [("u1", "Alice", "a@x")]
+    joined = temporal_join_streaming(
+        spark.readStream.schema(LEFT_SCHEMA).parquet(lpath),
+        spark.readStream.schema(RIGHT_SCHEMA).parquet(rpath),
+        _join_cfg(), left_ts="lts", right_ts="rts",
+    )
+    assert _run_join(joined, tmp_path / "ckpt") == want
+
+
+def test_temporal_join_streaming_typed_fields_wait_in_state(spark, tmp_path):
+    """A left with long and timestamp output fields waits in the bucket
+    state for one micro-batch (the right lands in the second) and joins
+    with its values intact, as in batch."""
+    base = ts("2024-01-01T10:00:00")
+    lschema = T.StructType([*LEFT_SCHEMA.fields, T.StructField("amount", T.LongType())])
+    lpath = _write_stream_input(spark, str(tmp_path), "left", [("u1", "Alice", base, 7)], lschema)
+    rpath = str(tmp_path / "right")
+    for rows in ([("u2", "b@x", base)], [("u1", "a@x", base + dt.timedelta(milliseconds=200))]):
+        spark.createDataFrame(rows, RIGHT_SCHEMA).coalesce(1).write.mode("append").parquet(rpath)
+    cfg = JoinConfig(
+        left=JoinSourceConfig("left", "id", 2.0, "left"),
+        right=JoinSourceConfig("right", "id", 2.0, "right"),
+        output_fields=(
+            JoinOutputField("left", "id", "id"),
+            JoinOutputField("left", "amount", "amount"),
+            JoinOutputField("left", "lts", "lts"),
+            JoinOutputField("right", "email", "email"),
+        ),
+    )
+    want = _batch_join(spark, lpath, rpath, cfg)
+    assert want == [("u1", 7, base, "a@x")]
+    joined = temporal_join_streaming(
+        spark.readStream.schema(lschema).parquet(lpath),
+        spark.readStream.schema(RIGHT_SCHEMA).option("maxFilesPerTrigger", 1).parquet(rpath),
+        cfg, left_ts="lts", right_ts="rts",
+    )
+    assert _run_join(joined, tmp_path / "ckpt") == want
+
+
+def test_temporal_join_bucket_ids_land_one_per_partition(spark):
+    """Bucket i's id hashes to shuffle partition i under Spark's own
+    partitioning hash, so P buckets fill P state partitions."""
+    from pyspark.sql import functions as F
+
+    from clickhouse_etl_spark.streaming.temporal_join import _bucket_ids
+
+    for n in (1, 3, 8, 200):
+        ids = _bucket_ids(n)
+        got = spark.createDataFrame([(v,) for v in ids], "b int").select(
+            F.pmod(F.hash("b"), F.lit(n)).alias("p")
+        ).collect()
+        assert [r.p for r in got] == list(range(n))
+
+
+def test_temporal_join_per_key_checkpoint_fails_loudly(spark, tmp_path):
+    """A checkpoint written by the per-key join (one state row per key)
+    cannot resume under the bucketed join: Spark's state-schema check
+    stops the query instead of reading the old state as new."""
+    from pyspark.errors import StreamingQueryException
+    from reference_forms import temporal_join_streaming_per_key
+
+    base = ts("2024-01-01T10:00:00")
+    lpath = _write_stream_input(spark, str(tmp_path), "left", [("u1", "Alice", base)], LEFT_SCHEMA)
+    rpath = _write_stream_input(
+        spark, str(tmp_path), "right", [("u1", "a@x", base + dt.timedelta(seconds=1))], RIGHT_SCHEMA
+    )
+
+    def sides():
+        return (spark.readStream.schema(LEFT_SCHEMA).parquet(lpath),
+                spark.readStream.schema(RIGHT_SCHEMA).parquet(rpath))
+
+    old = temporal_join_streaming_per_key(*sides(), _join_cfg(), "lts", "rts")
+    assert _run_join(old, tmp_path / "ckpt") == [("u1", "Alice", "a@x")]
+    # one more input file, so the restarted query has a batch to run
+    spark.createDataFrame([("u1", "Bob", base + dt.timedelta(seconds=2))], LEFT_SCHEMA) \
+        .write.mode("append").parquet(lpath)
+    new = temporal_join_streaming(*sides(), _join_cfg(), left_ts="lts", right_ts="rts")
+    with pytest.raises(StreamingQueryException, match="STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE"):
+        _run_join(new, tmp_path / "ckpt")
+
+
+def test_temporal_join_restart_under_other_bucket_count_fails_loudly(spark, tmp_path):
+    """Keys change bucket when spark.sql.shuffle.partitions changes
+    between restarts; a bucket that finds state written under another
+    bucket count stops the query instead of losing its keys' state."""
+    from pyspark.errors import StreamingQueryException
+
+    base = ts("2024-01-01T10:00:00")
+    keys = [f"u{i}" for i in range(20)]
+    rpath = _write_stream_input(spark, str(tmp_path), "right",
+                                [(k, f"{k}@x", base) for k in keys], RIGHT_SCHEMA)
+    lpath = _write_stream_input(spark, str(tmp_path), "left",
+                                [("u0", "Ann", base + dt.timedelta(seconds=1))], LEFT_SCHEMA)
+
+    def joined():
+        return temporal_join_streaming(
+            spark.readStream.schema(LEFT_SCHEMA).parquet(lpath),
+            spark.readStream.schema(RIGHT_SCHEMA).parquet(rpath),
+            _join_cfg(), left_ts="lts", right_ts="rts",
+        )
+
+    assert _run_join(joined(), tmp_path / "ckpt") == [("u0", "Ann", "u0@x")]
+    spark.createDataFrame([(k, "Bob", base + dt.timedelta(seconds=1)) for k in keys],
+                          LEFT_SCHEMA).write.mode("append").parquet(lpath)
+    n = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "3")
+    try:
+        restarted = joined()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", n)
+    with pytest.raises(StreamingQueryException, match="key buckets"):
+        _run_join(restarted, tmp_path / "ckpt")
+
+
 def test_streaming_dedup_within_watermark(spark, tmp_path):
     """pipeline.feature:1-75: 4 events, duplicate key -> 3 survive."""
     schema = T.StructType(
