@@ -107,13 +107,15 @@ def build_pipeline(
     ts_cols: Optional[dict[str, str]] = None,
     order_cols: Optional[dict[str, list[str]]] = None,
     state_gc_timeout_ms: Optional[int] = None,
+    join_buckets: Optional[int] = None,
 ) -> DataFrame:
     """Assemble the whole pipeline over one typed frame per source.
 
     ``ts_cols``/``order_cols`` give each source's event-time column and
     arrival-order tiebreak. The join is ``temporal_join_streaming`` on
     streaming frames (``state_gc_timeout_ms`` is its processing-time
-    GC) and ``temporal_join_batch`` otherwise. Building the frame
+    GC, ``join_buckets`` its key-bucket count) and
+    ``temporal_join_batch`` otherwise. Building the frame
     starts nothing, so a SpecError here leaves no query running."""
     ts_cols = ts_cols or {}
     order_cols = order_cols or {}
@@ -133,7 +135,8 @@ def build_pipeline(
             from ..streaming.temporal_join import temporal_join_streaming
 
             df = temporal_join_streaming(
-                left, right, j, left_ts, right_ts, state_gc_timeout_ms=state_gc_timeout_ms
+                left, right, j, left_ts, right_ts,
+                state_gc_timeout_ms=state_gc_timeout_ms, n_buckets=join_buckets,
             )
         else:
             df = temporal_join_batch(

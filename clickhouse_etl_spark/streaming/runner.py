@@ -31,6 +31,7 @@ from ..operators.validate import validate_json
 from ..plans.compiler import build_pipeline
 from ..sinks.dlq import stamp_epoch
 from ..spec.model import PipelineSpec, SourceConfig
+from .temporal_join import checkpoint_shuffle_partitions
 
 
 def kafka_source_stream(
@@ -144,7 +145,12 @@ class StreamingPipeline:
         if spec.join is not None and "availableNow" not in trigger:
             w = max(spec.join.left.time_window_s, spec.join.right.time_window_s)
             gc_ms = int(w * 1000 * 2) or 3600_000
-        df = build_pipeline(spec, typed, ts_cols, state_gc_timeout_ms=gc_ms)
+        # a restart runs under the shuffle-partition count its checkpoint
+        # recorded; the join's key buckets must follow it
+        buckets = None
+        if spec.join is not None:
+            buckets = checkpoint_shuffle_partitions(spark, f"{self.checkpoint_dir}/main")
+        df = build_pipeline(spec, typed, ts_cols, state_gc_timeout_ms=gc_ms, join_buckets=buckets)
 
         # each failure frame runs as its OWN StreamingQuery over the same
         # source (independent offsets — the reference's per-operator DLQ

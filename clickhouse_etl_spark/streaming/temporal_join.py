@@ -16,20 +16,25 @@ glassflow-api/internal/join/temporal.go:119-291):
 Implementation: both streams union into one tagged stream (rows with a
 NULL key are dropped there: a NULL key never joins, as in batch);
 ``groupBy(_bucket).applyInPandasWithState`` runs one Python call per
-key bucket per micro-batch. There is one bucket per shuffle partition
-(``spark.sql.shuffle.partitions``): bucket ``i`` is the precomputed id
-that Spark's hash partitioner sends to partition ``i``, and a key's
-bucket is ``pmod(xxhash64(key), P)``, so each state partition holds
-exactly one bucket. Within a micro-batch, rows process in event-time
-order (batch stands in for arrival order — same tie-break the batch
-oracle documents); ordering guarantees are per key, which is exactly
-what the KV-buffer algorithm provides anyway.
+key bucket per micro-batch. There are P buckets, P the shuffle
+partition count the query runs under, and a key's bucket is
+``pmod(xxhash64(key), P)``; Spark's hash partitioner then places the
+buckets (two may share a partition while another holds none). A
+restarted query keeps its checkpoint's P. Within a micro-batch, rows
+process in event-time order (batch stands in for arrival order — same
+tie-break the batch oracle documents); ordering guarantees are per
+key, which is exactly what the KV-buffer algorithm provides anyway.
 
 A bucket's state is one Arrow IPC blob holding a table with one row
-per key, sorted by key: the latest right, the pending lefts as list
-columns (flattened values plus per-key offsets) and the key's
-last-touched processing time. The micro-batch step has no Python row
-or key loop. It sorts the bucket's rows once by (key, ts, side) and
+per key: the latest right, the pending lefts as list columns
+(flattened values plus per-key offsets) and the key's last-touched
+processing time. The step reads into numpy and rebuilds only the rows
+of the keys the micro-batch touches; the other rows are carried over
+as Arrow data. The whole blob is still rewritten to the state store on
+every micro-batch that touches the bucket, so checkpoint bytes per
+micro-batch scale with the keys held, not the keys touched. The
+micro-batch step has no Python row or key loop. It sorts the bucket's
+rows once by (key, ts, side) and
 reduces the arrival-order rules to running maxima/minima of right
 positions, reset at each key segment:
 
@@ -52,6 +57,7 @@ dropped whole by its state timeout.
 
 from __future__ import annotations
 
+import json
 from typing import Iterator
 
 import numpy as np
@@ -120,32 +126,29 @@ def _tagged_union(
     return lhs.unionByName(rhs).where(F.col("_key").isNotNull())
 
 
-def _murmur3_int(v: int, seed: int = 42) -> int:
-    """Spark's ``Murmur3_x86_32.hashInt``: the hash its partitioner
-    (and SQL ``hash()``) takes of one int column."""
-    m = 0xFFFFFFFF
-
-    def rotl(x, r):
-        return ((x << r) | (x >> (32 - r))) & m
-
-    k = rotl((v * 0xCC9E2D51) & m, 15) * 0x1B873593 & m
-    h = (rotl(seed ^ k, 13) * 5 + 0xE6546B64) & m
-    h ^= 4
-    h = ((h ^ (h >> 16)) * 0x85EBCA6B) & m
-    h = ((h ^ (h >> 13)) * 0xC2B2AE35) & m
-    h ^= h >> 16
-    return h - (1 << 32) if h >> 31 else h
-
-
-def _bucket_ids(n: int) -> list[int]:
-    """Bucket ids v_0..v_{n-1} with pmod(hash(v_i), n) == i: the id
-    Spark's hash partitioner sends to shuffle partition i."""
-    ids: dict[int, int] = {}
-    v = 0
-    while len(ids) < n:
-        ids.setdefault(_murmur3_int(v) % n, v)
-        v += 1
-    return [ids[i] for i in range(n)]
+def checkpoint_shuffle_partitions(spark, checkpoint: str) -> int | None:
+    """The ``spark.sql.shuffle.partitions`` a streaming query's
+    checkpoint runs under, or None when it has run no batch. Spark
+    records the value in every offset-log entry and runs a restarted
+    query with it, whatever the session now says."""
+    jvm = spark._jvm
+    log = jvm.org.apache.hadoop.fs.Path(f"{checkpoint}/offsets")
+    fs = log.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(log):
+        return None
+    batches = [st.getPath().getName() for st in fs.listStatus(log)]
+    batches = [int(b) for b in batches if b.isdigit()]
+    if not batches:
+        return None
+    stream = fs.open(jvm.org.apache.hadoop.fs.Path(log, str(max(batches))))
+    try:
+        text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+    finally:
+        stream.close()
+    # line 1 is the log version, line 2 the batch metadata with its conf
+    conf = json.loads(text.split("\n")[1]).get("conf", {})
+    n = conf.get("spark.sql.shuffle.partitions")
+    return int(n) if n is not None else None
 
 
 def _arrow_type(dtype: T.DataType) -> pa.DataType:
@@ -156,7 +159,7 @@ def _arrow_type(dtype: T.DataType) -> pa.DataType:
 
 
 def _state_table_schema(l_types: list[T.DataType], r_types: list[T.DataType]) -> pa.Schema:
-    """One row per key, sorted by ``_key``; ``_right_us`` is NULL when
+    """One row per key, in no set order; ``_right_us`` is NULL when
     the key holds no right; ``_left_us``/``_l{i}`` list the key's
     pending lefts in arrival order."""
     return pa.schema(
@@ -216,24 +219,31 @@ def _make_step(
             state = schema.empty_table()
         n = len(rows)
 
-        # ---- keys: sorted union of the state's and the batch's ----
-        s_key = state.column("_key").to_numpy()
-        codes, uniq = pd.factorize(rows["_key"].to_numpy(dtype=object))
-        keys = np.union1d(s_key, uniq)
+        # ---- the batch's keys, sorted; a key the batch does not touch
+        #      keeps its state row as it is (only the GC backstop may
+        #      drop it), so only touched keys' rows are read and rebuilt ----
+        kb, keys = pd.factorize(rows["_key"].to_numpy(dtype=object), sort=True)
         n_keys = len(keys)
+        hit = pc.is_in(state.column("_key"), value_set=pa.array(keys, pa.string()))
+        idle = state.filter(pc.invert(hit))
+        if state_gc_timeout_ms is not None:
+            idle = idle.filter(
+                pc.greater_equal(idle.column("_touched_ms"), now_ms - state_gc_timeout_ms)
+            )
+        state = state.filter(hit)
+        s_key = state.column("_key").to_numpy()
         ks = np.searchsorted(keys, s_key)  # state row -> key index
 
         # ---- batch rows, sorted once by (key, ts, side) ----
-        kb = np.searchsorted(keys, uniq)[codes]
         us = rows["_us"].to_numpy(dtype="int64", na_value=0)
         side = rows["_side"].to_numpy(dtype="int64")
         order = np.lexsort((side, us, kb))
         kb, us, is_r = kb[order], us[order], side[order] == 1
         idx = np.arange(n)
+        # one segment per key, in key order
         seg_lo = np.flatnonzero(np.r_[True, kb[1:] != kb[:-1]])
         seg_hi = np.r_[seg_lo[1:], n]
         seg_len = seg_hi - seg_lo
-        seg_key = kb[seg_lo]
         # latest right at or before each row / first right at or after
         # it, both within the row's key segment (-1: none)
         prev = np.maximum.accumulate(np.where(is_r, idx, -1))
@@ -272,9 +282,7 @@ def _make_step(
 
         # state-pending lefts drain at their key's first batch right
         # (alive ones emit; the drain clears the buffer either way)
-        first_r = np.full(n_keys, -1)
-        first_r[seg_key] = nxt[seg_lo]
-        p_first = first_r[p_key]
+        p_first = nxt[seg_lo][p_key]
         p_drained = p_first >= 0
         s_drain = p_drained & ((left_ttl == 0) | (us[p_first] - p_us <= left_ttl))
 
@@ -290,54 +298,40 @@ def _make_step(
             data.update({name: pool[ri] for name, pool in zip(r_out, r_pool)})
             out = pd.DataFrame(data, columns=out_names)
 
-        # ---- new state: touched keys take the batch's last right and
-        #      pending lefts, then expire against their max ts ----
-        touched = np.zeros(n_keys, dtype=bool)
-        touched[seg_key] = True
-        max_us = np.zeros(n_keys, dtype="int64")
-        max_us[seg_key] = us[seg_hi - 1]
+        # ---- touched keys' new state: the batch's last right and
+        #      pending lefts, expired against the key's max ts ----
+        max_us = us[seg_hi - 1]
         last_r = prev[seg_hi - 1]
         got = last_r >= 0
-        has_r[seg_key[got]] = True
-        r_us[seg_key[got]] = us[last_r[got]]
-        r_src[seg_key[got]] = order[last_r[got]]
+        has_r[got] = True
+        r_us[got] = us[last_r[got]]
+        r_src[got] = order[last_r[got]]
         if right_ttl:
-            has_r &= ~(touched & (max_us - r_us > right_ttl))
+            has_r &= max_us - r_us <= right_ttl
 
         keep_old = ~p_drained
         e_key = np.concatenate([p_key[keep_old], kb[lrow[pending]]])
         e_us = np.concatenate([p_us[keep_old], us[lrow[pending]]])
         e_src = np.concatenate([n + np.flatnonzero(keep_old), order[lrow[pending]]])
-        alive = np.ones(e_key.size, dtype=bool)
         if left_ttl:
-            alive = ~(touched[e_key] & (max_us[e_key] - e_us > left_ttl))
-
-        touched_ms = np.zeros(n_keys, dtype="int64")
-        touched_ms[ks] = state.column("_touched_ms").to_numpy()
-        touched_ms[touched] = now_ms
-        live = np.ones(n_keys, dtype=bool)
-        if state_gc_timeout_ms is not None:
-            live = touched | (now_ms - touched_ms <= state_gc_timeout_ms)
-        alive &= live[e_key]
-        e_key, e_us, e_src = e_key[alive], e_us[alive], e_src[alive]
+            alive = max_us[e_key] - e_us <= left_ttl
+            e_key, e_us, e_src = e_key[alive], e_us[alive], e_src[alive]
         n_pend = np.bincount(e_key, minlength=n_keys)
-        kept = np.flatnonzero(live & (has_r | (n_pend > 0)))
-        if not kept.size:
-            return out, None
+        kept = np.flatnonzero(has_r | (n_pend > 0))
         o = np.argsort(e_key, kind="stable")  # old pending first, then the batch's
         e_us, e_src = e_us[o], e_src[o]
         offsets = pa.array(np.r_[0, np.cumsum(n_pend[kept])], pa.int32())
         no_r = ~has_r[kept]
-        new = pa.Table.from_arrays(
+        fresh = pa.Table.from_arrays(
             [
                 pa.array(keys[kept], pa.string()),
-                pa.array(touched_ms[kept]),
+                pa.array(np.full(kept.size, now_ms, dtype="int64")),
                 pa.array(r_us[kept], mask=no_r),
                 *[
                     pa.array(pool[r_src[kept]], schema.field(c).type, mask=no_r, from_pandas=True)
                     for c, pool in zip(r_cols, r_pool)
                 ],
-                pa.ListArray.from_arrays(offsets, pa.array(e_us)),
+                pa.ListArray.from_arrays(offsets, pa.array(e_us, pa.int64())),
                 *[
                     pa.ListArray.from_arrays(
                         offsets,
@@ -348,7 +342,8 @@ def _make_step(
             ],
             schema=schema,
         )
-        return out, new
+        new = pa.concat_tables([idle, fresh]).combine_chunks()
+        return out, (new if new.num_rows else None)
 
     return step
 
@@ -400,6 +395,7 @@ def temporal_join_streaming(
     left_ts: str,
     right_ts: str,
     state_gc_timeout_ms: int | None = None,
+    n_buckets: int | None = None,
 ) -> DataFrame:
     """Wire the tagged-union stateful processor. The output schema is
     cfg.output_fields in order, each typed by its side's column.
@@ -408,6 +404,12 @@ def temporal_join_streaming(
     stop receiving events (long-running continuous deployments). Leave
     None for availableNow / bounded runs — registered timers force the
     engine to keep scheduling empty micro-batches until they fire.
+
+    ``n_buckets``: the key-bucket count; None takes the session's
+    ``spark.sql.shuffle.partitions``. A query restarted from a
+    checkpoint must use the count the checkpoint was written under
+    (:func:`checkpoint_shuffle_partitions`; ``StreamingPipeline.start``
+    passes it), or its keys change bucket.
     """
     if not cfg.output_fields:
         raise ValueError("streaming temporal join requires explicit output_fields")
@@ -421,8 +423,8 @@ def temporal_join_streaming(
         [T.StructField(o, out_types[o], True) for o in out_names]
     )
 
-    n_buckets = int(left.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    bucket_of = F.pmod(F.xxhash64("_key"), F.lit(n_buckets)).cast("int")
+    if n_buckets is None:
+        n_buckets = int(left.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     union = _tagged_union(left, right, cfg, left_ts, right_ts, l_fields, r_fields)
     step = _make_step(
         cfg,
@@ -434,7 +436,7 @@ def temporal_join_streaming(
         state_gc_timeout_ms,
     )
     return union.withColumn(
-        "_bucket", F.element_at(F.array(*map(F.lit, _bucket_ids(n_buckets))), bucket_of + 1)
+        "_bucket", F.pmod(F.xxhash64("_key"), F.lit(n_buckets)).cast("int")
     ).groupBy("_bucket").applyInPandasWithState(
         _make_processor(step, n_buckets, out_names, state_gc_timeout_ms),
         outputStructType=output_schema,

@@ -189,21 +189,6 @@ def test_temporal_join_streaming_typed_fields_wait_in_state(spark, tmp_path):
     assert _run_join(joined, tmp_path / "ckpt") == want
 
 
-def test_temporal_join_bucket_ids_land_one_per_partition(spark):
-    """Bucket i's id hashes to shuffle partition i under Spark's own
-    partitioning hash, so P buckets fill P state partitions."""
-    from pyspark.sql import functions as F
-
-    from clickhouse_etl_spark.streaming.temporal_join import _bucket_ids
-
-    for n in (1, 3, 8, 200):
-        ids = _bucket_ids(n)
-        got = spark.createDataFrame([(v,) for v in ids], "b int").select(
-            F.pmod(F.hash("b"), F.lit(n)).alias("p")
-        ).collect()
-        assert [r.p for r in got] == list(range(n))
-
-
 def test_temporal_join_per_key_checkpoint_fails_loudly(spark, tmp_path):
     """A checkpoint written by the per-key join (one state row per key)
     cannot resume under the bucketed join: Spark's state-schema check
@@ -262,6 +247,49 @@ def test_temporal_join_restart_under_other_bucket_count_fails_loudly(spark, tmp_
         spark.conf.set("spark.sql.shuffle.partitions", n)
     with pytest.raises(StreamingQueryException, match="key buckets"):
         _run_join(restarted, tmp_path / "ckpt")
+
+
+def test_pipeline_restart_keeps_checkpoint_bucket_count(spark, tmp_path):
+    """A pipeline restarted under another spark.sql.shuffle.partitions
+    keeps the key buckets its checkpoint was written under: the
+    restarted key would land in a bucket with no old state under the
+    new count, and must still find its buffered right."""
+    from pyspark.sql import functions as F
+
+    base = ts("2024-01-01T10:00:00")
+    lpath = _write_stream_input(spark, str(tmp_path), "l", [("zz", "Nobody", base)], LEFT_SCHEMA)
+    rpath = _write_stream_input(spark, str(tmp_path), "r", [("u0", "a@x", base)], RIGHT_SCHEMA)
+    sink = ClickHouseSink(table="out", parquet_fallback_path=str(tmp_path / "sinkout"))
+
+    def run():
+        q = StreamingPipeline(spec=_join_pipeline_spec(), checkpoint_dir=str(tmp_path / "ckpt")).start(
+            spark,
+            sources={"left": spark.readStream.schema(LEFT_SCHEMA).parquet(lpath),
+                     "right": spark.readStream.schema(RIGHT_SCHEMA).parquet(rpath)},
+            ts_cols={"left": "lts", "right": "rts"},
+            sink_fn=sink.foreach_batch(),
+            trigger={"availableNow": True},
+        )
+        q.awaitTermination(120)
+        assert q.exception() is None
+
+    def bucket(key, n):
+        return spark.range(1).select(F.pmod(F.xxhash64(F.lit(key)), F.lit(n))).first()[0]
+
+    n = spark.conf.get("spark.sql.shuffle.partitions")
+    run()
+    # the only state is u0's right, in bucket(u0, n); pick a count that
+    # moves u0 to a bucket that never held state
+    other = next(p for p in range(2, 64) if bucket("u0", p) != bucket("u0", int(n)))
+    spark.createDataFrame([("u0", "Ann", base + dt.timedelta(seconds=1))], LEFT_SCHEMA) \
+        .write.mode("append").parquet(lpath)
+    spark.conf.set("spark.sql.shuffle.partitions", str(other))
+    try:
+        run()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", n)
+    got = {tuple(r) for r in spark.read.parquet(str(tmp_path / "sinkout")).select("id", "name", "email").collect()}
+    assert got == {("u0", "Ann", "a@x")}
 
 
 def test_streaming_dedup_within_watermark(spark, tmp_path):
@@ -362,8 +390,8 @@ def test_sink_retryable_error_reraises(spark, tmp_path):
     assert sink.reports[-1].outcome == "retry"
 
 
-def test_streaming_pipeline_end_to_end(spark, tmp_path):
-    """Full spec -> StreamingPipeline over file sources -> sink parquet."""
+def _join_pipeline_spec():
+    """left(id, name) joined to right(id, email) on id, 1 h windows."""
     doc = {
         "version": "v3",
         "pipeline_id": "sp",
@@ -394,7 +422,12 @@ def test_streaming_pipeline_end_to_end(spark, tmp_path):
             ],
         },
     }
-    spec = parse_pipeline_json(json.dumps(doc))
+    return parse_pipeline_json(json.dumps(doc))
+
+
+def test_streaming_pipeline_end_to_end(spark, tmp_path):
+    """Full spec -> StreamingPipeline over file sources -> sink parquet."""
+    spec = _join_pipeline_spec()
 
     base = ts("2024-01-01T10:00:00")
     lpath = _write_stream_input(
