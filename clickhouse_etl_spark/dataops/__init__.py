@@ -20,7 +20,7 @@ quadratic.
 """
 
 from .bpe import apply_bpe, learn_bpe
-from .sketches import cms_estimate, cms_merge, cms_table, kmv_distinct
+from .sketches import cms_estimate, cms_table, kmv_distinct
 from .dedup import (
     decontaminate_against_path,
     dedup_against,
@@ -115,6 +115,5 @@ __all__ = [
     "sample_codebooks",
     "cms_table",
     "cms_estimate",
-    "cms_merge",
     "kmv_distinct",
 ]

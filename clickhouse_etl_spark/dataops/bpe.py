@@ -8,7 +8,7 @@ different scale shapes:
 1. **Word counting** — corpus-scale, embarrassingly parallel: one
    explode + hash aggregation over the whole corpus. This is the part
    that must distribute (at 100 TB it is the dominant cost), and it is
-   plain Spark (`_word_counts`).
+   plain Spark (`_word_counts_raw`).
 2. **Merge learning** — operates on the (word, count) FREQUENCY TABLE,
    never the corpus: the classic greedy loop picks the most frequent
    adjacent symbol pair and merges it, ``n_merges`` times. The table is
@@ -69,12 +69,6 @@ def _bound_word_counts(counts: DataFrame, max_vocab: int) -> DataFrame:
         .filter(F.col("_rn") <= max_vocab)
         .select("word", "count")
     )
-
-
-def _word_counts(
-    df: DataFrame, text_col: str = "text", max_vocab: int = 100_000
-) -> DataFrame:
-    return _bound_word_counts(_word_counts_raw(df, text_col), max_vocab)
 
 
 def learn_bpe(

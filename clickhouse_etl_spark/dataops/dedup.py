@@ -2623,54 +2623,3 @@ def neardup_against_path(
         count_col,
         "neardup_against",
     )
-
-
-def lsh_collision_probability(
-    jaccard: float, k: int = 8, rows_per_band: int = 2
-) -> float:
-    """The probability that two documents at a given Jaccard similarity
-    collide in AT LEAST one LSH band under this geometry — the standard
-    s-curve ``1 - (1 - s^r)^b`` with ``r = rows_per_band`` and
-    ``b = k / rows_per_band`` (Leskovec/Rajaraman/Ullman, Mining of
-    Massive Datasets ch. 3; public textbook formula). This is the
-    per-pair flag probability of :func:`neardup_against_path` against
-    a registered near-identical document, and the candidate-generation
-    probability of :func:`minhash_lsh_pairs`."""
-    if not 0.0 <= jaccard <= 1.0:
-        raise ValueError("jaccard must be in [0, 1]")
-    n_bands = _band_geometry_check(1, k, rows_per_band)
-    return 1.0 - (1.0 - jaccard ** rows_per_band) ** n_bands
-
-
-def band_geometry_for(threshold: float, k: "int | None" = None) -> "tuple[int, int]":
-    """Pick ``(k, rows_per_band)`` within the fixed ``MINHASH_COEFFS``
-    budget whose s-curve midpoint ``(1/b)^(1/r)`` sits closest to the
-    target Jaccard ``threshold`` (the geometry where collision
-    probability crosses ~0.5 — pairs above the threshold are likelier
-    than not to collide, the published tuning rule). Pass ``k`` to pin
-    the signature width and choose only the banding; ties resolve to
-    the larger ``k`` then the larger ``rows_per_band`` (steeper
-    s-curve == fewer accidental candidates)."""
-    if not 0.0 < threshold < 1.0:
-        raise ValueError("threshold must be in (0, 1)")
-    if k is not None and not 2 <= k <= len(MINHASH_COEFFS):
-        raise ValueError(
-            f"k must be in [2, {len(MINHASH_COEFFS)}] (the fixed "
-            f"MINHASH_COEFFS budget), got {k}"
-        )
-    ks = [k] if k is not None else list(range(2, len(MINHASH_COEFFS) + 1))
-    best = None
-    for kk in ks:
-        for r in range(1, kk + 1):
-            if kk % r:
-                continue
-            b = kk // r
-            if b < 2:
-                continue  # one band has no s-curve
-            midpoint = (1.0 / b) ** (1.0 / r)
-            key = (abs(midpoint - threshold), -kk, -r)
-            if best is None or key < best[0]:
-                best = (key, (kk, r))
-    if best is None:
-        raise ValueError(f"no valid banding for k={k}")
-    return best[1]

@@ -37,7 +37,6 @@ from .util import (
     check_append_geometry,
     path_exists,
     read_geometry,
-    release_artifact_cache,
     scale_out,
     write_geometry,
 )
@@ -1444,136 +1443,6 @@ def pq_index_query_chunked(
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
-
-
-def pq_index_cell_report(spark, path: str) -> DataFrame:
-    """Per-cell occupancy of a persisted :func:`pq_index_build` index —
-    the IVF maintenance signal (VERDICT r8 #5): appends quantize with
-    the STORED centroids (:func:`pq_index_append`), so a drifted wave
-    piles its codes into few cells and silently degrades the probe
-    pruning (one giant partition carries most of the index, and
-    ``n_probe`` cells stop meaning ``n_probe``/``n_centroids`` of the
-    data).
-
-    Returns one row per centroid cell — including EMPTY cells, which
-    waste probe budget: (cell INT, n_codes BIGINT, share DOUBLE). The
-    codes scan reads ONLY the partition column (column pruning: zero
-    vector/code bytes move), the count aggregates map-side, and the
-    bounded centroid list broadcasts — cost is a footer-level scan even
-    on a billion-code index.
-    """
-    codes = spark.read.parquet(f"{path}/codes").select("cell")
-    counts = codes.groupBy("cell").agg(F.count("*").alias("n_codes"))
-    cells = spark.read.parquet(f"{path}/centroids").select("cell")
-    occupancy = cells.join(F.broadcast(counts), "cell", "left").select(
-        F.col("cell").cast("int").alias("cell"),
-        F.coalesce("n_codes", F.lit(0)).cast("bigint").alias("n_codes"),
-    )
-    # 1-row total broadcast (the repo's scalar pattern — no
-    # unpartitioned Window even on this bounded frame)
-    total = counts.agg(F.sum("n_codes").alias("_total"))
-    return occupancy.crossJoin(F.broadcast(total)).select(
-        "cell",
-        "n_codes",
-        F.when(
-            F.col("_total") > 0, F.col("n_codes") / F.col("_total")
-        ).otherwise(F.lit(0.0)).alias("share"),
-    )
-
-
-def pq_index_cell_stats(spark, path: str) -> dict:
-    """Driver-side occupancy summary (bounded: one row per centroid) —
-    the numbers the rebalance decision reads: total codes, occupied /
-    empty cell counts, and the max cell's share. The documented
-    operational rule: when ``max_share`` exceeds ~``4 / n_centroids``
-    (4× the uniform share) or empty cells accumulate, run
-    :func:`pq_index_rebalance` — probe pruning has degraded."""
-    rows = pq_index_cell_report(spark, path).collect()
-    total = sum(r["n_codes"] for r in rows)
-    occupied = [r for r in rows if r["n_codes"] > 0]
-    max_row = max(rows, key=lambda r: r["n_codes"]) if rows else None
-    return {
-        "n_cells": len(rows),
-        "n_codes": total,
-        "occupied_cells": len(occupied),
-        "empty_cells": len(rows) - len(occupied),
-        "max_cell": max_row["cell"] if max_row else None,
-        "max_cell_codes": max_row["n_codes"] if max_row else 0,
-        "max_share": round(max_row["share"], 6) if max_row else 0.0,
-        "uniform_share": round(1 / len(rows), 6) if rows else 0.0,
-    }
-
-
-def pq_index_rebalance(
-    spark,
-    path: str,
-    corpus: DataFrame | None = None,
-    n_centroids: int | None = None,
-    m: int | None = None,
-    n_codes: int | None = None,
-) -> dict:
-    """Retrain a persisted index on its CURRENT contents — the
-    maintenance path for cell skew (VERDICT r8 #5). Centroids AND
-    codebooks re-learn from the full present corpus, so drifted appends
-    spread back across cells and quantization error recovers; pass a
-    larger ``n_centroids`` to SPLIT capacity when the corpus has
-    outgrown the cell count (defaults keep the stored geometry).
-
-    ``corpus=None`` (the normal call) reads the vectors back from the
-    index itself — requires ``store_vectors=True``; a codes-only index
-    must pass the corpus. The whole pipeline is deterministic
-    (hash-ordered samples, no RNG), so **rebalance ≡ rebuild**: the
-    rebalanced artifact is bit-identical to ``pq_index_build`` on the
-    union corpus at a fresh path (pinned by test) — operators can
-    reason about a rebalance exactly like a from-scratch rebuild,
-    minus re-shipping the corpus.
-
-    The new index builds at a per-pid staging prefix and replaces
-    ``path`` via TWO renames (live → ``_old``, staging → live) so the
-    live path is never absent longer than the instant between them and
-    a crash at any point leaves a complete index on disk (at worst
-    under the ``_old`` name — a failed build never touches the live
-    index at all; local filesystems — on an object store, build to a
-    versioned prefix and swap the serving pointer the same way). The
-    serving cache rotates on the swap — both via the file-listing
-    signature and an explicit
-    :func:`~.util.release_artifact_cache`.
-    """
-    import os
-    import shutil
-
-    meta = spark.read.parquet(f"{path}/meta").collect()[0].asDict()
-    if corpus is None:
-        if not meta["store_vectors"]:
-            raise ValueError(
-                "index was built with store_vectors=False; pass corpus= "
-                "(the index alone cannot re-derive vectors for retraining)"
-            )
-        corpus = spark.read.parquet(f"{path}/codes").select(
-            meta["id_col"], meta["vec_col"]
-        )
-    staging = f"{path}_rebalancing_{os.getpid()}"
-    shutil.rmtree(staging, ignore_errors=True)
-    try:
-        new_meta = pq_index_build(
-            corpus,
-            staging,
-            n_centroids=n_centroids or meta["n_centroids"],
-            m=m or meta["m"],
-            n_codes=n_codes or meta["n_codes"],
-            id_col=meta["id_col"],
-            vec_col=meta["vec_col"],
-            store_vectors=meta["store_vectors"],
-        )
-    except BaseException:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
-    old = f"{path}_old_{os.getpid()}"
-    os.rename(path, old)
-    os.rename(staging, path)
-    shutil.rmtree(old)
-    release_artifact_cache(path)
-    return new_meta
 
 
 def mean_center(

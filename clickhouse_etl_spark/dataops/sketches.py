@@ -199,13 +199,3 @@ def kmv_distinct(
         F.round(est, 6).alias("kmv_estimate"),
     )
 
-
-def cms_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Merge two CMS tables built with the same (width, depth): cell-
-    wise addition — the property that lets per-shard / per-wave
-    sketches combine without touching raw data."""
-    return (
-        a.unionByName(b)
-        .groupBy("d", "bucket")
-        .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-    )

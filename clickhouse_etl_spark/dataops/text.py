@@ -572,10 +572,9 @@ def mixture_sample(
     rates_bp: "dict[str, int] | None" = None,
 ) -> DataFrame:
     """Deterministic per-source corpus mixing: each source gets a
-    sampling rate in basis points (pass ``rates_bp`` — e.g. from
-    :func:`plan_mixture_rates` — or let the self-contained hash demo
-    derive one), and a document is kept iff an id-hash falls under the
-    rate. Hash-gated Bernoulli sampling is exactly how pretraining
+    sampling rate in basis points (pass ``rates_bp``, or let the
+    self-contained hash demo derive one), and a document is kept iff an
+    id-hash falls under the rate. Hash-gated Bernoulli sampling is exactly how pretraining
     mixtures stay reproducible across pipeline re-runs.
 
     Adds ``rate_bp`` and ``keep`` columns; filter on ``keep`` to
@@ -677,49 +676,6 @@ def temperature_mixture(
     )
 
 
-def plan_mixture_rates(
-    source_tokens: "dict[str, int]",
-    target_shares: "dict[str, float]",
-    max_epochs: float = 3.0,
-) -> "dict[str, int]":
-    """Turn a data recipe ("30% web, 20% code, ...") into concrete
-    per-source sampling rates against the MEASURED corpus.
-
-    Given per-source token counts (from :func:`corpus_report` /
-    token_stats aggregation) and target shares summing to ~1, find the
-    largest total token budget T such that no source must be repeated
-    more than ``max_epochs`` times (rate = T*share/tokens <= max_epochs
-    — the standard upsampling cap before repetition hurts), then return
-    rate basis points per source. Feed the result to
-    :func:`mixture_sample` (rates <= 10000) or
-    :func:`upsample_mixture` (rates may exceed 10000).
-
-    Driver-side integer/float arithmetic on a per-source summary —
-    nothing distributed, deterministic.
-    """
-    shares = {s: w for s, w in target_shares.items() if w > 0}
-    total_w = sum(shares.values())
-    if not shares or total_w <= 0:
-        raise ValueError("target_shares must contain positive weights")
-    missing = [s for s in shares if s not in source_tokens]
-    if missing:
-        raise ValueError(f"no measured tokens for sources: {missing}")
-    empty = [s for s in shares if source_tokens[s] <= 0]
-    if empty:
-        # a 0-token source passes the membership check but would zero
-        # t_budget and then divide by zero (ADVICE r4) — reject with the
-        # same actionable error class as the other validations
-        raise ValueError(f"sources have no measured tokens (<= 0): {empty}")
-    # normalize shares, then T = min over s of max_epochs * n_s / w_s
-    t_budget = min(
-        max_epochs * source_tokens[s] / (w / total_w) for s, w in shares.items()
-    )
-    return {
-        s: int(round(t_budget * (w / total_w) / source_tokens[s] * 10000))
-        for s, w in shares.items()
-    }
-
-
 def upsample_mixture(
     df: DataFrame,
     source_col: str = "source",
@@ -731,9 +687,9 @@ def upsample_mixture(
     >1x, others fractionally sampled), complementing
     :func:`mixture_sample`'s pure downsampling.
 
-    Each source gets a rate in basis points (pass ``rates_bp`` from
-    :func:`plan_mixture_rates`, or let the self-contained hash demo
-    derive one — rates may exceed 10000 = more than one epoch). A
+    Each source gets a rate in basis points (pass ``rates_bp``, or let
+    the self-contained hash demo derive one — rates may exceed 10000 =
+    more than one epoch). A
     document yields ``rate // 10000`` guaranteed copies plus one more
     iff the id-hash gate falls under the fractional remainder — the
     same hash-gate convention as mixture_sample, so re-runs are

@@ -9,6 +9,6 @@ them JVM-side — no Python in the row path.
 """
 
 from .parser import parse
-from .translate import ExprTranslator, translate
+from .translate import ExprTranslator
 
-__all__ = ["parse", "translate", "ExprTranslator"]
+__all__ = ["parse", "ExprTranslator"]

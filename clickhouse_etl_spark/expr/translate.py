@@ -338,8 +338,3 @@ class ExprTranslator:
             return F.pow(left.cast("double"), right.cast("double")), "float"
 
         raise ExprTranslationError(f"unhandled binary op {op!r}")
-
-
-def translate(src: str, schema: Optional[T.StructType] = None) -> Column:
-    """One-shot compile of an expr-lang expression to a Column."""
-    return ExprTranslator(schema).column(src)

@@ -5429,8 +5429,8 @@ def events_cms_calibration(spark, sf_dir):
     corpus's skew before deploying the sketch alone. Unlike Spark's
     HLL/percentile sketches (engine-specific, rows-only entries), the
     CMS is plain integer arithmetic — the DuckDB oracle reproduces the
-    whole counter table and every estimate exactly, and the table
-    merges cell-wise across shards (cms_merge)."""
+    whole counter table and every estimate exactly, and two shards'
+    tables merge by cell-wise addition."""
     from .dataops.sketches import cms_estimate
 
     return cms_estimate(

@@ -1,6 +1,6 @@
 """sources — batch table loaders, Kafka stream builder, OTLP flatteners."""
 
-from .batch import TABLES, load_table, load_tables
-from .filestream import IncrementalCorpusJob, read_file_stream
+from .batch import TABLES, load_table
+from .filestream import read_file_stream
 
-__all__ = ["load_table", "load_tables", "TABLES"]
+__all__ = ["load_table", "TABLES"]

@@ -58,6 +58,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = _normalize_temporal(df, c, target)
     return df
 
-
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}

@@ -8,10 +8,13 @@ Reference behavior (glassflow-api/internal/schema_v2/):
   every field of the previous version still exists with the same
   normalized type (validate.go:35-62); incompatible versions stop the
   pipeline;
-- a stream may interleave multiple live schema versions; this engine
-  collapses to the widest compatible schema at compile time (backward
-  compatibility guarantees a superset — SURVEY.md §1.3), so per-row
-  dispatch is unnecessary.
+- a stream may interleave multiple live schema versions. Two ways to
+  read such a stream exist here: ``widest_schema`` collapses the
+  versions to the widest compatible schema at compile time (backward
+  compatibility guarantees a superset — SURVEY.md §1.3), and
+  ``operators.validate.validate_json_versioned`` validates each message
+  against its own version (per-row dispatch). Neither is wired into the
+  runner yet, which validates against one version (ROADMAP item 10).
 """
 
 from __future__ import annotations

@@ -10,8 +10,8 @@ running pipeline is a StreamingQuery + its checkpoint directory:
   the at-least-once story the reference builds from ack choreography);
 - edit   -> stop, swap the spec, restart. Spark requires the new plan
   to be state-compatible with the checkpoint; incompatible edits get a
-  fresh checkpoint (documented: the reference replays from Kafka
-  offsets in the same situation);
+  fresh checkpoint and drop the old one (documented: the reference
+  replays from Kafka offsets in the same situation);
 - terminate -> stop + drop the checkpoint.
 """
 
@@ -49,12 +49,14 @@ def _await_healthy(queries, timeout_s: float = 30.0) -> None:
 
 
 def _fresh_checkpoint_dir(current: str) -> str:
-    """Next unused '<dir>-editN' sibling of the current checkpoint."""
-    import os
+    """Next unused '<dir>-editN' sibling of the current checkpoint,
+    probed through its Hadoop FileSystem as terminate deletes it."""
+    from ..dataops.util import path_exists  # see DLQWriter.purge
 
+    spark = SparkSession.active()
     base = current.rstrip("/")
     n = 1
-    while os.path.exists(f"{base}-edit{n}"):
+    while path_exists(spark, f"{base}-edit{n}"):
         n += 1
     return f"{base}-edit{n}"
 
@@ -145,17 +147,23 @@ class PipelineManager:
         operator) makes the resumed query fail against the old
         checkpoint — Spark surfaces that asynchronously in the first
         micro-batch. edit() waits for the restarted query to become
-        healthy; on failure it rotates to a fresh checkpoint directory
-        and restarts (the analog of the reference replaying from Kafka
-        offsets after a reconfigure: at-least-once, state rebuilt)."""
+        healthy; on failure it rotates to a fresh checkpoint directory,
+        deletes the old one and restarts (the analog of the reference
+        replaying from Kafka offsets after a reconfigure: at-least-once,
+        state rebuilt). Nothing can resume the old checkpoint under the
+        new spec, and a later create() on its path must not inherit its
+        offsets and state."""
         self.stop(pipeline_id)
         rp = self._get(pipeline_id)
         rp.spec = new_spec
         try:
             return self.resume(spark, pipeline_id)
         except Exception:  # noqa: BLE001 — any restart failure rotates
-            fresh = _fresh_checkpoint_dir(rp.checkpoint_dir)
-            rp.checkpoint_dir = fresh
+            from ..dataops.util import delete_path
+
+            old = rp.checkpoint_dir
+            rp.checkpoint_dir = _fresh_checkpoint_dir(old)
+            delete_path(spark, old)
             return self.resume(spark, pipeline_id)
 
     def terminate(self, pipeline_id: str) -> None:

@@ -495,7 +495,6 @@ def section_r7(spark) -> None:
     """
     from clickhouse_etl_spark.operators.dedup import dedup_windowed
     from clickhouse_etl_spark.operators.join import temporal_join_batch
-    from clickhouse_etl_spark.operators.skew import salted_agg
     from clickhouse_etl_spark.spec.model import (
         JoinConfig,
         JoinOutputField,
@@ -611,25 +610,6 @@ def section_r7(spark) -> None:
         )
         spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
         spark.conf.unset("spark.sql.adaptive.skewJoin.skewedPartitionFactor")
-
-    # salting: the helper for shapes AQE cannot split (hot grouping
-    # key into one reducer); equality with the plain agg is asserted
-    plain = zev.groupBy("zkey").agg(
-        F.sum("value").alias("v"), F.count("*").alias("n")
-    )
-    salted = salted_agg(
-        zev, ["zkey"],
-        {"v": ("value", "sum"), "n": ("event_id", "count")},
-        salt_col="event_id", n_salts=32,
-    )
-    tp, ts_ = _best2(plain), _best2(salted)
-    a = {r["zkey"]: (round(r["v"], 6), r["n"]) for r in plain.collect()}
-    b = {r["zkey"]: (round(r["v"], 6), r["n"]) for r in salted.collect()}
-    assert a == b, "salted_agg result drifted from plain aggregation"
-    print(
-        f"salted_agg_zipf: plain {tp:.2f}s vs salted {ts_:.2f}s "
-        f"(equal results, {len(a)} keys)"
-    )
 
 
 def section_r7b(spark) -> None:

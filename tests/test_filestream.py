@@ -1,95 +1,28 @@
-"""Incremental file-source corpus ingestion: exactly-once pickup of
-new files across runs, cross-run content dedup, partitioned output
-(sources/filestream.py).
-"""
+"""File-directory stream source (sources/filestream.read_file_stream)."""
 
-import os
+from pyspark.sql import types as T
 
-import pytest
-from pyspark.sql import functions as F
-
-from clickhouse_etl_spark.sources.filestream import IncrementalCorpusJob
+from clickhouse_etl_spark.sources.filestream import read_file_stream
 
 
-def _write_wave(spark, path, rows, mode="append"):
-    spark.createDataFrame(
-        rows, ["doc_id", "text", "lang", "source"]
-    ).coalesce(1).write.mode(mode).parquet(path)
+def test_read_file_stream_one_file_per_micro_batch(spark, tmp_path):
+    """``max_files_per_trigger=1`` under availableNow drains a two-file
+    backlog in two micro-batches that together hold every row."""
+    inp = tmp_path / "in"
+    inp.mkdir()
+    (inp / "a.txt").write_text("a1\na2\n")
+    (inp / "b.txt").write_text("b1\n")
+    schema = T.StructType([T.StructField("value", T.StringType())])
 
-
-@pytest.fixture()
-def dirs(tmp_path):
-    return (
-        str(tmp_path / "in"),
-        str(tmp_path / "out"),
-        str(tmp_path / "ckpt"),
+    batches = []
+    q = (
+        read_file_stream(spark, str(inp), schema, fmt="text", max_files_per_trigger=1)
+        .writeStream.foreachBatch(
+            lambda df, _bid: batches.append(sorted(r.value for r in df.collect()))
+        )
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
     )
-
-
-@pytest.mark.heavy
-def test_incremental_pickup_and_cross_run_dedup(spark, dirs):
-    in_dir, out_dir, ckpt = dirs
-    _write_wave(
-        spark,
-        in_dir,
-        [
-            (1, "alpha beta gamma", "en", "s0"),
-            (2, "delta epsilon zeta", "en", "s0"),
-            (3, "alpha beta gamma", "en", "s1"),  # in-wave dup of 1
-            (4, "uno dos tres", "es", "s1"),
-        ],
-    )
-    job = IncrementalCorpusJob(input_dir=in_dir, output_dir=out_dir, checkpoint_dir=ckpt)
-    m1 = job.run_once(spark)
-    assert m1["rows_in"] == 4
-    out1 = job.output(spark)
-    assert out1.count() == 3  # one dup removed
-    assert out1.select("content_md5").distinct().count() == 3
-
-    # wave 2: one cross-wave dup (same text as doc 2), two new docs
-    _write_wave(
-        spark,
-        in_dir,
-        [
-            (5, "delta epsilon zeta", "en", "s2"),
-            (6, "brand new text", "en", "s2"),
-            (7, "texto nuevo aqui", "es", "s2"),
-        ],
-    )
-    m2 = job.run_once(spark)
-    assert m2["rows_in"] == 3  # only the new files were read
-    out2 = job.output(spark)
-    assert out2.count() == 5  # cross-run dup suppressed by state
-    assert out2.select("content_md5").distinct().count() == 5
-    assert set(r["doc_id"] for r in out2.collect()) == {1, 2, 4, 6, 7}
-
-    # wave 3: nothing new -> zero input rows, output unchanged
-    m3 = job.run_once(spark)
-    assert m3["rows_in"] == 0
-    assert job.output(spark).count() == 5
-
-
-def test_partitioned_output_and_transform(spark, dirs):
-    in_dir, out_dir, ckpt = dirs
-    _write_wave(
-        spark,
-        in_dir,
-        [
-            (1, "the quick brown fox", "en", "s0"),
-            (2, "uno dos tres cuatro", "es", "s0"),
-        ],
-    )
-    job = IncrementalCorpusJob(
-        input_dir=in_dir,
-        output_dir=out_dir,
-        checkpoint_dir=ckpt,
-        transform=lambda df: df.withColumn(
-            "n_tokens", F.size(F.split(F.col("text"), " ")).cast("bigint")
-        ),
-    )
-    job.run_once(spark)
-    out = job.output(spark)
-    assert {r["n_tokens"] for r in out.collect()} == {4}
-    # physically partitioned by lang
-    langs = {d for d in os.listdir(out_dir) if d.startswith("lang=")}
-    assert langs == {"lang=en", "lang=es"}
+    q.awaitTermination(120)
+    assert sorted(batches) == [["a1", "a2"], ["b1"]]

@@ -84,6 +84,41 @@ def test_stop_resume_continues_from_checkpoint(spark, tmp_path):
     assert not uri_ckpt.exists()
 
 
+class _Stopped:
+    isActive = False
+
+
+def test_terminate_after_a_rotating_edit_leaves_no_checkpoint(spark, tmp_path, monkeypatch):
+    """An edit whose restart fails rotates to a fresh '<dir>-editN';
+    afterwards terminate leaves neither that nor the original checkpoint
+    behind, or a later create() on '<dir>' would resume its old offsets
+    and state. The rotation probes through the path's FileSystem, so a
+    taken '<dir>-edit1' behind a file:// URI is skipped."""
+    spec = parse_pipeline_json(json.dumps(DOC))
+    ckpt, taken = tmp_path / "ckpt", tmp_path / "ckpt-edit1"
+    for d in (ckpt, taken):
+        (d / "offsets").mkdir(parents=True)
+    mgr = PipelineManager()
+    mgr.pipelines["lc1"] = RunningPipeline(spec, ckpt.as_uri(), _Stopped(), {})
+    restarts = []
+
+    def resume(spark, pipeline_id):
+        rp = mgr.pipelines[pipeline_id]
+        restarts.append(rp.checkpoint_dir)
+        if len(restarts) == 1:  # the old checkpoint refuses the new plan
+            raise RuntimeError("state schema not compatible")
+        (tmp_path / rp.checkpoint_dir.rsplit("/", 1)[-1] / "offsets").mkdir(parents=True, exist_ok=True)
+        return rp
+
+    monkeypatch.setattr(mgr, "resume", resume)
+    mgr.edit(spark, "lc1", spec)
+    fresh = tmp_path / "ckpt-edit2"
+    assert restarts == [ckpt.as_uri(), fresh.as_uri()]
+    mgr.terminate("lc1")
+    assert not ckpt.exists() and not fresh.exists()
+    assert taken.exists()  # another pipeline's checkpoint
+
+
 def test_managed_pipeline_routes_failures_to_dlq(spark, tmp_path):
     """A managed pipeline over raw payloads writes its validation
     failures to the DLQ, and stop() stops the DLQ query with the main

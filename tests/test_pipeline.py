@@ -223,6 +223,49 @@ def test_stream_dedup_watermark_keeps_sub_second_windows(spark, tmp_path):
     assert sorted(got) == ["a", "b", "x", "y"]
 
 
+def test_dedup_batch_and_stream_diverge_on_bucket_edges_and_backlogs(spark, tmp_path):
+    """Pins the two known dedup divergences (README "Semantics notes"):
+    batch dedups per tumbling 1h bucket, so row 2, two minutes after
+    row 1 but across the 01:00 edge, is kept; the stream dedups on the
+    key alone inside a micro-batch, so row 6, 2.5 h after its key's
+    first row, is dropped when it arrives in the same backlog."""
+    from pyspark.sql import types as T
+
+    doc = {
+        "version": "v3", "pipeline_id": "dd", "name": "dd",
+        "sources": [{"type": "kafka", "source_id": "ev", "topic": "ev"}],
+        "transforms": [
+            {"type": "dedup", "source_id": "ev", "config": {"key": "id", "time_window": "1h"}},
+        ],
+        "sink": {"type": "clickhouse", "table": "out", "max_batch_size": 100,
+                 "max_delay_time": "1s"},
+    }
+    spec = parse_pipeline_json(json.dumps(doc))
+    schema = T.StructType([T.StructField("n", T.IntegerType()),
+                           T.StructField("id", T.StringType()),
+                           T.StructField("ts", T.TimestampType())])
+    at = lambda h, m: dt.datetime(2024, 1, 1, h, m)  # noqa: E731
+    rows = [(1, "a", at(0, 59)), (2, "a", at(1, 1)),
+            (3, "b", at(1, 0)), (4, "b", at(1, 59)),
+            (5, "c", at(0, 0)), (6, "c", at(2, 30))]
+    inp = str(tmp_path / "in")
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(inp)
+
+    batch = build_pipeline(spec, {"ev": spark.createDataFrame(rows, schema)}, {"ev": "ts"})
+    assert sorted(r.n for r in batch.collect()) == [1, 2, 3, 5, 6]
+
+    got = []
+    q = (
+        build_pipeline(spec, {"ev": spark.readStream.schema(schema).parquet(inp)}, {"ev": "ts"})
+        .writeStream.foreachBatch(lambda df, _bid: got.extend(r.n for r in df.collect()))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert sorted(got) == [1, 3, 5]
+
+
 def test_dataop_transforms_in_spec(spark):
     """Beyond-reference spec extension: training-data ops declared as
     v3 `dataop` transforms run on the assembled chain after the fixed
